@@ -190,16 +190,17 @@ object Bench {
     (best, Some(first).filter(_ => best < first), suspect)
   }
 
+  /** `local[SPARK_GRAFT_CPUS]` with as many shuffle partitions and no env
+    * passthrough — fixed, so bench lines compare across rounds; pinned by
+    * SessionPolicySpec. */
+  private[graft] def sessionPolicy(env: Map[String, String]): SessionPolicy = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    SessionPolicy(s"local[$cpus]", cpus)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = sessionPolicy(sys.env).build()
     // Warm up the JVM/codegen/scan paths once so per-query numbers reflect
     // steady state rather than first-query class-loading; queries run in
     // name order for run-to-run comparability.

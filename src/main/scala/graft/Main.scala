@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry, mirroring the reference's clap interface
   * (reference src/main.rs:8-22: `-u/--url`, `-q/--query`, `-o/--output`).
   *
@@ -13,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * }}}
   */
 object Main {
+
+  private[graft] def sessionPolicy(env: Map[String, String]): SessionPolicy =
+    SessionPolicy(env.getOrElse("SPARK_MASTER", "local[32]"),
+      env.getOrElse("SPARK_GRAFT_CPUS", "32"), Seq("spark.app.name" -> "graft"))
 
   private def parseArgs(args: Array[String]): Map[String, String] = {
     @annotation.tailrec
@@ -39,15 +41,7 @@ object Main {
     val output = parsed.getOrElse("output",
       throw new IllegalArgumentException("missing required -o/--output"))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = sessionPolicy(sys.env).build()
     try Engine.export(spark, url, query, output)
     finally spark.stop()
   }

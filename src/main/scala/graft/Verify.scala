@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -26,58 +25,35 @@ object Verify {
     }
   }
 
+  /** Chaos tier (SPARK_GRAFT_CHAOS, see Tables.injectChaos): first
+    * attempts of ~20% of source tasks throw, so the master must allow
+    * retries. SPARK_GRAFT_ST_CHAOS (r12) injects INSIDE stateful
+    * micro-batch tasks (StreamingOps.injectStChaos) and shares the
+    * plumbing. */
+  private def chaosOn(env: Map[String, String]): Boolean =
+    env.contains("SPARK_GRAFT_CHAOS") || env.contains("SPARK_GRAFT_ST_CHAOS")
+
+  /** Cluster tier (SPARK_GRAFT_MASTER, e.g. local-cluster[2,16,6144]):
+    * the whole registry across REAL executor JVMs — closures over RPC,
+    * netty shuffles/broadcasts, remote state stores and checkpoint blocks,
+    * which local[N] cannot exercise. Needs SPARK_SCALA_VERSION=2.13 in the
+    * env (the executor launcher resolves its classpath without the shell
+    * scripts). Chaos composes: retry tolerance is the maxFailures conf in
+    * cluster form and a master-string suffix locally (chaosMaster). Verify
+    * honours the SPARK_GRAFT_CONF_* passthrough. */
+  private[graft] def sessionPolicy(env: Map[String, String]): SessionPolicy = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val chaos = chaosOn(env)
+    val masterRaw = env.getOrElse("SPARK_GRAFT_MASTER",
+      if (chaos) s"local[$cpus,3]" else s"local[$cpus]")
+    SessionPolicy(chaosMaster(masterRaw, chaos), cpus,
+      if (chaos) Seq("spark.task.maxFailures" -> "3") else Nil, passthrough = true)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Chaos tier (SPARK_GRAFT_CHAOS, see Tables.injectChaos): first
-    // attempts of ~20% of source tasks throw, so the master must allow
-    // retries — local[N,3] (maxFailures 3: one injected failure + margin).
-    // SPARK_GRAFT_ST_CHAOS (r12 tier) injects INSIDE stateful micro-batch
-    // tasks (StreamingOps.injectStChaos) — same retry-tolerance and
-    // listener needs as batch chaos, so the two flags share the plumbing.
-    val chaos = sys.env.contains("SPARK_GRAFT_CHAOS") ||
-      sys.env.contains("SPARK_GRAFT_ST_CHAOS")
-    // Cluster tier (SPARK_GRAFT_MASTER, e.g. local-cluster[2,16,6144]):
-    // run the whole registry across REAL executor JVMs — serialization of
-    // every task closure/kernel over RPC, broadcasts and shuffles over
-    // netty, state stores and localCheckpoint blocks on remote executors —
-    // the multi-executor surface local[N] structurally cannot exercise.
-    // Needs SPARK_SCALA_VERSION=2.13 in the env (the executor launcher
-    // resolves its classpath without the shell scripts) and ships the
-    // library to executors via extraClassPath. In cluster form retry
-    // tolerance is a conf, not a master-string suffix, so chaos composes.
-    val masterRaw = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      if (chaos) s"local[$cpus,3]" else s"local[$cpus]")
-    // An explicit local master would leave maxFailures at the local
-    // default of 1, failing every injected first attempt outright (r11
-    // advisor) — see chaosMaster above for the rewrite rules.
-    val master = chaosMaster(masterRaw, chaos)
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (chaos) builder.config("spark.task.maxFailures", "3")
-    if (master.startsWith("local-cluster")) {
-      builder.config("spark.executor.extraClassPath",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_CLASSPATH",
-          new java.io.File("target/scala-2.13/classes").getAbsolutePath))
-    }
-    // Tier plumbing: SPARK_GRAFT_CONF_<spark.conf.key>=<value> env vars
-    // become session confs verbatim — context-start confs a tier needs
-    // (e.g. the spill tier starves execution memory with
-    // env 'SPARK_GRAFT_CONF_spark.memory.fraction=0.15') without a
-    // bespoke flag per conf. Applied LAST — after every fixed conf,
-    // including the local-cluster extraClassPath default — so an
-    // explicitly-set env var always wins: the config-robustness tiers
-    // re-run the registry under a different shuffle-partition count /
-    // AQE off / broadcasts disabled and require hash-identical results.
-    sys.env.foreach { case (k, v) =>
-      if (k.startsWith("SPARK_GRAFT_CONF_"))
-        builder.config(k.stripPrefix("SPARK_GRAFT_CONF_"), v)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val chaos = chaosOn(sys.env)
+    val spark = sessionPolicy(sys.env).build()
     // Provenance for invariance tiers (r14): the JVM-defaults tier re-runs
     // the registry under a hostile default locale + timezone (tr-TR /
     // non-UTC) and needs in-artifact evidence the options actually reached
@@ -124,12 +100,11 @@ object Verify {
     // passthrough would print false and flag the tier vacuous). Speculative
     // ATTEMPT counts are also recorded, with the known structural caveat:
     // on one machine TaskSetManager never places a speculative clone (the
-    // dequeueSpeculativeTask !hasAttemptOnHost guard — ProbeSpeculation
-    // documents this with an executed straggler probe), so armed-with-zero-
-    // placed is the expected honest reading, and the tier's value is that
-    // the speculation machinery (speculatable-task scanning inside
-    // TaskSetManager on every interval tick) ran against all 134 queries
-    // without perturbing results.
+    // dequeueSpeculativeTask !hasAttemptOnHost guard — RUNBOOK records the
+    // executed straggler probe), so armed-with-zero-placed is the expected
+    // honest reading, and the tier's value is that the speculation
+    // machinery (speculatable-task scanning inside TaskSetManager on every
+    // interval tick) ran against all 134 queries without perturbing results.
     val specReport = sys.env.contains("SPARK_GRAFT_SPEC_REPORT")
     val (specStarted, specWon) =
       (new java.util.concurrent.atomic.AtomicLong, new java.util.concurrent.atomic.AtomicLong)
@@ -204,7 +179,7 @@ object Verify {
         s" speculative_started=${specStarted.get} speculative_won=${specWon.get}" +
         (if (!armed) " — VACUOUS: spark.speculation did not reach the scheduler" else
           " (zero placed is expected on one host: dequeueSpeculativeTask's" +
-            " !hasAttemptOnHost guard — see ProbeSpeculation)"))
+            " !hasAttemptOnHost guard — see RUNBOOK)"))
     }
     spark.stop()
   }

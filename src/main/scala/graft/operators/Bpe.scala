@@ -375,7 +375,7 @@ object Bpe {
         // instead of a regex, and CRUCIALLY source-stable: Spark inlines a
         // foldable rlike PATTERN into the generated source, so the old
         // form recompiled this stage every round (12 janino compilations
-        // per run, measured via CodegenProbe), while string `contains`
+        // per run, measured via TimeQuery's compiles column), while string `contains`
         // needles ride the reference array and compile once (r16, the
         // PqArgminCells lesson applied to the round loop).
         val affected = cur.filter(col("sym").contains(lr) &&

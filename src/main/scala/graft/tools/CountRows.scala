@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Output-cardinality probe for scale tiers that carry no DuckDB oracle
   * (the 1000× probe): runs the selected registry queries and prints one
   * line per query, `[countrows] name,rows,seconds`.
@@ -22,13 +20,7 @@ object CountRows {
     val sfDir = args(0)
     val prefixes = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionPolicy(s"local[$cpus]", cpus).build()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes.exists(p => n.startsWith(p)) }
       .foreach { case (name, fn) =>

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.SessionPolicy
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared executor-loss judging harness for the exec-kill tiers
@@ -197,29 +198,18 @@ object ExecLossHarness {
 
   /** The 2-real-executor cluster session every exec-loss tier runs on;
     * `extraConfs` lets a tier add context confs (the st tier forces the
-    * RocksDB state-store provider). SPARK_GRAFT_CONF_* passthrough applies
-    * LAST, same contract as Verify. */
-  def clusterSession(extraConfs: Map[String, String] = Map.empty): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,16,8192]"))
-      .config("spark.executor.extraClassPath",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_CLASSPATH",
-          new java.io.File("target/scala-2.13/classes").getAbsolutePath))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    * RocksDB state-store provider). Honours the SPARK_GRAFT_CONF_*
+    * passthrough, same contract as Verify. */
+  private[graft] def clusterPolicy(extraConfs: Map[String, String],
+      env: Map[String, String]): SessionPolicy =
+    SessionPolicy(env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,16,8192]"), "32",
       // reliable-ckpt housekeeping (r13): the reliable phase pins once per
       // iterative round, and without this context-start conf every round
       // leaves a permanent rdd-* snapshot on the checkpoint dir (the Ckpt
       // scaladoc footgun, mechanism pinned by CkptSpec)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    extraConfs.foreach { case (k, v) => builder.config(k, v) }
-    sys.env.foreach { case (k, v) =>
-      if (k.startsWith("SPARK_GRAFT_CONF_"))
-        builder.config(k.stripPrefix("SPARK_GRAFT_CONF_"), v)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+      Seq("spark.cleaner.referenceTracking.cleanCheckpoints" -> "true") ++ extraConfs,
+      passthrough = true, logLevel = "ERROR")
+
+  def clusterSession(extraConfs: Map[String, String] = Map.empty): SparkSession =
+    clusterPolicy(extraConfs, sys.env).build()
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * concurrent launcher) so each kill is attributable to one harness.
   * Judging loop, outcome vocabulary, and artifact plumbing are shared
   * with ExecLossTier via `ExecLossHarness`; one JSON line per (row,
-  * phase) appends to arg(0) (default CORRECTNESS_execloss_st_r13.json).
+  * phase) appends to arg(0).
   *
   * Conf liveness is proven IN-RUN, not assumed from r12: before the kill
   * rows, a deliberately bogus provider class is set on a child session
@@ -38,13 +38,10 @@ object ExecLossStTier {
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Tiny stateful AvailableNow query on `session` — used with a bogus
-    * provider to prove the conf path reaches the state-store layer. Body
-    * shared via StatefulProbe (r13 review: one implementation). */
-  private def tinyStateful(session: SparkSession): Unit = StatefulProbe.run(session)
-
   def main(args: Array[String]): Unit = {
-    val artifact = args.headOption.getOrElse("CORRECTNESS_execloss_st_r13.json")
+    // no default, as in ExecLossTier
+    require(args.length == 1, "usage: ExecLossStTier <artifact.json>")
+    val artifact = args(0)
     // sf0.1 (same default as ExecLossTier): each solo harness runs multiple
     // micro-batches over real staged input, giving the fuse a mid-batch
     // window to land in
@@ -112,7 +109,7 @@ object ExecLossStTier {
       val probeSession = spark.newSession()
       probeSession.conf.set(ProviderKey, "org.example.NoSuchProvider")
       val probeOutcome =
-        try { tinyStateful(probeSession); "provider_probe_VACUOUS" }
+        try { StatefulProbe.run(probeSession); "provider_probe_VACUOUS" }
         catch { case e: Throwable =>
           val texts = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
             .map(t => t.getClass.getName + " " + Option(t.getMessage).getOrElse(""))

@@ -29,17 +29,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * degraded post-kill cluster cannot inflate the fuse estimate). One
   * JSON line per (row, phase) is APPENDED to the artifact path in
   * arg(0) as it is produced — a mid-run abort loses nothing already
-  * recorded (r12 review; default CORRECTNESS_execloss_r12.json). The
-  * judging loop, outcome vocabulary, and artifact plumbing live in
-  * `ExecLossHarness` (r13: shared with the streaming/RocksDB tier
-  * `ExecLossStTier`).
+  * recorded (r12 review). The judging loop, outcome vocabulary, and
+  * artifact plumbing live in `ExecLossHarness` (r13: shared with the
+  * streaming/RocksDB tier `ExecLossStTier`).
   */
 object ExecLossTier {
 
   import ExecutorKill.{waitForExecutors, executorPids}
 
   def main(args: Array[String]): Unit = {
-    val artifact = args.headOption.getOrElse("CORRECTNESS_execloss_r12.json")
+    // no default: the tier appends, so a default path grows a tracked file
+    require(args.length == 1, "usage: ExecLossTier <artifact.json>")
+    val artifact = args(0)
     // sf0.1 by default: cluster-mode queries run seconds there, so the
     // mid-query kill has a real window to land even on the fast
     // pure-lineage rows (at sf0.01 q03/q10 complete in well under a

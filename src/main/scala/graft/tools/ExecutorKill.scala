@@ -2,10 +2,10 @@ package graft.tools
 
 import scala.jdk.CollectionConverters._
 
-/** Shared executor-JVM kill machinery for the executor-loss surfaces
-  * (`ExecLossTier`, `ProbeExecutorLoss`) — one implementation of the
-  * pid scan, the readiness wait, and the fuse-kill thread, so a fix to
-  * any of them cannot leave the two tiers diverged (r12 review).
+/** Shared executor-JVM kill machinery for the executor-loss tiers
+  * (`ExecLossTier`, `ExecLossStTier`) — one implementation of the pid
+  * scan, the readiness wait, and the fuse-kill thread, so a fix to any of
+  * them cannot leave the tiers diverged (r12 review).
   *
   * Scoped to THIS application only: local-cluster forks Worker →
   * executor processes under the driver JVM, so candidates are
@@ -36,14 +36,12 @@ object ExecutorKill {
     * not followed by a pointless post-job kill + executor-relaunch wait
     * (r12 review). */
   final class Killer(fuseMs: Long, label: String) {
-    @volatile private var pid = -1L
     @volatile private var atNanos = 0L
     @volatile private var didFire = false
     private val t = new Thread(() => {
       try {
         Thread.sleep(fuseMs)
         executorPids().headOption.foreach { p =>
-          pid = p
           ProcessHandle.of(p).ifPresent(_.destroyForcibly())
           atNanos = System.nanoTime()
           didFire = true
@@ -57,7 +55,6 @@ object ExecutorKill {
     /** Best-effort: stop a fuse that has not fired yet (a fuse already
       * past its sleep may still fire — the caller re-checks `fired`). */
     def cancel(): Unit = t.interrupt()
-    def killedPid: Long = pid
     def fired: Boolean = didFire
     /** nanoTime at which the kill fired; only meaningful when `fired`. */
     def firedAtNanos: Long = atNanos

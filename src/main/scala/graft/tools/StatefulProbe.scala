@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** ONE tiny stateful AvailableNow query over synthesized input — the
   * shared probe shape used by Bench's streaming warm-up (loads the
-  * micro-batch planner / state-store / offset-log classes once per JVM),
-  * ExecLossStTier's bogus-provider liveness check, and ProbeRocksdbConf's
-  * sub-conf liveness check. Extracted r13 (review): three line-for-line
-  * copies had already drifted on temp-dir cleanup, the exact hand-sync
-  * class the single-implementation rule (ExecutorKill, ExecLossHarness)
-  * exists to prevent.
+  * micro-batch planner / state-store / offset-log classes once per JVM)
+  * and ExecLossStTier's bogus-provider liveness check (RUNBOOK records the
+  * r13 RocksDB sub-conf liveness finding made with it). Extracted r13
+  * (review): three line-for-line copies had already drifted on temp-dir
+  * cleanup, the exact hand-sync class the single-implementation rule
+  * (ExecutorKill, ExecLossHarness) exists to prevent.
   *
   * Input is synthesized (`session.range`), so a failure here can never
   * mask an unreadable corpus dir; the temp tree is deleted on success AND

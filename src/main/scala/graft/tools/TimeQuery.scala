@@ -1,10 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Times individual registered queries with the bench's noop-write action
   * (after one warm-up query) — the single-query iteration loop for perf
-  * work. Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.TimeQuery name…
+  * work. Each line also counts the NEW janino compilations the run
+  * triggered: the CodeGenerator cache is keyed on generated SOURCE, so an
+  * iterated stage with stable source compiles once (r16: PqArgminCells in
+  * ss4/ss6). Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.TimeQuery
+  * name… prints `TIMEQ <name> <wall> s compiles=<n>` per query.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -18,13 +22,7 @@ object TimeQuery {
     // measures exactly that effect on one query at a time.
     val parts = sys.env.get("SPARK_GRAFT_PARTS")
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionPolicy(s"local[$cpus]", parts.toString).build()
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       graft.Registry.queries(name)(spark, sfDir)
@@ -41,7 +39,12 @@ object TimeQuery {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[timeq] warm-up failed (timings may be cold): $e")
     }
-    args.foreach(n => println("TIMEQ %s %.2f s".formatLocal(java.util.Locale.ROOT, n, run(n))))
+    args.foreach { n =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val wall = run(n)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      println("TIMEQ %s %.2f s compiles=%d".formatLocal(java.util.Locale.ROOT, n, wall, compiles))
+    }
     spark.stop()
   }
 }

@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
@@ -69,10 +71,8 @@ class ScanPruningSpec extends AnyFunSuite {
     "tx10_bigram_crossent",
     "hh1_heavy_hitters",
     // pipeline: quality/token-count/shingle stages
-    // pp11 left this list in the r16 optimization round: its chunk stream
-    // is now lazily pinned once (it fed two branches, each re-scanning +
-    // re-chunking the corpus), so the text scan lives under the severed
-    // LogicalRDD prefix — the visible plan reads stored (doc_id, fp) rows
+    // pp11 left this list in r16: its chunk stream is lazily pinned once,
+    // so its text scan is checked through the pin by the pp11 test below
     "pp1_clean_corpus", "pp3_chunk_documents", "pp4_pack_sequences",
     "pp5_outlier_filter", "pp8_repetition_filter",
     "pp10_curriculum_shards", "bf1_bloom_decontaminate",
@@ -102,6 +102,23 @@ class ScanPruningSpec extends AnyFunSuite {
         "prune the column or allowlist with justification")
     assert(stale.isEmpty,
       s"allowlist entries that no longer read text (tighten the list): ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("pp11's pinned chunk relation is (doc_id, chunk_fp) and its pre-pin scan reads doc_id, text") {
+    // The lazy pin hides pp11's documents scan behind a LogicalRDD, so the
+    // ratchet above cannot see it. The pinned RDD's (unmaterialized)
+    // lineage is the pre-pin plan's executed form: walk it to the scan.
+    def fileScans(rdd: RDD[_]): Seq[FileScanRDD] = rdd match {
+      case f: FileScanRDD => Seq(f)
+      case r => r.dependencies.flatMap(d => fileScans(d.rdd))
+    }
+    val pinned = Registry.queries("pp11_boilerplate")(spark, sf).queryExecution.optimizedPlan
+      .collect { case r: LogicalRDD => r }
+    assert(pinned.nonEmpty && pinned.forall(_.output.map(_.name) == Seq("doc_id", "chunk_fp")),
+      s"pp11's pinned relations: ${pinned.map(_.output)}")
+    val reads = pinned.map(_.rdd).distinct.flatMap(fileScans)
+    assert(reads.map(_.readSchema.fieldNames.toSeq) == Seq(Seq("doc_id", "text")))
+    assert(reads.head.filePartitions.flatMap(_.files).forall(_.filePath.toString.contains("documents")))
   }
 
   test("no registered visible plan contains a nondeterministic expression") {

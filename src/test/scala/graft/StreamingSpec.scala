@@ -106,8 +106,8 @@ class StreamingSpec extends AnyFunSuite {
     // which certifies state continuation but never the out-of-order path a
     // real stream actually faces. This pins BOTH halves of the watermark
     // contract on the session-window store, with hand-placed timestamps and
-    // semantics PROBED EMPIRICALLY first (graft.tools.ProbeLate, the st3
-    // method) because Spark 4 propagates TWO watermarks per batch
+    // semantics PROBED EMPIRICALLY first (the st3 method; RUNBOOK "Late
+    // data") because Spark 4 propagates TWO watermarks per batch
     // (SPARK-42376): the late-events filter uses the watermark as of the
     // PREVIOUS batch's start, eviction uses the current one. So:
     //  (a) a row that arrives out of order but above the late-events
