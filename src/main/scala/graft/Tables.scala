@@ -116,9 +116,15 @@ object Tables {
     }
   }
 
-  /** Register every table in `dir` as a temp view so `spark.sql` queries
-    * (the engine's verbatim-SQL path, ≈ reference src/main.rs:29) resolve.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
+  /** Run SQL text over the corpus in `dir` (the engine's verbatim-SQL path,
+    * ≈ reference src/main.rs:29): the tables the text names register as
+    * temp views through [[apply]] — chaos injection included — and every
+    * table registers when [[graft.sources.Referenced.tables]] cannot tell
+    * which are named. */
+  def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
+    val named = graft.sources.Referenced.tables(spark, text, names)
+    names.filter(n => named.forall(_.contains(n)))
+      .foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
+    spark.sql(text)
+  }
 }

@@ -65,6 +65,17 @@ object Bpe {
     * memory-safety fallback for adversarial vocabularies, not the norm. */
   val DriverVocabLimit: Int = 1 << 20
 
+  /** The regex that rewrites every whole-symbol occurrence of the pair
+    * `(l, r)` in a space-separated symbol stream. `\A`/`\z` anchor at the
+    * true ends of the input; `$` would also match before a final line
+    * terminator, where the padded-`contains` filter of
+    * [[learnMergesDistributed]] does not. With these anchors a stream
+    * matches exactly when `" " + sym + " "` contains `" " + l + " " + r +
+    * " "`, so the filter and the replace agree by construction
+    * (BpeMergePatternSpec). */
+  private[graft] def mergePattern(l: String, r: String): String =
+    "(?<=\\A| )" + Pattern.quote(l + " " + r) + "(?= |\\z)"
+
   /** Registry query (bp1): learn `numMerges` merges over the `documents`
     * word-frequency table. Output: one row per learned merge,
     * `(rank, left, right, merged, cnt)` in learning order. Full DuckDB
@@ -147,8 +158,7 @@ object Bpe {
           concat(array_join(filter(split(w, ""), c => length(c) > 0), " "),
             lit(" " + EndOfWord))), " ").as("sym"))
     val encoded = merges.foldLeft(docs) { case (df, (l, r)) =>
-      val pat = "(?<=^| )" + Pattern.quote(l + " " + r) + "(?= |$)"
-      df.withColumn("sym", regexp_replace(col("sym"), pat, Matcher.quoteReplacement(l + r)))
+      df.withColumn("sym", regexp_replace(col("sym"), mergePattern(l, r), Matcher.quoteReplacement(l + r)))
     }
     encoded
       .select(
@@ -360,7 +370,7 @@ object Bpe {
         merges += ((rank, l, r, l + r, c))
         // left-to-right non-overlapping whole-symbol replacement ≡ greedy BPE
         val lr = l + " " + r
-        val pat = "(?<=^| )" + Pattern.quote(lr) + "(?= |$)"
+        val pat = mergePattern(l, r)
         val repl = Matcher.quoteReplacement(l + r)
         // delta = post-merge pairs − pre-merge pairs of the words that
         // contain the winning pair; everything else is untouched, so the
@@ -368,7 +378,7 @@ object Bpe {
         // contains() is an exact prefilter for the anchored match (any
         // boundary match contains the raw "l r" substring), so the padded
         // test runs only on candidate rows. The boundary test itself is a
-        // PADDED CONTAINS, not the anchored rlike: "(?<=^| )Q(?= |$)"
+        // PADDED CONTAINS, not the anchored rlike: mergePattern
         // matches sym exactly when " "+sym+" " contains " "+lr+" " (the
         // lookarounds assert space-or-edge on both sides, which padding
         // turns into literal spaces) — same rows, but a codegen'd memcmp

@@ -144,8 +144,7 @@ object Relational {
 
   /** GROUPING SETS via the SQL front-end (the engine's verbatim-SQL path). */
   def q10GroupingSets(s: SparkSession, d: String): DataFrame = {
-    Tables.registerAll(s, d)
-    s.sql(
+    Tables.sql(s, d,
       """SELECT l_returnflag, l_linestatus, count(*) AS n
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
@@ -503,8 +502,7 @@ object Relational {
     * outer aggregate join (no per-row execution; same query text runs on
     * the oracle). Raw max/count outputs, so no float arithmetic at all. */
   def q30CorrelatedSubquery(s: SparkSession, d: String): DataFrame = {
-    Tables.registerAll(s, d)
-    s.sql(
+    Tables.sql(s, d,
       """SELECT c_custkey,
         |       (SELECT max(o_totalprice) FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_order,
         |       (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders
@@ -523,8 +521,7 @@ object Relational {
     * one IEEE division computed identically by both engines; a plain
     * double `avg()` would also be partition-order-dependent. */
   def q46AvgQtySubquery(s: SparkSession, d: String): DataFrame = {
-    Tables.registerAll(s, d)
-    s.sql(
+    Tables.sql(s, d,
       """SELECT l_returnflag, count(*) AS n_small,
         |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS small_revenue
         |FROM lineitem l
@@ -767,7 +764,6 @@ object Relational {
     * oracle; timestamps are compared in epoch-µs longs per the determinism
     * contract. */
   def q42RecursiveStreaks(s: SparkSession, d: String): DataFrame = {
-    Tables.registerAll(s, d)
     // Recursion guards: depth is bounded by the longest streak (6 on this
     // corpus — the 100-level default is ample), but the ROW guard counts
     // every row the recursion EVER produces, and the chain relation is
@@ -869,8 +865,7 @@ object Relational {
     * the lateral into a ranked window join — per-group top-k without a
     * driver loop; the same text runs on the oracle. */
   def q45LateralTopN(s: SparkSession, d: String): DataFrame = {
-    Tables.registerAll(s, d)
-    s.sql(
+    Tables.sql(s, d,
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
         |FROM customer c,
         |LATERAL (SELECT o_orderkey, o_totalprice FROM orders o

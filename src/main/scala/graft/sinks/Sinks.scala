@@ -75,17 +75,20 @@ object Sinks {
     * Spark always writes a directory of part-files, so this coalesces to a
     * single partition (serializing the final write — documented tradeoff,
     * SURVEY.md §7.4.1), writes to a temp dir, and promotes the lone
-    * part-file to the requested name.
+    * part-file to the requested name. The temp dir is removed whether or
+    * not the write succeeds; a failed write leaves no output file and
+    * surfaces its own exception.
     */
   def writeSingleFile(df: DataFrame, path: String): Unit = {
     val format = fromPath(path)
     val tmp = path + ".tmp-spark-write"
-    writer(df.coalesce(1), format).save(tmp)
-    val part = Option(new File(tmp).listFiles()).getOrElse(Array.empty[File])
-      .find(f => f.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part-file produced under $tmp"))
-    JFiles.move(part.toPath, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(new File(tmp))
+    try {
+      writer(df.coalesce(1), format).save(tmp)
+      val part = Option(new File(tmp).listFiles()).getOrElse(Array.empty[File])
+        .find(f => f.getName.startsWith("part-"))
+        .getOrElse(throw new IllegalStateException(s"no part-file produced under $tmp"))
+      JFiles.move(part.toPath, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
+    } finally deleteRecursively(new File(tmp))
   }
 
   private def deleteRecursively(f: File): Unit = {

@@ -25,7 +25,12 @@ sealed trait Source {
 object Source {
 
   /** Directory of table files; each file becomes a temp view named after its
-    * basename, then the query runs on Spark SQL. This is the scale path: the
+    * basename, then the query runs on Spark SQL. Only the tables the query
+    * names are read and registered ([[Referenced.tables]]): one schema read
+    * per referenced table, not one per table in the directory. A statement
+    * that is not a plain query, uses IDENTIFIER(...), or names a relation
+    * the directory lacks registers every table instead, so its resolution
+    * and its error text are unchanged. This is the scale path: the
     * scan splits per file/row-group across executors, with predicate
     * pushdown and column pruning from Catalyst — unlike the reference's
     * single-connection, one-row-per-batch stream
@@ -39,11 +44,15 @@ object Source {
   final case class Files(format: String, dir: String, fileExt: Option[String] = None)
       extends Source {
     def load(spark: SparkSession, query: String): DataFrame = {
-      registerViews(spark)
+      registerViews(spark, query)
       spark.sql(query)
     }
 
-    def registerViews(spark: SparkSession): Unit = {
+    /** Register, in sorted order (file tables, then directory tables), the
+      * tables of `dir` that `query` names. The directory is listed and
+      * checked whole — no tables, or a file and a directory table sharing a
+      * name, fail whatever the query names. */
+    def registerViews(spark: SparkSession, query: String): Unit = {
       graft.Tables.ensureNanosReadable(spark)
       val ext = "." + fileExt.getOrElse(format)
       val entries = Option(new File(dir).listFiles()).getOrElse(Array.empty[File])
@@ -57,14 +66,14 @@ object Source {
         !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
         containsData(f, ext, 0))
       require(files.nonEmpty || dirTables.nonEmpty, s"no *$ext files under $dir")
+      def viewName(f: File) =
+        if (f.getName.toLowerCase(java.util.Locale.ROOT).endsWith(ext)) f.getName.dropRight(ext.length)
+        else f.getName
+      val tables = (files.sortBy(_.getName) ++ dirTables.sortBy(_.getName)).map(f => viewName(f) -> f)
       // A file table and a directory table resolving to the same view name
       // (events.parquet file + events/ dir) would silently shadow one
       // another through createOrReplaceTempView — fail loudly instead.
-      val fileNames = files.map(f => f.getName.dropRight(ext.length))
-      val dirNames = dirTables.map { f =>
-        if (f.getName.toLowerCase(java.util.Locale.ROOT).endsWith(ext)) f.getName.dropRight(ext.length) else f.getName
-      }
-      val dups = (fileNames ++ dirNames).groupBy(identity).collect {
+      val dups = tables.map(_._1).groupBy(identity).collect {
         case (n, occ) if occ.size > 1 => n
       }
       require(dups.isEmpty,
@@ -76,15 +85,10 @@ object Source {
         case "csv" => spark.read.option("header", "true").option("inferSchema", "true")
         case _     => spark.read
       }
-      files.sortBy(_.getName).foreach { f =>
+      val named = Referenced.tables(spark, query, tables.map(_._1))
+      tables.filter { case (n, _) => named.forall(_.contains(n)) }.foreach { case (n, f) =>
         graft.Tables.normalizeTimestamps(reader.format(format).load(f.getAbsolutePath))
-          .createOrReplaceTempView(f.getName.dropRight(ext.length))
-      }
-      dirTables.sortBy(_.getName).foreach { f =>
-        val name = if (f.getName.toLowerCase(java.util.Locale.ROOT).endsWith(ext))
-          f.getName.dropRight(ext.length) else f.getName
-        graft.Tables.normalizeTimestamps(reader.format(format).load(f.getAbsolutePath))
-          .createOrReplaceTempView(name)
+          .createOrReplaceTempView(n)
       }
     }
 

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -335,5 +338,70 @@ class EngineSpec extends AnyFunSuite {
       "SELECT r_name FROM region WHERE r_regionkey < 0", out)
     val lines = scala.io.Source.fromFile(out).getLines().toList
     assert(lines == List("r_name"))
+  }
+
+  /** Spark jobs `body` starts from this thread, read after the listener bus
+    * has delivered every event. The job group keeps out jobs other threads
+    * start meanwhile (a streaming query left running by another suite). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsDuring")
+    try { body; ListenerBusDrain(sc); jobs.get }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("view registration reads only the tables a query names: one job per table") {
+    // parquet schema inference is one job per registered table; planning
+    // the query itself runs none
+    assert(jobsDuring(Engine.query(spark, s"parquet://$sf", "SELECT r_name FROM region")) == 1)
+    assert(jobsDuring(Engine.query(spark, s"parquet://$sf",
+      """SELECT n_name, count(*) AS n FROM customer c
+        |JOIN nation n ON c.c_nationkey = n.n_nationkey
+        |JOIN region r ON n.n_regionkey = r.r_regionkey
+        |GROUP BY n_name""".stripMargin)) == 3)
+    // a name the source lacks registers every table, as before
+    assert(jobsDuring(intercept[AnalysisException](
+      Engine.query(spark, s"parquet://$sf", "SELECT * FROM no_such_table"))) == Tables.names.size)
+  }
+
+  test("a corrupt table file fails only the queries that name it") {
+    val dir = Files.createTempDirectory("graft-junk-src")
+    Tables.names.foreach(n => Files.copy(
+      java.nio.file.Paths.get(s"$sf/$n.parquet"), dir.resolve(s"$n.parquet")))
+    Files.write(dir.resolve("junk.parquet"), "this is not a parquet file".getBytes("UTF-8"))
+    assert(Engine.query(spark, s"parquet://$dir", "SELECT count(*) FROM region")
+      .first().getLong(0) == 5)
+    val e = intercept[org.apache.spark.SparkException] {
+      Engine.query(spark, s"parquet://$dir", "SELECT count(*) FROM junk").collect()
+    }
+    assert(e.getMessage.contains("junk.parquet"), e.getMessage)
+  }
+
+  test("a failed export leaves neither the output file nor the temp directory") {
+    // the write job throws (Spark itself removes the directory it was writing)
+    val out = tmp("csv")
+    val e = intercept[Exception] {
+      Engine.export(spark, s"parquet://$sf", "SELECT raise_error('boom') FROM region", out)
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("boom")), e.toString)
+    assert(!new java.io.File(out).exists())
+    assert(!new java.io.File(out + ".tmp-spark-write").exists())
+    // the write succeeds but promoting its part-file fails: the output path
+    // is a non-empty directory
+    val taken = tmp("csv")
+    Files.createDirectories(java.nio.file.Paths.get(taken, "keep"))
+    intercept[java.nio.file.DirectoryNotEmptyException] {
+      Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", taken)
+    }
+    assert(!new java.io.File(taken + ".tmp-spark-write").exists())
   }
 }

@@ -22,9 +22,8 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   private def crossCheck(name: String, sql: String): Unit = {
-    Tables.registerAll(spark, sf)
     val api = rows(Registry.queries(name)(spark, sf))
-    val viaSql = rows(spark.sql(sql))
+    val viaSql = rows(Tables.sql(spark, sf, sql))
     assert(api == viaSql, s"$name: DataFrame API != Spark SQL")
   }
 
@@ -100,7 +99,6 @@ class RelationalSpec extends AnyFunSuite {
   test("q25 (demoted twin): fact-fact join+agg equals Spark SQL within its exchange budget") {
     // q25 was demoted from the registry (its machinery overlaps q03/q43);
     // this test carries both its result contract and its plan budget
-    Tables.registerAll(spark, sf)
     // plan budget read BEFORE execution (the AQE final plan re-prints each
     // materialized stage's Exchange, inflating a text count — same
     // methodology as ShuffleBudgetSpec)
@@ -110,7 +108,7 @@ class RelationalSpec extends AnyFunSuite {
       .findAllIn(plan).length
     assert(exchanges <= 2, s"q25 now plans $exchanges exchanges (budget 2)")
     val api = rows(graft.operators.Relational.q25BigJoinAgg(spark, sf))
-    val viaSql = rows(spark.sql(
+    val viaSql = rows(Tables.sql(spark, sf,
       "SELECT o_orderpriority, count(*) AS n_items, CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS revenue FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey GROUP BY o_orderpriority ORDER BY o_orderpriority"))
     assert(api == viaSql && api.nonEmpty)
   }
@@ -124,8 +122,7 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("q24 portable HLL within error bounds of exact; built-in HLL++ agrees") {
-    Tables.registerAll(spark, sf)
-    val exact = spark.sql(
+    val exact = Tables.sql(spark, sf,
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS p,
         |count(DISTINCT l_orderkey) AS o FROM lineitem GROUP BY 1""".stripMargin)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -141,7 +138,7 @@ class RelationalSpec extends AnyFunSuite {
         s"${r.getString(0)}: portable HLL nd_order ${r.getLong(2)} vs exact $o")
     }
     // the native HLL++ sketch stays exercised: same bound vs exact
-    spark.sql(
+    Tables.sql(spark, sf,
       """SELECT l_returnflag, approx_count_distinct(l_partkey) AS p,
         |approx_count_distinct(l_orderkey) AS o FROM lineitem GROUP BY 1""".stripMargin)
       .collect().foreach { r =>
@@ -152,14 +149,13 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("approx percentiles land near the exact ones") {
-    Tables.registerAll(spark, sf)
     // the right bound for a SAMPLE percentile is on RANK, not value: with
     // ~n·10% samples the estimate's true rank is within 3·√(p(1−p)/s) of p
     // (s≈200 at sf0.001 ⇒ ±0.105 for p50, ±0.046 for p95); observed 0.038
     // and 0.022. A value bound would conflate sampling error with the
     // price distribution's local slope.
     def rankOf(flag: String, v: Double): Double =
-      spark.sql(
+      Tables.sql(spark, sf,
         s"""SELECT CAST(count(CASE WHEN l_extendedprice <= $v THEN 1 END) AS DOUBLE)
            |/ count(*) FROM lineitem WHERE l_returnflag = '$flag'""".stripMargin)
         .collect()(0).getDouble(0)
@@ -175,7 +171,7 @@ class RelationalSpec extends AnyFunSuite {
     // on ~2000-row groups is near-exact, so a tight value bound holds
     val exact = Registry.queries("q31_percentiles")(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    spark.sql(
+    Tables.sql(spark, sf,
       """SELECT l_returnflag,
         |approx_percentile(l_extendedprice, 0.5, 1000) AS ap50,
         |approx_percentile(l_extendedprice, 0.95, 1000) AS ap95
@@ -197,8 +193,7 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("corr stats from decimal sums agree with Spark's native corr to float tolerance") {
-    Tables.registerAll(spark, sf)
-    val native = spark.sql(
+    val native = Tables.sql(spark, sf,
       """SELECT l_returnflag, corr(l_quantity, l_extendedprice) AS c,
         |stddev_samp(l_quantity) AS sd FROM lineitem GROUP BY l_returnflag""".stripMargin)
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
