@@ -13,8 +13,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Why it exists: each st row is a full Structured Streaming harness —
   * stage input files, start a query, run 3–48 micro-batches, drain a sink —
-  * and pays a fixed ~3–5 s of trigger/commit machinery that tmpfs A/Bs
-  * proved is planning overhead, not storage or data cost. Run back to back
+  * and pays a fixed ~3–5 s of trigger/commit machinery, not data cost.
+  * Much of that floor was checkpoint writes: Spark's default checkpoint
+  * manager ran `chmod`/`readlink`/`stat` child processes for every offset,
+  * commit, log and state-store file, a process-creation cost that the
+  * tmpfs A/Bs (which found no storage effect) could not see;
+  * `StreamingOps.runAvailableNow` starts every stream with the
+  * FileSystem-based manager instead (RUNBOOK, "Streaming checkpoint
+  * writes"). Run back to back
   * (the r09 shape) the family paid 8 × that floor ≈ 31–36 s of the whole
   * sf0.1 bench. The floors OVERLAP when the queries run concurrently —
   * st6's two internal AvailableNow queries proved it (6.9 → 5.1 s sf0.1) —

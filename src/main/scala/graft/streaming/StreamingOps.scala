@@ -1,9 +1,11 @@
 package graft.streaming
 
 import graft.Ckpt.PinOps
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions.{window => timeWindow, _}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 import graft.Tables
 
@@ -337,17 +339,12 @@ object StreamingOps {
     * exactly (StreamingSpec proves it with one-file-per-trigger batches).
     * At scale the merge is one shuffle of (existing state ∪ batch
     * partials) keyed by user — state size, not stream-lifetime size. */
-  def incrementalRollup(events: DataFrame, stateDir: String): StreamingQuery = {
-    val q = events.writeStream
+  def incrementalRollup(events: DataFrame, stateDir: String): StreamingQuery =
+    runAvailableNow(events.sparkSession)(Seq(events.writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         mergeRollup(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      })).head
 
   /** Highest batch id already merged into `dir` (−1 if none). */
   def committedBatchId(dir: String): Long =
@@ -411,17 +408,12 @@ object StreamingOps {
     * `Dedup.fingerprint` keep-list (StreamingSpec proves it, plus replay
     * idempotence). */
   def incrementalDedupIngest(
-      docs: DataFrame, fpDir: String, outDir: String): StreamingQuery = {
-    val q = docs.writeStream
+      docs: DataFrame, fpDir: String, outDir: String): StreamingQuery =
+    runAvailableNow(docs.sparkSession)(Seq(docs.writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         mergeDedup(batch, fpDir, outDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      })).head
 
   private def mergeDedup(batch: DataFrame, fpDir: String, outDir: String, batchId: Long): Unit = {
     if (batchId <= committedBatchId(fpDir)) return // replayed batch
@@ -463,8 +455,7 @@ object StreamingOps {
     * fingerprint from its text. Batches arriving in id order make
     * first-arrival-wins ≡ min-doc_id-wins, so the result equals the batch
     * dd2 keep-list — which is exactly what the oracle asserts. */
-  def dedupIngestKeepList(s: SparkSession, d: String): DataFrame = {
-    val base = stageTempDir("graft-st1-")
+  def dedupIngestKeepList(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st1-") { base =>
     val inDir = new java.io.File(base, "in").getPath
     val fpDir = new java.io.File(base, "fp").getPath
     val outDir = new java.io.File(base, "out").getPath
@@ -485,16 +476,14 @@ object StreamingOps {
     incrementalDedupIngest(
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(s"$inDir/*.parquet/*.parquet"),
-      fpDir, outDir).stop()
+      fpDir, outDir)
     // materialize the keep-list off the staging tree (localCheckpoint is
-    // eager), then reclaim the tree NOW instead of leaking it to JVM exit —
-    // Bench's re-time alone runs this twice per JVM
+    // eager) before withStagingTree reclaims it
     val result = s.read.parquet(outDir)
       .select(
         md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("fp"),
         col("doc_id").as("keep_id"))
       .pin()
-    reclaim(base)
     result.orderBy("keep_id")
   }
 
@@ -519,8 +508,7 @@ object StreamingOps {
     * strict `> gap` new-session rule; window end = last event + gap.
     * Timestamps are emitted as epoch micros (BIGINT) — integer-exact on
     * both engines. */
-  def sessionizationFromStream(s: SparkSession, d: String): DataFrame = {
-    val base = stageTempDir("graft-st2-")
+  def sessionizationFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st2-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3)
     val schema = s.read.parquet(s"$inDir/c00.parquet").schema
     val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
@@ -533,11 +521,9 @@ object StreamingOps {
     // wins (stress A/B: 8 parts 4.85/5.35 s vs 32 parts 6.44/9.88 s for
     // st2/st3). Contrast st4, whose join state buffers full event volume
     // and sizes by statePartitionsFor.
-    withShufflePartitions(s, 8) {
-      runToMemory(injectStChaos(sessionWindows(stream)), name,
-        OutputMode.Complete).stop()
-    }
-    drainMemorySink(s, name, base)
+    runToMemory(injectStChaos(sessionWindows(stream)), name,
+      OutputMode.Complete, partitions = Some(8))
+    drainMemorySink(s, name)
   }
 
   /** Registry query (st3): the APPEND-mode, watermark-closed half of the
@@ -563,19 +549,16 @@ object StreamingOps {
     * Sessions still open at end-of-stream stay in state and are dropped
     * with it — the production stream would emit them when their watermark
     * arrives; the oracle row certifies the closed set. */
-  def closedSessionsFromStream(s: SparkSession, d: String): DataFrame = {
-    val base = stageTempDir("graft-st3-")
+  def closedSessionsFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st3-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 4)
     val schema = s.read.parquet(s"$inDir/c00.parquet").schema
     val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(s"$inDir/*.parquet/*.parquet")
     val name = "st3_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // fixed 8 parts: session state is commit-dominated (see st2's note)
-    withShufflePartitions(s, 8) {
-      runToMemory(injectStChaos(sessionWindows(stream)), name,
-        OutputMode.Append).stop()
-    }
-    drainMemorySink(s, name, base)
+    runToMemory(injectStChaos(sessionWindows(stream)), name,
+      OutputMode.Append, partitions = Some(8))
+    drainMemorySink(s, name)
   }
 
   /** Stage a projection of the events table as `nFiles` ts-range parquet
@@ -676,16 +659,61 @@ object StreamingOps {
     math.min(s.sparkContext.defaultParallelism.toLong, byVolume).toInt
   }
 
-  /** Run `body` with spark.sql.shuffle.partitions scoped to `n`, restoring
-    * the prior value after — used to right-size a stateful stream's state
-    * partition count (a start-time property of the checkpoint) to the
-    * harness's fixture-scale traffic without touching the session default
-    * the batch registry runs under. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n)
-    try body finally s.conf.set(key, prev)
+  /** The one start path of every graft stream: start each writer under
+    * the AvailableNow trigger, run it through `processAllAvailable`, and stop
+    * them all, on success and on failure. Two session confs are scoped to
+    * the run and restored after it (a query reads both when it starts):
+    *  - `spark.sql.shuffle.partitions` = `partitions`, when given: a
+    *    stateful query's state partition count is pinned at its first
+    *    start, so this right-sizes it to the harness's traffic without
+    *    touching the session default the batch registry runs under;
+    *  - `spark.sql.streaming.checkpointFileManagerClass` = the
+    *    FileSystem-based manager. Spark's default FileContext-based one
+    *    pays for permission handling on every offset, commit, log and
+    *    state-store file, and without the native Hadoop library that runs
+    *    `chmod`/`readlink`/`stat` as child processes: one atomic write
+    *    measured 26–31 ms and 20 process-and-thread creations, against
+    *    6–8 ms and 4 here (RUNBOOK, "Streaming checkpoint writes").
+    *    The FileSystem-based manager commits a file by writing a temp file
+    *    and `FileSystem.rename`-ing it, which is atomic only where rename
+    *    is. That holds for every graft stream: each checkpoints under a
+    *    local temp directory (the staging trees of [[withStagingTree]],
+    *    Spark's own temp checkpoint for memory and `foreachBatch` sinks,
+    *    the file sinks' `_spark_metadata` inside the staging trees), where
+    *    `FileSystem.rename` is an atomic POSIX rename. A stream that
+    *    checkpoints to an object store must not start here.
+    * Writers are built inside the scope; the returned queries are stopped
+    * and keep their progress history. */
+  private[graft] def runAvailableNow(s: SparkSession, partitions: Option[Int] = None)(
+      writers: => Seq[DataStreamWriter[_]]): Seq[StreamingQuery] = {
+    val scoped = Seq(
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        Some(classOf[FileSystemBasedCheckpointFileManager].getName),
+      "spark.sql.shuffle.partitions" -> partitions.map(_.toString))
+      .collect { case (k, Some(v)) => (k, v, s.conf.getOption(k)) }
+    scoped.foreach { case (k, v, _) => s.conf.set(k, v) }
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    try {
+      writers.foreach(w => started += w.trigger(Trigger.AvailableNow()).start())
+      started.foreach(_.processAllAvailable())
+      started.toSeq
+    } finally {
+      started.foreach(_.stop())
+      scoped.foreach { case (k, _, prev) => prev.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
+  }
+
+  /** Run each named frame to an Append-mode parquet FILE sink at
+    * `base`/name (checkpoint `base`/name-ckpt), all in one
+    * [[runAvailableNow]], and read each sink's output back. */
+  private def runToFiles(s: SparkSession, partitions: Int, base: java.io.File)(
+      sinks: (String, DataFrame)*): Seq[DataFrame] = {
+    val outs = sinks.map { case (name, df) => new java.io.File(base, name).getPath -> df }
+    runAvailableNow(s, Some(partitions))(outs.map { case (out, df) =>
+      df.writeStream.outputMode(OutputMode.Append).format("parquet")
+        .option("path", out).option("checkpointLocation", s"$out-ckpt")
+    })
+    outs.map { case (out, _) => s.read.parquet(out) }
   }
 
   /** Staging cuts that provably split a DUPLICATE-KEY group across
@@ -753,8 +781,7 @@ object StreamingOps {
     * sequences) tunes the same way. An inner stream-stream join emits on
     * match (no watermark-closing wait), so no result rows are parked in
     * state at end-of-stream. */
-  def intervalPairsFromStream(s: SparkSession, d: String): DataFrame = {
-    val base = stageTempDir("graft-st4-")
+  def intervalPairsFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st4-") { base =>
     // MICRO-BATCH COUNT scales with same-user probe density, floor 3. The
     // join's probe cost per batch is Σ_u (rows_u in this batch) × (rows_u
     // buffered) — with a handful of giant batches over a months-long span,
@@ -820,25 +847,11 @@ object StreamingOps {
     // st2 cannot do this (session merging requires Complete mode, which
     // file sinks reject); st3/st4 are Append-legal and distributed-sink
     // ready.
-    val outDir = new java.io.File(base, "pairs").getPath
-    val ckpt = new java.io.File(base, "ckpt").getPath
-    withShufflePartitions(s, statePartitionsFor(s, nRows)) {
-      // delay = interval: the earliest-legal-eviction point, complete for
-      // the ts-range staged source at ANY delay (see the scaladoc proof)
-      val q = injectStChaos(
-        intervalPairs(stream, "30 minutes", delay = "30 minutes")).writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    val result = s.read.parquet(outDir).pin()
-    reclaim(base)
-    result.orderBy("user_id", "id_a", "id_b")
+    // delay = interval: the earliest-legal-eviction point, complete for
+    // the ts-range staged source at ANY delay (see the scaladoc proof)
+    val Seq(pairs) = runToFiles(s, statePartitionsFor(s, nRows), base)(
+      "pairs" -> injectStChaos(intervalPairs(stream, "30 minutes", delay = "30 minutes")))
+    pairs.pin().orderBy("user_id", "id_a", "id_b")
   }
 
   /** Registry query (st5): ev17's forward-fill PRODUCED BY the
@@ -860,29 +873,15 @@ object StreamingOps {
     * Append-mode parquet FILE sink like st4 (a memory sink would park the
     * densified relation driver-side); state is O(users) — commit-dominated
     * like st2/st3, so the same fixed 8 state partitions. */
-  def forwardFillFromStream(s: SparkSession, d: String): DataFrame = {
-    val base = stageTempDir("graft-st5-")
+  def forwardFillFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st5-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3,
       cols = Seq("user_id", "event_id", "ts", "event_type", "value"))
     val schema = s.read.parquet(s"$inDir/c00.parquet").schema
     val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(s"$inDir/*.parquet/*.parquet")
-    val outDir = new java.io.File(base, "fill").getPath
-    val ckpt = new java.io.File(base, "ckpt").getPath
-    withShufflePartitions(s, 8) {
-      val q = injectStChaos(locfUpdates(stream)(s).toDF()).writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    val result = s.read.parquet(outDir).pin()
-    reclaim(base)
-    result.orderBy("user_id", "ts_us", "event_id")
+    val Seq(fill) = runToFiles(s, 8, base)(
+      "fill" -> injectStChaos(locfUpdates(stream)(s).toDF()))
+    fill.pin().orderBy("user_id", "ts_us", "event_id")
   }
 
   /** Registry query (st7): the built-in DEDUP STATE STORE executed —
@@ -909,8 +908,7 @@ object StreamingOps {
     * commit-dominated at fixture scale, fixed 8 partitions like st2/st3;
     * dedup emits each survivor on arrival, so the sink is an Append-mode
     * parquet FILE sink (the production log shape). */
-  def dedupWithinWatermarkFromStream(s: SparkSession, d: String): DataFrame = {
-    val base = stageTempDir("graft-st7-")
+  def dedupWithinWatermarkFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st7-") { base =>
     val hourKey = Seq(col("user_id"), col("event_type"),
       date_trunc("hour", col("ts")))
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3,
@@ -919,27 +917,13 @@ object StreamingOps {
     val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(s"$inDir/*.parquet/*.parquet")
     val keyed = stream.withColumn("w_start", date_trunc("hour", col("ts")))
-    val outDir = new java.io.File(base, "dedup").getPath
-    val ckpt = new java.io.File(base, "ckpt").getPath
-    withShufflePartitions(s, 8) {
-      val q = injectStChaos(streamingDedup(keyed, "ts", "2 hours",
+    val Seq(dedup) = runToFiles(s, 8, base)(
+      "dedup" -> injectStChaos(streamingDedup(keyed, "ts", "2 hours",
           "user_id", "event_type", "w_start")
-        .select("user_id", "event_type", "w_start"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    val result = s.read.parquet(outDir).pin()
-    reclaim(base)
+        .select("user_id", "event_type", "w_start")))
     // explicit NULLS FIRST: event_type is nullable on the null-events tier
     // and Spark/DuckDB default null orderings differ
-    result.orderBy(col("user_id"), col("event_type").asc_nulls_first,
+    dedup.pin().orderBy(col("user_id"), col("event_type").asc_nulls_first,
       col("w_start"))
   }
 
@@ -953,30 +937,15 @@ object StreamingOps {
     * watermark-closed windows, the bounded-state emission a production
     * metrics stream runs on. State is O(open windows) — commit-dominated,
     * fixed 8 partitions. */
-  def closedTumblingFromStream(s: SparkSession, d: String): DataFrame = {
-    val base = stageTempDir("graft-st8-")
+  def closedTumblingFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st8-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 4,
       cols = Seq("event_type", "ts", "value"))
     val schema = s.read.parquet(s"$inDir/c00.parquet").schema
     val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(s"$inDir/*.parquet/*.parquet")
-    val outDir = new java.io.File(base, "windows").getPath
-    val ckpt = new java.io.File(base, "ckpt").getPath
-    withShufflePartitions(s, 8) {
-      val q = injectStChaos(tumblingCounts(stream))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    val result = s.read.parquet(outDir).pin()
-    reclaim(base)
-    result.orderBy(col("w_start"), col("event_type").asc_nulls_first)
+    val Seq(windows) = runToFiles(s, 8, base)(
+      "windows" -> injectStChaos(tumblingCounts(stream)))
+    windows.pin().orderBy(col("w_start"), col("event_type").asc_nulls_first)
   }
 
   /** Registry query (st6): dd4's near-dup pair relation with CANDIDATE
@@ -1012,8 +981,7 @@ object StreamingOps {
     * shared-oracle pattern). State is bounded like the batch candidate
     * cost: ≤ BucketCap+1 ids per live bucket, a tombstone per dead one,
     * (count, canon) per sig group. */
-  def lshPairsFromStream(s: SparkSession, d: String): DataFrame = {
-    val base = stageTempDir("graft-st6-")
+  def lshPairsFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st6-") { base =>
     val inDir = new java.io.File(base, "in").getPath
     val docs = graft.Tables(s, d, "documents").select("doc_id", "text")
     stageConcurrently((0 until 3).map { i => () =>
@@ -1025,16 +993,6 @@ object StreamingOps {
     def stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet/*.parquet")
     implicit val sp: SparkSession = s
-    def startLog(df: DataFrame, name: String) = {
-      val out = new java.io.File(base, name).getPath
-      out -> df.writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$out-ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
     // state is O(distinct band keys / sig groups) — commit-dominated at
     // fixture scale like the session rows (st2/st3): same fixed 8 parts.
     // The two accumulators are INDEPENDENT streaming queries over the same
@@ -1042,14 +1000,9 @@ object StreamingOps {
     // CONCURRENTLY — exactly how a production ingest deployment fans one
     // source into parallel stateful consumers; the per-batch commit floors
     // overlap instead of adding (sf0.1 warm ~6.9 → ~5.1 s, stress 13.4 → 10.4).
-    val (bucketLog, sigLog) = withShufflePartitions(s, 8) {
-      val started = Seq(startLog(lshBucketUpdates(stream).toDF(), "buckets"),
-        startLog(sigGroupUpdates(stream).toDF(), "sigs"))
-      val Seq(b, g) = started.map { case (out, q) =>
-        q.processAllAvailable(); q.stop(); s.read.parquet(out)
-      }
-      (b, g)
-    }
+    val Seq(bucketLog, sigLog) = runToFiles(s, 8, base)(
+      "buckets" -> lshBucketUpdates(stream).toDF(),
+      "sigs" -> sigGroupUpdates(stream).toDF())
     val membership = bucketLog.groupBy("band", "sig")
       .agg(max(col("dead")).as("dead"),
         array_distinct(flatten(collect_list(col("members")))).as("ms"))
@@ -1074,16 +1027,14 @@ object StreamingOps {
       .filter(col("jaccard") >= 0.85)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
       .pin()
-    reclaim(base)
     result.orderBy("id_a", "id_b")
   }
 
   /** Materialize a session memory sink's table as epoch-µs columns, then
-    * free everything the run accumulated: the sink's registered temp view
-    * (Complete mode parks the full table driver-side) and the staged input
-    * tree. localCheckpoint is eager, so nothing downstream re-reads either. */
-  private def drainMemorySink(
-      s: SparkSession, name: String, base: java.io.File): DataFrame = {
+    * drop the sink's registered temp view (Complete mode parks the full
+    * table driver-side). localCheckpoint is eager, so nothing downstream
+    * re-reads it. */
+  private def drainMemorySink(s: SparkSession, name: String): DataFrame = {
     val result = s.table(name)
       .select(col("user_id"),
         unix_micros(col("s_start")).as("s_start_us"),
@@ -1091,13 +1042,12 @@ object StreamingOps {
         col("n_events"))
       .pin()
     s.catalog.dropTempView(name)
-    reclaim(base)
     result.orderBy("user_id", "s_start_us")
   }
 
   /** One JVM-wide cleanup hook over a shared list (per-call hooks leak a
-    * thread each); staged dirs are normally reclaimed eagerly by the query
-    * that created them — the hook only catches runs that died mid-way. */
+    * thread each); [[withStagingTree]] deletes each tree when its member
+    * returns or throws — the hook only catches a JVM that exits mid-run. */
   private val pendingCleanup = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
   private lazy val cleanupHookInstalled: Boolean = {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -1109,10 +1059,12 @@ object StreamingOps {
   // Scratch placement note (measured): routing these trees to the
   // RAM-backed /dev/shm instead of java.io.tmpdir was A/B'd over the full
   // streaming family at sf0.1 (two fresh-JVM pairs each way: 47.4/44.1 s
-  // on /tmp vs 44.6/50.3 s on tmpfs) — no effect outside host noise. The
-  // micro-batch floor is trigger/planning machinery, not storage latency,
-  // so the default tmpdir stays (and production checkpoints belong on
-  // durable shared storage anyway).
+  // on /tmp vs 44.6/50.3 s on tmpfs) — no effect outside host noise. That
+  // A/B could not see the storage-side cost that did dominate the floor:
+  // it is process creation, not I/O — the default checkpoint manager ran
+  // `chmod`/`readlink`/`stat` child processes for every checkpoint file
+  // (see runAvailableNow). The default tmpdir stays (and production
+  // checkpoints belong on durable shared storage anyway).
   /** Run independent staging writes concurrently (each is typically a
     * single-task coalesce(1) job — serially they were N sequential
     * single-thread writes, a visible slice of the harness floor at the
@@ -1162,16 +1114,19 @@ object StreamingOps {
     }
   }
 
-  private def stageTempDir(prefix: String): java.io.File = {
+  /** Run `body` on a fresh staging tree in `java.io.tmpdir` (staged input,
+    * checkpoints, state, sink output) and delete the tree when `body`
+    * returns or throws. Every member pins its result off the tree before
+    * returning, so nothing reads the tree afterwards; Bench's re-time alone
+    * runs a member twice per JVM, so a tree must not wait for JVM exit. */
+  private def withStagingTree[T](prefix: String)(body: java.io.File => T): T = {
     require(cleanupHookInstalled)
-    val f = java.nio.file.Files.createTempDirectory(prefix).toFile
-    pendingCleanup.add(f)
-    f
-  }
-
-  private def reclaim(base: java.io.File): Unit = {
-    deleteRecursively(base)
-    pendingCleanup.remove(base)
+    val base = java.nio.file.Files.createTempDirectory(prefix).toFile
+    pendingCleanup.add(base)
+    try body(base) finally {
+      deleteRecursively(base)
+      pendingCleanup.remove(base)
+    }
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -1259,13 +1214,6 @@ object StreamingOps {
       }
   }
 
-  /** Run any of the above to a named in-memory table and process all
-    * currently-available input (the local smoke harness; production would
-    * use a real sink + trigger). The output mode is caller-supplied because
-    * each operator admits different modes: tumblingCounts works in
-    * Update/Append, sessionWindows requires Complete (session merging
-    * rewrites past windows), statefulUserTotals declares Append — there is
-    * no default valid for all three. */
   /** In-micro-batch chaos tier (`SPARK_GRAFT_ST_CHAOS`, r12): fail the
     * FIRST attempt of every third task of a streaming query's STATEFUL
     * stage, AFTER pulling rows through the stateful operator — the task
@@ -1307,14 +1255,16 @@ object StreamingOps {
       } else it
     }(org.apache.spark.sql.Encoders.row(df.schema))
 
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): StreamingQuery = {
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q
-  }
+  /** Run any of the above to a named in-memory table and process all
+    * currently-available input (the local smoke harness; production would
+    * use a real sink + trigger). The output mode is caller-supplied because
+    * each operator admits different modes: tumblingCounts works in
+    * Update/Append, sessionWindows requires Complete (session merging
+    * rewrites past windows), statefulUserTotals declares Append — there is
+    * no default valid for all three. `partitions` scopes the state
+    * partition count (see [[runAvailableNow]]). */
+  def runToMemory(df: DataFrame, name: String, mode: OutputMode,
+      partitions: Option[Int] = None): StreamingQuery =
+    runAvailableNow(df.sparkSession, partitions)(Seq(
+      df.writeStream.outputMode(mode).format("memory").queryName(name))).head
 }

@@ -193,11 +193,9 @@ class StreamingSpec extends AnyFunSuite {
       val schema = spark.read.parquet(s"$inDir/c00.parquet").schema
       val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(s"$inDir/*.parquet/*.parquet")
-      val q = StreamingOps.sessionWindows(stream).writeStream
+      StreamingOps.runAvailableNow(spark)(Seq(StreamingOps.sessionWindows(stream).writeStream
         .outputMode(OutputMode.Append).format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.processAllAvailable(); q.stop()
+        .option("path", outDir).option("checkpointLocation", ckpt)))
     }
     def emitted(): Set[(Long, Long, Long, Long)] =
       spark.read.parquet(outDir)
@@ -230,6 +228,54 @@ class StreamingSpec extends AnyFunSuite {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base)
     }
+  }
+
+  test("runAvailableNow scopes the FileSystem checkpoint manager and the partition count") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.{Dataset, Row}
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val parts = "spark.sql.shuffle.partitions"
+    def confs = (spark.conf.getOption(key), spark.conf.get(parts))
+    val before = confs
+    val dir = java.nio.file.Files.createTempDirectory("graft-run-scope-").toFile
+    def writer(body: Dataset[Row] => Unit) =
+      spark.readStream.schema("id BIGINT").parquet(s"$dir/in").writeStream
+        .foreachBatch { (batch: Dataset[Row], _: Long) => body(batch) }
+    try {
+      spark.range(3).write.parquet(s"$dir/in")
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+      StreamingOps.runAvailableNow(spark, Some(3))(Seq(writer { batch =>
+        seen.add((batch.sparkSession.conf.get(key), batch.sparkSession.conf.get(parts))); ()
+      }))
+      val fsManager = classOf[org.apache.spark.sql.execution.streaming.checkpointing
+        .FileSystemBasedCheckpointFileManager].getName
+      assert(seen.asScala.toSet == Set((fsManager, "3")), s"in-batch confs: $seen")
+      assert(confs == before, "confs not restored after the run")
+      // a body that throws before any query starts, and a query whose batch
+      // throws: both restore the confs, and the failed query is stopped
+      intercept[IllegalStateException] {
+        StreamingOps.runAvailableNow(spark, Some(3))(throw new IllegalStateException("no writers"))
+      }
+      assert(confs == before, "confs not restored after a throwing body")
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingOps.runAvailableNow(spark, Some(3))(Seq(
+          writer(_ => throw new IllegalStateException("batch failed")).queryName("graft_failing")))
+      }
+      assert(confs == before, "confs not restored after a failed query")
+      assert(!spark.streams.active.exists(_.name == "graft_failing"), "failed query left running")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("a streaming member that throws deletes its staging tree") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def st2Trees = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+      .map(_.getName).filter(_.startsWith("graft-st2-")).toSet
+    val before = st2Trees
+    val empty = java.nio.file.Files.createTempDirectory("graft-empty-source-").toFile
+    try {
+      intercept[Exception](StreamingOps.sessionizationFromStream(spark, empty.getPath))
+      assert((st2Trees -- before).isEmpty, s"leaked staging trees: ${st2Trees -- before}")
+    } finally empty.delete()
   }
 
   test("streaming dedup drops cross-file duplicates down to the batch-distinct set") {
