@@ -19,7 +19,7 @@ import org.apache.spark.sql.Dataset
   * pin site to reliable `Dataset.checkpoint()` against the cluster's
   * checkpoint dir (`SPARK_GRAFT_CKPT_DIR` / `graft.ckptDir`, or
   * `spark.sparkContext.setCheckpointDir` if already set; falls back to a
-  * temp dir, which on a real cluster should be a DFS path). Reliable
+  * temp dir deleted at JVM exit; on a real cluster use a DFS path). Reliable
   * checkpoints survive executor loss — lost partitions re-READ the
   * checkpoint files instead of failing the query — at the price of one
   * extra computation of the pinned plan (Spark's checkpoint job runs
@@ -43,6 +43,9 @@ import org.apache.spark.sql.Dataset
   * the same conf (or sweep the checkpoint dir between jobs); otherwise a
   * long iterative job accumulates one pinned snapshot per round on the
   * DFS.
+  *
+  * Releases go through [[Ckpt.release]] and nowhere else: it is the one
+  * place that frees a pin's blocks before the ContextCleaner would.
   */
 object Ckpt {
 
@@ -56,8 +59,8 @@ object Ckpt {
     if (sc.getCheckpointDir.isEmpty) {
       val dir = sys.props.get("graft.ckptDir")
         .orElse(sys.env.get("SPARK_GRAFT_CKPT_DIR"))
-        .getOrElse(java.nio.file.Files
-          .createTempDirectory("graft-reliable-ckpt").toString)
+        .getOrElse(Scratch.deleteAtExit(java.nio.file.Files
+          .createTempDirectory("graft-reliable-ckpt").toFile).toString)
       sc.setCheckpointDir(dir)
     }
   }
@@ -74,4 +77,23 @@ object Ckpt {
       if (reliable) { ensureCheckpointDir(ds); ds.checkpoint(eager = false) }
       else ds.localCheckpoint(false)
   }
+
+  /** Release the storage blocks behind a pinned Dataset now.
+    *
+    * `Dataset.unpersist` only covers `cache()`; a local checkpoint's blocks
+    * live on the `LogicalRDD`'s RDD and otherwise survive until the
+    * ContextCleaner notices the RDD is unreachable (driver-GC-timed, 30 min
+    * periodic floor) — in an iterative loop that means O(rounds) superseded
+    * intermediates pinned in executor storage. Both pin forms analyze to a
+    * `LogicalRDD`, so this also fires under the reliable flag, harmlessly:
+    * that form's data lives in checkpoint files (cleaner-swept). Callers
+    * MUST only release a pin whose every consumer has fully materialized
+    * (e.g. after a full-relation action on the successor round): the pin
+    * severed lineage, so a consumer that still needs these blocks cannot
+    * recompute them. */
+  def release(ds: Dataset[_]): Unit =
+    ds.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

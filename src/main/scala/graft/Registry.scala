@@ -420,7 +420,9 @@ object Registry {
 
   /** ss4's oracle: the FULL 3-iteration Lloyd k-means + IVF probe pipeline
     * unrolled as chained CTEs — possible because every arithmetic step in
-    * `Similarity.ivfKMeansTopK` is engine-portable by construction:
+    * `Similarity.ivfKMeansTopK` and its trainer `Similarity.lloyd` (shared
+    * with ss6; change the trainer and both oracles together) is
+    * engine-portable by construction:
     *
     *  - seeds: the k lowest vec_ids, embeddings cast float→double (exact);
     *  - assignment: argmin over `|c|² − 2·x·c` where |c|² is a left-
@@ -432,7 +434,7 @@ object Registry {
     *    exact on both engines (HUGEINT / decimal(38,0)), and the mean
     *    replays the driver's IEEE op sequence verbatim
     *    (s/cnt/1e9 → ·1e6 → +0.5 → floor → /1e6); empty cells keep the
-    *    previous centroid (LEFT JOIN + CASE ≡ the driver's `cents.clone()`);
+    *    previous centroid (LEFT JOIN + CASE ≡ the trainer's codebook clone);
     *  - probe: each query's 2 nearest cells (row_number ≡ array_sort on
     *    (dist, cell) structs), then the ss1-proven round-6
     *    list_cosine_similarity rescore and per-query top-5. */
@@ -492,8 +494,9 @@ object Registry {
   /** ss6's oracle: the FULL product-quantization pipeline — per-subspace
     * codebook training (2 Lloyd iterations over the deterministic hash
     * sample), corpus encode, ADC shortlist, exact rescore — unrolled as
-    * chained CTEs. Same portability contract as ss4OracleSql, plus the
-    * ADC specifics:
+    * chained CTEs. Same trainer (`Similarity.lloyd`, here with 8
+    * subspaces) and portability contract as ss4OracleSql, plus the ADC
+    * specifics:
     *
     *  - all 8 subspaces train in ONE assignment relation (cent carries a
     *    `j` column; the 8-term sub-vector dot indexes `embedding[j·8+i]`);

@@ -6,7 +6,7 @@ import java.util.regex.{Matcher, Pattern}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Ckpt, Tables}
 
 /** Distributed byte-pair-encoding merge learning — the vocabulary-training
   * step of a tokenizer pipeline (tx5 is its pre-tokenizer; tx6 the word
@@ -360,8 +360,8 @@ object Bpe {
         .collect()
       oldPairs ::= pairCounts
       oldCurs ::= cur
-      oldPairs.drop(2).foreach(org.apache.spark.sql.GraftShim.unpersistCheckpoint)
-      oldCurs.drop(3).foreach(org.apache.spark.sql.GraftShim.unpersistCheckpoint)
+      oldPairs.drop(2).foreach(Ckpt.release)
+      oldCurs.drop(3).foreach(Ckpt.release)
       oldPairs = oldPairs.take(2)
       oldCurs = oldCurs.take(3)
       if (best.isEmpty) exhausted = true

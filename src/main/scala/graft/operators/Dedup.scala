@@ -4,7 +4,7 @@ import graft.Ckpt.PinOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Ckpt, Tables}
 import graft.functions.VectorFunctions
 
 /** Deduplication operators for a training-data pipeline, on `documents`.
@@ -704,8 +704,8 @@ object Dedup {
       // release them now instead of holding O(rounds) superseded label
       // sets in executor storage until the ContextCleaner's
       // driver-GC-timed sweep
-      org.apache.spark.sql.GraftShim.unpersistCheckpoint(labels)
-      stale.foreach(org.apache.spark.sql.GraftShim.unpersistCheckpoint)
+      Ckpt.release(labels)
+      stale.foreach(Ckpt.release)
       labels = cur.select("node", "label")
       hops += batch
       batch = math.min(8, batch * 2)
@@ -722,7 +722,7 @@ object Dedup {
       // propagation labels are dead. Self-edges are filtered back out and
       // the relation re-deduped (the star steps assume a clean symmetric
       // edge set).
-      org.apache.spark.sql.GraftShim.unpersistCheckpoint(labels)
+      Ckpt.release(labels)
       largeSmallStar(symPlus.filter(col("u") =!= col("v")).distinct())
     }
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Ckpt, Scratch, Tables}
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -55,23 +55,113 @@ object Similarity {
       GraftShim.expression(v),
       books.map(_.map(_.toVector).toVector).toVector, sub, strictLen))
 
-  /** Exact top-k neighbors for query vectors (vec_id < 10), ranked on
-    * rounded cosine with id tie-break for cross-engine determinism. */
-  def bruteForceTopK(s: SparkSession, d: String): DataFrame = {
-    val e = vectors(s, d)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        normFast(col("embedding")).as("qn"))
-    val c = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      normFast(col("embedding")).as("cn"))
-    val scored = broadcast(q).join(c, col("q_id") =!= col("c_id"))
+  private def centLit(c: Array[Double]): Column = array(c.map(x => lit(x.toFloat)): _*)
+
+  /** The one Lloyd trainer behind both quantizers: IVF's coarse quantizer
+    * (ss4) is a product quantizer with a single subspace (`m` = 1, `sub` =
+    * [[Dim]], whole-vector validity `strictLen`); PQ (ss6) trains `m`
+    * subspaces of `sub` dims at once. Returns `m` codebooks of at most `k`
+    * centroids each.
+    *
+    * Each iteration is one distributed pass: posexplode puts every
+    * (dim, value) on its own row, `pos div sub` recovers the subspace, and
+    * only the m·k·sub means cross to the driver (metadata scale; the same
+    * loop structure MLlib's KMeans uses) — the corpus never collects.
+    *
+    * Determinism AND portability — every step below is bit-stable across
+    * runs, partitionings and engines, which is what gives ss4 and ss6 FULL
+    * DuckDB oracles (Registry.ss4OracleSql / ss6OracleSql replay this op
+    * sequence as chained CTEs; change all three together):
+    *  - seeds: the k lowest vec_ids of `train` (not `vec_id < k`, which
+    *    under-seeds sparse or shifted ids), sliced per subspace; k clamps
+    *    to the vectors present — a tiny corpus or sparse hash sample
+    *    shrinks the codebook (coarser quantizer) instead of throwing;
+    *  - assignment: the [[cellsFast]] kernel, argmin ties to the lower
+    *    cell id;
+    *  - means: each coordinate quantized to round(x·10⁹) and summed EXACTLY
+    *    as decimal(38,0) per (subspace, cell, dim) — order-independent,
+    *    unlike float avg(), which could straddle the 1e-6 rounding boundary
+    *    below; long sums could overflow at corpus scale, and decimal
+    *    DIVISION rounds differently across engines — then re-derived
+    *    driver-side with a fixed IEEE double sequence: exact integer →
+    *    double, /cnt, /1e9, ·1e6, +0.5, floor, /1e6;
+    *  - a cell with no members keeps its previous centroid (the oracles'
+    *    LEFT JOIN … CASE). */
+  private def lloyd(
+      train: DataFrame, k: Int, m: Int, sub: Int, strictLen: Boolean,
+      iters: Int, caller: String): Array[Array[Array[Double]]] = {
+    val seeds = train.orderBy("vec_id").limit(k)
+      .collect().map(_.getAs[Seq[Float]]("embedding").map(_.toDouble).toArray)
+    // loud degenerate-input contract (the pageRank convention): training a
+    // quantizer on nothing would otherwise die deep inside the cell
+    // expression with an unhelpful analysis error
+    require(seeds.nonEmpty, s"$caller needs a non-empty embeddings corpus")
+    var books = Array.tabulate(m, seeds.length)((j, i) => seeds(i).slice(j * sub, (j + 1) * sub))
+    for (_ <- 0 until iters) {
+      // assignments MATERIALIZE before the dimension explode: left inline,
+      // CollapseProject folds the all-subspace kernel into the post-explode
+      // projection and re-evaluates it per exploded dimension (64× per
+      // vector — measured 31 s vs 1.4 s per pass at sf0.1 on the old
+      // literal form; the same re-evaluation trap as
+      // TextAnalysis.bigramStream's re-split)
+      val assigned = train
+        .select(col("embedding"), cellsFast(books, col("embedding"), sub, strictLen).as("cells"))
+        .pinLazy() // severs the plan; materializes in the collect below
+      val means = assigned
+        .select(col("cells"), posexplode(col("embedding")))
+        .toDF("cells", "pos", "x")
+        .withColumn("j", expr(s"pos div $sub"))
+        .select(col("j"), col("pos"),
+          element_at(col("cells"), col("j").cast("int") + 1).as("cell"), col("x"))
+        .groupBy("j", "cell", "pos")
+        .agg(
+          sum(floor(col("x").cast("double") * lit(1e9) + lit(0.5))
+            .cast("decimal(38,0)")).as("s"),
+          count(lit(1)).as("cnt"))
+        .collect() // m·k·sub rows — metadata scale
+      Ckpt.release(assigned) // nothing reads this iteration's pin again
+      val next = books.map(_.map(_.clone()))
+      means.foreach { r =>
+        val mv = r.getAs[java.math.BigDecimal]("s").doubleValue /
+          r.getAs[Long]("cnt").toDouble / 1e9
+        // `div` yields LONG regardless of operand width
+        next(r.getAs[Long]("j").toInt)(r.getAs[Int]("cell"))(r.getAs[Int]("pos") % sub) =
+          math.floor(mv * 1e6 + 0.5) / 1e6
+      }
+      books = next
+    }
+    books
+  }
+
+  /** `e`'s (vec_id, embedding) as one side of a cosine join: (q_id, qv, qn)
+    * for `p` = "q", (c_id, cv, cn) for "c", followed by `extra`. */
+  private def side(e: DataFrame, p: String, extra: Column*): DataFrame =
+    e.select(Seq(col("vec_id").as(s"${p}_id"), col("embedding").as(s"${p}v"),
+      normFast(col("embedding")).as(s"${p}n")) ++ extra: _*)
+
+  /** The exact-cosine tail every top-k here ends in: score each pair of
+    * `pairs` (q_id/qv/qn × c_id/cv/cn) as round-6 cosine, rank per query on
+    * (cos desc, c_id) — the id tie-break makes ranks cross-engine
+    * deterministic — and keep the top `k` as (q_id, [cell,] c_id, cos, rk),
+    * `cell` cast to long. */
+  private def cosineTopK(pairs: DataFrame, k: Int, cell: Option[Column] = None): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
+    pairs
       .withColumn("cos",
         round(dotFast(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 5)
-      .select("q_id", "c_id", "cos", "rk")
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= k)
+      .select(Seq(col("q_id")) ++ cell.map(_.cast("long").as("cell")) ++
+        Seq(col("c_id"), col("cos"), col("rk")): _*)
       .orderBy("q_id", "rk")
+  }
+
+  /** Exact top-k neighbors for query vectors (vec_id < 10) — the
+    * [[cosineTopK]] tail over the full query × corpus product. */
+  def bruteForceTopK(s: SparkSession, d: String): DataFrame = {
+    val e = vectors(s, d)
+    cosineTopK(broadcast(side(e.filter(col("vec_id") < 10), "q"))
+      .join(side(e, "c"), col("q_id") =!= col("c_id")), 5)
   }
 
   /** Deterministic ±1 hyperplane entry, ENGINE-PORTABLE: (p, j) is +1 iff
@@ -122,45 +212,18 @@ object Similarity {
     val cand = q.join(c, Seq("bucket"))
       .filter(col("q_id") =!= col("c_id"))
       .select("q_id", "c_id").distinct()
-    val qv = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        normFast(col("embedding")).as("qn"))
-    val cv = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      normFast(col("embedding")).as("cn"))
-    val scored = cand.join(broadcast(qv), "q_id").join(cv, "c_id")
-      .withColumn("cos",
-        round(dotFast(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 5)
-      .select("q_id", "c_id", "cos", "rk")
-      .orderBy("q_id", "rk")
+    cosineTopK(cand.join(broadcast(side(e.filter(col("vec_id") < 10), "q")), "q_id")
+      .join(side(e, "c"), "c_id"), 5)
   }
 
-  /** Genuine IVF: deterministic Lloyd k-means builds the coarse quantizer,
-    * then queries probe their `nprobe` nearest cells and rescore exactly.
-    *
-    * Scale shape: each Lloyd iteration is one distributed pass — cell
-    * assignment is a codegen'd argmin over k centroid literals (narrow
-    * map), the per-dimension means are one (cell, dim)-keyed aggregation,
-    * and ONLY the k×dim centroid table crosses to the driver (metadata
-    * scale; the same loop structure MLlib's KMeans uses). The corpus never
-    * collects. Search is the IVF shape: candidates come from an equi-join
-    * on cell id, so each query scans ~nprobe/k of the corpus.
-    *
-    * Determinism AND portability: seeds are the k lowest vec_ids, argmin
-    * ties break on cell id via struct ordering, and centroid means come
-    * from scaled-integer fixed point (the gr1-proven pattern): each
-    * coordinate is quantized to round(x·10⁹) BIGINT, summed exactly
-    * (order-independent, unlike float avg()), and the mean is re-derived
-    * driver-side with a fixed IEEE op sequence — so the centroids, and
-    * every assignment derived from them, are bit-stable across runs,
-    * partitionings AND engines. That last property is what gives ss4 a
-    * FULL DuckDB oracle (Registry.ss4OracleSql): the whole 3-iteration
-    * Lloyd loop unrolls as chained CTEs, every arithmetic step
-    * reproducible bit-for-bit (float→double casts exact, left-associated
-    * double dot = FloatVectorDot's accumulation order, exact integer
-    * means). Recall vs brute force stays a SimilaritySpec property
+  /** Genuine IVF: deterministic Lloyd k-means ([[lloyd]] with one
+    * whole-vector subspace) builds the coarse quantizer, then queries probe
+    * their `nprobe` nearest cells and rescore exactly. Search is the IVF
+    * shape: candidates come from an equi-join on cell id, so each query
+    * scans ~nprobe/k of the corpus. The trainer's portability contract is
+    * what gives ss4 a FULL DuckDB oracle (Registry.ss4OracleSql): the
+    * whole 3-iteration loop, corpus assignment and probe unroll as chained
+    * CTEs. Recall vs brute force stays a SimilaritySpec property
     * (approximate by design — the oracle checks the pipeline, not ANN
     * quality). */
   def ivfKMeansTopK(
@@ -169,82 +232,21 @@ object Similarity {
     val e = vectors(s, d)
       .select(col("vec_id"), col("embedding"))
       .pinLazy() // reused by every Lloyd pass + the final search
-    def centLit(c: Array[Double]): Column = array(c.map(x => lit(x.toFloat)): _*)
+    val cents = lloyd(e, k, m = 1, sub = Dim, strictLen = true, iters, "ivfKMeansTopK")
     // argmin_c |x-c|^2 = argmin_c (|c|^2 - 2 x·c): one codegen'd dot per
     // centroid, ties broken by cell id through struct ordering
-    def distCells(cents: Array[Array[Double]], v: Column): Seq[Column] =
-      cents.zipWithIndex.toSeq.map { case (c, i) =>
-        struct(
-          (lit(c.map(x => x * x).sum) - lit(2.0) * dotFast(v, centLit(c))).as("d"),
-          lit(i).as("cell"))
-      }
-    // seeds: the k lowest vec_ids actually present (not `vec_id < k`, which
-    // silently under-seeds a corpus with sparse or shifted ids)
-    var cents: Array[Array[Double]] = e.orderBy("vec_id").limit(k)
-      .collect().map(_.getAs[Seq[Float]]("embedding").map(_.toDouble).toArray)
-    // loud degenerate-input contract (the pqTopK/pageRank convention):
-    // training a quantizer on nothing would otherwise die deep inside the
-    // cell expression with an unhelpful analysis error
-    require(cents.nonEmpty, "ivfKMeansTopK needs a non-empty embeddings corpus")
-    for (_ <- 0 until iters) {
-      // stable-shaped assignment kernel (see cellsFast): whole-vector dot
-      // against 64-wide centroids, so validity is n == Dim (strictLen) —
-      // the literal form's dot length-mismatch semantics
-      val means = e
-        .withColumn("cell",
-          element_at(cellsFast(Array(cents), col("embedding"), Dim, strictLen = true), 1))
-        .select(col("cell"), posexplode(col("embedding")))
-        .toDF("cell", "pos", "x")
-        // scaled-integer accumulation, not avg(float): quantize each
-        // coordinate to round(x·10⁹) and sum EXACTLY (decimal(38,0) —
-        // long sums could overflow at corpus scale), so the sum is
-        // independent of partition/merge order AND engine — float avg()
-        // could straddle the 1e-6 rounding boundary below, and decimal
-        // DIVISION rounding rules differ across engines. The mean itself
-        // is re-derived below with a fixed IEEE double op sequence that
-        // the DuckDB oracle mirrors verbatim.
-        .groupBy("cell", "pos")
-        .agg(
-          sum(floor(col("x").cast("double") * lit(1e9) + lit(0.5))
-            .cast("decimal(38,0)")).as("s"),
-          count(lit(1)).as("cnt"))
-        .collect() // k×dim rows — metadata scale
-      val next = cents.clone()
-      means.groupBy(_.getAs[Int]("cell")).foreach { case (cell, rows) =>
-        val c = new Array[Double](Dim)
-        rows.foreach { r =>
-          // EXACT integer → double (correctly rounded), then the fixed op
-          // sequence the oracle replays: /cnt, /1e9, ·1e6, +0.5, floor, /1e6
-          val m = r.getAs[java.math.BigDecimal]("s").doubleValue /
-            r.getAs[Long]("cnt").toDouble / 1e9
-          c(r.getAs[Int]("pos")) = math.floor(m * 1e6 + 0.5) / 1e6
-        }
-        next(cell) = c
-      }
-      cents = next
+    val probeCells = cents(0).zipWithIndex.toSeq.map { case (c, i) =>
+      struct(
+        (lit(c.map(x => x * x).sum) - lit(2.0) * dotFast(col("embedding"), centLit(c))).as("d"),
+        lit(i).as("cell"))
     }
-
-    val c = e
-      // same kernel as training: identical generated source → the corpus
-      // assignment reuses the training pass's compiled stage
-      .withColumn("cell",
-        element_at(cellsFast(Array(cents), col("embedding"), Dim, strictLen = true), 1))
-      .select(col("vec_id").as("c_id"), col("embedding").as("cv"), col("cell"),
-        normFast(col("embedding")).as("cn"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        normFast(col("embedding")).as("qn"),
-        explode(slice(array_sort(array(distCells(cents, col("embedding")): _*)), 1, nprobe)
-          .getField("cell")).as("cell"))
-    val scored = q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos",
-        round(dotFast(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 5)
-      .select(col("q_id"), col("cell").cast("long").as("cell"), col("c_id"), col("cos"), col("rk"))
-      .orderBy("q_id", "rk")
+    // same kernel as training: identical generated source → the corpus
+    // assignment reuses the training pass's compiled stage
+    val c = side(e, "c",
+      element_at(cellsFast(cents, col("embedding"), Dim, strictLen = true), 1).as("cell"))
+    val q = side(e.filter(col("vec_id") < 10), "q",
+      explode(slice(array_sort(array(probeCells: _*)), 1, nprobe).getField("cell")).as("cell"))
+    cosineTopK(q.join(c, Seq("cell")).filter(col("q_id") =!= col("c_id")), 5, Some(col("cell")))
   }
 
   /** Build the IVF index as a PERSISTED cell-partitioned parquet layout —
@@ -270,20 +272,11 @@ object Similarity {
     * reading them (plan-asserted in SimilaritySpec) — no manual cell-list
     * plumbing, and the same plan at any index size. */
   def probeIvfIndex(s: SparkSession, indexDir: String, queries: DataFrame, k: Int = 5): DataFrame = {
-    val idx = s.read.parquet(indexDir)
-    val q = queries.select(
-      col("vec_id").as("q_id"), col("embedding").as("qv"),
-      col("label").cast("int").as("cell"), normFast(col("embedding")).as("qn"))
-    val scored = idx.join(broadcast(q), Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos",
-        round(dotFast(col("qv"), col("embedding")) / (col("qn") * col("n")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("cell").cast("long").as("cell"),
-        col("vec_id").as("c_id"), col("cos"), col("rk"))
-      .orderBy("q_id", "rk")
+    val idx = s.read.parquet(indexDir).select(col("vec_id").as("c_id"),
+      col("embedding").as("cv"), col("n").as("cn"), col("cell"))
+    val q = side(queries, "q", col("label").cast("int").as("cell"))
+    cosineTopK(idx.join(broadcast(q), Seq("cell")).filter(col("q_id") =!= col("c_id")),
+      k, Some(col("cell")))
   }
 
   /** Registry query (ss5): the full persisted-index lifecycle in one
@@ -291,10 +284,12 @@ object Similarity {
     * directory, then probe it. Cells equal `label` and scoring matches
     * [[ivfTopK]] exactly, so the probe result is byte-identical to ss3's
     * and shares its DuckDB oracle: the dynamic-partition-pruned path gets
-    * a hash-checked CORRECTNESS row, not just a plan test. */
+    * a hash-checked CORRECTNESS row, not just a plan test. The returned
+    * relation reads the index lazily, so the tree is deleted at JVM exit,
+    * not when this returns. */
   def persistedIvfTopK(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-ss5")
-      .resolve("idx").toString
+    val dir = Scratch.deleteAtExit(java.nio.file.Files.createTempDirectory("graft-ivf-ss5").toFile)
+      .toPath.resolve("idx").toString
     val e = vectors(s, d)
     buildIvfIndex(e, dir)
     probeIvfIndex(s, dir, e.filter(col("vec_id") < 10))
@@ -309,16 +304,13 @@ object Similarity {
     * brute-force part of the search runs over a relation 32× narrower
     * than the corpus.
     *
-    * Training is one distributed pass per Lloyd iteration for ALL
-    * subspaces at once: posexplode puts every (dim, value) on its own row,
-    * `pos div sub` recovers the subspace, and the (subspace, cell, dim)
-    * means come back at metadata scale (m·ksub·sub = 1024 rows). The same
-    * determinism-and-portability contract as [[ivfKMeansTopK]]:
-    * lowest-vec_id seeds, scaled-integer exact means rounded to 1e-6,
-    * argmin ties on cell id — so codes, shortlists, and results are
-    * bit-stable across runs, partitionings and engines, which is what
-    * gives ss6 a FULL DuckDB oracle (Registry.ss6OracleSql) covering
-    * training, encode, ADC shortlist and rescore end to end.
+    * Training is [[lloyd]] over all `m` subspaces at once — one
+    * distributed pass per iteration, (subspace, cell, dim) means at
+    * metadata scale (m·ksub·sub = 1024 rows). Its portability contract
+    * makes codes, shortlists and results bit-stable across runs,
+    * partitionings and engines, which is what gives ss6 a FULL DuckDB
+    * oracle (Registry.ss6OracleSql) covering training, encode, ADC
+    * shortlist and rescore end to end.
     *
     * Search: asymmetric distance (ADC). Each query precomputes, per
     * subspace, the dot of its sub-vector with every centroid (plus the
@@ -344,7 +336,6 @@ object Similarity {
     val e = corpus
       .pinLazy() // reused: training passes, encode, rescore
     def subvec(v: Column, j: Int): Column = slice(v, j * sub + 1, sub)
-    def centLit(c: Array[Double]): Column = array(c.map(x => lit(x.toFloat)): _*)
 
     // Codebooks train on a deterministic hash-style sample (~4k vectors,
     // all of a small corpus) — the standard PQ recipe: codebook quality
@@ -352,55 +343,10 @@ object Similarity {
     // full-corpus Lloyd pass per iteration would dominate the build.
     val sampleMod = math.max(1L, e.count() / 4096)
     val train = e.filter(col("vec_id") % sampleMod === 0).pinLazy()
-
-    // seeds: sub-vectors of the ksub lowest vec_ids, per subspace. ksub is
-    // clamped to the vectors actually available — a tiny corpus (or a
-    // sparse hash sample) must shrink the codebook, not throw on
-    // seedRows(i); fewer cells only coarsens the quantizer
-    val seedRows = train.orderBy("vec_id").limit(ksub)
-      .collect().map(_.getAs[Seq[Float]]("embedding").map(_.toDouble).toArray)
-    require(seedRows.nonEmpty, "pqTopK needs a non-empty embeddings corpus")
-    val kEff = math.min(ksub, seedRows.length)
-    var books: Array[Array[Array[Double]]] =
-      Array.tabulate(m, kEff)((j, i) => seedRows(i).slice(j * sub, (j + 1) * sub))
-    for (_ <- 0 until iters) {
-      // all-subspace assignment in the stable-shaped kernel: one compiled
-      // stage shared by every iteration AND the final encode (cellsFast)
-      val cells = cellsFast(books, col("embedding"), sub, strictLen = false)
-      // assignments MATERIALIZE before the dimension explode: left inline,
-      // CollapseProject folds the all-subspace `cells` kernel into the
-      // post-explode projection and re-evaluates it per exploded dimension
-      // (64× per vector — measured 31 s vs 1.4 s per pass at sf0.1 on the
-      // old literal form; the same re-evaluation trap as
-      // TextAnalysis.bigramStream's re-split)
-      val assigned = train
-        .select(col("embedding"), cells.as("cells"))
-        .pinLazy() // severs the plan; materializes in the collect below
-      val means = assigned
-        .select(col("cells"), posexplode(col("embedding")))
-        .toDF("cells", "pos", "x")
-        .withColumn("j", expr(s"pos div $sub"))
-        .select(col("j"), col("pos"),
-          element_at(col("cells"), col("j").cast("int") + 1).as("cell"), col("x"))
-        .groupBy("j", "cell", "pos")
-        // same scaled-integer portable means as ivfKMeansTopK: exact
-        // order-independent integer sums, mean re-derived with a fixed
-        // IEEE op sequence the ss6 oracle replays verbatim
-        .agg(
-          sum(floor(col("x").cast("double") * lit(1e9) + lit(0.5))
-            .cast("decimal(38,0)")).as("s"),
-          count(lit(1)).as("cnt"))
-        .collect() // m·ksub·sub rows — metadata scale
-      val next = books.map(_.map(_.clone()))
-      means.foreach { r =>
-        val mv = r.getAs[java.math.BigDecimal]("s").doubleValue /
-          r.getAs[Long]("cnt").toDouble / 1e9
-        // `div` yields LONG regardless of operand width
-        next(r.getAs[Long]("j").toInt)(r.getAs[Int]("cell"))(r.getAs[Int]("pos") % sub) =
-          math.floor(mv * 1e6 + 0.5) / 1e6
-      }
-      books = next
-    }
+    // all-subspace assignment in the stable-shaped kernel: one compiled
+    // stage shared by every iteration AND the final encode (cellsFast)
+    val books = lloyd(train, ksub, m, sub, strictLen = false, iters, "pqTopK")
+    Ckpt.release(train) // only training reads the sample
 
     // encode the corpus ONCE into the compact code table (8 small ints per
     // vector — the 32×-compressed relation everything downstream scans);
@@ -412,10 +358,7 @@ object Similarity {
     // centroid squared-norm tables (query-independent literals)
     val normLut: Seq[Column] =
       (0 until m).map(j => array(books(j).map(c => lit(c.map(x => x * x).sum)): _*))
-    val q = (0 until m).foldLeft(
-      e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-          normFast(col("embedding")).as("qn"))) { (df, j) =>
+    val q = (0 until m).foldLeft(side(e.filter(col("vec_id") < 10), "q")) { (df, j) =>
       df.withColumn(s"lut$j",
         array(books(j).map(c => dotFast(subvec(col("qv"), j), centLit(c))): _*))
     }
@@ -429,38 +372,27 @@ object Similarity {
       .withColumn("approx", approx)
       .withColumn("ark", row_number().over(wA))
       .filter(col("ark") <= shortlist)
-      .select("q_id", "qv", "qn", "c_id")
+      .select("q_id", "c_id")
     // exact rescore of the shortlist only — the shared rescore stage
-    rescoreTopK(e, short.select("q_id", "c_id"))
+    rescoreTopK(e, short)
   }
 
   /** Exact cosine top-k over an explicit (q_id, c_id) candidate relation —
     * the rescore stage every sketch-based ANN variant ends in (the PQ ADC
-    * shortlist feeds it directly above; LSH/IVF use the same join→cosine→
-    * rank shape inline). Only candidates pay the raw-vector join, so cost
+    * shortlist feeds it directly above; LSH/IVF end in the same
+    * [[cosineTopK]] tail). Only candidates pay the raw-vector join, so cost
     * is |candidates|, not |Q|·|C|. Registered standalone as ss7 over a
     * deterministic candidate rule so the exact stage carries its own
     * hash-checked CORRECTNESS row, isolating sketch recall (measured in
     * SimilaritySpec) from rescore math (oracle-exact). */
-  def rescoreTopK(e: DataFrame, candidates: DataFrame, k: Int = 5): DataFrame = {
-    val q = e.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-      normFast(col("embedding")).as("qn"))
-    val c = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      normFast(col("embedding")).as("cn"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
+  def rescoreTopK(e: DataFrame, candidates: DataFrame, k: Int = 5): DataFrame =
     // candidate side BROADCAST into the corpus join (r15 opt round): the
     // candidate list is |Q|·shortlist rows by construction — without the
     // hint the planner has no stats on the derived side and sort-merges,
     // shuffling the ENTIRE raw-vector corpus to meet a few hundred rows
     // (guide §3.1: hint when you know a side is small and estimates don't)
-    broadcast(candidates.join(broadcast(q), "q_id")).join(c, "c_id")
-      .withColumn("cos",
-        round(dotFast(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select("q_id", "c_id", "cos", "rk")
-      .orderBy("q_id", "rk")
-  }
+    cosineTopK(broadcast(candidates.join(broadcast(side(e, "q")), "q_id"))
+      .join(side(e, "c"), "c_id"), k)
 
   /** ss7: [[rescoreTopK]] on a FIXED deterministic candidate set (every
     * 17th vector, offset 3 — standing in for a sketch shortlist, but
@@ -481,19 +413,8 @@ object Similarity {
     * queries only scan their cell. */
   def ivfTopK(s: SparkSession, d: String): DataFrame = {
     val e = vectors(s, d)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("label"),
-        normFast(col("embedding")).as("qn"))
-    val c = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"), col("label"),
-      normFast(col("embedding")).as("cn"))
-    val scored = q.join(c, Seq("label"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos",
-        round(dotFast(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 5)
-      .select(col("q_id"), col("label").cast("long").as("cell"), col("c_id"), col("cos"), col("rk"))
-      .orderBy("q_id", "rk")
+    val q = side(e.filter(col("vec_id") < 10), "q", col("label"))
+    cosineTopK(q.join(side(e, "c", col("label")), Seq("label"))
+      .filter(col("q_id") =!= col("c_id")), 5, Some(col("label")))
   }
 }

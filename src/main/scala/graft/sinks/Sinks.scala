@@ -5,6 +5,8 @@ import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
 
+import graft.Scratch
+
 /** Output-format dispatch and sinks.
   *
   * The reference lowercases the output path, splits on '.', and picks the
@@ -88,12 +90,7 @@ object Sinks {
         .find(f => f.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(s"no part-file produced under $tmp"))
       JFiles.move(part.toPath, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
-    } finally deleteRecursively(new File(tmp))
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+    } finally Scratch.delete(new File(tmp))
   }
 
   /** Small-file compaction — the table-maintenance pass every long-lived
@@ -123,14 +120,14 @@ object Sinks {
     // layout is in place — park it aside, move staging in, then drop it.
     // A crash leaves either the original dir or the parked copy on disk.
     val parked = new File(dir + ".tmp-old")
-    deleteRecursively(parked) // stale leftover from a previous crash
+    Scratch.delete(parked) // stale leftover from a previous crash
     if (!target.renameTo(parked))
       throw new IllegalStateException(s"compaction could not park $dir")
     if (!staging.renameTo(target)) {
       parked.renameTo(target) // roll back
       throw new IllegalStateException(s"compaction swap failed for $dir")
     }
-    deleteRecursively(parked)
+    Scratch.delete(parked)
     nOut
   }
 }

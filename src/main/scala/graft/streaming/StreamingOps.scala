@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{window => timeWindow, _}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
 
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Structured Streaming twins of the batch event operators
   * (graft.operators.Events). The aggregation expressions are byte-for-byte
@@ -382,14 +382,14 @@ object StreamingOps {
     next.write.mode("overwrite").parquet(tmp)
     new java.io.File(tmp, s"_committed_$batchId").createNewFile()
     val parked = new java.io.File(stateDir + ".tmp-old")
-    deleteRecursively(parked)
+    Scratch.delete(parked)
     if (target.exists() && !target.renameTo(parked))
       throw new IllegalStateException(s"state merge could not park $stateDir")
     if (!new java.io.File(tmp).renameTo(target)) {
       parked.renameTo(target) // roll back
       throw new IllegalStateException(s"state merge swap failed for $stateDir")
     }
-    deleteRecursively(parked)
+    Scratch.delete(parked)
   }
 
   /** Incremental ingest dedup via foreachBatch — the PERSISTENT-state
@@ -455,7 +455,7 @@ object StreamingOps {
     * fingerprint from its text. Batches arriving in id order make
     * first-arrival-wins ≡ min-doc_id-wins, so the result equals the batch
     * dd2 keep-list — which is exactly what the oracle asserts. */
-  def dedupIngestKeepList(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st1-") { base =>
+  def dedupIngestKeepList(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st1-") { base =>
     val inDir = new java.io.File(base, "in").getPath
     val fpDir = new java.io.File(base, "fp").getPath
     val outDir = new java.io.File(base, "out").getPath
@@ -478,7 +478,7 @@ object StreamingOps {
         .parquet(s"$inDir/*.parquet/*.parquet"),
       fpDir, outDir)
     // materialize the keep-list off the staging tree (localCheckpoint is
-    // eager) before withStagingTree reclaims it
+    // eager) before the staging tree is deleted
     val result = s.read.parquet(outDir)
       .select(
         md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("fp"),
@@ -508,7 +508,7 @@ object StreamingOps {
     * strict `> gap` new-session rule; window end = last event + gap.
     * Timestamps are emitted as epoch micros (BIGINT) — integer-exact on
     * both engines. */
-  def sessionizationFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st2-") { base =>
+  def sessionizationFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st2-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3)
     val schema = s.read.parquet(s"$inDir/c00.parquet").schema
     val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
@@ -549,7 +549,7 @@ object StreamingOps {
     * Sessions still open at end-of-stream stay in state and are dropped
     * with it — the production stream would emit them when their watermark
     * arrives; the oracle row certifies the closed set. */
-  def closedSessionsFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st3-") { base =>
+  def closedSessionsFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st3-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 4)
     val schema = s.read.parquet(s"$inDir/c00.parquet").schema
     val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
@@ -619,18 +619,7 @@ object StreamingOps {
       // is complete and nothing re-reads the projection. Safe by
       // construction: unlike the former shared cache entry, this RDD is
       // reachable only from this method, so no concurrent reader exists.
-      // BOTH pin forms analyze to a LogicalRDD (Dataset.checkpoint builds
-      // its result the same way as localCheckpoint), so this also fires
-      // under graft.reliableCkpt — harmlessly: the reliable form's data
-      // lives in checkpoint FILES (cleaner-swept), not in these blocks.
-      events.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case other =>
-          // no known pin form reaches here; never fail staging over cleanup
-          System.err.println(
-            s"[graft.staging] pin cleanup skipped: unexpected ${other.getClass.getName}")
-      }
+      graft.Ckpt.release(events)
     }
   }
 
@@ -677,7 +666,7 @@ object StreamingOps {
     *    The FileSystem-based manager commits a file by writing a temp file
     *    and `FileSystem.rename`-ing it, which is atomic only where rename
     *    is. That holds for every graft stream: each checkpoints under a
-    *    local temp directory (the staging trees of [[withStagingTree]],
+    *    local temp directory (the staging trees of [[Scratch.withTree]],
     *    Spark's own temp checkpoint for memory and `foreachBatch` sinks,
     *    the file sinks' `_spark_metadata` inside the staging trees), where
     *    `FileSystem.rename` is an atomic POSIX rename. A stream that
@@ -781,7 +770,7 @@ object StreamingOps {
     * sequences) tunes the same way. An inner stream-stream join emits on
     * match (no watermark-closing wait), so no result rows are parked in
     * state at end-of-stream. */
-  def intervalPairsFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st4-") { base =>
+  def intervalPairsFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st4-") { base =>
     // MICRO-BATCH COUNT scales with same-user probe density, floor 3. The
     // join's probe cost per batch is Σ_u (rows_u in this batch) × (rows_u
     // buffered) — with a handful of giant batches over a months-long span,
@@ -873,7 +862,7 @@ object StreamingOps {
     * Append-mode parquet FILE sink like st4 (a memory sink would park the
     * densified relation driver-side); state is O(users) — commit-dominated
     * like st2/st3, so the same fixed 8 state partitions. */
-  def forwardFillFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st5-") { base =>
+  def forwardFillFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st5-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3,
       cols = Seq("user_id", "event_id", "ts", "event_type", "value"))
     val schema = s.read.parquet(s"$inDir/c00.parquet").schema
@@ -908,7 +897,7 @@ object StreamingOps {
     * commit-dominated at fixture scale, fixed 8 partitions like st2/st3;
     * dedup emits each survivor on arrival, so the sink is an Append-mode
     * parquet FILE sink (the production log shape). */
-  def dedupWithinWatermarkFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st7-") { base =>
+  def dedupWithinWatermarkFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st7-") { base =>
     val hourKey = Seq(col("user_id"), col("event_type"),
       date_trunc("hour", col("ts")))
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3,
@@ -937,7 +926,7 @@ object StreamingOps {
     * watermark-closed windows, the bounded-state emission a production
     * metrics stream runs on. State is O(open windows) — commit-dominated,
     * fixed 8 partitions. */
-  def closedTumblingFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st8-") { base =>
+  def closedTumblingFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st8-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 4,
       cols = Seq("event_type", "ts", "value"))
     val schema = s.read.parquet(s"$inDir/c00.parquet").schema
@@ -981,7 +970,7 @@ object StreamingOps {
     * shared-oracle pattern). State is bounded like the batch candidate
     * cost: ≤ BucketCap+1 ids per live bucket, a tombstone per dead one,
     * (count, canon) per sig group. */
-  def lshPairsFromStream(s: SparkSession, d: String): DataFrame = withStagingTree("graft-st6-") { base =>
+  def lshPairsFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st6-") { base =>
     val inDir = new java.io.File(base, "in").getPath
     val docs = graft.Tables(s, d, "documents").select("doc_id", "text")
     stageConcurrently((0 until 3).map { i => () =>
@@ -1045,21 +1034,11 @@ object StreamingOps {
     result.orderBy("user_id", "s_start_us")
   }
 
-  /** One JVM-wide cleanup hook over a shared list (per-call hooks leak a
-    * thread each); [[withStagingTree]] deletes each tree when its member
-    * returns or throws — the hook only catches a JVM that exits mid-run. */
-  private val pendingCleanup = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
-  private lazy val cleanupHookInstalled: Boolean = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      pendingCleanup.forEach(f => deleteRecursively(f))
-    }))
-    true
-  }
-
-  // Scratch placement note (measured): routing these trees to the
-  // RAM-backed /dev/shm instead of java.io.tmpdir was A/B'd over the full
-  // streaming family at sf0.1 (two fresh-JVM pairs each way: 47.4/44.1 s
-  // on /tmp vs 44.6/50.3 s on tmpfs) — no effect outside host noise. That
+  // Scratch placement note (measured): routing the members' staging trees
+  // (Scratch.withTree) to the RAM-backed /dev/shm instead of
+  // java.io.tmpdir was A/B'd over the full streaming family at sf0.1 (two
+  // fresh-JVM pairs each way: 47.4/44.1 s on /tmp vs 44.6/50.3 s on
+  // tmpfs) — no effect outside host noise. That
   // A/B could not see the storage-side cost that did dominate the floor:
   // it is process creation, not I/O — the default checkpoint manager ran
   // `chmod`/`readlink`/`stat` child processes for every checkpoint file
@@ -1112,26 +1091,6 @@ object StreamingOps {
       Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
         .foreach(stampOrFail(_, stamp))
     }
-  }
-
-  /** Run `body` on a fresh staging tree in `java.io.tmpdir` (staged input,
-    * checkpoints, state, sink output) and delete the tree when `body`
-    * returns or throws. Every member pins its result off the tree before
-    * returning, so nothing reads the tree afterwards; Bench's re-time alone
-    * runs a member twice per JVM, so a tree must not wait for JVM exit. */
-  private def withStagingTree[T](prefix: String)(body: java.io.File => T): T = {
-    require(cleanupHookInstalled)
-    val base = java.nio.file.Files.createTempDirectory(prefix).toFile
-    pendingCleanup.add(base)
-    try body(base) finally {
-      deleteRecursively(base)
-      pendingCleanup.remove(base)
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 
   // ---- streaming at-ingest LSH near-dup (twin of Dedup.lshCandidates) ----

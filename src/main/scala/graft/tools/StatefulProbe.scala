@@ -21,8 +21,7 @@ object StatefulProbe {
 
   def run(session: SparkSession): Unit = {
     import org.apache.spark.sql.functions.{col, window}
-    val dir = java.nio.file.Files.createTempDirectory("graft-stateful-probe").toFile
-    try {
+    graft.Scratch.withTree("graft-stateful-probe") { dir =>
       val in = new java.io.File(dir, "in")
       session.range(100)
         .selectExpr("id", "timestamp_micros(id * 1000000) AS ts")
@@ -36,11 +35,6 @@ object StatefulProbe {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(dir)
     }
   }
 }

@@ -11,22 +11,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Release the storage blocks behind a `localCheckpoint`ed DataFrame.
-    *
-    * `Dataset.unpersist` only covers `cache()`; a local checkpoint's blocks
-    * live on the `LogicalRDD`'s RDD and otherwise survive until the
-    * ContextCleaner notices the RDD is unreachable (driver-GC-timed, 30 min
-    * periodic floor) — in an iterative loop that means O(rounds) superseded
-    * label sets pinned in executor storage. Callers MUST only invoke this
-    * on a checkpoint whose every consumer has fully materialized (e.g.
-    * after a full-relation action on the successor round): the checkpoint
-    * severed lineage, so a consumer that still needs these blocks cannot
-    * recompute them.
-    */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

@@ -10,6 +10,12 @@ class SimilaritySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
 
+  /** SHA-256 of sorted `Row.toString`s joined by newlines — an exact pin on
+    * a result whose rows the off-CI DuckDB oracle tiers otherwise check. */
+  private def digest(rows: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.sorted.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+
   test("codegen FloatVectorDot is bit-identical to the built-in HOF composition") {
     val e = Tables(spark, sf, "embeddings")
     val q = e.filter(col("vec_id") === 0)
@@ -154,6 +160,8 @@ class SimilaritySpec extends AnyFunSuite {
     // deterministic end-to-end (seeded init + rounded centroid means)
     val again = Similarity.ivfKMeansTopK(spark, sf).collect().map(_.toString).sorted.toSeq
     assert(rows.map(_.toString).sorted.toSeq == again)
+    // exact rows: pins the shared Lloyd trainer's op sequence at m = 1
+    assert(digest(again) == "fe22f41c9b4b8172c13039ea820837362b546e001f344fab945142962070071b")
     // reported cosine equals a direct recomputation for every returned pair
     val e = Tables(spark, sf, "embeddings")
     val recomputed = out1.select("q_id", "c_id", "cos")
@@ -182,6 +190,8 @@ class SimilaritySpec extends AnyFunSuite {
     // deterministic end-to-end (seeded init, decimal means, tie-broken argmins)
     val again = Similarity.pqTopK(spark, sf).collect().map(_.toString).sorted.toSeq
     assert(rows.map(_.toString).sorted.toSeq == again)
+    // exact rows: pins the shared Lloyd trainer's op sequence at m = 8
+    assert(digest(again) == "e2de7c72873c933b99a017a7eef72dfbac81745beebebb35f31ac811b270e385")
     // reported cosine is the EXACT cosine (shortlist rescore), not the ADC
     // approximation — recompute directly from raw embeddings
     val e = Tables(spark, sf, "embeddings")
@@ -214,6 +224,33 @@ class SimilaritySpec extends AnyFunSuite {
     // 5 queries (all ids < 10) × up to 4 candidates each
     assert(out.length == 20)
     assert(out.map(_.getAs[Long]("q_id")).distinct.length == 5)
+  }
+
+  test("PQ training releases its per-iteration pins: persisted RDDs do not grow with iters") {
+    // RDDs a call leaves persisted, with its result held (so only pins the
+    // result no longer needs can be missing) — a per-iteration pin that
+    // waits for the ContextCleaner makes iters = 3 leave two more than
+    // iters = 1
+    val sc = spark.sparkContext
+    val corpus = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
+    def leftPersisted(iters: Int): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = Similarity.pqTopKOf(corpus, m = 8, ksub = 16, iters = iters, shortlist = 40)
+      assert(out.collect().length == 50)
+      val left = (sc.getPersistentRDDs.keySet -- before).size
+      assert(out.count() == 50) // keeps `out` (and the pins it reads) reachable until here
+      left
+    }
+    assert(leftPersisted(1) == leftPersisted(3))
+  }
+
+  test("persisted IVF index: the lazily read index tree is registered for deletion at exit") {
+    val before = Scratch.pendingAtExit
+    val out = Similarity.persistedIvfTopK(spark, sf)
+    assert(out.collect().length == 50)
+    val added = Scratch.pendingAtExit -- before
+    assert(added.size == 1 && added.head.getName.startsWith("graft-ivf-ss5"), added)
+    assert(new java.io.File(added.head, "idx").isDirectory)
   }
 
   test("IVF topk searches only the query's cell") {
