@@ -626,10 +626,8 @@ object Registry {
     // pattern): the full estimator replays in DuckDB; error bounds vs exact
     // counts AND vs Spark's built-in HLL++ are asserted in RelationalSpec
     q("q24_approx_count_distinct", Relational.q24ApproxCountDistinct, q24OracleSql),
-    // q25 (fact-fact join + agg) is DEMOTED from the registry (fold-don't-
-    // grow): its join/agg machinery overlaps q03/q43, and RelationalSpec's
-    // "q25 fact-fact shuffle join" test carries both the result equivalence
-    // and the shuffle-regime plan assert; the operator stays in Relational.
+    // no q25 (fact-fact join + agg): its join/agg machinery is q03/q43's
+    // (fold-don't-grow)
     q("q38_table_profile", Relational.q38TableProfile,
       "SELECT count(*) AS n_rows, count(o_orderkey) AS nn_orderkey, count(DISTINCT o_orderkey) AS nd_orderkey, count(DISTINCT o_custkey) AS nd_custkey, count(DISTINCT o_orderstatus) AS nd_status, min(o_totalprice) AS min_price, max(o_totalprice) AS max_price, min(o_orderdate) AS min_date, max(o_orderdate) AS max_date FROM orders"),
     q("q39_integrity_checks", Relational.q39IntegrityChecks,

@@ -52,14 +52,4 @@ object VectorFunctions {
         FloatVectorDot(exprs.head, exprs(1))
       },
       "built-in")
-
-  /** Squared euclidean distance. */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x)
 }

@@ -192,11 +192,6 @@ object Multimodal {
         .select(col("media_id"), col("feature")))
   }
 
-  /** extractFeatures variant keeping the feature as a queryable column
-    * relation (media_id, feature). */
-  def extractFeaturesWithVec(media: Dataset[MediaRow]): DataFrame =
-    extractFeatures(media).toDF().select(col("media_id"), col("feature"))
-
   /** Deterministic fixture: media rows synthesized from the documents
     * table's text bytes (UTF-8), so multimodal plumbing is testable against
     * the standard corpus. Missing text maps to an EMPTY payload (explicit

@@ -315,8 +315,7 @@ object Events {
     *
     * Scale shape: one user-keyed shuffle; per-user state is that user's
     * event list (bounded by per-entity activity, the same bound
-    * sessionization carries). The streaming twin of this fold is
-    * flatMapGroupsWithState with a single running double. */
+    * sessionization carries). */
   def ewma(s: SparkSession, d: String, alpha: Double = 0.25): DataFrame = {
     val folded = t(s, d, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
@@ -429,10 +428,8 @@ object Events {
     * scale 4 decimal. The NULL-on-overflow rule is written EXPLICITLY
     * (try_cast / try_sum) so it holds identically under ANSI and legacy
     * modes — this Spark build defaults ansi=true, where a plain cast
-    * would THROW at the edge while the streaming twin
-    * (StreamingOps.twaUpdates) emits NULL; try_* pins the twin's
-    * semantics mode-independently (CodegenFallback/Streaming specs hold
-    * either way, and RelationalSpec drives the overflow edge itself). */
+    * would THROW at the edge; try_* pins NULL-on-overflow
+    * mode-independently (RelationalSpec drives the overflow edge). */
   def timeWeightedAvgOf(ev: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     ev

@@ -16,8 +16,8 @@ import graft.Tables
   * of the (x, y) space and both `x` and `y` predicates prune files.
   *
   * The z computation itself is a pure narrow projection (codegen'd integer
-  * bit-twiddling, no shuffle); the layout step is one range repartition on
-  * z — exactly what a lakehouse OPTIMIZE ZORDER does. [[zOrderStats]]
+  * bit-twiddling, no shuffle); a writer lays files out with one range
+  * repartition on z — what a lakehouse OPTIMIZE ZORDER does. [[zOrderStats]]
   * PROVES the locality instead of asserting it: it groups by z-bucket and
   * reports each bucket's x/y bounding box, which is what the parquet
   * min/max footer would contain per file.
@@ -57,11 +57,4 @@ object Layout {
         min("y").as("y_min"), max("y").as("y_max"))
       .orderBy("bucket")
   }
-
-  /** The actual layout action for a writer: range-repartition on z so each
-    * output task writes one tight z-range (= one prunable file). Returned
-    * lazily for sinks to consume; [[zOrderStats]] is the oracle-checkable
-    * summary of the same key. */
-  def zOrderLayout(df: DataFrame, x: Column, y: Column, files: Int): DataFrame =
-    df.withColumn("z", zValue(x, y)).repartitionByRange(files, col("z"))
 }

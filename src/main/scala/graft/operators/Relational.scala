@@ -308,7 +308,7 @@ object Relational {
     *
     * 100 TB shape: TWO pruned 2-column scans (one per hashed key — the
     * union'd branches each read exactly (l_returnflag, key); an explode
-    * from one scan was measured slower, see hllRegisterRows); partial
+    * from one scan was measured slower); partial
     * aggregation combines each branch to ≤ groups×512 register rows per
     * task before the only shuffle — exactly how a distributed HLL merge
     * works (register-wise max). The built-in sketch remains
@@ -333,9 +333,10 @@ object Relational {
     // entirely. The branches' key spaces are disjoint (bit 9), so the
     // union IS the merged register table — no re-aggregation. Key packing
     // is collision-free because bucket < 2^9 and flags are single chars
-    // (TPC-H A/N/R; `ascii` reads the first char). [[hllRegisterRows]]
-    // keeps the unfused (flag, cid, bucket, rho) shape — it is the
-    // streaming-legal narrow projection StreamingSpec max-merges.
+    // (TPC-H A/N/R; `ascii` reads the first char). NULL keys contribute no
+    // register — approx_count_distinct's null handling; a null bucket would
+    // inflate nb and corrupt the empty-register count vz (the oracle
+    // filters identically).
     def branch(key: String, cidBit: Int): DataFrame =
       withRho(li.select(col("l_returnflag"), col(key).cast("string").as("v"))
         .where(col("v").isNotNull))
@@ -349,27 +350,6 @@ object Relational {
         expr("k % 512").as("bucket"),
         col("mx"))
     hllEstimateFromRegisters(regs)
-  }
-
-  /** The per-row half of the portable HLL: (group, column-id, bucket, rho)
-    * rows from lineitem's two hashed key columns. A NARROW projection —
-    * no shuffle, no state — which is what makes the sketch streaming-legal
-    * (StreamingSpec proves register max-merge across micro-batches ≡ the
-    * batch aggregation; register-wise max is associative and commutative,
-    * the same property the 1000-executor merge relies on). */
-  private[graft] def hllRegisterRows(li: DataFrame): DataFrame = {
-    // two pruned scan branches instead of an explode: no 2×-row struct
-    // materialization, each branch partial-aggregates its own registers
-    val pairs = li.select(col("l_returnflag"), lit("p").as("cid"),
-        col("l_partkey").cast("string").as("v"))
-      .unionAll(li.select(col("l_returnflag"), lit("o").as("cid"),
-        col("l_orderkey").cast("string").as("v")))
-      // NULL keys contribute no register — matching approx_count_distinct's
-      // null handling; without this a null bucket would inflate nb and
-      // corrupt the empty-register count vz (review finding, latent on the
-      // non-null TPC-H keys; the oracle filters identically)
-      .where(col("v").isNotNull)
-    withRho(pairs).select("l_returnflag", "cid", "bucket", "rho")
   }
 
   /** The shared hash→(bucket, rho) derivation over a relation with a
@@ -393,7 +373,7 @@ object Relational {
   /** The estimator half: from materialized registers (l_returnflag, cid,
     * bucket, mx) to the pivoted per-group estimates. Pure closed-form math
     * over ≤ groups×2×512 rows. */
-  private[graft] def hllEstimateFromRegisters(regs: DataFrame): DataFrame = {
+  private def hllEstimateFromRegisters(regs: DataFrame): DataFrame = {
     val ests = regs
       .groupBy("l_returnflag", "cid")
       .agg(
@@ -412,20 +392,6 @@ object Relational {
         max(when(col("cid") === "p", col("est"))).as("approx_nd_part"),
         max(when(col("cid") === "o", col("est"))).as("approx_nd_order"))
       .orderBy("l_returnflag")
-  }
-
-  /** The big fact-fact equi-join: lineitem⋈orders on orderkey. At bench SF
-    * AQE may broadcast orders; at 100 TB this is the canonical shuffle
-    * (sort-merge) join on a single key — exactly one exchange per side. */
-  def q25BigJoinAgg(s: SparkSession, d: String): DataFrame = {
-    val l = t(s, d, "lineitem")
-    val o = t(s, d, "orders")
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(
-        count(lit(1)).as("n_items"),
-        sumRevenue.as("revenue"))
-      .orderBy("o_orderpriority")
   }
 
   /** Exact percentiles (sort-based; both engines linearly interpolate with

@@ -55,71 +55,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("w.start").as("s_start"), col("w.end").as("s_end"), col("n_events"))
 
-  /** Event row for typed stateful processing. */
-  final case class Ev(user_id: Long, ts_us: Long, value: Double)
-  /** Per-user running state kept in the state store. */
-  final case class UserState(nEvents: Long, totalValue: Double, lastTsUs: Long)
-  /** Emitted whenever a user's state updates. */
-  final case class UserUpdate(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Custom keyed state via flatMapGroupsWithState: running per-user
-    * aggregate, emitting an update per micro-batch. Demonstrates the
-    * arbitrary-state API the built-in windows can't express
-    * (cf. SURVEY.md §2.2 streaming row). */
-  def statefulUserTotals(events: DataFrame)(implicit spark: SparkSession): Dataset[UserUpdate] = {
-    import spark.implicits._
-    val typed = events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
-      .as[Ev]
-    typed.groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserState, UserUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Ev], state: GroupState[UserState]) =>
-          val prev = state.getOption.getOrElse(UserState(0L, 0.0, Long.MinValue))
-          val next = rows.foldLeft(prev) { (st, ev) =>
-            UserState(st.nEvents + 1, st.totalValue + ev.value, math.max(st.lastTsUs, ev.ts_us))
-          }
-          state.update(next)
-          Iterator.single(UserUpdate(userId, next.nEvents, next.totalValue))
-      }
-  }
-
-  /** State for the streaming EWMA fold: count + running average. */
-  final case class EwmaState(n: Long, ewma: Double)
-  final case class EwmaUpdate(user_id: Long, n_events: Long, ewma: Double)
-
-  /** Streaming twin of Events.ewma: the order-dependent smoothing fold as
-    * ONE running double per user in the state store. Rows are sorted by
-    * (ts_us, event_id) WITHIN each micro-batch before folding (a batch
-    * iterator carries no order guarantee); across batches the fold
-    * continues from stored state, so when the source delivers time-ordered
-    * batches (file sequence, per-key Kafka ordering) the N-batch result is
-    * bit-identical to the one-shot batch fold — same seeding rule (first
-    * value), same α, same IEEE op order. Emits the user's current EWMA
-    * each batch; state is O(users), not O(events). */
-  def ewmaUpdates(events: DataFrame, alpha: Double = 0.25)(
-      implicit spark: SparkSession): Dataset[EwmaUpdate] = {
-    import spark.implicits._
-    val typed = events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("value"))
-      .as[(Long, Long, Long, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[EwmaState, EwmaUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Long, Long, Double)], state: GroupState[EwmaState]) =>
-          val ordered = rows.toSeq.sortBy(r => (r._2, r._3))
-          var st = state.getOption.getOrElse(EwmaState(0L, 0.0))
-          ordered.foreach { r =>
-            st =
-              if (st.n == 0L) EwmaState(1L, r._4)
-              else EwmaState(st.n + 1, alpha * r._4 + (1 - alpha) * st.ewma)
-          }
-          state.update(st)
-          Iterator.single(EwmaUpdate(uid, st.n, st.ewma))
-      }
-  }
-
   final case class LocfEvent(
       user_id: Long, event_id: Long, ts_us: Long, event_type: String,
       value: Option[Double])
@@ -138,8 +73,7 @@ object StreamingOps {
     * stored state, and since fills are stored values carried VERBATIM (no
     * arithmetic), N-batch output ≡ the one-shot batch window exactly — not
     * just bit-compatible but value-identical by construction. State is
-    * O(users); emission is O(events), i.e. Append-mode per-row output,
-    * unlike the per-batch summaries of the totals/EWMA twins. */
+    * O(users); emission is O(events), i.e. Append-mode per-row output. */
   def locfUpdates(events: DataFrame)(implicit spark: SparkSession): Dataset[LocfRow] = {
     import spark.implicits._
     val typed = events
@@ -166,126 +100,6 @@ object StreamingOps {
           }
           state.update(st)
           out.iterator
-      }
-  }
-
-  /** Streaming TWA state: event count, observation-span endpoints, the
-    * last value (held until the next event closes its interval) and the
-    * running decimal integral. The two decimals travel as exact STRINGS —
-    * an encoded BigDecimal field would ride Spark's default DecimalType
-    * (38,18), whose 20 integer digits the integral can outgrow; the string
-    * round-trips the full (38,4) range losslessly. */
-  final case class TwaState(
-      n: Long, firstTs: Long, lastTs: Long, lastV: String, num: String)
-  final case class TwaUpdate(
-      user_id: Long, n_events: Long, span_us: Option[Long], twa: Option[Double])
-
-  /** Streaming twin of Events.timeWeightedAvg (ev19): each event CLOSES the
-    * previous value's interval — `num += lastV·(ts − lastTs)` in exact
-    * BigDecimal (value at scale 4, Δt in µs, the batch query's precise
-    * arithmetic) — and becomes the new open interval. The last interval is
-    * open in batch too (no Δt until a successor), so after each
-    * time-ordered micro-batch the emitted (n, span, twa) equals the batch
-    * query over the prefix, and the final emission is bit-identical to
-    * ev19: same decimal sum, ONE correctly-rounded toDouble per side, one
-    * IEEE division. State is O(1) per user. */
-  def twaUpdates(events: DataFrame)(implicit spark: SparkSession): Dataset[TwaUpdate] = {
-    import spark.implicits._
-    val typed = events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("value"))
-      .as[(Long, Long, Long, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[TwaState, TwaUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Long, Long, Double)], state: GroupState[TwaState]) =>
-          // "" is the NULL sentinel in both string fields: lastV = "" is an
-          // overflowed (NULL) value, num = "" means no interval has
-          // contributed yet — mirroring batch sum()'s NULL over an
-          // all-NULL column, which is distinct from a genuine 0 integral
-          var st = state.getOption.getOrElse(TwaState(0L, 0L, 0L, "", ""))
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { r =>
-            val v4 = BigDecimal(r._4).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-            // mirror the batch try_cast's NULL-on-overflow (explicit and
-            // ANSI-mode-independent since r08): a value that does not fit
-            // DECIMAL(14,4) contributes nothing to the integral (its Δt
-            // still extends the span)
-            val v4s = if (v4.precision - v4.scale <= 10) v4.toString else ""
-            st =
-              if (st.n == 0L) TwaState(1L, r._2, r._2, v4s, "")
-              else {
-                val num =
-                  if (st.lastV.isEmpty) st.num
-                  else {
-                    val prev = if (st.num.isEmpty) BigDecimal(0) else BigDecimal(st.num)
-                    (prev + BigDecimal(st.lastV) * BigDecimal(r._2 - st.lastTs)).toString
-                  }
-                TwaState(st.n + 1, st.firstTs, r._2, v4s, num)
-              }
-          }
-          state.update(st)
-          val span = st.lastTs - st.firstTs
-          // batch try_sum's v·Δt in DECIMAL(38,4) and NULLs the whole sum
-          // on overflow (explicit try_*, so the rule holds under ANSI and
-          // legacy modes alike) — mirror that at emission: an integral
-          // that no longer fits 34 integer digits emits NULL twa. State
-          // stays exact BigDecimal, so a later batch cannot inherit
-          // rounding drift.
-          val numFits = st.num.nonEmpty && {
-            val n = BigDecimal(st.num); n.precision - n.scale <= 34
-          }
-          Iterator.single(TwaUpdate(uid, st.n,
-            if (st.n < 2) None else Some(span),
-            if (span > 0 && numFits)
-              Some(BigDecimal(st.num).toDouble / span.toDouble)
-            else None))
-      }
-  }
-
-  /** Per-key leaderboard state: the current top-k (value, event_id) pairs
-    * plus how many of the key's events have been absorbed. O(k) per key —
-    * never the key's history. */
-  final case class TopKState(nSeen: Long, values: Seq[Double], ids: Seq[Long])
-  final case class TopKUpdate(
-      event_type: String, n_seen: Long, rk: Long, event_id: Long, value: Double)
-
-  /** Streaming twin of Salting.saltedTopK (sj2): a continuously-maintained
-    * per-key top-k leaderboard. Each micro-batch merges its rows into the
-    * stored top-k under the batch query's exact order (value DESC,
-    * event_id ASC) and re-emits the key's current leaderboard. Top-k is an
-    * ORDER-INSENSITIVE fold — merging any partition of the input in any
-    * sequence yields the same result — so unlike the EWMA/LOCF twins this
-    * stream≡batch proof needs no time-ordered batches: ANY split of the
-    * corpus converges to the batch leaderboard bit-exactly (StreamingSpec
-    * feeds event_id-sliced batches, deliberately not time-sliced). `n_seen`
-    * makes the final snapshot identifiable (max per key). */
-  def topKUpdates(events: DataFrame, k: Int = 5)(
-      implicit spark: SparkSession): Dataset[TopKUpdate] = {
-    import spark.implicits._
-    val typed = events.select(col("event_type"), col("event_id"), col("value"))
-      .as[(String, Long, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[TopKState, TopKUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (tpe: String, rows: Iterator[(String, Long, Double)], state: GroupState[TopKState]) =>
-          val prev = state.getOption.getOrElse(TopKState(0L, Nil, Nil))
-          val batch = rows.map(r => (r._3, r._2)).toSeq
-          // Spark sorts DoubleType via java.lang.Double.compare (NaN above
-          // +Inf, -0.0 below 0.0); a Scala sortBy(-v) would diverge on
-          // exactly those values, breaking stream≡batch bit-equality
-          val batchOrder = new Ordering[(Double, Long)] {
-            def compare(a: (Double, Long), b: (Double, Long)): Int = {
-              val c = java.lang.Double.compare(b._1, a._1) // value DESC
-              if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-            }
-          }
-          val merged = (prev.values.zip(prev.ids) ++ batch)
-            .sorted(batchOrder).take(k)
-          val next = TopKState(prev.nSeen + batch.size, merged.map(_._1), merged.map(_._2))
-          state.update(next)
-          merged.iterator.zipWithIndex.map { case ((v, id), i) =>
-            TopKUpdate(tpe, next.nSeen, i + 1L, id, v)
-          }
       }
   }
 
@@ -324,58 +138,20 @@ object StreamingOps {
       .select(col("user_id"), col("id_a"), col("id_b"))
   }
 
-  /** Incremental rollup maintenance via `foreachBatch` — the streaming
-    * SINK side: a per-user (count, spend) rollup kept in a plain parquet
-    * state directory, updated per micro-batch without any lakehouse
-    * format. Each batch's partial aggregate merges with the stored state
-    * and the result swaps in with `Sinks.compactDir`'s recoverable
-    * park-swap; a `_committed_<batchId>` marker travels INSIDE the staged
-    * directory, so data and commit record swap atomically and a replayed
-    * micro-batch (foreachBatch is at-least-once on retry) is detected and
-    * skipped — exactly-once state, idempotent under retries.
-    *
-    * Spend accumulates in DECIMAL pinned at (38,2): merge order across
-    * micro-batches is irrelevant, so N batches ≡ one batch aggregation
-    * exactly (StreamingSpec proves it with one-file-per-trigger batches).
-    * At scale the merge is one shuffle of (existing state ∪ batch
-    * partials) keyed by user — state size, not stream-lifetime size. */
-  def incrementalRollup(events: DataFrame, stateDir: String): StreamingQuery =
-    runAvailableNow(events.sparkSession)(Seq(events.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        mergeRollup(batch, stateDir, batchId)
-      })).head
-
   /** Highest batch id already merged into `dir` (−1 if none). */
-  def committedBatchId(dir: String): Long =
+  private def committedBatchId(dir: String): Long =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .collect { case f if f.getName.startsWith("_committed_") =>
         f.getName.stripPrefix("_committed_").toLong }
       .foldLeft(-1L)(math.max)
 
-  private def mergeRollup(batch: DataFrame, stateDir: String, batchId: Long): Unit = {
-    if (batchId <= committedBatchId(stateDir)) return // replayed batch: already merged
-    val s = batch.sparkSession
-    val part = batch.groupBy("user_id").agg(
-      count(lit(1)).as("n_events"),
-      sum(expr("try_cast(value AS DECIMAL(18,2))")).cast("decimal(38,2)").as("spend"))
-    val target = new java.io.File(stateDir)
-    val merged =
-      if (target.exists())
-        s.read.parquet(stateDir).unionByName(part)
-          .groupBy("user_id").agg(
-            sum("n_events").as("n_events"),
-            sum("spend").cast("decimal(38,2)").as("spend"))
-      else part
-    commitSwap(stateDir, merged, batchId)
-  }
-
   /** Stage `next` as the new contents of `stateDir` and swap it in
     * atomically with a `_committed_<batchId>` marker INSIDE the staged
-    * directory (shared by the rollup and dedup-ingest states). The staging
-    * write forces the full read of the CURRENT state before anything is
-    * touched; a crash between renames leaves either the old or the new
-    * complete directory, never a mix. */
+    * directory, so data and commit record swap together (the
+    * dedup-ingest fingerprint store's commit). The staging write forces
+    * the full read of the CURRENT state before anything is touched; a
+    * crash between renames leaves either the old or the new complete
+    * directory, never a mix. */
   private def commitSwap(stateDir: String, next: DataFrame, batchId: Long): Unit = {
     val target = new java.io.File(stateDir)
     val tmp = stateDir + ".tmp-merge"
@@ -469,14 +245,10 @@ object StreamingOps {
       col("doc_id") >= cut1 && col("doc_id") < cut2,
       col("doc_id") >= cut2
     ).zipWithIndex.map { case (range, i) => () =>
-      docs.filter(range).coalesce(1).write.parquet(s"$inDir/c$i.parquet")
+      docs.filter(range).coalesce(1).write.parquet(stagedPath(inDir, i))
     })
     restampInOrder(inDir)
-    val schema = s.read.parquet(s"$inDir/c0.parquet").schema
-    incrementalDedupIngest(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/*.parquet/*.parquet"),
-      fpDir, outDir)
+    incrementalDedupIngest(stagedStream(s, inDir), fpDir, outDir)
     // materialize the keep-list off the staging tree (localCheckpoint is
     // eager) before the staging tree is deleted
     val result = s.read.parquet(outDir)
@@ -510,9 +282,7 @@ object StreamingOps {
     * both engines. */
   def sessionizationFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st2-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3)
-    val schema = s.read.parquet(s"$inDir/c00.parquet").schema
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$inDir/*.parquet/*.parquet")
+    val stream = stagedStream(s, inDir)
     // unique sink name: Bench's outlier re-time can run the query twice in
     // one JVM, and a memory-sink queryName cannot be re-registered live
     val name = "st2_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -551,9 +321,7 @@ object StreamingOps {
     * arrives; the oracle row certifies the closed set. */
   def closedSessionsFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st3-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 4)
-    val schema = s.read.parquet(s"$inDir/c00.parquet").schema
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$inDir/*.parquet/*.parquet")
+    val stream = stagedStream(s, inDir)
     val name = "st3_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // fixed 8 parts: session state is commit-dominated (see st2's note)
     runToMemory(injectStChaos(sessionWindows(stream)), name,
@@ -608,9 +376,7 @@ object StreamingOps {
       // file's mtime in range order.
       stageConcurrently(bounds.init.zip(bounds.tail).zipWithIndex.map {
         case ((cutLo, cutHi), i) => () =>
-          // zero-padded names keep path order = time order for any nFiles
-          events.filter(us >= cutLo && us < cutHi)
-            .coalesce(1).write.parquet(s"$inDir/" + "c%02d.parquet".formatLocal(java.util.Locale.ROOT, i))
+          events.filter(us >= cutLo && us < cutHi).coalesce(1).write.parquet(stagedPath(inDir, i))
       })
       restampInOrder(inDir)
       (inDir, n)
@@ -623,20 +389,6 @@ object StreamingOps {
     }
   }
 
-  /** Staging cuts that provably split joinable pairs across micro-batches.
-    *
-    * Equi-width ts cuts are blind to where within-`iv` same-user pairs
-    * actually sit: on a sparse corpus (459 pairs over months of span at
-    * sf0.01) NO pair straddles them, and the cross-batch buffering claim
-    * the st4 harness exists to certify becomes vacuous. Instead, snap each
-    * equi-width target to the nearest within-`iv` successor timestamp —
-    * cutting AT the successor files its predecessor strictly earlier (file
-    * ranges filter `us >= cut`), so every snapped cut splits ≥1 joinable
-    * pair across micro-batches by construction (StreamingSpec asserts the
-    * spanning count against these exact cuts). Cost: one
-    * partitioned-window pass + an (nFiles−1)-value agg collect. Falls back
-    * to equi-width on a corpus with no joinable pair at all (mutation
-    * tiers), so the harness still runs there. */
   /** State partition count for a stateful stream whose state volume scales
     * with input traffic (the stream-stream join buffers both sides'
     * in-watermark rows): target ~32k buffered rows per store — below that
@@ -730,6 +482,20 @@ object StreamingOps {
     (picked ++ equiCuts.filterNot(picked.contains)).take(nFiles - 1).sorted
   }
 
+  /** Staging cuts that provably split joinable pairs across micro-batches.
+    *
+    * Equi-width ts cuts are blind to where within-`iv` same-user pairs
+    * actually sit: on a sparse corpus (459 pairs over months of span at
+    * sf0.01) NO pair straddles them, and the cross-batch buffering claim
+    * the st4 harness exists to certify becomes vacuous. Instead, snap each
+    * equi-width target to the nearest within-`iv` successor timestamp —
+    * cutting AT the successor files its predecessor strictly earlier (file
+    * ranges filter `us >= cut`), so every snapped cut splits ≥1 joinable
+    * pair across micro-batches by construction (StreamingSpec asserts the
+    * spanning count against these exact cuts). Cost: one
+    * partitioned-window pass + an (nFiles−1)-value agg collect. Falls back
+    * to equi-width on a corpus with no joinable pair at all (mutation
+    * tiers), so the harness still runs there. */
   def pairSplitCuts(events: DataFrame, lo: Long, hi: Long,
       nFiles: Int, iv: Long): Seq[Long] = {
     val span = hi - lo + 1
@@ -803,9 +569,7 @@ object StreamingOps {
     val (inDir, nRows) = stageSessionInput(s, d, base, nFiles = nFiles,
       cols = Seq("user_id", "event_id", "ts"),
       pairSplitUs = Some(1800000000L))
-    val schema = s.read.parquet(s"$inDir/c00.parquet").schema
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$inDir/*.parquet/*.parquet")
+    val stream = stagedStream(s, inDir)
     // State-partition right-sizing: a stateful query's store count is
     // pinned at first start from spark.sql.shuffle.partitions, and the
     // join commits 4 stores per partition PER SIDE per micro-batch — at
@@ -865,9 +629,7 @@ object StreamingOps {
   def forwardFillFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st5-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3,
       cols = Seq("user_id", "event_id", "ts", "event_type", "value"))
-    val schema = s.read.parquet(s"$inDir/c00.parquet").schema
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$inDir/*.parquet/*.parquet")
+    val stream = stagedStream(s, inDir)
     val Seq(fill) = runToFiles(s, 8, base)(
       "fill" -> injectStChaos(locfUpdates(stream)(s).toDF()))
     fill.pin().orderBy("user_id", "ts_us", "event_id")
@@ -902,9 +664,7 @@ object StreamingOps {
       date_trunc("hour", col("ts")))
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3,
       cols = Seq("user_id", "event_type", "ts"), dupKeySplit = Some(hourKey))
-    val schema = s.read.parquet(s"$inDir/c00.parquet").schema
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$inDir/*.parquet/*.parquet")
+    val stream = stagedStream(s, inDir)
     val keyed = stream.withColumn("w_start", date_trunc("hour", col("ts")))
     val Seq(dedup) = runToFiles(s, 8, base)(
       "dedup" -> injectStChaos(streamingDedup(keyed, "ts", "2 hours",
@@ -929,9 +689,7 @@ object StreamingOps {
   def closedTumblingFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st8-") { base =>
     val (inDir, _) = stageSessionInput(s, d, base, nFiles = 4,
       cols = Seq("event_type", "ts", "value"))
-    val schema = s.read.parquet(s"$inDir/c00.parquet").schema
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$inDir/*.parquet/*.parquet")
+    val stream = stagedStream(s, inDir)
     val Seq(windows) = runToFiles(s, 8, base)(
       "windows" -> injectStChaos(tumblingCounts(stream)))
     windows.pin().orderBy(col("w_start"), col("event_type").asc_nulls_first)
@@ -974,13 +732,10 @@ object StreamingOps {
     val inDir = new java.io.File(base, "in").getPath
     val docs = graft.Tables(s, d, "documents").select("doc_id", "text")
     stageConcurrently((0 until 3).map { i => () =>
-      docs.filter(col("doc_id") % 3 === i)
-        .coalesce(1).write.parquet(s"$inDir/" + "c%02d.parquet".formatLocal(java.util.Locale.ROOT, i))
+      docs.filter(col("doc_id") % 3 === i).coalesce(1).write.parquet(stagedPath(inDir, i))
     })
     restampInOrder(inDir)
-    val schema = s.read.parquet(s"$inDir/c00.parquet").schema
-    def stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet/*.parquet")
+    val stream = stagedStream(s, inDir)
     implicit val sp: SparkSession = s
     // state is O(distinct band keys / sig groups) — commit-dominated at
     // fixture scale like the session rows (st2/st3): same fixed 8 parts.
@@ -1061,6 +816,19 @@ object StreamingOps {
       java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
         val t = new Thread(r, "graft-staging"); t.setDaemon(true); t
       }))
+
+  /** Staged file `i` under `inDir`: zero-padded names keep path order =
+    * range order for any file count. */
+  private def stagedPath(inDir: String, i: Int): String =
+    s"$inDir/" + "c%02d.parquet".formatLocal(java.util.Locale.ROOT, i)
+
+  /** The staged files under `inDir` as one stream, one file per
+    * micro-batch, under the first file's schema. FileStreamSource takes
+    * them in (mtime, path) order, which [[restampInOrder]] makes range
+    * order. */
+  private def stagedStream(s: SparkSession, inDir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(stagedPath(inDir, 0)).schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet/*.parquet")
 
   /** Re-stamp staged files' mtimes in path order with strictly increasing
     * values, AFTER all concurrent writes complete: FileStreamSource orders
@@ -1219,7 +987,7 @@ object StreamingOps {
     * use a real sink + trigger). The output mode is caller-supplied because
     * each operator admits different modes: tumblingCounts works in
     * Update/Append, sessionWindows requires Complete (session merging
-    * rewrites past windows), statefulUserTotals declares Append — there is
+    * rewrites past windows), locfUpdates declares Append — there is
     * no default valid for all three. `partitions` scopes the state
     * partition count (see [[runAvailableNow]]). */
   def runToMemory(df: DataFrame, name: String, mode: OutputMode,

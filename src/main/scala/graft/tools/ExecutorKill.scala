@@ -53,10 +53,10 @@ object ExecutorKill {
     def start(): Unit = t.start()
     def join(ms: Long): Unit = t.join(ms)
     /** Best-effort: stop a fuse that has not fired yet (a fuse already
-      * past its sleep may still fire — the caller re-checks `fired`). */
+      * past its sleep may still fire — the caller re-checks
+      * [[landedBefore]]). */
     def cancel(): Unit = t.interrupt()
-    def fired: Boolean = didFire
-    /** nanoTime at which the kill fired; only meaningful when `fired`. */
+    /** nanoTime at which the kill fired; meaningful only after a fire. */
     def firedAtNanos: Long = atNanos
     /** True iff the kill fired strictly before `doneNanos`. */
     def landedBefore(doneNanos: Long): Boolean =

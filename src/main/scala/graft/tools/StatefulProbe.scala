@@ -16,7 +16,9 @@ import org.apache.spark.sql.SparkSession
   * on failure (a bogus-conf probe is EXPECTED to throw — its staging must
   * not accumulate). State-store confs are read per-query from the
   * session's SQLConf, so callers probe a conf by setting it on a child
-  * session and running this. */
+  * session and running this. The query starts through
+  * [[graft.streaming.StreamingOps.runAvailableNow]], the start path of
+  * every graft stream, so the probe warms and tests what the streams run. */
 object StatefulProbe {
 
   def run(session: SparkSession): Unit = {
@@ -26,15 +28,13 @@ object StatefulProbe {
       session.range(100)
         .selectExpr("id", "timestamp_micros(id * 1000000) AS ts")
         .write.parquet(in.getPath)
-      session.readStream.schema("id BIGINT, ts TIMESTAMP").parquet(in.getPath)
-        .withWatermark("ts", "1 minute")
-        .groupBy(window(col("ts"), "1 minute")).count()
-        .writeStream.format("noop")
-        .option("checkpointLocation", new java.io.File(dir, "ckpt").getPath)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      graft.streaming.StreamingOps.runAvailableNow(session)(Seq(
+        session.readStream.schema("id BIGINT, ts TIMESTAMP").parquet(in.getPath)
+          .withWatermark("ts", "1 minute")
+          .groupBy(window(col("ts"), "1 minute")).count()
+          .writeStream.format("noop")
+          .option("checkpointLocation", new java.io.File(dir, "ckpt").getPath)
+          .outputMode("update")))
     }
   }
 }

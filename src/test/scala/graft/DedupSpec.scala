@@ -109,8 +109,7 @@ class DedupSpec extends AnyFunSuite {
     // output rows. With it, the cluster degrades to its (n-1)-pair
     // min-canon star at hamming 0.
     val n = Dedup.BucketCap + 51
-    val dir = java.nio.file.Files.createTempDirectory("graft-dd5-star").toFile
-    try {
+    Scratch.withTree("graft-dd5-star") { dir =>
       val docs = (1L to n.toLong).map(i => (i, "alpha beta gamma delta epsilon zeta")) :+
         (9001L, "unrelated vocabulary entirely disjoint from the cluster words")
       docs.toDF("doc_id", "text").write
@@ -122,11 +121,6 @@ class DedupSpec extends AnyFunSuite {
         assert(r.getAs[Long]("id_a") == 1L)
         assert(r.getAs[Long]("hamming") == 0L)
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(dir)
     }
   }
 

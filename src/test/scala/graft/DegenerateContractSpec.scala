@@ -16,13 +16,14 @@ class DegenerateContractSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  /** Write `df` as <tmp>/<table>.parquet and return the dir, so the
-    * (SparkSession, dir) operator entry points run on synthetic tables. */
-  private def corpusWith(table: String)(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-degen-").toString
-    df.coalesce(1).write.parquet(s"$dir/$table.parquet")
-    dir
-  }
+  /** Write `df` as <tree>/<table>.parquet and run `body` on the tree's
+    * path, so the (SparkSession, dir) operator entry points run on
+    * synthetic tables. */
+  private def withCorpus[T](table: String)(df: org.apache.spark.sql.DataFrame)(body: String => T): T =
+    Scratch.withTree("graft-degen-") { dir =>
+      df.coalesce(1).write.parquet(s"$dir/$table.parquet")
+      body(dir.getPath)
+    }
 
   test("q41: zero-variance group yields NULL corr and 0 stddev; n=1 group yields NULL stddev/covar") {
     // 'C' has constant quantity (variance exactly 0), 'S' is a singleton,
@@ -31,16 +32,16 @@ class DegenerateContractSpec extends AnyFunSuite {
       ("C", 25.0, 10.0), ("C", 25.0, 20.0), ("C", 25.0, 30.0),
       ("S", 7.0, 7.0),
       ("V", 1.0, 2.0), ("V", 2.0, 5.0), ("V", 3.0, 7.0))
-    val dir = corpusWith("lineitem")(
-      rows.toDF("l_returnflag", "l_quantity", "l_extendedprice"))
-    val out = Relational.q41CorrStats(spark, dir).collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(out("C").isNullAt(2), "constant-x corr must be NULL")
-    assert(out("C").getDouble(3) == 0.0, "constant-group stddev is 0")
-    assert(!out("C").isNullAt(4), "covar of a constant group is defined (0)")
-    assert(out("S").isNullAt(2) && out("S").isNullAt(3) && out("S").isNullAt(4),
-      "n=1: corr/stddev/covar all NULL")
-    assert(out("V").getDouble(2) > 0.99, "healthy group: corr ~ 1")
+    withCorpus("lineitem")(rows.toDF("l_returnflag", "l_quantity", "l_extendedprice")) { dir =>
+      val out = Relational.q41CorrStats(spark, dir).collect()
+        .map(r => r.getString(0) -> r).toMap
+      assert(out("C").isNullAt(2), "constant-x corr must be NULL")
+      assert(out("C").getDouble(3) == 0.0, "constant-group stddev is 0")
+      assert(!out("C").isNullAt(4), "covar of a constant group is defined (0)")
+      assert(out("S").isNullAt(2) && out("S").isNullAt(3) && out("S").isNullAt(4),
+        "n=1: corr/stddev/covar all NULL")
+      assert(out("V").getDouble(2) > 0.99, "healthy group: corr ~ 1")
+    }
   }
 
   test("similarity: zero-norm vectors are excluded at the source, never divided by") {
@@ -49,15 +50,16 @@ class DegenerateContractSpec extends AnyFunSuite {
       else Array.tabulate(Similarity.Dim)(j => (((i * 31 + j * 7) % 13) - 6).toFloat)
       (i, v, (i % 4).toInt)
     }
-    val dir = corpusWith("embeddings")(vecs.toDF("vec_id", "embedding", "label"))
-    assert(Similarity.vectors(spark, dir).count() == 11)
-    val out = Similarity.bruteForceTopK(spark, dir).collect()
-    assert(out.nonEmpty)
-    // the zero vector appears neither as query nor candidate, and no row
-    // carries a NaN cosine (the 0/0 path is unreachable by construction)
-    out.foreach { r =>
-      assert(r.getAs[Long]("q_id") != 3L && r.getAs[Long]("c_id") != 3L)
-      assert(!r.getAs[Double]("cos").isNaN)
+    withCorpus("embeddings")(vecs.toDF("vec_id", "embedding", "label")) { dir =>
+      assert(Similarity.vectors(spark, dir).count() == 11)
+      val out = Similarity.bruteForceTopK(spark, dir).collect()
+      assert(out.nonEmpty)
+      // the zero vector appears neither as query nor candidate, and no row
+      // carries a NaN cosine (the 0/0 path is unreachable by construction)
+      out.foreach { r =>
+        assert(r.getAs[Long]("q_id") != 3L && r.getAs[Long]("c_id") != 3L)
+        assert(!r.getAs[Double]("cos").isNaN)
+      }
     }
   }
 
@@ -85,12 +87,12 @@ class DegenerateContractSpec extends AnyFunSuite {
       (3L, ts, 10L, "view", Double.PositiveInfinity),
       (4L, ts, 10L, "view", Double.NegativeInfinity),
       (5L, ts, 10L, "view", 4.0))
-    val dir = corpusWith("events")(
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value"))
-    val out = Events.tumbling(spark, dir).collect()
-    assert(out.length == 1)
-    assert(out(0).getAs[Long]("n") == 5L, "counts keep every row")
-    assert(out(0).getAs[Double]("total_value") == 6.5,
-      "NaN/±inf drop to NULL in the decimal cast; the sum stays finite")
+    withCorpus("events")(rows.toDF("event_id", "ts", "user_id", "event_type", "value")) { dir =>
+      val out = Events.tumbling(spark, dir).collect()
+      assert(out.length == 1)
+      assert(out(0).getAs[Long]("n") == 5L, "counts keep every row")
+      assert(out(0).getAs[Double]("total_value") == 6.5,
+        "NaN/±inf drop to NULL in the decimal cast; the sum stays finite")
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Degenerate-input robustness: the whole registry against an EMPTY
@@ -22,34 +20,32 @@ import org.scalatest.funsuite.AnyFunSuite
 class EmptyInputSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft-empty").toString
-    Tables.names.foreach { t =>
-      Tables(spark, SparkTestSession.sf, t).limit(0)
-        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    dir
-  }
-
   test("every registered query on an empty corpus completes or refuses loudly") {
-    val failures = scala.collection.mutable.Buffer[String]()
-    var refused = 0
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try { fn(spark, emptyDir).collect(); () }
-      catch {
-        case e: IllegalArgumentException
-            if Option(e.getMessage).exists(_.contains("needs")) =>
-          refused += 1 // the documented loud-refusal convention
-        case e: Throwable =>
-          failures += s"$name: ${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(120)
+    Scratch.withTree("graft-empty") { tree =>
+      val emptyDir = tree.getPath
+      Tables.names.foreach { t =>
+        Tables(spark, SparkTestSession.sf, t).limit(0)
+          .write.mode("overwrite").parquet(s"$emptyDir/$t.parquet")
       }
+      val failures = scala.collection.mutable.Buffer[String]()
+      var refused = 0
+      SparkEntry.queries.foreach { case (name, fn) =>
+        try { fn(spark, emptyDir).collect(); () }
+        catch {
+          case e: IllegalArgumentException
+              if Option(e.getMessage).exists(_.contains("needs")) =>
+            refused += 1 // the documented loud-refusal convention
+          case e: Throwable =>
+            failures += s"$name: ${e.getClass.getSimpleName}: " +
+              Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(120)
+        }
+      }
+      assert(failures.isEmpty,
+        s"${failures.size} queries died with undocumented errors on empty input:\n" +
+          failures.mkString("\n"))
+      // the loud-refusal set is exactly the trainers/iterators documented to
+      // need input; if it grows, the new member needs the same justification
+      assert(refused <= 5, s"$refused queries refused — review any new loud-refusal members")
     }
-    assert(failures.isEmpty,
-      s"${failures.size} queries died with undocumented errors on empty input:\n" +
-        failures.mkString("\n"))
-    // the loud-refusal set is exactly the trainers/iterators documented to
-    // need input; if it grows, the new member needs the same justification
-    assert(refused <= 5, s"$refused queries refused — review any new loud-refusal members")
   }
 }

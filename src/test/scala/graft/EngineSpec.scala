@@ -191,132 +191,147 @@ class EngineSpec extends AnyFunSuite {
 
   // --- end-to-end export through each sink ---
 
-  private def tmp(ext: String): String =
-    Files.createTempDirectory("graft-test").resolve(s"out.$ext").toString
+  private def withOut[T](ext: String)(body: String => T): T =
+    Scratch.withTree("graft-test")(d => body(new java.io.File(d, s"out.$ext").getPath))
 
   test("export parquet single file round-trips") {
-    val out = tmp("parquet")
-    Engine.export(spark, s"parquet://$sf",
-      "SELECT l_returnflag, count(*) AS c FROM lineitem GROUP BY 1", out)
-    val back = spark.read.parquet(out)
-    assert(back.count() == 3)
-    assert(back.columns.sorted.toSeq == Seq("c", "l_returnflag"))
+    withOut("parquet") { out =>
+      Engine.export(spark, s"parquet://$sf",
+        "SELECT l_returnflag, count(*) AS c FROM lineitem GROUP BY 1", out)
+      val back = spark.read.parquet(out)
+      assert(back.count() == 3)
+      assert(back.columns.sorted.toSeq == Seq("c", "l_returnflag"))
+    }
   }
 
   test("export csv keeps header (reference parity, lib.rs:114-123)") {
-    val out = tmp("csv")
-    Engine.export(spark, s"parquet://$sf",
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey", out)
-    val lines = scala.io.Source.fromFile(out).getLines().toList
-    assert(lines.head == "r_regionkey,r_name")
-    assert(lines.size == 6) // header + 5 regions
+    withOut("csv") { out =>
+      Engine.export(spark, s"parquet://$sf",
+        "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey", out)
+      val lines = scala.io.Source.fromFile(out).getLines().toList
+      assert(lines.head == "r_regionkey,r_name")
+      assert(lines.size == 6) // header + 5 regions
+    }
   }
 
   test("export ndjson keeps explicit nulls (reference parity, lib.rs:127)") {
-    val out = tmp("json")
-    Engine.export(spark, s"parquet://$sf",
-      "SELECT r_regionkey, CASE WHEN r_regionkey = 0 THEN NULL ELSE r_name END AS maybe FROM region ORDER BY r_regionkey", out)
-    val lines = scala.io.Source.fromFile(out).getLines().toList
-    assert(lines.size == 5)
-    assert(lines.head.contains("\"maybe\":null"))
+    withOut("json") { out =>
+      Engine.export(spark, s"parquet://$sf",
+        "SELECT r_regionkey, CASE WHEN r_regionkey = 0 THEN NULL ELSE r_name END AS maybe FROM region ORDER BY r_regionkey", out)
+      val lines = scala.io.Source.fromFile(out).getLines().toList
+      assert(lines.size == 5)
+      assert(lines.head.contains("\"maybe\":null"))
+    }
   }
 
   test("export orc works (roadmap bonus)") {
-    val out = tmp("orc")
-    Engine.export(spark, s"parquet://$sf", "SELECT * FROM nation", out)
-    assert(spark.read.orc(out).count() == 25)
+    withOut("orc") { out =>
+      Engine.export(spark, s"parquet://$sf", "SELECT * FROM nation", out)
+      assert(spark.read.orc(out).count() == 25)
+    }
   }
 
   test("csv source directory round-trips through the engine") {
     // export two tables as CSV, then query them through the csv:// scheme
-    val dir = Files.createTempDirectory("graft-csv-src").toString
-    Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", s"$dir/region.csv")
-    Engine.export(spark, s"parquet://$sf", "SELECT * FROM nation", s"$dir/nation.csv")
-    val df = Engine.query(spark, s"csv://$dir",
-      "SELECT r.r_name, count(*) AS n FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey GROUP BY r.r_name")
-    assert(df.count() == 5)
-    assert(df.agg(org.apache.spark.sql.functions.sum("n")).first().getLong(0) == 25)
+    Scratch.withTree("graft-csv-src") { dir =>
+      Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", s"$dir/region.csv")
+      Engine.export(spark, s"parquet://$sf", "SELECT * FROM nation", s"$dir/nation.csv")
+      val df = Engine.query(spark, s"csv://$dir",
+        "SELECT r.r_name, count(*) AS n FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey GROUP BY r.r_name")
+      assert(df.count() == 5)
+      assert(df.agg(org.apache.spark.sql.functions.sum("n")).first().getLong(0) == 25)
+    }
   }
 
   test("exportDir writes a parallel directory of part-files") {
-    val dir = Files.createTempDirectory("graft-dir").resolve("out").toString
-    Engine.exportDir(spark, s"parquet://$sf",
-      "SELECT l_orderkey, l_quantity FROM lineitem", dir, "parquet")
-    assert(spark.read.parquet(dir).count() == 6000)
+    Scratch.withTree("graft-dir") { tree =>
+      val dir = new java.io.File(tree, "out").getPath
+      Engine.exportDir(spark, s"parquet://$sf",
+        "SELECT l_orderkey, l_quantity FROM lineitem", dir, "parquet")
+      assert(spark.read.parquet(dir).count() == 6000)
+    }
   }
 
   test("exportDir → compact → query round-trips through the engine surface") {
-    val dir = Files.createTempDirectory("graft-compact-e2e").resolve("out").toString
-    Engine.exportDir(spark, s"parquet://$sf",
-      "SELECT l_orderkey, l_quantity FROM lineitem", dir, "parquet")
-    val n = Engine.compact(spark, dir) // default 128 MiB target → 1 file here
-    assert(n == 1)
-    assert(Engine.query(spark, s"parquet://${new java.io.File(dir).getParent}",
-      "SELECT count(*) AS n FROM out").first().getLong(0) == 6000)
+    Scratch.withTree("graft-compact-e2e") { tree =>
+      val dir = new java.io.File(tree, "out").getPath
+      Engine.exportDir(spark, s"parquet://$sf",
+        "SELECT l_orderkey, l_quantity FROM lineitem", dir, "parquet")
+      val n = Engine.compact(spark, dir) // default 128 MiB target → 1 file here
+      assert(n == 1)
+      assert(Engine.query(spark, s"parquet://${new java.io.File(dir).getParent}",
+        "SELECT count(*) AS n FROM out").first().getLong(0) == 6000)
+    }
   }
 
   test("orc and json source directories round-trip through the engine") {
-    val dir = Files.createTempDirectory("graft-multi-src").toString
-    Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", s"$dir/region.orc")
-    assert(Engine.query(spark, s"orc://$dir", "SELECT count(*) AS n FROM region")
-      .first().getLong(0) == 5)
-    val jdir = Files.createTempDirectory("graft-json-src").toString
-    Engine.export(spark, s"parquet://$sf", "SELECT n_nationkey, n_name FROM nation", s"$jdir/nation.json")
-    assert(Engine.query(spark, s"json://$jdir", "SELECT count(*) AS n FROM nation")
-      .first().getLong(0) == 25)
+    Scratch.withTree("graft-multi-src") { dir =>
+      Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", s"$dir/region.orc")
+      assert(Engine.query(spark, s"orc://$dir", "SELECT count(*) AS n FROM region")
+        .first().getLong(0) == 5)
+      Scratch.withTree("graft-json-src") { jdir =>
+        Engine.export(spark, s"parquet://$sf", "SELECT n_nationkey, n_name FROM nation", s"$jdir/nation.json")
+        assert(Engine.query(spark, s"json://$jdir", "SELECT count(*) AS n FROM nation")
+          .first().getLong(0) == 25)
+      }
+    }
   }
 
   test("txt and jsonl sinks round-trip through their source schemes") {
-    val dir = Files.createTempDirectory("graft-raw-sink").toString
-    Engine.export(spark, s"parquet://$sf",
-      "SELECT r_name AS value FROM region ORDER BY r_regionkey", s"$dir/names.txt")
-    assert(Engine.query(spark, s"text://$dir", "SELECT count(*) AS n FROM names")
-      .first().getLong(0) == 5)
-    Engine.export(spark, s"parquet://$sf",
-      "SELECT n_nationkey, n_name FROM nation", s"$dir/nations.jsonl")
-    assert(Engine.query(spark, s"jsonl://$dir", "SELECT count(*) AS n FROM nations")
-      .first().getLong(0) == 25)
+    Scratch.withTree("graft-raw-sink") { dir =>
+      Engine.export(spark, s"parquet://$sf",
+        "SELECT r_name AS value FROM region ORDER BY r_regionkey", s"$dir/names.txt")
+      assert(Engine.query(spark, s"text://$dir", "SELECT count(*) AS n FROM names")
+        .first().getLong(0) == 5)
+      Engine.export(spark, s"parquet://$sf",
+        "SELECT n_nationkey, n_name FROM nation", s"$dir/nations.jsonl")
+      assert(Engine.query(spark, s"jsonl://$dir", "SELECT count(*) AS n FROM nations")
+        .first().getLong(0) == 25)
+    }
   }
 
   test("text and jsonl corpus schemes ingest raw training-data files") {
-    val dir = Files.createTempDirectory("graft-raw-src").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/corpus.txt"), "line one\nline two\nline three\n")
-    val txt = Engine.query(spark, s"text://$dir",
-      "SELECT count(*) AS n FROM corpus WHERE value LIKE 'line%'")
-    assert(txt.first().getLong(0) == 3)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/docs.jsonl"),
-      """{"id": 1, "text": "hello"}""" + "\n" + """{"id": 2, "text": "world"}""" + "\n")
-    val jl = Engine.query(spark, s"jsonl://$dir",
-      "SELECT count(*) AS n, min(text) AS first FROM docs")
-    val row = jl.first()
-    assert(row.getLong(0) == 2 && row.getString(1) == "hello")
+    Scratch.withTree("graft-raw-src") { dir =>
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/corpus.txt"), "line one\nline two\nline three\n")
+      val txt = Engine.query(spark, s"text://$dir",
+        "SELECT count(*) AS n FROM corpus WHERE value LIKE 'line%'")
+      assert(txt.first().getLong(0) == 3)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/docs.jsonl"),
+        """{"id": 1, "text": "hello"}""" + "\n" + """{"id": 2, "text": "world"}""" + "\n")
+      val jl = Engine.query(spark, s"jsonl://$dir",
+        "SELECT count(*) AS n, min(text) AS first FROM docs")
+      val row = jl.first()
+      assert(row.getLong(0) == 2 && row.getString(1) == "hello")
+    }
   }
 
   test("partitioned table directories register as views with partition pruning intact") {
-    val dir = Files.createTempDirectory("graft-part-src").toString
-    // write side: partitioned export through the engine itself
-    Engine.exportDir(spark, s"parquet://$sf", "SELECT * FROM events",
-      s"$dir/events_part", "parquet", partitionBy = Seq("event_type"))
-    val df = Engine.query(spark, s"parquet://$dir",
-      "SELECT count(*) AS n FROM events_part WHERE event_type = 'click'")
-    val expect = Tables(spark, sf, "events")
-      .filter(org.apache.spark.sql.functions.col("event_type") === "click").count()
-    assert(df.first().getLong(0) == expect)
-    // the partition predicate prunes at planning, not as a data filter
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"), plan.take(600))
+    Scratch.withTree("graft-part-src") { dir =>
+      // write side: partitioned export through the engine itself
+      Engine.exportDir(spark, s"parquet://$sf", "SELECT * FROM events",
+        s"$dir/events_part", "parquet", partitionBy = Seq("event_type"))
+      val df = Engine.query(spark, s"parquet://$dir",
+        "SELECT count(*) AS n FROM events_part WHERE event_type = 'click'")
+      val expect = Tables(spark, sf, "events")
+        .filter(org.apache.spark.sql.functions.col("event_type") === "click").count()
+      assert(df.first().getLong(0) == expect)
+      // the partition predicate prunes at planning, not as a data filter
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(event_type"), plan.take(600))
+    }
   }
 
   test("a file table and a directory table sharing a view name fail loudly") {
-    val dir = Files.createTempDirectory("graft-collide-src").toString
-    Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", s"$dir/events.parquet")
-    Engine.exportDir(spark, s"parquet://$sf", "SELECT * FROM events", s"$dir/events", "parquet")
-    val e = intercept[IllegalArgumentException] {
-      Engine.query(spark, s"parquet://$dir", "SELECT count(*) AS n FROM events").collect()
+    Scratch.withTree("graft-collide-src") { dir =>
+      Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", s"$dir/events.parquet")
+      Engine.exportDir(spark, s"parquet://$sf", "SELECT * FROM events", s"$dir/events", "parquet")
+      val e = intercept[IllegalArgumentException] {
+        Engine.query(spark, s"parquet://$dir", "SELECT count(*) AS n FROM events").collect()
+      }
+      assert(e.getMessage.contains("ambiguous table name"), e.getMessage)
     }
-    assert(e.getMessage.contains("ambiguous table name"), e.getMessage)
   }
 
   test("SparkEntry.entry (driver t1 smoke) returns rows through the engine path") {
@@ -333,11 +348,12 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("zero-row export writes header-only csv, not a broken empty file") {
-    val out = tmp("csv")
-    Engine.export(spark, s"parquet://$sf",
-      "SELECT r_name FROM region WHERE r_regionkey < 0", out)
-    val lines = scala.io.Source.fromFile(out).getLines().toList
-    assert(lines == List("r_name"))
+    withOut("csv") { out =>
+      Engine.export(spark, s"parquet://$sf",
+        "SELECT r_name FROM region WHERE r_regionkey < 0", out)
+      val lines = scala.io.Source.fromFile(out).getLines().toList
+      assert(lines == List("r_name"))
+    }
   }
 
   /** Spark jobs `body` starts from this thread, read after the listener bus
@@ -373,35 +389,39 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("a corrupt table file fails only the queries that name it") {
-    val dir = Files.createTempDirectory("graft-junk-src")
-    Tables.names.foreach(n => Files.copy(
-      java.nio.file.Paths.get(s"$sf/$n.parquet"), dir.resolve(s"$n.parquet")))
-    Files.write(dir.resolve("junk.parquet"), "this is not a parquet file".getBytes("UTF-8"))
-    assert(Engine.query(spark, s"parquet://$dir", "SELECT count(*) FROM region")
-      .first().getLong(0) == 5)
-    val e = intercept[org.apache.spark.SparkException] {
-      Engine.query(spark, s"parquet://$dir", "SELECT count(*) FROM junk").collect()
+    Scratch.withTree("graft-junk-src") { tree =>
+      val dir = tree.toPath
+      Tables.names.foreach(n => Files.copy(
+        java.nio.file.Paths.get(s"$sf/$n.parquet"), dir.resolve(s"$n.parquet")))
+      Files.write(dir.resolve("junk.parquet"), "this is not a parquet file".getBytes("UTF-8"))
+      assert(Engine.query(spark, s"parquet://$dir", "SELECT count(*) FROM region")
+        .first().getLong(0) == 5)
+      val e = intercept[org.apache.spark.SparkException] {
+        Engine.query(spark, s"parquet://$dir", "SELECT count(*) FROM junk").collect()
+      }
+      assert(e.getMessage.contains("junk.parquet"), e.getMessage)
     }
-    assert(e.getMessage.contains("junk.parquet"), e.getMessage)
   }
 
   test("a failed export leaves neither the output file nor the temp directory") {
     // the write job throws (Spark itself removes the directory it was writing)
-    val out = tmp("csv")
-    val e = intercept[Exception] {
-      Engine.export(spark, s"parquet://$sf", "SELECT raise_error('boom') FROM region", out)
+    withOut("csv") { out =>
+      val e = intercept[Exception] {
+        Engine.export(spark, s"parquet://$sf", "SELECT raise_error('boom') FROM region", out)
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("boom")), e.toString)
+      assert(!new java.io.File(out).exists())
+      assert(!new java.io.File(out + ".tmp-spark-write").exists())
+      // the write succeeds but promoting its part-file fails: the output path
+      // is a non-empty directory
+      withOut("csv") { taken =>
+        Files.createDirectories(java.nio.file.Paths.get(taken, "keep"))
+        intercept[java.nio.file.DirectoryNotEmptyException] {
+          Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", taken)
+        }
+        assert(!new java.io.File(taken + ".tmp-spark-write").exists())
+      }
     }
-    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(chain.exists(t => String.valueOf(t.getMessage).contains("boom")), e.toString)
-    assert(!new java.io.File(out).exists())
-    assert(!new java.io.File(out + ".tmp-spark-write").exists())
-    // the write succeeds but promoting its part-file fails: the output path
-    // is a non-empty directory
-    val taken = tmp("csv")
-    Files.createDirectories(java.nio.file.Paths.get(taken, "keep"))
-    intercept[java.nio.file.DirectoryNotEmptyException] {
-      Engine.export(spark, s"parquet://$sf", "SELECT * FROM region", taken)
-    }
-    assert(!new java.io.File(taken + ".tmp-spark-write").exists())
   }
 }

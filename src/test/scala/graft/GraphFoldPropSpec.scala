@@ -48,7 +48,7 @@ class GraphFoldPropSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming/batch EWMA invariants: bounded by value range, exact vs sequential fold") {
+  test("batch EWMA invariants: bounded by value range, exact vs sequential fold") {
     import spark.implicits._
     val seqGen: Gen[List[Double]] =
       Gen.choose(1, 30).flatMap(n => Gen.listOfN(n, Gen.choose(-1e4, 1e4)))
@@ -60,16 +60,10 @@ class GraphFoldPropSpec extends AnyFunSuite {
       }
     }
     val df = rows.toDF("user_id", "ts", "event_id", "value")
-    implicit val s: org.apache.spark.sql.SparkSession = spark
     val expected = sequences.zipWithIndex.map { case (vs, u) =>
       u.toLong -> vs.tail.foldLeft(vs.head)((acc, x) => 0.25 * x + 0.75 * acc)
     }.toMap
-    // the STREAMING handler executed in batch mode (state starts empty,
-    // all rows arrive as one group) must equal the sequential reference
-    val handler = graft.streaming.StreamingOps.ewmaUpdates(df)
-      .collect().map(u => u.user_id -> u.ewma).toMap
-    assert(handler == expected)
-    // run the BATCH fold (Events.ewma shape) over the same frame
+    // run the BATCH fold (Events.ewma shape) over the frame
     val folded = df
       .groupBy("user_id")
       .agg(sort_array(collect_list(struct(unix_micros(col("ts")).as("ts_us"),

@@ -1,8 +1,9 @@
 package graft
 
-import java.sql.DriverManager
+import java.sql.{DriverManager, SQLException}
 
 import org.apache.spark.sql.functions._
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Source
@@ -26,12 +27,24 @@ import graft.sources.Source
 class JdbcLiveSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  /** Embedded Derby DB seeded once; derby.log is pointed at the temp dir
-    * so test runs don't litter the repo. */
+  /** Derby's home for the suite: the database and derby.log, so test runs
+    * don't litter the repo. */
+  private var home: java.io.File = _
+
+  /** Run the suite inside one scratch tree, and shut Derby down before
+    * the tree is deleted. */
+  override def run(testName: Option[String], args: Args): Status =
+    Scratch.withTree("graft-derby") { tree =>
+      home = tree
+      try super.run(testName, args)
+      finally try DriverManager.getConnection("jdbc:derby:;shutdown=true")
+      catch { case _: SQLException => () } // Derby reports a clean shutdown by throwing
+    }
+
+  /** Embedded Derby DB seeded once per suite run. */
   private lazy val dbPath: String = {
-    val home = java.nio.file.Files.createTempDirectory("graft-derby")
-    System.setProperty("derby.system.home", home.toString)
-    val dir = home.resolve("db")
+    System.setProperty("derby.system.home", home.getPath)
+    val dir = new java.io.File(home, "db").getPath
     val conn = DriverManager.getConnection(s"jdbc:derby:$dir;create=true")
     try {
       val st = conn.createStatement()
@@ -42,7 +55,7 @@ class JdbcLiveSpec extends AnyFunSuite {
       }
       st.close()
     } finally conn.close()
-    dir.toString
+    dir
   }
 
   test("jdbc: URL executes a real query through the engine (whole-query pushdown)") {
@@ -69,15 +82,16 @@ class JdbcLiveSpec extends AnyFunSuite {
     // the reference's exact usage (README.md:35-43): one query against a
     // live DB, one output file picked by extension — here through
     // Engine.export with a REAL database behind the URL
-    val out = java.nio.file.Files.createTempDirectory("graft-jdbc-out")
-      .resolve("payment.csv").toString
-    Engine.export(spark, s"jdbc:derby:$dbPath",
-      "SELECT id, amount FROM payment WHERE id <= 3 ORDER BY id", out)
-    val lines = scala.io.Source.fromFile(out).getLines().toList
-    // header carries the backend's reported names verbatim (Derby folds
-    // unquoted identifiers to upper case) — the reference's pass-through
-    // behavior exactly
-    assert(lines == List("ID,AMOUNT", "1,10", "2,20", "3,30"))
+    Scratch.withTree("graft-jdbc-out") { tree =>
+      val out = new java.io.File(tree, "payment.csv").getPath
+      Engine.export(spark, s"jdbc:derby:$dbPath",
+        "SELECT id, amount FROM payment WHERE id <= 3 ORDER BY id", out)
+      val lines = scala.io.Source.fromFile(out).getLines().toList
+      // header carries the backend's reported names verbatim (Derby folds
+      // unquoted identifiers to upper case) — the reference's pass-through
+      // behavior exactly
+      assert(lines == List("ID,AMOUNT", "1,10", "2,20", "3,30"))
+    }
   }
 
   test("spark-side filters are pushed down into Derby (PushedFilters + row probe)") {

@@ -91,25 +91,27 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     // columnar, a metadata aggregate's parquet scan must not include the
     // (dominant) binary payload in its ReadSchema — at 100 TB this is the
     // difference between scanning kilobytes of metadata and the whole lake
-    val dir = java.nio.file.Files.createTempDirectory("graft-media").resolve("t").toString
-    media.write.parquet(dir)
-    val stats = spark.read.parquet(dir)
-      .filter(col("width") >= 32)
-      .groupBy("format")
-      .agg(count(lit(1)).as("n"), sum(col("width").cast("long")).as("total_width"))
-    val p = stats.queryExecution.executedPlan.toString
-    val readSchema = "ReadSchema: [^,]+".r.findFirstIn(p).getOrElse("")
-    assert(readSchema.nonEmpty && !readSchema.contains("payload"),
-      s"payload column was not pruned from the scan: $readSchema")
-    // the width predicate reaches the scan as a pushed filter too
-    assert(p.contains("PushedFilters: [IsNotNull(width), GreaterThanOrEqual(width,32)]")
-      || p.contains("GreaterThanOrEqual(width,32)"),
-      s"width filter not pushed:\n${p.take(600)}")
-    assert(stats.count() > 0)
+    Scratch.withTree("graft-media") { tree =>
+      val dir = new java.io.File(tree, "t").getPath
+      media.write.parquet(dir)
+      val stats = spark.read.parquet(dir)
+        .filter(col("width") >= 32)
+        .groupBy("format")
+        .agg(count(lit(1)).as("n"), sum(col("width").cast("long")).as("total_width"))
+      val p = stats.queryExecution.executedPlan.toString
+      val readSchema = "ReadSchema: [^,]+".r.findFirstIn(p).getOrElse("")
+      assert(readSchema.nonEmpty && !readSchema.contains("payload"),
+        s"payload column was not pruned from the scan: $readSchema")
+      // the width predicate reaches the scan as a pushed filter too
+      assert(p.contains("PushedFilters: [IsNotNull(width), GreaterThanOrEqual(width,32)]")
+        || p.contains("GreaterThanOrEqual(width,32)"),
+        s"width filter not pushed:\n${p.take(600)}")
+      assert(stats.count() > 0)
+    }
   }
 
   test("mm4: injected exact duplicates rank at the top with cosine 1; output deterministic") {
-    val base = Multimodal.extractFeaturesWithVec(media)
+    val base = Multimodal.extractFeatures(media).toDF().select("media_id", "feature")
     // duplicate every item under a shifted id — each (id, id + 10^9) pair
     // has IDENTICAL features, so the top pairs must be dominated by cos=1
     val doubled = base.unionByName(

@@ -96,23 +96,6 @@ class RelationalSpec extends AnyFunSuite {
         |ORDER BY l_returnflag, metric""".stripMargin)
   }
 
-  test("q25 (demoted twin): fact-fact join+agg equals Spark SQL within its exchange budget") {
-    // q25 was demoted from the registry (its machinery overlaps q03/q43);
-    // this test carries both its result contract and its plan budget
-    // plan budget read BEFORE execution (the AQE final plan re-prints each
-    // materialized stage's Exchange, inflating a text count — same
-    // methodology as ShuffleBudgetSpec)
-    val plan = graft.operators.Relational.q25BigJoinAgg(spark, sf)
-      .queryExecution.executedPlan.toString
-    val exchanges = "Exchange (hashpartitioning|rangepartitioning|SinglePartition)".r
-      .findAllIn(plan).length
-    assert(exchanges <= 2, s"q25 now plans $exchanges exchanges (budget 2)")
-    val api = rows(graft.operators.Relational.q25BigJoinAgg(spark, sf))
-    val viaSql = rows(Tables.sql(spark, sf,
-      "SELECT o_orderpriority, count(*) AS n_items, CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS revenue FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey GROUP BY o_orderpriority ORDER BY o_orderpriority"))
-    assert(api == viaSql && api.nonEmpty)
-  }
-
   test("shape sanity of fixed-size outputs") {
     assert(Registry.queries("q03_top_revenue_orders")(spark, sf).count() == 10)
     assert(Registry.queries("q14_topk")(spark, sf).count() == 10)

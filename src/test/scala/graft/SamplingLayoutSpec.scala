@@ -89,32 +89,6 @@ class SamplingLayoutSpec extends AnyFunSuite {
     assert(bad == 0L)
   }
 
-  test("zOrderLayout writes files whose bounding boxes beat a naive layout") {
-    // End-to-end: the layout op must translate into tight PER-FILE min/max
-    // ranges on disk (what parquet footers / table-format stats expose for
-    // skipping), not just a tidy z column. Compare total covered area
-    // against a round-robin write of the same data.
-    val o = Tables(spark, sf, "orders").select(
-      col("o_orderkey"),
-      pmod(col("o_custkey"), lit(65536L)).cast("long").as("x"),
-      least(floor(col("o_totalprice") / 16.0), lit(65535L)).cast("long").as("y"))
-    def totalArea(dir: String): Double =
-      Option(new java.io.File(dir).listFiles()).get
-        .filter(f => f.isFile && f.getName.startsWith("part-")).map { f =>
-          val r = spark.read.parquet(f.getAbsolutePath)
-            .agg(min("x"), max("x"), min("y"), max("y")).head()
-          (r.getLong(1) - r.getLong(0) + 1).toDouble * (r.getLong(3) - r.getLong(2) + 1)
-        }.sum
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    operators.Layout.zOrderLayout(o, col("x"), col("y"), 8)
-      .write.parquet(s"$base/z")
-    o.repartition(8).write.parquet(s"$base/naive")
-    val (zArea, nArea) = (totalArea(s"$base/z"), totalArea(s"$base/naive"))
-    info(f"covered area: zorder ${zArea}%.3g vs naive ${nArea}%.3g")
-    assert(zArea * 2 < nArea,
-      s"z-order files should cover far less (x,y) area: z=$zArea naive=$nArea")
-  }
-
   test("bf1 bloom-prefiltered decontamination ≡ exact decontamination") {
     val exact = Pipeline.decontaminate(spark, sf).collect().toSeq
     val bloom = Pipeline.bloomDecontaminate(spark, sf).collect().toSeq

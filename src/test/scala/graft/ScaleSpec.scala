@@ -92,15 +92,17 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("partitioned write enables partition pruning on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").resolve("events").toString
-    graft.sinks.Sinks.writeDir(
-      Tables(spark, sf, "events"), dir, graft.sinks.Sinks.Parquet, partitionBy = Seq("event_type"))
-    val read = spark.read.parquet(dir).filter(col("event_type") === "purchase")
-    val p = read.queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters: [isnotnull(event_type"), p.take(500))
-    val expected = Tables(spark, sf, "events")
-      .filter(col("event_type") === "purchase").count()
-    assert(read.count() == expected)
+    Scratch.withTree("graft-part") { tree =>
+      val dir = new java.io.File(tree, "events").getPath
+      graft.sinks.Sinks.writeDir(
+        Tables(spark, sf, "events"), dir, graft.sinks.Sinks.Parquet, partitionBy = Seq("event_type"))
+      val read = spark.read.parquet(dir).filter(col("event_type") === "purchase")
+      val p = read.queryExecution.executedPlan.toString
+      assert(p.contains("PartitionFilters: [isnotnull(event_type"), p.take(500))
+      val expected = Tables(spark, sf, "events")
+        .filter(col("event_type") === "purchase").count()
+      assert(read.count() == expected)
+    }
   }
 
   test("float_vector_dot is callable from SQL and codegen'd") {
@@ -113,87 +115,89 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("bucketed co-located join eliminates the shuffle entirely") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val n = 8
-    // repartition on the bucket key BEFORE bucketBy: one file per bucket,
-    // which is the condition under which the scan also reports the sortBy
-    // ordering and the join needs no Sort either (asserted below)
-    Tables(spark, sf, "orders").repartition(n, col("o_orderkey")).write
-      .bucketBy(n, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$wh/orders_b").mode("overwrite").saveAsTable("orders_b")
-    Tables(spark, sf, "lineitem").repartition(n, col("l_orderkey")).write
-      .bucketBy(n, "l_orderkey").sortBy("l_orderkey")
-      .option("path", s"$wh/lineitem_b").mode("overwrite").saveAsTable("lineitem_b")
-    try {
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // scan-reported sortBy ordering is opt-in since Spark 3 (unsafe when a
-      // bucket holds several files; the repartition above guarantees one)
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    Scratch.withTree("graft-warehouse") { wh =>
+      val n = 8
+      // repartition on the bucket key BEFORE bucketBy: one file per bucket,
+      // which is the condition under which the scan also reports the sortBy
+      // ordering and the join needs no Sort either (asserted below)
+      Tables(spark, sf, "orders").repartition(n, col("o_orderkey")).write
+        .bucketBy(n, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$wh/orders_b").mode("overwrite").saveAsTable("orders_b")
+      Tables(spark, sf, "lineitem").repartition(n, col("l_orderkey")).write
+        .bucketBy(n, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$wh/lineitem_b").mode("overwrite").saveAsTable("lineitem_b")
       try {
-        val joined = spark.table("lineitem_b")
-          .join(spark.table("orders_b"),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy("l_orderkey")
-          .agg(count(lit(1)).as("n"))
-        val p = joined.queryExecution.executedPlan.toString
-        assert(p.contains("SortMergeJoin"))
-        assert(!p.contains("ShuffleExchange") && !p.contains("Exchange hashpartitioning"),
-          s"unexpected shuffle in bucketed join:\n${p.take(800)}")
-        // one file per bucket + sortBy => the scan itself is ordered on the
-        // join key: the merge join runs with NO Sort operator either — the
-        // full shuffle-free AND sort-free co-located fact-fact join
-        assert(!p.contains("Sort "),
-          s"bucketed sortBy ordering was not used, join re-sorts:\n${p.take(800)}")
-        assert(joined.count() > 0)
+        val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        // scan-reported sortBy ordering is opt-in since Spark 3 (unsafe when a
+        // bucket holds several files; the repartition above guarantees one)
+        spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+        try {
+          val joined = spark.table("lineitem_b")
+            .join(spark.table("orders_b"),
+              col("l_orderkey") === col("o_orderkey"))
+            .groupBy("l_orderkey")
+            .agg(count(lit(1)).as("n"))
+          val p = joined.queryExecution.executedPlan.toString
+          assert(p.contains("SortMergeJoin"))
+          assert(!p.contains("ShuffleExchange") && !p.contains("Exchange hashpartitioning"),
+            s"unexpected shuffle in bucketed join:\n${p.take(800)}")
+          // one file per bucket + sortBy => the scan itself is ordered on the
+          // join key: the merge join runs with NO Sort operator either — the
+          // full shuffle-free AND sort-free co-located fact-fact join
+          assert(!p.contains("Sort "),
+            s"bucketed sortBy ordering was not used, join re-sorts:\n${p.take(800)}")
+          assert(joined.count() > 0)
+        } finally {
+          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+          spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
+        }
       } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
+        spark.sql("DROP TABLE IF EXISTS orders_b")
+        spark.sql("DROP TABLE IF EXISTS lineitem_b")
       }
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS orders_b")
-      spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }
   }
 
   test("cost-based join reorder: with column stats, the selective dimension joins before the fact") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-cbo-wh").toString
-    for (t <- Seq("lineitem", "orders", "customer")) {
-      Tables(spark, sf, t).write.mode("overwrite")
-        .option("path", s"$wh/${t}_s").saveAsTable(s"${t}_s")
-      spark.sql(s"ANALYZE TABLE ${t}_s COMPUTE STATISTICS FOR ALL COLUMNS")
-    }
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    def innermostJoinTables(cbo: Boolean): Seq[String] = {
-      spark.conf.set("spark.sql.cbo.enabled", cbo.toString)
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", cbo.toString)
-      val q = spark.sql(
-        """SELECT c.c_mktsegment, count(*) AS n
-          |FROM lineitem_s l
-          |JOIN orders_s o ON l.l_orderkey = o.o_orderkey
-          |JOIN customer_s c ON o.o_custkey = c.c_custkey
-          |WHERE c.c_mktsegment = 'BUILDING'
-          |GROUP BY c.c_mktsegment""".stripMargin)
-      val joins = q.queryExecution.optimizedPlan.collect { case j: Join => j }
-      joins.last.collectLeaves().map(_.toString.split('[').head.trim)
-    }
-    try {
-      // syntactic left-deep order without statistics-based planning:
-      // the fact-fact (lineitem ⋈ orders) join runs first
-      val off = innermostJoinTables(cbo = false)
-      assert(off.exists(_.contains("lineitem_s")), s"unexpected baseline order: $off")
-      // with ANALYZE'd column stats + CBO, the reorderer joins the
-      // filter-reduced customer dimension against orders FIRST, so the
-      // expensive fact join consumes an already-reduced input — the
-      // stats-driven decision that matters most at 100 TB
-      val on = innermostJoinTables(cbo = true)
-      assert(on.exists(_.contains("customer_s")) && on.exists(_.contains("orders_s")),
-        s"CBO did not reorder the selective dimension first: $on")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      for (t <- Seq("lineitem", "orders", "customer"))
-        spark.sql(s"DROP TABLE IF EXISTS ${t}_s")
+    Scratch.withTree("graft-cbo-wh") { wh =>
+      for (t <- Seq("lineitem", "orders", "customer")) {
+        Tables(spark, sf, t).write.mode("overwrite")
+          .option("path", s"$wh/${t}_s").saveAsTable(s"${t}_s")
+        spark.sql(s"ANALYZE TABLE ${t}_s COMPUTE STATISTICS FOR ALL COLUMNS")
+      }
+      import org.apache.spark.sql.catalyst.plans.logical.Join
+      def innermostJoinTables(cbo: Boolean): Seq[String] = {
+        spark.conf.set("spark.sql.cbo.enabled", cbo.toString)
+        spark.conf.set("spark.sql.cbo.joinReorder.enabled", cbo.toString)
+        val q = spark.sql(
+          """SELECT c.c_mktsegment, count(*) AS n
+            |FROM lineitem_s l
+            |JOIN orders_s o ON l.l_orderkey = o.o_orderkey
+            |JOIN customer_s c ON o.o_custkey = c.c_custkey
+            |WHERE c.c_mktsegment = 'BUILDING'
+            |GROUP BY c.c_mktsegment""".stripMargin)
+        val joins = q.queryExecution.optimizedPlan.collect { case j: Join => j }
+        joins.last.collectLeaves().map(_.toString.split('[').head.trim)
+      }
+      try {
+        // syntactic left-deep order without statistics-based planning:
+        // the fact-fact (lineitem ⋈ orders) join runs first
+        val off = innermostJoinTables(cbo = false)
+        assert(off.exists(_.contains("lineitem_s")), s"unexpected baseline order: $off")
+        // with ANALYZE'd column stats + CBO, the reorderer joins the
+        // filter-reduced customer dimension against orders FIRST, so the
+        // expensive fact join consumes an already-reduced input — the
+        // stats-driven decision that matters most at 100 TB
+        val on = innermostJoinTables(cbo = true)
+        assert(on.exists(_.contains("customer_s")) && on.exists(_.contains("orders_s")),
+          s"CBO did not reorder the selective dimension first: $on")
+      } finally {
+        spark.conf.set("spark.sql.cbo.enabled", "false")
+        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
+        for (t <- Seq("lineitem", "orders", "customer"))
+          spark.sql(s"DROP TABLE IF EXISTS ${t}_s")
+      }
     }
   }
 

@@ -163,11 +163,13 @@ class ScanPruningSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val src = Tables(spark, sf, "events")
     // UTC-adjusted MICROS (Spark's own write default): comparison pushes
-    val utcDir = java.nio.file.Files.createTempDirectory("gen_utc").toString
-    src.write.mode("overwrite").parquet(s"$utcDir/events.parquet")
-    val utcPushed = pushedFor(utcDir)
-    assert(utcPushed.contains("GreaterThanOrEqual(ts"),
-      s"utc-micros generation lost ts predicate pushdown; PushedFilters=[$utcPushed]")
+    Scratch.withTree("gen_utc") { tree =>
+      val utcDir = tree.getPath
+      src.write.mode("overwrite").parquet(s"$utcDir/events.parquet")
+      val utcPushed = pushedFor(utcDir)
+      assert(utcPushed.contains("GreaterThanOrEqual(ts"),
+        s"utc-micros generation lost ts predicate pushdown; PushedFilters=[$utcPushed]")
+    }
     // Spark-WRITTEN NTZ: the footer's Spark schema metadata types the
     // column TIMESTAMP_NTZ regardless of the inference conf, so the read
     // takes normalizeTimestamps' rewrite and a ts comparison structurally
@@ -175,12 +177,14 @@ class ScanPruningSpec extends AnyFunSuite {
     // (i.e. is not fully opaque), documenting the known cost of this
     // encoding. (The driver's pyarrow-written unannotated files carry no
     // such metadata; they are the current-generation case below.)
-    val ntzDir = java.nio.file.Files.createTempDirectory("gen_ntz").toString
-    src.withColumn("ts", col("ts").cast("timestamp_ntz"))
-      .write.mode("overwrite").parquet(s"$ntzDir/events.parquet")
-    val ntzPushed = pushedFor(ntzDir)
-    assert(ntzPushed.contains("IsNotNull(ts)"),
-      s"spark-ntz generation: scan went fully opaque; PushedFilters=[$ntzPushed]")
+    Scratch.withTree("gen_ntz") { tree =>
+      val ntzDir = tree.getPath
+      src.withColumn("ts", col("ts").cast("timestamp_ntz"))
+        .write.mode("overwrite").parquet(s"$ntzDir/events.parquet")
+      val ntzPushed = pushedFor(ntzDir)
+      assert(ntzPushed.contains("IsNotNull(ts)"),
+        s"spark-ntz generation: scan went fully opaque; PushedFilters=[$ntzPushed]")
+    }
   }
 
   test("current testdata generation: ts pushes where its encoding allows") {

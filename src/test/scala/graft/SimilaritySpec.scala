@@ -261,17 +261,19 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("persisted IVF index: probe equals the inline IVF search and prunes partitions dynamically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").resolve("idx").toString
-    val e = Tables(spark, sf, "embeddings")
-    Similarity.buildIvfIndex(e, dir)
-    val probe = Similarity.probeIvfIndex(spark, dir, e.filter(col("vec_id") < 10))
-    // same cells (= label), same scoring → must equal the inline ss3 result
-    val inline = Similarity.ivfTopK(spark, sf).collect().map(_.toString).toSeq
-    assert(probe.collect().map(_.toString).toSeq == inline)
-    // the index scan must carry a runtime partition filter on cell, not
-    // read all cell= directories
-    val p = probe.queryExecution.executedPlan.toString
-    assert(p.contains("dynamicpruning"),
-      s"expected dynamic partition pruning on the index scan:\n${p.take(1200)}")
+    Scratch.withTree("graft-ivf") { tree =>
+      val dir = new java.io.File(tree, "idx").getPath
+      val e = Tables(spark, sf, "embeddings")
+      Similarity.buildIvfIndex(e, dir)
+      val probe = Similarity.probeIvfIndex(spark, dir, e.filter(col("vec_id") < 10))
+      // same cells (= label), same scoring → must equal the inline ss3 result
+      val inline = Similarity.ivfTopK(spark, sf).collect().map(_.toString).toSeq
+      assert(probe.collect().map(_.toString).toSeq == inline)
+      // the index scan must carry a runtime partition filter on cell, not
+      // read all cell= directories
+      val p = probe.queryExecution.executedPlan.toString
+      assert(p.contains("dynamicpruning"),
+        s"expected dynamic partition pruning on the index scan:\n${p.take(1200)}")
+    }
   }
 }

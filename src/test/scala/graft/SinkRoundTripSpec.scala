@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -45,16 +43,17 @@ class SinkRoundTripSpec extends AnyFunSuite {
   private def df(rows: List[Row]) =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
 
-  private def roundTrip(rows: List[Row], ext: String): Seq[String] = {
-    val out = Files.createTempDirectory("graft-prop").resolve(s"rt.$ext").toString
-    Sinks.writeSingleFile(df(rows), out)
-    val reader = ext match {
-      case "csv"  => spark.read.schema(schema).option("header", "true").csv(out)
-      case "json" => spark.read.schema(schema).json(out)
-      case _      => spark.read.parquet(out)
+  private def roundTrip(rows: List[Row], ext: String): Seq[String] =
+    Scratch.withTree("graft-prop") { tree =>
+      val out = new java.io.File(tree, s"rt.$ext").getPath
+      Sinks.writeSingleFile(df(rows), out)
+      val reader = ext match {
+        case "csv"  => spark.read.schema(schema).option("header", "true").csv(out)
+        case "json" => spark.read.schema(schema).json(out)
+        case _      => spark.read.parquet(out)
+      }
+      reader.collect().map(_.toString).sorted.toSeq
     }
-    reader.collect().map(_.toString).sorted.toSeq
-  }
 
   test("parquet/json/csv sinks round-trip payment-shaped data") {
     Seq(42L, 7L, 20260812L).foreach { seed =>
@@ -71,41 +70,45 @@ class SinkRoundTripSpec extends AnyFunSuite {
     // (one day, one source) must replace exactly that partition's files
     // and leave every other partition untouched — static overwrite mode
     // (Spark's default) would clobber the whole table root
-    val dir = Files.createTempDirectory("graft-dynpart").resolve("events").toString
-    val s = spark.newSession()
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val events = Tables(s, SparkTestSession.sf, "events")
-    graft.sinks.Sinks.writeDir(events, dir, graft.sinks.Sinks.Parquet,
-      partitionBy = Seq("event_type"))
-    val before = s.read.parquet(dir)
-    val nOther = before.filter(org.apache.spark.sql.functions.col("event_type") =!= "purchase").count()
-    // rewrite ONLY the purchase slice, halved — a re-run with different content
-    val rerun = events
-      .filter(org.apache.spark.sql.functions.col("event_type") === "purchase")
-      .filter(org.apache.spark.sql.functions.col("event_id") % 2 === 0)
-    rerun.write.mode("overwrite").partitionBy("event_type").parquet(dir)
-    val after = s.read.parquet(dir)
-    assert(after.filter(org.apache.spark.sql.functions.col("event_type") === "purchase").count()
-      == rerun.count(), "rewritten partition must hold exactly the re-run's rows")
-    assert(after.filter(org.apache.spark.sql.functions.col("event_type") =!= "purchase").count()
-      == nOther, "untouched partitions must survive the overwrite")
+    Scratch.withTree("graft-dynpart") { tree =>
+      val dir = new java.io.File(tree, "events").getPath
+      val s = spark.newSession()
+      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      val events = Tables(s, SparkTestSession.sf, "events")
+      graft.sinks.Sinks.writeDir(events, dir, graft.sinks.Sinks.Parquet,
+        partitionBy = Seq("event_type"))
+      val before = s.read.parquet(dir)
+      val nOther = before.filter(org.apache.spark.sql.functions.col("event_type") =!= "purchase").count()
+      // rewrite ONLY the purchase slice, halved — a re-run with different content
+      val rerun = events
+        .filter(org.apache.spark.sql.functions.col("event_type") === "purchase")
+        .filter(org.apache.spark.sql.functions.col("event_id") % 2 === 0)
+      rerun.write.mode("overwrite").partitionBy("event_type").parquet(dir)
+      val after = s.read.parquet(dir)
+      assert(after.filter(org.apache.spark.sql.functions.col("event_type") === "purchase").count()
+        == rerun.count(), "rewritten partition must hold exactly the re-run's rows")
+      assert(after.filter(org.apache.spark.sql.functions.col("event_type") =!= "purchase").count()
+        == nOther, "untouched partitions must survive the overwrite")
+    }
   }
 
   test("compaction rewrites a many-small-file dir into few equal files, data intact") {
-    val dir = Files.createTempDirectory("graft-compact").resolve("docs").toString
-    val docs = Tables(spark, SparkTestSession.sf, "documents")
-    docs.repartition(16).write.parquet(dir)
-    def parts = Option(new java.io.File(dir).listFiles()).get
-      .filter(f => f.isFile && f.getName.startsWith("part-")).toSeq
-    assert(parts.size == 16)
-    val totalBytes = parts.map(_.length()).sum
-    val before = docs.orderBy("doc_id").collect().toSeq
-    // target ~quarter of the data per file => expect ceil(total/target) files
-    val target = math.max(totalBytes / 4, 1L)
-    val expectFiles = math.ceil(totalBytes.toDouble / target).toInt
-    val n = Sinks.compactDir(spark.read.parquet(dir), dir, target)
-    assert(n == expectFiles && parts.size == n, s"got $n files, disk ${parts.size}")
-    val after = spark.read.parquet(dir).orderBy("doc_id").collect().toSeq
-    assert(after == before)
+    Scratch.withTree("graft-compact") { tree =>
+      val dir = new java.io.File(tree, "docs").getPath
+      val docs = Tables(spark, SparkTestSession.sf, "documents")
+      docs.repartition(16).write.parquet(dir)
+      def parts = Option(new java.io.File(dir).listFiles()).get
+        .filter(f => f.isFile && f.getName.startsWith("part-")).toSeq
+      assert(parts.size == 16)
+      val totalBytes = parts.map(_.length()).sum
+      val before = docs.orderBy("doc_id").collect().toSeq
+      // target ~quarter of the data per file => expect ceil(total/target) files
+      val target = math.max(totalBytes / 4, 1L)
+      val expectFiles = math.ceil(totalBytes.toDouble / target).toInt
+      val n = Sinks.compactDir(spark.read.parquet(dir), dir, target)
+      assert(n == expectFiles && parts.size == n, s"got $n files, disk ${parts.size}")
+      val after = spark.read.parquet(dir).orderBy("doc_id").collect().toSeq
+      assert(after == before)
+    }
   }
 }

@@ -116,56 +116,56 @@ class StreamingSpec extends AnyFunSuite {
     //  (b) a row below the late-events watermark — i.e. outdated by an
     //      advance two or more batches ago — drops, deterministically,
     //      counted by numRowsDroppedByWatermark.
-    val base = java.nio.file.Files.createTempDirectory("graft-late-").toFile
-    val t0 = 1767225600000000L // 2026-01-01 00:00:00 UTC, µs
-    val mn = 60L * 1000000L
-    import spark.implicits._
-    def mk(rows: Seq[(Long, Long)], i: Int): Unit =
-      rows.toDF("user_id", "us")
-        .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
-        .coalesce(1).write.parquet(f"$base/c$i%02d.parquet")
-    // batch 0: user 1 opens a session [t0, t0+10m]
-    mk(Seq((1L, t0), (1L, t0 + 10 * mn)), 0)
-    // batch 1: t0+5m is OUT OF ORDER (below batch 0's max) but above every
-    // watermark -> must merge into user 1's open session, not duplicate it;
-    // user 2's row advances batch 2's eviction watermark to t0+280m
-    mk(Seq((1L, t0 + 5 * mn), (2L, t0 + 400 * mn)), 1)
-    // batch 2: watermark heartbeat only
-    mk(Seq((2L, t0 + 500 * mn)), 2)
-    // batch 3: t0+100m is below its late-events watermark (= batch 2's
-    // eviction watermark, t0+280m) -> DROPPED; were it accepted it would
-    // form its own session ending t0+130m, which the final watermark
-    // (t0+680m) would emit — so its absence is observable in the output,
-    // not just in the drop counter. User 2's last row stays open
-    // (end t0+830m > final watermark t0+680m).
-    mk(Seq((1L, t0 + 100 * mn), (2L, t0 + 800 * mn)), 3)
-    val schema = spark.read.parquet(s"$base/c00.parquet").schema
-    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/*.parquet/*.parquet")
-    val q = StreamingOps.runToMemory(
-      StreamingOps.sessionWindows(stream), "late_sessions", OutputMode.Append)
-    try {
-      val got = spark.table("late_sessions")
-        .select(col("user_id"), unix_micros(col("s_start")),
-          unix_micros(col("s_end")), col("n_events"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      val gap = 30 * mn
-      assert(got == Set(
-        (1L, t0, t0 + 10 * mn + gap, 3L), // n=3 proves the late row MERGED
-        (2L, t0 + 400 * mn, t0 + 400 * mn + gap, 1L),
-        (2L, t0 + 500 * mn, t0 + 500 * mn + gap, 1L)), // and NO t0+100m session
-        s"unexpected emission set: $got")
-      // non-vacuous: the state operator itself must report exactly the one
-      // below-watermark drop (without this, (b) could pass by the row never
-      // reaching the operator at all)
-      val dropped = q.recentProgress
-        .flatMap(_.stateOperators.headOption.map(_.numRowsDroppedByWatermark)).sum
-      assert(dropped == 1L, s"expected exactly 1 watermark drop, saw $dropped")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView("late_sessions")
-      org.apache.commons.io.FileUtils.deleteDirectory(base)
+    Scratch.withTree("graft-late-") { base =>
+      val t0 = 1767225600000000L // 2026-01-01 00:00:00 UTC, µs
+      val mn = 60L * 1000000L
+      import spark.implicits._
+      def mk(rows: Seq[(Long, Long)], i: Int): Unit =
+        rows.toDF("user_id", "us")
+          .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
+          .coalesce(1).write.parquet(f"$base/c$i%02d.parquet")
+      // batch 0: user 1 opens a session [t0, t0+10m]
+      mk(Seq((1L, t0), (1L, t0 + 10 * mn)), 0)
+      // batch 1: t0+5m is OUT OF ORDER (below batch 0's max) but above every
+      // watermark -> must merge into user 1's open session, not duplicate it;
+      // user 2's row advances batch 2's eviction watermark to t0+280m
+      mk(Seq((1L, t0 + 5 * mn), (2L, t0 + 400 * mn)), 1)
+      // batch 2: watermark heartbeat only
+      mk(Seq((2L, t0 + 500 * mn)), 2)
+      // batch 3: t0+100m is below its late-events watermark (= batch 2's
+      // eviction watermark, t0+280m) -> DROPPED; were it accepted it would
+      // form its own session ending t0+130m, which the final watermark
+      // (t0+680m) would emit — so its absence is observable in the output,
+      // not just in the drop counter. User 2's last row stays open
+      // (end t0+830m > final watermark t0+680m).
+      mk(Seq((1L, t0 + 100 * mn), (2L, t0 + 800 * mn)), 3)
+      val schema = spark.read.parquet(s"$base/c00.parquet").schema
+      val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(s"$base/*.parquet/*.parquet")
+      val q = StreamingOps.runToMemory(
+        StreamingOps.sessionWindows(stream), "late_sessions", OutputMode.Append)
+      try {
+        val got = spark.table("late_sessions")
+          .select(col("user_id"), unix_micros(col("s_start")),
+            unix_micros(col("s_end")), col("n_events"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          .toSet
+        val gap = 30 * mn
+        assert(got == Set(
+          (1L, t0, t0 + 10 * mn + gap, 3L), // n=3 proves the late row MERGED
+          (2L, t0 + 400 * mn, t0 + 400 * mn + gap, 1L),
+          (2L, t0 + 500 * mn, t0 + 500 * mn + gap, 1L)), // and NO t0+100m session
+          s"unexpected emission set: $got")
+        // non-vacuous: the state operator itself must report exactly the one
+        // below-watermark drop (without this, (b) could pass by the row never
+        // reaching the operator at all)
+        val dropped = q.recentProgress
+          .flatMap(_.stateOperators.headOption.map(_.numRowsDroppedByWatermark)).sum
+        assert(dropped == 1L, s"expected exactly 1 watermark drop, saw $dropped")
+      } finally {
+        q.stop()
+        spark.catalog.dropTempView("late_sessions")
+      }
     }
   }
 
@@ -178,33 +178,32 @@ class StreamingSpec extends AnyFunSuite {
     // written before the stop. The foreachBatch fp-store test covers a
     // hand-rolled store's replay; this covers Spark's own checkpoint
     // machinery end to end.
-    val base = java.nio.file.Files.createTempDirectory("graft-restart-").toFile
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val outDir = new java.io.File(base, "out").getPath
-    val ckpt = new java.io.File(base, "ckpt").getPath
-    val t0 = 1767225600000000L
-    val mn = 60L * 1000000L
-    import spark.implicits._
-    def mk(rows: Seq[(Long, Long)], i: Int): Unit =
-      rows.toDF("user_id", "us")
-        .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
-        .coalesce(1).write.parquet(f"$inDir/c$i%02d.parquet")
-    def runOnce(): Unit = {
-      val schema = spark.read.parquet(s"$inDir/c00.parquet").schema
-      val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(s"$inDir/*.parquet/*.parquet")
-      StreamingOps.runAvailableNow(spark)(Seq(StreamingOps.sessionWindows(stream).writeStream
-        .outputMode(OutputMode.Append).format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)))
-    }
-    def emitted(): Set[(Long, Long, Long, Long)] =
-      spark.read.parquet(outDir)
-        .select(col("user_id"), unix_micros(col("s_start")),
-          unix_micros(col("s_end")), col("n_events"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-    val gap = 30 * mn
-    try {
+    Scratch.withTree("graft-restart-") { base =>
+      val inDir = new java.io.File(base, "in"); inDir.mkdirs()
+      val outDir = new java.io.File(base, "out").getPath
+      val ckpt = new java.io.File(base, "ckpt").getPath
+      val t0 = 1767225600000000L
+      val mn = 60L * 1000000L
+      import spark.implicits._
+      def mk(rows: Seq[(Long, Long)], i: Int): Unit =
+        rows.toDF("user_id", "us")
+          .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
+          .coalesce(1).write.parquet(f"$inDir/c$i%02d.parquet")
+      def runOnce(): Unit = {
+        val schema = spark.read.parquet(s"$inDir/c00.parquet").schema
+        val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+          .parquet(s"$inDir/*.parquet/*.parquet")
+        StreamingOps.runAvailableNow(spark)(Seq(StreamingOps.sessionWindows(stream).writeStream
+          .outputMode(OutputMode.Append).format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckpt)))
+      }
+      def emitted(): Set[(Long, Long, Long, Long)] =
+        spark.read.parquet(outDir)
+          .select(col("user_id"), unix_micros(col("s_start")),
+            unix_micros(col("s_end")), col("n_events"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          .toSet
+      val gap = 30 * mn
       // RUN 1: user 1's session closes (watermark t0+280m passes its end);
       // user 2's session [t0+400m, +30m) is OPEN in state at shutdown
       mk(Seq((1L, t0), (1L, t0 + 10 * mn)), 0)
@@ -225,8 +224,6 @@ class StreamingSpec extends AnyFunSuite {
         s"run 2 emission set wrong: ${emitted()}")
       // user 3's session (end t0+930m > watermark t0+780m) stays open —
       // the restart proof is non-vacuous only if state outlives run 2 too
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(base)
     }
   }
 
@@ -237,11 +234,10 @@ class StreamingSpec extends AnyFunSuite {
     val parts = "spark.sql.shuffle.partitions"
     def confs = (spark.conf.getOption(key), spark.conf.get(parts))
     val before = confs
-    val dir = java.nio.file.Files.createTempDirectory("graft-run-scope-").toFile
-    def writer(body: Dataset[Row] => Unit) =
-      spark.readStream.schema("id BIGINT").parquet(s"$dir/in").writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) => body(batch) }
-    try {
+    Scratch.withTree("graft-run-scope-") { dir =>
+      def writer(body: Dataset[Row] => Unit) =
+        spark.readStream.schema("id BIGINT").parquet(s"$dir/in").writeStream
+          .foreachBatch { (batch: Dataset[Row], _: Long) => body(batch) }
       spark.range(3).write.parquet(s"$dir/in")
       val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
       StreamingOps.runAvailableNow(spark, Some(3))(Seq(writer { batch =>
@@ -263,7 +259,7 @@ class StreamingSpec extends AnyFunSuite {
       }
       assert(confs == before, "confs not restored after a failed query")
       assert(!spark.streams.active.exists(_.name == "graft_failing"), "failed query left running")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 
   test("a streaming member that throws deletes its staging tree") {
@@ -271,31 +267,31 @@ class StreamingSpec extends AnyFunSuite {
     def st2Trees = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
       .map(_.getName).filter(_.startsWith("graft-st2-")).toSet
     val before = st2Trees
-    val empty = java.nio.file.Files.createTempDirectory("graft-empty-source-").toFile
-    try {
+    Scratch.withTree("graft-empty-source-") { empty =>
       intercept[Exception](StreamingOps.sessionizationFromStream(spark, empty.getPath))
       assert((st2Trees -- before).isEmpty, s"leaked staging trees: ${st2Trees -- before}")
-    } finally empty.delete()
+    }
   }
 
   test("streaming dedup drops cross-file duplicates down to the batch-distinct set") {
     // a source directory where every event arrives twice (two identical
     // files), streamed file-at-a-time so duplicates cross micro-batches
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-dedup").toString
-    val events = Tables(spark, sf, "events")
-    events.coalesce(1).write.mode("overwrite").parquet(s"$dir/a.parquet")
-    events.coalesce(1).write.mode("overwrite").parquet(s"$dir/b.parquet")
-    val schema = spark.read.parquet(s"$dir/a.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/*.parquet/*.parquet")
-    val q = StreamingOps.runToMemory(
-      StreamingOps.streamingDedup(stream, "ts", "2 hours", "event_id"),
-      "stream_dedup", OutputMode.Append)
-    try {
-      val streamed = spark.table("stream_dedup")
-      assert(streamed.count() == events.count())
-      assert(streamed.select("event_id").distinct().count() == events.count())
-    } finally q.stop()
+    Scratch.withTree("graft-stream-dedup") { dir =>
+      val events = Tables(spark, sf, "events")
+      events.coalesce(1).write.mode("overwrite").parquet(s"$dir/a.parquet")
+      events.coalesce(1).write.mode("overwrite").parquet(s"$dir/b.parquet")
+      val schema = spark.read.parquet(s"$dir/a.parquet").schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/*.parquet/*.parquet")
+      val q = StreamingOps.runToMemory(
+        StreamingOps.streamingDedup(stream, "ts", "2 hours", "event_id"),
+        "stream_dedup", OutputMode.Append)
+      try {
+        val streamed = spark.table("stream_dedup")
+        assert(streamed.count() == events.count())
+        assert(streamed.select("event_id").distinct().count() == events.count())
+      } finally q.stop()
+    }
   }
 
   test("the cleaning pipeline's stateless prefix runs identically as a stream") {
@@ -470,215 +466,92 @@ class StreamingSpec extends AnyFunSuite {
     assert(all.count() > closed.size, "no open window tail — eviction boundary untested")
   }
 
-  test("foreachBatch incremental rollup across micro-batches equals one batch aggregation") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft-rollup").toString
-    val inDir = s"$base/in"
-    val stateDir = s"$base/state"
-    // four input files => four one-file micro-batches under AvailableNow
-    Tables(spark, sf, "events")
-      .select("user_id", "value").repartition(4).write.parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = StreamingOps.incrementalRollup(stream, stateDir)
-    try {
-      // genuinely incremental: four commits merged one at a time
-      assert(StreamingOps.committedBatchId(stateDir) == 3)
-      val streamed = spark.read.parquet(stateDir).collect().map(_.toString).sorted.toSeq
-      val batch = spark.read.parquet(inDir).groupBy("user_id").agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("decimal(38,2)").as("spend"))
-        .collect().map(_.toString).sorted.toSeq
-      assert(batch.nonEmpty && streamed == batch)
-      // replay safety: a fresh run re-reads the same files as batch ids
-      // 0..3, all at-or-below the committed marker => every merge skipped
-      val q2 = StreamingOps.incrementalRollup(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(inDir),
-        stateDir)
-      q2.stop()
-      val after = spark.read.parquet(stateDir).collect().map(_.toString).sorted.toSeq
-      assert(after == streamed, "replayed batch ids must not double-count")
-    } finally q.stop()
-  }
-
-  test("streaming EWMA across time-ordered micro-batches equals the batch fold exactly") {
-    import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("graft-ewma").toString
-    val ev = Tables(spark, sf, "events")
-      .select("user_id", "ts", "event_id", "value")
-    // four GLOBAL time quartiles written in order => each micro-batch is a
-    // time range; per-user event order across batches matches batch order
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(Window.orderBy(unix_micros(col("ts")), col("event_id"))))
-    (1 to 4).foreach { i =>
-      chunked.filter(col("chunk") === i).drop("chunk")
-        .coalesce(1).write.parquet(s"$dir/c$i.parquet")
-    }
-    val schema = spark.read.parquet(s"$dir/c1.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet/*.parquet")
-    val q = StreamingOps.runToMemory(
-      StreamingOps.ewmaUpdates(stream).toDF(), "stream_ewma", OutputMode.Append)
-    try {
-      // the user's LAST update (max n_events) is the final fold state
-      val streamed = spark.table("stream_ewma")
-        .groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("ewma"))).as("s"))
-        .select(col("user_id"), col("s.n_events").as("n_events"),
-          col("s.ewma").as("ewma"))
-        .collect().map(_.toString).sorted.toSeq
-      val batch = Events.ewma(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(batch.nonEmpty && streamed == batch)
-    } finally q.stop()
-  }
-
   test("streaming LOCF across time-ordered micro-batches equals the batch window exactly") {
     import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("graft-locf").toString
-    val ev = Tables(spark, sf, "events")
-      .select("user_id", "ts", "event_id", "event_type", "value")
-    // same harness as the EWMA proof: global time quartiles arrive as four
-    // ordered micro-batches, so per-user order across batches matches batch
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(Window.orderBy(unix_micros(col("ts")), col("event_id"))))
-    (1 to 4).foreach { i =>
-      chunked.filter(col("chunk") === i).drop("chunk")
-        .coalesce(1).write.parquet(s"$dir/c$i.parquet")
+    Scratch.withTree("graft-locf") { dir =>
+      val ev = Tables(spark, sf, "events")
+        .select("user_id", "ts", "event_id", "event_type", "value")
+      // global time quartiles arrive as four ordered micro-batches, so
+      // per-user order across batches matches batch
+      val chunked = ev.withColumn("chunk",
+        ntile(4).over(Window.orderBy(unix_micros(col("ts")), col("event_id"))))
+      (1 to 4).foreach { i =>
+        chunked.filter(col("chunk") === i).drop("chunk")
+          .coalesce(1).write.parquet(s"$dir/c$i.parquet")
+      }
+      val schema = spark.read.parquet(s"$dir/c1.parquet").schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet/*.parquet")
+      val q = StreamingOps.runToMemory(
+        StreamingOps.locfUpdates(stream).toDF(), "stream_locf", OutputMode.Append)
+      try {
+        // per-event emission: every input row appears exactly once with its
+        // fill — compare the full densified relation, not a summary
+        val streamed = spark.table("stream_locf")
+          .select("user_id", "event_id", "ts_us", "event_type", "last_purchase_value")
+          .collect().map(_.toString).sorted.toSeq
+        val batch = Events.forwardFill(spark, sf)
+          .collect().map(_.toString).sorted.toSeq
+        assert(batch.nonEmpty && streamed == batch)
+      } finally q.stop()
     }
-    val schema = spark.read.parquet(s"$dir/c1.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet/*.parquet")
-    val q = StreamingOps.runToMemory(
-      StreamingOps.locfUpdates(stream).toDF(), "stream_locf", OutputMode.Append)
-    try {
-      // per-event emission: every input row appears exactly once with its
-      // fill — compare the full densified relation, not a summary
-      val streamed = spark.table("stream_locf")
-        .select("user_id", "event_id", "ts_us", "event_type", "last_purchase_value")
-        .collect().map(_.toString).sorted.toSeq
-      val batch = Events.forwardFill(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(batch.nonEmpty && streamed == batch)
-    } finally q.stop()
-  }
-
-  test("streaming time-weighted average across time-ordered micro-batches equals batch ev19") {
-    import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("graft-twa").toString
-    val ev = Tables(spark, sf, "events")
-      .select("user_id", "ts", "event_id", "value")
-    // EWMA/LOCF harness: global time quartiles arrive as ordered batches
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(Window.orderBy(unix_micros(col("ts")), col("event_id"))))
-    (1 to 4).foreach { i =>
-      chunked.filter(col("chunk") === i).drop("chunk")
-        .coalesce(1).write.parquet(s"$dir/c$i.parquet")
-    }
-    val schema = spark.read.parquet(s"$dir/c1.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet/*.parquet")
-    val q = StreamingOps.runToMemory(
-      StreamingOps.twaUpdates(stream).toDF(), "stream_twa", OutputMode.Append)
-    try {
-      // final emission per user (max n_events) = the whole-corpus integral
-      val streamed = spark.table("stream_twa")
-        .groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("span_us"), col("twa"))).as("s"))
-        .select(col("user_id"), col("s.n_events").as("n_events"),
-          col("s.span_us").as("span_us"), col("s.twa").as("twa"))
-        .collect().map(_.toString).sorted.toSeq
-      val batch = Registry.queries("ev19_time_weighted_avg")(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(batch.nonEmpty && streamed == batch)
-    } finally q.stop()
-  }
-
-  test("streaming top-k leaderboard equals batch sj2 under arbitrary (non-time) batch order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-topk").toString
-    val ev = Tables(spark, sf, "events")
-      .select("event_type", "event_id", "value")
-    // DELIBERATELY not time-sliced: event_id residue classes — top-k is an
-    // order-insensitive fold, so any split must converge to the batch result
-    (0 to 3).foreach { i =>
-      ev.filter(col("event_id") % 4 === i)
-        .coalesce(1).write.parquet(s"$dir/c$i.parquet")
-    }
-    val schema = spark.read.parquet(s"$dir/c0.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet/*.parquet")
-    val q = StreamingOps.runToMemory(
-      StreamingOps.topKUpdates(stream).toDF(), "stream_topk", OutputMode.Append)
-    try {
-      // final snapshot per key = the emission with that key's max n_seen
-      val all = spark.table("stream_topk")
-        .select("event_type", "n_seen", "rk", "event_id", "value")
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-      val lastSeen = all.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-      val streamed = all.filter(r => r._2 == lastSeen(r._1))
-        .map(r => s"[${r._1},${r._3},${r._4},${r._5}]").sorted.toSeq
-      val batch = Registry.queries("sj2_salted_topk")(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(batch.nonEmpty && streamed == batch)
-    } finally q.stop()
   }
 
   test("streaming at-ingest LSH near-dup: id-sliced batches converge to dd4's exact candidate set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh").toString
-    val docs = Tables(spark, sf, "documents").select("doc_id", "text")
-    // DELIBERATELY interleaved id-residue slices, not ordered chunks:
-    // bucket membership is a set union and the cap kill is a predicate of
-    // final size, so the fold must converge from ANY slicing
-    (0 until 3).foreach { i =>
-      docs.filter(col("doc_id") % 3 === i)
-        .coalesce(1).write.parquet(s"$dir/c$i.parquet")
+    Scratch.withTree("graft-lsh") { dir =>
+      val docs = Tables(spark, sf, "documents").select("doc_id", "text")
+      // DELIBERATELY interleaved id-residue slices, not ordered chunks:
+      // bucket membership is a set union and the cap kill is a predicate of
+      // final size, so the fold must converge from ANY slicing
+      (0 until 3).foreach { i =>
+        docs.filter(col("doc_id") % 3 === i)
+          .coalesce(1).write.parquet(s"$dir/c$i.parquet")
+      }
+      val schema = spark.read.parquet(s"$dir/c0.parquet").schema
+      def stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet/*.parquet")
+
+      // banded-bucket half: final snapshot per bucket = max nSeen emission
+      val q1 = StreamingOps.runToMemory(
+        StreamingOps.lshBucketUpdates(stream).toDF(), "stream_lsh_buckets", OutputMode.Append)
+      val bucketPairs =
+        try {
+          val all = spark.table("stream_lsh_buckets")
+            .collect().map(r => ((r.getInt(0), r.getString(1)), r.getLong(2),
+              r.getBoolean(3), r.getSeq[Long](4)))
+          all.groupBy(_._1).values.map(_.maxBy(_._2)).filterNot(_._3)
+            .flatMap { case (_, _, _, ms) =>
+              for (i <- ms.indices; j <- i + 1 until ms.length) yield (ms(i), ms(j))
+            }.toSeq
+        } finally q1.stop()
+
+      // full-signature star half: state is O(1) per group (count, canon) and
+      // the output is an append log of per-arrival (doc → canon) assignments;
+      // membership = distinct emitted docIds per group, canon = min — the
+      // batch (min member, other) pair set reconstructed from the log alone
+      val q2 = StreamingOps.runToMemory(
+        StreamingOps.sigGroupUpdates(stream).toDF(), "stream_lsh_sigs", OutputMode.Append)
+      val starPairs =
+        try {
+          val all = spark.table("stream_lsh_sigs")
+            .collect().map(r => (r.getString(0), r.getLong(2)))
+          all.groupBy(_._1).values.map(_.map(_._2).distinct.sorted)
+            .filter(_.length > 1)
+            .flatMap(ms => ms.tail.map(m => (ms.head, m))).toSeq
+        } finally q2.stop()
+
+      val streamed = (bucketPairs ++ starPairs).distinct.sorted
+      val batch = operators.Dedup.lshCandidates(docs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.distinct.sorted
+      assert(batch.nonEmpty && streamed == batch)
     }
-    val schema = spark.read.parquet(s"$dir/c0.parquet").schema
-    def stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet/*.parquet")
-
-    // banded-bucket half: final snapshot per bucket = max nSeen emission
-    val q1 = StreamingOps.runToMemory(
-      StreamingOps.lshBucketUpdates(stream).toDF(), "stream_lsh_buckets", OutputMode.Append)
-    val bucketPairs =
-      try {
-        val all = spark.table("stream_lsh_buckets")
-          .collect().map(r => ((r.getInt(0), r.getString(1)), r.getLong(2),
-            r.getBoolean(3), r.getSeq[Long](4)))
-        all.groupBy(_._1).values.map(_.maxBy(_._2)).filterNot(_._3)
-          .flatMap { case (_, _, _, ms) =>
-            for (i <- ms.indices; j <- i + 1 until ms.length) yield (ms(i), ms(j))
-          }.toSeq
-      } finally q1.stop()
-
-    // full-signature star half: state is O(1) per group (count, canon) and
-    // the output is an append log of per-arrival (doc → canon) assignments;
-    // membership = distinct emitted docIds per group, canon = min — the
-    // batch (min member, other) pair set reconstructed from the log alone
-    val q2 = StreamingOps.runToMemory(
-      StreamingOps.sigGroupUpdates(stream).toDF(), "stream_lsh_sigs", OutputMode.Append)
-    val starPairs =
-      try {
-        val all = spark.table("stream_lsh_sigs")
-          .collect().map(r => (r.getString(0), r.getLong(2)))
-        all.groupBy(_._1).values.map(_.map(_._2).distinct.sorted)
-          .filter(_.length > 1)
-          .flatMap(ms => ms.tail.map(m => (ms.head, m))).toSeq
-      } finally q2.stop()
-
-    val streamed = (bucketPairs ++ starPairs).distinct.sorted
-    val batch = operators.Dedup.lshCandidates(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.distinct.sorted
-    assert(batch.nonEmpty && streamed == batch)
   }
 
   test("st6 registered row: at-ingest log reconstruction + shared verification equals batch dd4 exactly") {
     // the registered end-to-end shape (stage → two streaming queries →
     // distributed log reconstruction → shared exact verification) must
-    // reproduce dd4's verified pair relation bit-for-bit — the 18th
-    // stream≡batch proof, and the one that carries st6's oracle row
+    // reproduce dd4's verified pair relation bit-for-bit — the
+    // stream≡batch proof that carries st6's oracle row
     val streamed = Registry.queries("st6_stream_lsh_neardup")(spark, sf)
       .collect().map(_.toString).sorted.toSeq
     val batch = Registry.queries("dd4_minhash_lsh")(spark, sf)
@@ -688,78 +561,30 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incremental ingest dedup: persistent fp store across micro-batches equals batch dedup; replay is a no-op") {
     import org.apache.spark.sql.expressions.Window
-    val base = java.nio.file.Files.createTempDirectory("graft-ingest")
-    val (inDir, fpDir, outDir) = (s"$base/in", s"$base/fp", s"$base/out")
-    val docs = Tables(spark, sf, "documents").select("doc_id", "text")
-    // three id-ordered chunks: the first occurrence of every fingerprint
-    // carries the lowest doc_id, so the incremental keep-list must equal
-    // the batch keep-list exactly
-    val chunked = docs.withColumn("chunk", ntile(3).over(Window.orderBy("doc_id")))
-    (1 to 3).foreach { i =>
-      chunked.filter(col("chunk") === i).drop("chunk")
-        .coalesce(1).write.parquet(s"$inDir/c$i.parquet")
+    Scratch.withTree("graft-ingest") { base =>
+      val (inDir, fpDir, outDir) = (s"$base/in", s"$base/fp", s"$base/out")
+      val docs = Tables(spark, sf, "documents").select("doc_id", "text")
+      // three id-ordered chunks: the first occurrence of every fingerprint
+      // carries the lowest doc_id, so the incremental keep-list must equal
+      // the batch keep-list exactly
+      val chunked = docs.withColumn("chunk", ntile(3).over(Window.orderBy("doc_id")))
+      (1 to 3).foreach { i =>
+        chunked.filter(col("chunk") === i).drop("chunk")
+          .coalesce(1).write.parquet(s"$inDir/c$i.parquet")
+      }
+      val schema = spark.read.parquet(s"$inDir/c1.parquet").schema
+      def stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet/*.parquet")
+      StreamingOps.incrementalDedupIngest(stream, fpDir, outDir).stop()
+      def keeps = spark.read.parquet(outDir)
+        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      val batchKeeps = operators.Dedup.fingerprint(spark, sf)
+        .select("keep_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(batchKeeps.nonEmpty && keeps == batchKeeps)
+      // replay the whole stream against the surviving store: every batch id
+      // is already committed, so survivors must not change
+      StreamingOps.incrementalDedupIngest(stream, fpDir, outDir).stop()
+      assert(keeps == batchKeeps)
     }
-    val schema = spark.read.parquet(s"$inDir/c1.parquet").schema
-    def stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet/*.parquet")
-    StreamingOps.incrementalDedupIngest(stream, fpDir, outDir).stop()
-    def keeps = spark.read.parquet(outDir)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val batchKeeps = operators.Dedup.fingerprint(spark, sf)
-      .select("keep_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(batchKeeps.nonEmpty && keeps == batchKeeps)
-    // replay the whole stream against the surviving store: every batch id
-    // is already committed, so survivors must not change
-    StreamingOps.incrementalDedupIngest(stream, fpDir, outDir).stop()
-    assert(keeps == batchKeeps)
-  }
-
-  test("streaming HLL register maxes across micro-batches equal batch q24 exactly") {
-    // The portable HLL is the canonical STREAMING sketch: the register
-    // derivation is a narrow per-row projection (no state), and the only
-    // aggregation is a register-wise max — associative + commutative, so
-    // a complete-mode streaming agg over arbitrary micro-batch slices must
-    // land on the identical register table a 1000-executor batch merge
-    // would. The estimator then runs on the final registers; outputs must
-    // be BIT-identical to batch q24 (integer register sums ⇒ no float
-    // order sensitivity to hide behind).
-    val base = java.nio.file.Files.createTempDirectory("graft-hll").toString
-    val inDir = s"$base/in"
-    Tables(spark, sf, "lineitem")
-      .select("l_returnflag", "l_partkey", "l_orderkey")
-      .repartition(4).write.parquet(inDir) // four files => four micro-batches
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = StreamingOps.runToMemory(
-      graft.operators.Relational.hllRegisterRows(stream)
-        .groupBy("l_returnflag", "cid", "bucket")
-        .agg(max("rho").as("mx")),
-      "stream_hll_regs", OutputMode.Complete)
-    try {
-      val streamed = graft.operators.Relational
-        .hllEstimateFromRegisters(spark.table("stream_hll_regs"))
-        .collect().map(_.toString).sorted.toSeq
-      val batch = Registry.queries("q24_approx_count_distinct")(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(batch.nonEmpty && streamed == batch)
-    } finally q.stop()
-  }
-
-  test("stateful per-user totals equal batch groupBy") {
-    val q = StreamingOps.runToMemory(
-      StreamingOps.statefulUserTotals(StreamingOps.eventStream(spark, sf)).toDF(),
-      "stream_user_totals", OutputMode.Append)
-    try {
-      // one batch => latest (only) update per user is the final total
-      val streamed = spark.table("stream_user_totals")
-        .groupBy("user_id")
-        .agg(max("n_events").as("n_events"))
-        .collect().map(_.toString).sorted.toSeq
-      val batch = Tables(spark, sf, "events")
-        .groupBy("user_id").agg(count(lit(1)).as("n_events"))
-        .collect().map(_.toString).sorted.toSeq
-      assert(streamed == batch)
-    } finally q.stop()
   }
 }
