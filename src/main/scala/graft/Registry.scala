@@ -48,27 +48,29 @@ object Registry {
     * `div`, both truncating on non-negative operands, so the two engines
     * agree bit-for-bit (GraphSpec pins the closed forms). */
   private def gr1OracleSql: String = {
+    import graft.operators.Dedup.{JaccardThreshold, SampleDocs}
+    import graft.operators.Graph.{DampingPct, FpScale, Iterations}
     val edgeCtes =
-      "WITH m AS (SELECT greatest(1, count(*) // 500) AS mod FROM documents), " +
+      s"WITH m AS (SELECT greatest(1, count(*) // $SampleDocs) AS mod FROM documents), " +
         "d AS (SELECT doc_id, text FROM documents, m WHERE doc_id % m.mod = 0), " +
         "toks AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM d), " +
         "sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id), " +
         "inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c FROM toks a JOIN toks b ON a.w = b.w AND a.doc_id < b.doc_id GROUP BY 1, 2), " +
-        "e AS (SELECT id_a AS a, id_b AS b FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id WHERE c / (sa.n + sb.n - c) >= 0.85)"
+        s"e AS (SELECT id_a AS a, id_b AS b FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id WHERE c / (sa.n + sb.n - c) >= $JaccardThreshold)"
     val rankCtes =
       "sym AS (SELECT DISTINCT a, b FROM (SELECT a, b FROM e UNION ALL SELECT b, a FROM e) WHERE a <> b), " +
         "deg AS (SELECT a AS node, count(*) AS deg FROM sym GROUP BY a), " +
         "nn AS (SELECT count(*) AS n FROM deg), " +
-        "tele AS (SELECT (CAST(15 AS HUGEINT) * 10000000000000000) // n AS t FROM nn), " +
-        "r0 AS (SELECT node, deg, 1000000000000000000 // (SELECT n FROM nn) AS s FROM deg)"
-    val iterations = (1 to 10).map { i =>
+        s"tele AS (SELECT (CAST(${100 - DampingPct} AS HUGEINT) * ${FpScale / 100}) // n AS t FROM nn), " +
+        s"r0 AS (SELECT node, deg, $FpScale // (SELECT n FROM nn) AS s FROM deg)"
+    val iterations = (1 to Iterations).map { i =>
       s"r$i AS (SELECT d.node, d.deg, (SELECT t FROM tele) + " +
-        "(CAST(85 AS HUGEINT) * COALESCE(i.inflow, 0)) // 100 AS s " +
+        s"(CAST($DampingPct AS HUGEINT) * COALESCE(i.inflow, 0)) // 100 AS s " +
         "FROM deg d LEFT JOIN (SELECT s.b AS node, sum(r.s // r.deg) AS inflow " +
         s"FROM sym s JOIN r${i - 1} r ON r.node = s.a GROUP BY s.b) i ON d.node = i.node)"
     }.mkString(", ")
     s"$edgeCtes, $rankCtes, $iterations " +
-      "SELECT node, CAST(s AS BIGINT) AS rank_fp FROM r10 ORDER BY node"
+      s"SELECT node, CAST(s AS BIGINT) AS rank_fp FROM r$Iterations ORDER BY node"
   }
 
   /** q24's oracle: the portable HLL replayed stage for stage — same md5
@@ -172,7 +174,7 @@ object Registry {
 
   private def dd4OracleSql: String =
     s"WITH $lshOracleCtes SELECT id_a, id_b, round(jacc, 4) AS jaccard " +
-      "FROM vp WHERE jacc >= 0.85 ORDER BY id_a, id_b"
+      s"FROM vp WHERE jacc >= ${Dedup.JaccardThreshold} ORDER BY id_a, id_b"
 
   /** dd8's oracle: the dd4 verified pairs closed by min-label propagation
     * UNROLLED as chained CTEs (gr1's trick) — [[Dd8PropagationRounds]]
@@ -202,7 +204,7 @@ object Registry {
     }.mkString(", ")
     val R = Dd8PropagationRounds
     s"WITH $lshOracleCtes, " +
-      "p AS (SELECT id_a, id_b FROM vp WHERE jacc >= 0.85), " +
+      s"p AS (SELECT id_a, id_b FROM vp WHERE jacc >= ${Dedup.JaccardThreshold}), " +
       // e MUST be MATERIALIZED: every propagation round references it, and
       // an inlined e re-derives the ENTIRE LSH pipeline once per round —
       // the 100x probe spilled >76 GB that way before dying
@@ -266,8 +268,7 @@ object Registry {
     * simulation at sf0.001/sf0.01 before registration. */
   private def dd7OracleSql: String = {
     import graft.functions.WinnowKernel.{Base, P}
-    val k = 5
-    val w = 4
+    import graft.operators.Dedup.{WinnowK => k, WinnowW => w}
     val terms = (0 until k)
       .map(j => s"CAST(lead(code, $j) OVER cw AS HUGEINT) * ${graft.functions.WinnowKernel.powmod(Base, k - 1 - j)}")
       .mkString(" + ")
@@ -285,7 +286,7 @@ object Registry {
   }
 
   /** bp1/bp2's shared oracle CTEs: BPE merge learning UNROLLED as
-    * [[graft.operators.Bpe]]'s default 12 merge rounds of chained CTEs —
+    * [[graft.operators.Bpe.NumMerges]] merge rounds of chained CTEs —
     * the gr1 trick applied to Sennrich's loop. Each round recounts
     * adjacent symbol pairs over the CURRENT word encoding (overlapping
     * positions counted, freq-weighted exact BIGINT sums — equal to the
@@ -314,7 +315,6 @@ object Registry {
     * AND the final select, and DuckDB's inliner would otherwise expand the
     * chain exponentially. Validated against a bit-exact Python simulation
     * at sf0.001 and sf0.01 before registration. */
-  private val BpeOracleMerges = 12 // = Bpe.learnMerges/encodeCorpus default
   private def bpeOracleCtes: String = {
     val head =
       "words AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS freq " +
@@ -322,7 +322,7 @@ object Registry {
         "WHERE len(w) > 0 GROUP BY w), " +
         "enc0 AS MATERIALIZED (SELECT freq, " +
         "array_to_string(string_split(w, ''), ' ') || ' </w>' AS sym FROM words)"
-    val rounds = (1 to BpeOracleMerges).map { i =>
+    val rounds = (1 to Bpe.NumMerges).map { i =>
       val p = i - 1
       s"pr$i AS MATERIALIZED (SELECT a[j] AS l, a[j+1] AS r, sum(freq) AS cnt " +
         s"FROM (SELECT freq, string_split(sym, ' ') AS a FROM enc$p), " +
@@ -336,7 +336,7 @@ object Registry {
 
   /** One doubled-space merge application: rewrite the incoming `sym` by
     * round `i`'s winning pair (see [[bpeOracleCtes]]). If the corpus
-    * exhausts mergeable pairs before round [[BpeOracleMerges]], b$i is
+    * exhausts mergeable pairs before round [[graft.operators.Bpe.NumMerges]], b$i is
     * empty and the scalar subqueries are NULL — the coalesce turns the
     * round into an identity rewrite (searching for chr(1), which never
     * occurs in a space-joined symbol stream) instead of NULLing every
@@ -347,7 +347,7 @@ object Registry {
       s"coalesce((SELECT ' ' || m || ' ' FROM b$i), chr(1)))), '  ', ' ')"
 
   private def bp1OracleSql: String = {
-    val sel = (1 to BpeOracleMerges).map { i =>
+    val sel = (1 to Bpe.NumMerges).map { i =>
       s"""SELECT CAST($i AS BIGINT) AS rank, l AS "left", r AS "right", m AS merged, cnt FROM b$i"""
     }.mkString(" UNION ALL ")
     s"WITH $bpeOracleCtes SELECT * FROM ($sel) ORDER BY rank"
@@ -367,12 +367,12 @@ object Registry {
         "coalesce(array_to_string(list_transform(" +
         "list_filter(string_split(text, ' '), w -> len(w) > 0), " +
         "w -> array_to_string(string_split(w, ''), ' ') || ' </w>'), ' '), '') END AS sym FROM documents)"
-    val docRounds = (1 to BpeOracleMerges).map { i =>
+    val docRounds = (1 to Bpe.NumMerges).map { i =>
       s"docenc$i AS MATERIALIZED (SELECT doc_id, ${mergeRound(i)} AS sym FROM docenc${i - 1})"
     }.mkString(", ")
     s"WITH $bpeOracleCtes, $docHead, $docRounds " +
       s"SELECT doc_id, CAST(CASE WHEN sym = '' THEN 0 ELSE len(string_split(sym, ' ')) END AS BIGINT) AS n_subwords, " +
-      s"md5(sym) AS encoded_fp FROM docenc$BpeOracleMerges ORDER BY doc_id"
+      s"md5(sym) AS encoded_fp FROM docenc${Bpe.NumMerges} ORDER BY doc_id"
   }
 
   /** The oracle half of the zero-norm exclusion contract
@@ -399,7 +399,7 @@ object Registry {
     * multi-probe → distinct candidates → ss1-proven round-6
     * list_cosine_similarity rescore → per-query top-5. */
   private def ss2OracleSql: String = {
-    import graft.operators.Similarity.{Dim, LshBits}
+    import graft.operators.Similarity.{Dim, LshBits, TopK}
     def proj(p: Int): String = (0 until Dim).map { j =>
       s"CASE WHEN strpos('89abcdef', substr(md5('$p:$j'), 1, 1)) > 0 " +
         s"THEN CAST(embedding[${j + 1}] AS DOUBLE) ELSE -CAST(embedding[${j + 1}] AS DOUBLE) END"
@@ -415,16 +415,16 @@ object Registry {
       "s AS (SELECT cand.q_id, cand.c_id, round(list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]), CAST(ce.embedding AS DOUBLE[])), 6) AS cos " +
       "FROM cand JOIN embeddings qe ON qe.vec_id = cand.q_id JOIN embeddings ce ON ce.vec_id = cand.c_id), " +
       "r AS (SELECT q_id, c_id, cos, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rk FROM s) " +
-      "SELECT q_id, c_id, cos, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= 5 ORDER BY q_id, rk"
+      s"SELECT q_id, c_id, cos, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= $TopK ORDER BY q_id, rk"
   }
 
-  /** ss4's oracle: the FULL 3-iteration Lloyd k-means + IVF probe pipeline
+  /** ss4's oracle: the FULL Lloyd k-means (`IvfIters` passes) + IVF probe pipeline
     * unrolled as chained CTEs — possible because every arithmetic step in
     * `Similarity.ivfKMeansTopK` and its trainer `Similarity.lloyd` (shared
     * with ss6; change the trainer and both oracles together) is
     * engine-portable by construction:
     *
-    *  - seeds: the k lowest vec_ids, embeddings cast float→double (exact);
+    *  - seeds: the IvfCells lowest vec_ids, embeddings cast float→double (exact);
     *  - assignment: argmin over `|c|² − 2·x·c` where |c|² is a left-
     *    associated double square sum and x·c is FloatVectorDot's
     *    accumulation (float→double casts exact, left-associated double
@@ -435,14 +435,11 @@ object Registry {
     *    replays the driver's IEEE op sequence verbatim
     *    (s/cnt/1e9 → ·1e6 → +0.5 → floor → /1e6); empty cells keep the
     *    previous centroid (LEFT JOIN + CASE ≡ the trainer's codebook clone);
-    *  - probe: each query's 2 nearest cells (row_number ≡ array_sort on
+    *  - probe: each query's IvfProbes nearest cells (row_number ≡ array_sort on
     *    (dist, cell) structs), then the ss1-proven round-6
     *    list_cosine_similarity rescore and per-query top-5. */
   private def ss4OracleSql: String = {
-    import graft.operators.Similarity.Dim
-    val k = 8
-    val iters = 3
-    val nprobe = 2
+    import graft.operators.Similarity.{Dim, IvfCells, IvfIters, IvfProbes, TopK}
     // x·c with c float-cast per entry — FloatVectorDot's exact op sequence
     def dot(v: String, c: String): String = (0 until Dim).map { j =>
       s"CAST($v[${j + 1}] AS DOUBLE)*CAST(CAST($c[${j + 1}] AS FLOAT) AS DOUBLE)"
@@ -468,33 +465,33 @@ object Registry {
         s"/CAST(count(*) AS DOUBLE)/1.0E9)*1.0E6 + 0.5)/1.0E6 AS m${j + 1}"
     }.mkString(", ")
     val meanList = (1 to Dim).map(j => s"mn.m$j").mkString("[", ", ", "]")
-    val iterCtes = (1 to iters).map { i =>
+    val iterCtes = (1 to IvfIters).map { i =>
       assign(s"cent${i - 1}", s"a$i") + ", " +
         s"mean$i AS (SELECT a.cell, $meanCols FROM a$i a JOIN embeddings e USING (vec_id) GROUP BY a.cell), " +
         s"cent$i AS (SELECT p.cell, CASE WHEN mn.cell IS NULL THEN p.m ELSE $meanList END AS m " +
         s"FROM cent${i - 1} p LEFT JOIN mean$i mn USING (cell))"
     }.mkString(", ")
-    s"WITH sd AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT $k), " +
+    s"WITH sd AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT $IvfCells), " +
       "seeds AS (SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cell FROM sd), " +
       "cent0 AS (SELECT s.cell, CAST(e.embedding AS DOUBLE[]) AS m FROM seeds s JOIN embeddings e USING (vec_id)), " +
       s"$iterCtes, " +
-      assign(s"cent$iters", "corp") + ", " +
+      assign(s"cent$IvfIters", "corp") + ", " +
       s"qpr AS (SELECT vec_id AS q_id, cell FROM (SELECT vec_id, cell, " +
       "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn " +
-      s"FROM (${distRel(s"cent$iters")} WHERE e.vec_id < 10) t0) t1 WHERE rn <= $nprobe), " +
+      s"FROM (${distRel(s"cent$IvfIters")} WHERE e.vec_id < 10) t0) t1 WHERE rn <= $IvfProbes), " +
       "sc AS (SELECT q.q_id, cp.cell, cp.vec_id AS c_id, " +
       "round(list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]), CAST(ce.embedding AS DOUBLE[])), 6) AS cos " +
       "FROM qpr q JOIN corp cp USING (cell) " +
       "JOIN embeddings qe ON qe.vec_id = q.q_id JOIN embeddings ce ON ce.vec_id = cp.vec_id " +
       "WHERE cp.vec_id <> q.q_id), " +
       "r AS (SELECT q_id, cell, c_id, cos, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rk FROM sc) " +
-      "SELECT q_id, CAST(cell AS BIGINT) AS cell, c_id, cos, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= 5 ORDER BY q_id, rk"
+      s"SELECT q_id, CAST(cell AS BIGINT) AS cell, c_id, cos, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= $TopK ORDER BY q_id, rk"
   }
 
   /** ss6's oracle: the FULL product-quantization pipeline — per-subspace
-    * codebook training (2 Lloyd iterations over the deterministic hash
+    * codebook training (PqIters Lloyd iterations over the deterministic id
     * sample), corpus encode, ADC shortlist, exact rescore — unrolled as
-    * chained CTEs. Same trainer (`Similarity.lloyd`, here with 8
+    * chained CTEs. Same trainer (`Similarity.lloyd`, here with PqSubspaces
     * subspaces) and portability contract as ss4OracleSql, plus the ADC
     * specifics:
     *
@@ -512,12 +509,9 @@ object Registry {
     * training vectors (true of every driver fixture); the tiny-corpus
     * seed-clamp path stays spec-only (SimilaritySpec). */
   private def ss6OracleSql: String = {
-    import graft.operators.Similarity.Dim
-    val m = 8
+    import graft.operators.Similarity.{Dim, PqCells => ksub, PqIters => iters,
+      PqShortlist => shortlist, PqSubspaces => m, PqTrainSample, TopK}
     val sub = Dim / m
-    val ksub = 16
-    val iters = 2
-    val shortlist = 40
     def dot8(vbase: String, c: String): String = (0 until sub).map { i =>
       s"CAST($vbase[c.j*$sub+${i + 1}] AS DOUBLE)*CAST(CAST($c[${i + 1}] AS FLOAT) AS DOUBLE)"
     }.mkString(" + ")
@@ -548,7 +542,7 @@ object Registry {
       .mkString(" + ")
     val adc = (0 until m).map(j => s"q.lall[$j*$ksub + cd.cl[${j + 1}] + 1]").mkString(" + ")
     val recon = (0 until m).map(j => s"na.n[$j*$ksub + cd.cl[${j + 1}] + 1]").mkString(" + ")
-    s"WITH trn AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % (SELECT greatest(1, count(*)//4096) FROM embeddings) = 0), " +
+    s"WITH trn AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % (SELECT greatest(1, count(*)//$PqTrainSample) FROM embeddings) = 0), " +
       s"sd AS (SELECT vec_id FROM trn ORDER BY vec_id LIMIT $ksub), " +
       "seeds AS (SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cell FROM sd), " +
       s"cent0 AS (SELECT t.j, s.cell, $seedList AS m FROM seeds s JOIN embeddings e USING (vec_id) CROSS JOIN range($m) t(j)), " +
@@ -565,7 +559,7 @@ object Registry {
       "sc AS (SELECT sl.q_id, sl.c_id, round(list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]), CAST(ce.embedding AS DOUBLE[])), 6) AS cos " +
       "FROM sl JOIN embeddings qe ON qe.vec_id = sl.q_id JOIN embeddings ce ON ce.vec_id = sl.c_id), " +
       "r AS (SELECT q_id, c_id, cos, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rk FROM sc) " +
-      "SELECT q_id, c_id, cos, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= 5 ORDER BY q_id, rk"
+      s"SELECT q_id, c_id, cos, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= $TopK ORDER BY q_id, rk"
   }
 
   val all: Seq[RegisteredQuery] = Seq(
@@ -705,9 +699,9 @@ object Registry {
     // ---- deterministic sampling ----
     q("sm1_stratified_sample", Sampling.stratifiedSample,
       "SELECT doc_id, lang, n_chars FROM documents WHERE CASE WHEN lang = 'en' THEN TRUE WHEN lang = 'de' THEN md5(CAST(doc_id AS VARCHAR)) < '80' WHEN lang = 'es' THEN md5(CAST(doc_id AS VARCHAR)) < '40' WHEN lang = 'fr' THEN md5(CAST(doc_id AS VARCHAR)) < '20' ELSE md5(CAST(doc_id AS VARCHAR)) < '1a' END ORDER BY doc_id"),
-    q("sm3_temperature_resample", (s, d) => Sampling.temperatureResample(s, d),
+    q("sm3_temperature_resample", Sampling.temperatureResample,
       "WITH c AS (SELECT lang, count(*) AS nl FROM documents GROUP BY lang), t AS (SELECT CAST(sum(nl) AS BIGINT) AS n, sum(CAST(sqrt(CAST(nl AS DOUBLE)) AS DECIMAL(20,12))) AS z FROM c), tg AS (SELECT lang, nl, CAST(round(CAST(n AS DOUBLE) * (CAST(CAST(sqrt(CAST(nl AS DOUBLE)) AS DECIMAL(20,12)) AS DOUBLE) / CAST(z AS DOUBLE)), 0) AS BIGINT) AS ml FROM c, t), r AS (SELECT doc_id, lang, row_number() OVER (PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk FROM documents), k AS (SELECT r.doc_id, r.lang, (tg.ml // tg.nl) + CASE WHEN r.rk <= tg.ml % tg.nl THEN 1 ELSE 0 END AS n_copies FROM r JOIN tg ON r.lang = tg.lang) SELECT doc_id, lang, CAST(n_copies AS BIGINT) AS n_copies FROM k WHERE n_copies > 0 ORDER BY doc_id"),
-    q("sm2_fixed_size_sample", (s, d) => Sampling.fixedSizePerStratum(s, d),
+    q("sm2_fixed_size_sample", Sampling.fixedSizePerStratum,
       "WITH h AS (SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents), r AS (SELECT lang, doc_id, h, row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rk FROM h) SELECT lang, CAST(rk AS BIGINT) AS rk, doc_id FROM r WHERE rk <= 25 ORDER BY lang, rk"),
 
     // ---- data layout ----
@@ -715,7 +709,7 @@ object Registry {
       "WITH o AS (SELECT o_orderkey, CAST(o_custkey % 65536 AS BIGINT) AS x, least(CAST(floor(o_totalprice/16.0) AS BIGINT), 65535) AS y, CAST(o_custkey % 65536 AS BIGINT) AS vx, least(CAST(floor(o_totalprice/16.0) AS BIGINT), 65535) AS vy FROM orders), s2 AS (SELECT o_orderkey, x, y, (vx | (vx << 8)) & 16711935 AS vx, (vy | (vy << 8)) & 16711935 AS vy FROM o), s3 AS (SELECT o_orderkey, x, y, (vx | (vx << 4)) & 252645135 AS vx, (vy | (vy << 4)) & 252645135 AS vy FROM s2), s4 AS (SELECT o_orderkey, x, y, (vx | (vx << 2)) & 858993459 AS vx, (vy | (vy << 2)) & 858993459 AS vy FROM s3), s5 AS (SELECT o_orderkey, x, y, (vx | (vx << 1)) & 1431655765 AS vx, (vy | (vy << 1)) & 1431655765 AS vy FROM s4), zb AS (SELECT x, y, CAST((vx | (vy << 1)) >> 22 AS BIGINT) AS bucket FROM s5) SELECT bucket, count(*) AS n_rows, min(x) AS x_min, max(x) AS x_max, min(y) AS y_min, max(y) AS y_max FROM zb GROUP BY bucket ORDER BY bucket"),
 
     // ---- bloom-prefiltered decontamination (same exact result as pp6) ----
-    q("bf1_bloom_decontaminate", (s, d) => Pipeline.bloomDecontaminate(s, d),
+    q("bf1_bloom_decontaminate", Pipeline.bloomDecontaminate,
       "WITH d AS (SELECT doc_id, string_split(text,' ') AS a, CASE WHEN md5(CAST(doc_id AS VARCHAR)) < '1a' THEN 'holdout' ELSE 'train' END AS split FROM documents), s AS (SELECT doc_id, split, md5(array_to_string(a[i : i+4], ' ')) AS sh FROM d, UNNEST(generate_series(1, len(a)-4)) AS t(i) WHERE len(a) >= 5), tr AS (SELECT DISTINCT doc_id AS train_id, sh FROM s WHERE split='train'), ho AS (SELECT DISTINCT sh FROM s WHERE split='holdout') SELECT train_id, count(*) AS n_shared FROM tr JOIN ho ON tr.sh = ho.sh GROUP BY train_id ORDER BY train_id"),
 
     q("ev6_range_join", AsOf.eventPairsWithin60s,
@@ -814,7 +808,7 @@ object Registry {
         "SELECT w_start, event_type, n, total_value FROM b, wm " +
         "WHERE epoch_us(w_start) + 3600000000 <= wm_us " +
         "ORDER BY w_start, event_type NULLS FIRST"),
-    q("dd3_jaccard_pairs", (s, d) => Dedup.jaccardPairs(s, d),
+    q("dd3_jaccard_pairs", Dedup.jaccardPairs,
       "WITH m AS (SELECT greatest(1, count(*) // 500) AS mod FROM documents), d AS (SELECT doc_id, text FROM documents, m WHERE doc_id % m.mod = 0), toks AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM d), sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id), inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c FROM toks a JOIN toks b ON a.w = b.w AND a.doc_id < b.doc_id GROUP BY 1, 2) SELECT id_a, id_b, round(c / (sa.n + sb.n - c), 4) AS jaccard FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id WHERE c / (sa.n + sb.n - c) >= 0.85 ORDER BY id_a, id_b"),
     // dd4/dd8 carry FULL oracles since the r06 switch to the
     // engine-portable md5 hash family (see lshOracleCtes): DuckDB
@@ -836,7 +830,7 @@ object Registry {
     // dd7 joined too: the winnow kernel's Karp–Rabin family (code-point
     // Horner mod 2^61-1) is exact-integer on both engines — see
     // dd7OracleSql for the ord/HUGEINT re-derivation
-    q("dd7_winnow_fingerprints", (s, d) => Dedup.winnowFingerprints(s, d), dd7OracleSql),
+    q("dd7_winnow_fingerprints", Dedup.winnowFingerprints, dd7OracleSql),
     q("dd8_dup_clusters", Dedup.dupClusters, dd8OracleSql),
     // dd12: the dd8 connected-components engine on the ORACLE-EXACT dd3
     // edge set — labels/sizes/keep-list hash-checked via a recursive-CTE
@@ -860,7 +854,7 @@ object Registry {
     // corpus ever carries more distinct multi-byte code points than free
     // single-byte slots (~90), a poison row (-1,-1,-1) makes the capacity
     // overflow a loud rows-mismatch instead of a silent overcount.
-    q("dd9_edit_distance", (s, d) => Dedup.editDistancePairs(s, d),
+    q("dd9_edit_distance", Dedup.editDistancePairs,
       "WITH m AS (SELECT greatest(1, count(*) // 500) AS mod FROM documents), " +
         "d AS (SELECT doc_id, substr(text, 1, 40) AS p FROM documents, m WHERE doc_id % m.mod = 0), " +
         "ch AS (SELECT DISTINCT unnest(string_split(p, '')) AS c FROM d), " +
@@ -874,7 +868,7 @@ object Registry {
         "FROM dt a JOIN dt b ON a.doc_id < b.doc_id WHERE levenshtein(a.p, b.p) <= 10 " +
         "UNION ALL SELECT -1, -1, -1 FROM ft WHERE ft.overflow " +
         "ORDER BY id_a, id_b"),
-    q("dd10_tfidf_cosine", (s, d) => Dedup.tfidfCosinePairs(s, d),
+    q("dd10_tfidf_cosine", Dedup.tfidfCosinePairs,
       "WITH all_d AS (SELECT doc_id, text FROM documents), m AS (SELECT greatest(1, count(*) // 500) AS mod FROM all_d), d AS (SELECT doc_id, text FROM all_d, m WHERE doc_id % m.mod = 0), tf AS (SELECT doc_id, w, count(*) AS tf FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM d) t WHERE len(w) > 0 GROUP BY doc_id, w), n AS (SELECT count(DISTINCT doc_id) AS n FROM tf), dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY w), wt AS (SELECT tf.doc_id, tf.w, tf.tf * ln(CAST(n.n AS DOUBLE) / dfq.df) AS wt FROM tf JOIN dfq USING (w), n), nrm AS (SELECT doc_id, sqrt(CAST(CAST(sum(CAST(wt*wt AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE)) AS nrm FROM wt GROUP BY doc_id), dot AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(CAST(sum(CAST(a.wt*b.wt AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS dot FROM wt a JOIN wt b ON a.w = b.w AND a.doc_id < b.doc_id GROUP BY 1, 2), c AS (SELECT id_a, id_b, dot / (na.nrm * nb.nrm) AS cos FROM dot JOIN nrm na ON id_a = na.doc_id JOIN nrm nb ON id_b = nb.doc_id) SELECT id_a, id_b, round(cos, 4) AS cos FROM c WHERE cos >= 0.8 ORDER BY id_a, id_b"),
     q("dd6_embedding_neardup", Dedup.embeddingNearDup,
       guardVec("WITH m AS (SELECT greatest(1, count(*) // 2000) AS mod FROM embeddings), e AS (SELECT vec_id, embedding FROM embeddings, m WHERE vec_id % m.mod = 0) SELECT a.vec_id AS id_a, b.vec_id AS id_b, round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS cos FROM e a JOIN e b ON a.vec_id < b.vec_id WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.4 ORDER BY id_a, id_b")),
@@ -892,15 +886,15 @@ object Registry {
     // the scale-relevant Bloom pre-pass, and SamplingLayoutSpec's
     // "bf1 bloom-prefiltered decontamination = exact decontamination"
     // equivalence carries pp6's semantics; the operator stays in Pipeline.
-    q("pp5_outlier_filter", (s, d) => Pipeline.outlierFilter(s, d, fence = 0.25),
+    q("pp5_outlier_filter", Pipeline.outlierFilter,
       "WITH d AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS DOUBLE) AS n_tokens FROM documents), q AS (SELECT quantile_cont(n_tokens, 0.25) AS q1, quantile_cont(n_tokens, 0.75) AS q3 FROM d) SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens FROM d, q WHERE n_tokens >= q1 - 0.25*(q3-q1) AND n_tokens <= q3 + 0.25*(q3-q1) ORDER BY doc_id"),
-    q("pp3_chunk_documents", (s, d) => Pipeline.chunkDocuments(s, d),
+    q("pp3_chunk_documents", Pipeline.chunkDocuments,
       // DuckDB list slice a[i:j] is 1-based inclusive ≡ Spark slice(a,i,32)
       "WITH t AS (SELECT doc_id, string_split(text,' ') AS a, CAST(len(string_split(text,' ')) AS BIGINT) AS n FROM documents), c AS (SELECT doc_id, a, unnest(generate_series(0, CAST(greatest(ceil((n - 32)/24.0), 0) AS BIGINT))) AS ci FROM t) SELECT doc_id, ci AS chunk_id, CAST(len(a[ci*24+1 : ci*24+32]) AS BIGINT) AS n_chunk_tokens, md5(array_to_string(a[ci*24+1 : ci*24+32], ' ')) AS chunk_fp FROM c ORDER BY doc_id, chunk_id"),
-    q("pp4_pack_sequences", (s, d) => Pipeline.packSequences(s, d),
+    q("pp4_pack_sequences", Pipeline.packSequences,
       "SELECT doc_id, doc_id % 8 AS shard, CAST(floor(coalesce(sum(CAST(len(string_split(text,' ')) AS BIGINT)) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 256) AS BIGINT) AS bin, CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens FROM documents ORDER BY doc_id"),
 
-    q("pp10_curriculum_shards", (s, d) => Pipeline.curriculumShards(s, d),
+    q("pp10_curriculum_shards", Pipeline.curriculumShards,
       "WITH q AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens, round((1.0 - len(list_filter(string_split(text,' '), w -> w IN ('the','a','of','and','to','in'))) / CAST(len(string_split(text,' ')) AS DOUBLE)) * least(CAST(len(string_split(text,' ')) AS DOUBLE), 100.0) / 100.0, 4) AS quality FROM documents), v AS (SELECT quality, CAST(sum(n_tokens) AS BIGINT) AS vt FROM q GROUP BY quality), c AS (SELECT quality, CAST(coalesce(sum(vt) OVER (ORDER BY quality DESC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb FROM v), tt AS (SELECT CAST(sum(vt) AS BIGINT) AS t FROM v), sh AS (SELECT quality, CAST(cb * 8 // t AS BIGINT) AS shard FROM c, tt) SELECT q.doc_id, q.quality, q.n_tokens, sh.shard FROM q JOIN sh ON q.quality = sh.quality ORDER BY doc_id"),
     // pp12: greedy token-budget selection — doc-granular two-pass prefix
     // (the budget boundary cuts inside a quality tie-group); budget derived
@@ -915,13 +909,13 @@ object Registry {
     q("pp11_boilerplate", Pipeline.boilerplateFraction,
       // pp3's chunk CTE + one fp-keyed cross-doc distinct count
       "WITH t AS (SELECT doc_id, string_split(text,' ') AS a, CAST(len(string_split(text,' ')) AS BIGINT) AS n FROM documents), c AS (SELECT doc_id, a, unnest(generate_series(0, CAST(greatest(ceil((n - 32)/24.0), 0) AS BIGINT))) AS ci FROM t), ch AS (SELECT doc_id, md5(array_to_string(a[ci*24+1 : ci*24+32], ' ')) AS chunk_fp FROM c), x AS (SELECT chunk_fp FROM ch GROUP BY chunk_fp HAVING count(DISTINCT doc_id) > 1) SELECT ch.doc_id, count(*) AS n_chunks, CAST(sum(CASE WHEN x.chunk_fp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks, round(sum(CASE WHEN x.chunk_fp IS NOT NULL THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 4) AS boilerplate_frac FROM ch LEFT JOIN x ON ch.chunk_fp = x.chunk_fp GROUP BY ch.doc_id ORDER BY ch.doc_id"),
-    q("pp8_repetition_filter", (s, d) => Pipeline.repetitionFilter(s, d),
+    q("pp8_repetition_filter", Pipeline.repetitionFilter,
       "WITH t AS (SELECT doc_id, string_split(text,' ') AS a FROM documents WHERE len(string_split(text,' ')) >= 2), base AS (SELECT doc_id, CAST(len(a) AS BIGINT) AS n_tokens, 1.0 - len(list_distinct(a)) / CAST(len(a) AS DOUBLE) AS dup_word_frac FROM t), fg AS (SELECT doc_id, array_to_string(a[i:i+4],' ') AS g FROM t, UNNEST(generate_series(1, len(a)-4)) AS u(i) WHERE len(a) >= 5),fd AS (SELECT doc_id, 1.0 - count(DISTINCT g) / CAST(count(*) AS DOUBLE) AS dup5 FROM fg GROUP BY doc_id), bi AS (SELECT doc_id, a[i] || ' ' || a[i+1] AS bg FROM t, UNNEST(generate_series(1, len(a)-1)) AS u(i)), bc AS (SELECT doc_id, bg, count(*) AS c FROM bi GROUP BY doc_id, bg), tb AS (SELECT doc_id, max(c) / CAST(sum(c) AS DOUBLE) AS top_bigram_frac FROM bc GROUP BY doc_id) SELECT b.doc_id, b.n_tokens, round(b.dup_word_frac, 4) AS dup_word_frac, round(coalesce(fd.dup5, 0.0), 4) AS dup_5gram_frac, round(tb.top_bigram_frac, 4) AS top_bigram_frac FROM base b JOIN tb ON b.doc_id = tb.doc_id LEFT JOIN fd ON b.doc_id = fd.doc_id WHERE tb.top_bigram_frac <= 0.08 ORDER BY b.doc_id"),
     q("pp9_redact_pii", Pipeline.redactEvents,
       "WITH p AS (SELECT event_id, event_type || ' uid=' || CAST(user_id AS VARCHAR) || ' ' || props AS payload FROM events) SELECT event_id, regexp_replace(payload, '[0-9]+', '<NUM>', 'g') AS redacted, CAST(len(regexp_extract_all(payload, '[0-9]+')) AS BIGINT) AS n_redactions FROM p ORDER BY event_id"),
 
     // ---- text analysis ----
-    q("tx8_tfidf_topterms", (s, d) => TextAnalysis.tfidfTopTerms(s, d),
+    q("tx8_tfidf_topterms", TextAnalysis.tfidfTopTerms,
       // tfidf rounded to 1e-6 BEFORE ranking on (tfidf, w) on both sides so
       // rank order cannot depend on sub-ulp ln() library differences
       "WITH tf AS (SELECT doc_id, w, count(*) AS tf FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents) t GROUP BY doc_id, w), dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY w), n AS (SELECT count(*) AS n FROM documents), sc AS (SELECT tf.doc_id, tf.w, tf.tf, dfq.df, round(tf.tf * ln(CAST(n.n AS DOUBLE) / dfq.df), 6) AS tfidf FROM tf JOIN dfq ON tf.w = dfq.w, n), r AS (SELECT sc.*, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, w) AS rk FROM sc) SELECT doc_id, CAST(rk AS BIGINT) AS rk, w, tf, df, tfidf FROM r WHERE rk <= 3 ORDER BY doc_id, rk"),
@@ -935,16 +929,16 @@ object Registry {
       "SELECT doc_id, CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_re_tokens, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens FROM documents ORDER BY doc_id"),
     q("tx7_charngram_langid", TextAnalysis.charNgramLanguageId,
       "WITH h AS (SELECT doc_id, lang, CAST(((length(text)-length(replace(text,'the','')))/3 + (length(text)-length(replace(text,'and','')))/3 + (length(text)-length(replace(text,' of','')))/3) AS BIGINT) AS en_tri, CAST(((length(text)-length(replace(text,'der','')))/3 + (length(text)-length(replace(text,'sch','')))/3 + (length(text)-length(replace(text,'ein','')))/3) AS BIGINT) AS de_tri, CAST(((length(text)-length(replace(text,'los','')))/3 + (length(text)-length(replace(text,'ión','')))/3 + (length(text)-length(replace(text,'que','')))/3) AS BIGINT) AS es_tri, CAST(((length(text)-length(replace(text,'les','')))/3 + (length(text)-length(replace(text,'eau','')))/3 + (length(text)-length(replace(text,'oux','')))/3) AS BIGINT) AS fr_tri FROM documents) SELECT doc_id, lang, CASE WHEN en_tri = greatest(en_tri,de_tri,es_tri,fr_tri) AND en_tri > 0 THEN 'en' WHEN de_tri = greatest(en_tri,de_tri,es_tri,fr_tri) AND de_tri > 0 THEN 'de' WHEN es_tri = greatest(en_tri,de_tri,es_tri,fr_tri) AND es_tri > 0 THEN 'es' WHEN fr_tri = greatest(en_tri,de_tri,es_tri,fr_tri) AND fr_tri > 0 THEN 'fr' ELSE 'unknown' END AS pred_lang, en_tri FROM h ORDER BY doc_id"),
-    q("tx6_vocabulary", (s, d) => TextAnalysis.vocabulary(s, d),
+    q("tx6_vocabulary", TextAnalysis.vocabulary,
       "WITH c AS (SELECT unnest(string_split(text,' ')) AS w FROM documents), g AS (SELECT w, count(*) AS cnt FROM c GROUP BY w HAVING count(*) >= 5) SELECT CAST(row_number() OVER (ORDER BY cnt DESC, w) AS BIGINT) AS token_id, w, cnt FROM g ORDER BY token_id"),
     q("tx9_token_surprisal", TextAnalysis.tokenSurprisal,
       // per-(doc,term) surprisal contributions cast to DECIMAL(28,10) before
       // the per-doc sum: exact, summation-order-independent accumulation
       "WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents), tf AS (SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY doc_id, w), vocab AS (SELECT w, sum(tf) AS cnt FROM tf GROUP BY w), tot AS (SELECT sum(cnt) AS t FROM vocab), terms AS (SELECT doc_id, tf, CAST(tf * ln(CAST(t AS DOUBLE) / cnt) AS DECIMAL(28,10)) AS term FROM tf JOIN vocab USING(w), tot) SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens, round(CAST(sum(term) AS DOUBLE) / sum(tf), 4) AS avg_surprisal FROM terms GROUP BY doc_id ORDER BY doc_id"),
-    q("tx10_bigram_crossent", (s, d) => TextAnalysis.bigramCrossEntropy(s, d),
+    q("tx10_bigram_crossent", TextAnalysis.bigramCrossEntropy,
       // same decimal-before-sum contract as tx9; α=0.5 add-k smoothing
       "WITH t AS (SELECT doc_id, string_split(text,' ') AS a FROM documents WHERE len(string_split(text,' ')) >= 2), bi AS (SELECT doc_id, a[i] AS u, a[i+1] AS v FROM t, UNNEST(generate_series(1, len(a)-1)) AS s(i)), tf AS (SELECT doc_id, u, v, count(*) AS tf FROM bi GROUP BY 1, 2, 3), big AS (SELECT u, v, CAST(sum(tf) AS BIGINT) AS cuv FROM tf GROUP BY 1, 2), ctx AS (SELECT u, CAST(sum(cuv) AS BIGINT) AS cu FROM big GROUP BY 1), vs AS (SELECT count(DISTINCT w) AS vsz FROM (SELECT unnest(string_split(text,' ')) AS w FROM documents) q), terms AS (SELECT tf.doc_id, tf.tf, CAST(tf.tf * -ln((big.cuv + 0.5) / (ctx.cu + 0.5 * vs.vsz)) AS DECIMAL(28,10)) AS nll FROM tf JOIN big USING (u, v) JOIN ctx USING (u), vs) SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams, round(CAST(sum(nll) AS DOUBLE) / sum(tf), 4) AS avg_nll FROM terms GROUP BY doc_id ORDER BY doc_id"),
-    q("ev16_ewma", (s, d) => Events.ewma(s, d),
+    q("ev16_ewma", Events.ewma,
       // α=0.25 is an exact binary fraction; list_reduce's left fold seeded
       // from the first element ≡ Spark aggregate(slice(...,2,...), first, f).
       // Raw fold compared UNROUNDED — bit-exact cross-engine; round(,6)
@@ -983,19 +977,19 @@ object Registry {
       "WITH toks AS (SELECT string_split(text,' ') AS a FROM documents WHERE len(string_split(text,' ')) >= 2), bi AS (SELECT a[i] || ' ' || a[i+1] AS bigram FROM toks, UNNEST(generate_series(1, len(a)-1)) AS t(i)) SELECT bigram, count(*) AS n FROM bi GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20"),
     // CMS prefilter has no false negatives, so the sketch-accelerated form
     // returns exactly the direct group-by-and-filter's rows — exact oracle
-    q("hh1_heavy_hitters", (s, d) => TextAnalysis.heavyHitterBigrams(s, d),
+    q("hh1_heavy_hitters", TextAnalysis.heavyHitterBigrams,
       "WITH toks AS (SELECT string_split(text,' ') AS a FROM documents WHERE len(string_split(text,' ')) >= 2), bi AS (SELECT a[i] || ' ' || a[i+1] AS bigram FROM toks, UNNEST(generate_series(1, len(a)-1)) AS t(i)), tot AS (SELECT count(*) AS total FROM bi) SELECT bigram, count(*) AS n FROM bi, tot GROUP BY bigram, total HAVING count(*) >= greatest(1, total // 800) ORDER BY bigram"),
     // the iterative learner, oracle-checked by UNROLLING its 12 rounds as
     // chained DuckDB CTEs (gr1's trick) — see bpeOracleCtes for the
     // no-regex doubled-space replication of greedy non-overlapping merge
-    q("bp1_bpe_merges", (s, d) => Bpe.learnMerges(s, d), bp1OracleSql),
-    q("bp2_bpe_encode", (s, d) => Bpe.encodeCorpus(s, d), bp2OracleSql),
+    q("bp1_bpe_merges", Bpe.learnMerges, bp1OracleSql),
+    q("bp2_bpe_encode", Bpe.encodeCorpus, bp2OracleSql),
     // bp3: the DISTRIBUTED learner forced (driverVocabLimit=0) against
     // bp1's oracle — every recorded corpus fits the driver path, so without
     // this row the delta-maintained path (the one that runs at 100 TB
     // vocabularies) would carry spec-only evidence
     q("bp3_bpe_merges_distributed",
-      (s, d) => Bpe.learnMergesDistributedQuery(s, d), bp1OracleSql),
+      Bpe.learnMergesDistributedQuery, bp1OracleSql),
 
     // ---- event streams (batch form; streaming twin in graft.streaming) ----
     q("ev1_tumbling_window", Events.tumbling,
@@ -1061,9 +1055,9 @@ object Registry {
         "FROM vec a JOIN vec b ON a.doc_id < b.doc_id), " +
         "r AS (SELECT id_a, id_b, cos, row_number() OVER (ORDER BY cos DESC, id_a, id_b) AS rk FROM s) " +
         "SELECT id_a, id_b, cos FROM r WHERE rk <= 50 ORDER BY cos DESC, id_a, id_b"),
-    q("mm5_resize_audit", (s, d) => Multimodal.resizeAuditQuery(s, d),
+    q("mm5_resize_audit", Multimodal.resizeAuditQuery,
       "SELECT doc_id AS media_id, CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS orig_bytes, CAST(least(octet_length(encode(coalesce(text, ''))), 256) AS BIGINT) AS resized_bytes FROM documents ORDER BY media_id"),
-    q("mm2_frame_sample", (s, d) => Multimodal.frameSampleQuery(s, d),
+    q("mm2_frame_sample", Multimodal.frameSampleQuery,
       "WITH m AS (SELECT doc_id AS media_id, octet_length(encode(coalesce(text, ''))) AS len FROM documents WHERE octet_length(encode(coalesce(text, ''))) >= 64) SELECT media_id, unnest(generate_series(0, CAST(least(floor((len - 64) / 32), 7) AS BIGINT))) AS frame_no FROM m ORDER BY media_id, frame_no"),
 
     // ---- similarity search ----
@@ -1079,7 +1073,7 @@ object Registry {
     // so the iterative k-means training the r06 comment called
     // un-replayable is now unrolled as chained CTEs, bp1/bp2-style.
     // Recall vs brute force stays a SimilaritySpec property.
-    q("ss4_ivf_kmeans", (s, d) => Similarity.ivfKMeansTopK(s, d), guardVec(ss4OracleSql)),
+    q("ss4_ivf_kmeans", Similarity.ivfKMeansTopK, guardVec(ss4OracleSql)),
     // ss6 carries a FULL oracle since r07 too: the per-subspace codebook
     // training is the same portable k-means, and the ADC scoring chain
     // replays as ordered 128-entry LUT lookups (see ss6OracleSql) — so
@@ -1088,7 +1082,7 @@ object Registry {
     // r07 by the same move: engine-portable md5-derived sketches replace
     // the engine-internal ones, so the registry's no-oracle set is EMPTY —
     // every registered query carries a full DuckDB oracle.
-    q("ss6_pq_topk", (s, d) => Similarity.pqTopK(s, d), guardVec(ss6OracleSql)),
+    q("ss6_pq_topk", Similarity.pqTopK, guardVec(ss6OracleSql)),
     // ss7: the exact-rescore stage the sketch variants (ss2/ss4/ss6) end
     // in, run over a FIXED deterministic candidate rule so the stage gets
     // its own hash-checked row — sketch recall stays a ScalaTest property,

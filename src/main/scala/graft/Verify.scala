@@ -62,13 +62,33 @@ object Verify {
     println(s"[verify] jvm_defaults locale=${java.util.Locale.getDefault}" +
       s" tz=${java.util.TimeZone.getDefault.getID}" +
       s" session_tz=${spark.conf.get("spark.sql.session.timeZone")}")
-    // Non-vacuity evidence for the chaos tier: count injected failures and
-    // the successful second attempts, printed at the end — a chaos run
-    // that recorded zero retried tasks proved nothing.
-    val (chaosFailures, chaosRetriedOk) =
-      (new java.util.concurrent.atomic.AtomicLong, new java.util.concurrent.atomic.AtomicLong)
-    if (chaos) spark.sparkContext.addSparkListener(
+    // Non-vacuity evidence for the fault tiers, counted by ONE task
+    // listener and printed at the end, one line per tier that is on:
+    //  - chaos: injected failures and the successful second attempts — a
+    //    chaos run that recorded zero retried tasks proved nothing;
+    //  - spill (SPARK_GRAFT_SPILL_REPORT=1): executed spill totals — a
+    //    "correct under pressure" tier where nothing spilled proved only
+    //    that the pressure knob was too loose;
+    //  - speculation (SPARK_GRAFT_SPEC_REPORT=1, r13): whether the
+    //    speculation scheduler was genuinely armed (the conf is
+    //    context-start, so it is read back from the LIVE SparkConf — a
+    //    typo'd passthrough prints false and flags the tier vacuous) and the
+    //    speculative ATTEMPT counts, with the known structural caveat: on
+    //    one machine TaskSetManager never places a speculative clone (the
+    //    dequeueSpeculativeTask !hasAttemptOnHost guard — RUNBOOK records
+    //    the executed straggler probe), so armed-with-zero-placed is the
+    //    expected honest reading, and the tier's value is that the
+    //    speculation machinery (speculatable-task scanning inside
+    //    TaskSetManager on every interval tick) ran against all 134 queries
+    //    without perturbing results.
+    val spillReport = sys.env.contains("SPARK_GRAFT_SPILL_REPORT")
+    val specReport = sys.env.contains("SPARK_GRAFT_SPEC_REPORT")
+    val Seq(chaosFailures, chaosRetriedOk, spillMem, spillDisk, specStarted, specWon) =
+      Seq.fill(6)(new java.util.concurrent.atomic.AtomicLong)
+    if (chaos || spillReport || specReport) spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
+        override def onTaskStart(e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+          if (e.taskInfo != null && e.taskInfo.speculative) specStarted.incrementAndGet()
         override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
           e.reason match {
             case f: org.apache.spark.ExceptionFailure
@@ -77,44 +97,13 @@ object Verify {
               if (e.taskInfo != null && e.taskInfo.successful && e.taskInfo.attemptNumber > 0)
                 chaosRetriedOk.incrementAndGet()
           }
-        }
-      })
-    // Spill tier (SPARK_GRAFT_SPILL_REPORT=1): non-vacuity evidence that a
-    // memory-starved run actually spilled — a "correct under pressure" tier
-    // where nothing spilled proved only that the pressure knob was too
-    // loose. Totals from executed task metrics, printed at the end.
-    val spillReport = sys.env.contains("SPARK_GRAFT_SPILL_REPORT")
-    val (spillMem, spillDisk) =
-      (new java.util.concurrent.atomic.AtomicLong, new java.util.concurrent.atomic.AtomicLong)
-    if (spillReport) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
           if (e.taskMetrics != null) {
             spillMem.addAndGet(e.taskMetrics.memoryBytesSpilled)
             spillDisk.addAndGet(e.taskMetrics.diskBytesSpilled)
           }
-      })
-    // Speculation tier (SPARK_GRAFT_SPEC_REPORT=1, r13): evidence that the
-    // speculation scheduler was genuinely armed for the run. The conf is
-    // context-start, so it is read back from the LIVE SparkConf (a typo'd
-    // passthrough would print false and flag the tier vacuous). Speculative
-    // ATTEMPT counts are also recorded, with the known structural caveat:
-    // on one machine TaskSetManager never places a speculative clone (the
-    // dequeueSpeculativeTask !hasAttemptOnHost guard — RUNBOOK records the
-    // executed straggler probe), so armed-with-zero-placed is the expected
-    // honest reading, and the tier's value is that the speculation
-    // machinery (speculatable-task scanning inside TaskSetManager on every
-    // interval tick) ran against all 134 queries without perturbing results.
-    val specReport = sys.env.contains("SPARK_GRAFT_SPEC_REPORT")
-    val (specStarted, specWon) =
-      (new java.util.concurrent.atomic.AtomicLong, new java.util.concurrent.atomic.AtomicLong)
-    if (specReport) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskStart(e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
-          if (e.taskInfo != null && e.taskInfo.speculative) specStarted.incrementAndGet()
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
           if (e.taskInfo != null && e.taskInfo.speculative && e.taskInfo.successful)
             specWon.incrementAndGet()
+        }
       })
     new java.io.File(outDir).mkdirs()
     // local-iteration aid: SPARK_GRAFT_ONLY=q48,tx6 restricts the dump to

@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Dedup, Sampling}
+
 /** Multimodal-column plumbing: image/audio/video payloads travel as opaque
   * `binary` columns with a typed metadata struct, and per-item processing
   * (decode, feature-extract, frame-sample) runs as partition-local batch
@@ -93,6 +95,9 @@ object Multimodal {
   def resize(media: DataFrame, targetBytes: Int): DataFrame =
     media.withColumn("payload", expr(s"substring(payload, 1, $targetBytes)"))
 
+  /** mm5's resize target, in bytes. */
+  val ResizeTargetBytes = 256
+
   /** Registry query (mm5): the resize stage's byte accounting — original
     * vs resized payload sizes over the media fixture. The binary
     * truncation itself is engine code, but its LENGTH contract
@@ -100,9 +105,9 @@ object Multimodal {
     * DuckDB oracle like mm2's frame-count formula. A narrow map — payload
     * bytes never shuffle; the output is the audit a real resize job
     * publishes (bytes in/bytes out per item). */
-  def resizeAuditQuery(spark: SparkSession, dir: String, targetBytes: Int = 256): DataFrame =
+  def resizeAuditQuery(spark: SparkSession, dir: String): DataFrame =
     resize(fixtureFromDocuments(spark, dir).toDF()
-      .withColumn("orig_bytes", octet_length(col("payload")).cast("long")), targetBytes)
+      .withColumn("orig_bytes", octet_length(col("payload")).cast("long")), ResizeTargetBytes)
       .select(col("media_id"), col("orig_bytes"),
         octet_length(col("payload")).cast("long").as("resized_bytes"))
       .orderBy("media_id")
@@ -153,13 +158,16 @@ object Multimodal {
       .select("fp", "keep_id", "n_copies", "total_bytes")
       .orderBy("keep_id")
 
+  /** Pairs returned by [[mediaTopPairs]] (mm4). */
+  val TopPairs = 50
+
   /** Top-k most-similar media pairs by feature cosine — the media twin of
     * embedding near-dup (dd6), over any (media_id, feature) relation.
     * Ranked top-k rather than thresholded: stub byte-histogram features
     * make similar text cluster tightly, and a fixed k keeps the output
     * bounded and deterministic (rounded cosine, id tie-breaks) regardless
     * of how tight. TakeOrdered top-k — no global sort materializes. */
-  def mediaTopPairs(features: DataFrame, k: Int = 50): DataFrame = {
+  def mediaTopPairs(features: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions._
     val a = features.select(col("media_id").as("id_a"), col("feature").as("fa"),
       normFast(col("feature")).as("na"))
@@ -169,7 +177,7 @@ object Multimodal {
       .select(col("id_a"), col("id_b"),
         round(dotFast(col("fa"), col("fb")) / (col("na") * col("nb")), 6).as("cos"))
       .orderBy(col("cos").desc, col("id_a"), col("id_b"))
-      .limit(k)
+      .limit(TopPairs)
   }
 
   /** Registry query (mm4): most-similar media pairs over the stub features
@@ -186,9 +194,8 @@ object Multimodal {
     * so the sampling rule is unchanged. */
   def mediaNearDupQuery(spark: SparkSession, dir: String): DataFrame = {
     val feats = extractFeatures(fixtureFromDocuments(spark, dir)).toDF()
-    val mod = math.max(1L, feats.count() / 500)
     mediaTopPairs(
-      feats.filter(col("media_id") % mod === 0 && col("n_bytes") > 0)
+      Sampling.idSample(feats, "media_id", Dedup.SampleDocs).filter(col("n_bytes") > 0)
         .select(col("media_id"), col("feature")))
   }
 

@@ -57,6 +57,9 @@ object Bpe {
     * never cross word boundaries and word-final units stay distinct. */
   val EndOfWord = "</w>"
 
+  /** Merges learned by bp1/bp2/bp3; the bp oracles unroll the same count. */
+  val NumMerges = 12
+
   /** Word tables at or under this row count are collected and learned
     * driver-side ([[learnMergesDriver]]); larger ones take the distributed
     * path. 1M distinct words ≈ tens of MB on the driver — far under any
@@ -76,13 +79,13 @@ object Bpe {
   private[graft] def mergePattern(l: String, r: String): String =
     "(?<=\\A| )" + Pattern.quote(l + " " + r) + "(?= |\\z)"
 
-  /** Registry query (bp1): learn `numMerges` merges over the `documents`
+  /** Registry query (bp1): learn [[NumMerges]] merges over the `documents`
     * word-frequency table. Output: one row per learned merge,
     * `(rank, left, right, merged, cnt)` in learning order. Full DuckDB
-    * oracle since r06 (12 unrolled merge-round CTEs — see
+    * oracle since r06 (NumMerges unrolled merge-round CTEs — see
     * Registry.bpeOracleCtes); BpeSpec holds the ground truth. */
-  def learnMerges(s: SparkSession, d: String, numMerges: Int = 12): DataFrame =
-    learnMergesFrom(wordFreqs(s, d), numMerges)
+  def learnMerges(s: SparkSession, d: String): DataFrame =
+    learnMergesFrom(wordFreqs(s, d), NumMerges)
 
   /** Registry query (bp3): bp1's learning with the driver path DISABLED
     * (`driverVocabLimit = 0`), forcing [[learnMergesDistributed]] — the
@@ -93,8 +96,8 @@ object Bpe {
     * point of registering it is that the distributed learner now carries
     * its own recorded CORRECTNESS row instead of spec-only evidence
     * (BpeSketchSpec) for the path that actually runs at scale. */
-  def learnMergesDistributedQuery(s: SparkSession, d: String, numMerges: Int = 12): DataFrame =
-    learnMergesFrom(wordFreqs(s, d), numMerges, driverVocabLimit = 0)
+  def learnMergesDistributedQuery(s: SparkSession, d: String): DataFrame =
+    learnMergesFrom(wordFreqs(s, d), NumMerges, driverVocabLimit = 0)
 
   /** The distinct-word frequency table both learners train on. */
   private def wordFreqs(s: SparkSession, d: String): DataFrame =
@@ -103,7 +106,7 @@ object Bpe {
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
 
-  /** Registry query (bp2): the encode path — learn `numMerges` merges,
+  /** Registry query (bp2): the encode path — learn [[NumMerges]] merges,
     * then apply them to every document and emit per-doc subword stats plus
     * a fingerprint of the encoded symbol stream. The encode is ONE narrow
     * projection (the merge table is a per-query constant riding in the
@@ -118,8 +121,8 @@ object Bpe {
     * a doc-stream replace chain, see Registry); BpeSketchSpec
     * proves kernel ≡ regex chain ≡ sequentially applying the reference
     * merges word by word. */
-  def encodeCorpus(s: SparkSession, d: String, numMerges: Int = 12): DataFrame =
-    encodeWith(Tables(s, d, "documents"), learnedMergePairs(s, d, numMerges))
+  def encodeCorpus(s: SparkSession, d: String): DataFrame =
+    encodeWith(Tables(s, d, "documents"), learnedMergePairs(s, d))
       .orderBy("doc_id")
 
   /** The kernel encode as a reusable transform over any `(doc_id, text)`
@@ -147,8 +150,8 @@ object Bpe {
     * replacement chained once per merge. Correct and shuffle-free but
     * O(merges) passes over every document — kept as the kernel's oracle
     * (BpeSketchSpec asserts bit-identical output). */
-  def encodeCorpusBuiltins(s: SparkSession, d: String, numMerges: Int = 12): DataFrame = {
-    val merges = learnedMergePairs(s, d, numMerges)
+  def encodeCorpusBuiltins(s: SparkSession, d: String): DataFrame = {
+    val merges = learnedMergePairs(s, d)
     val docs = Tables(s, d, "documents")
       // materialize the token array before the per-word lambda (O(len²) trap)
       .select(col("doc_id"),
@@ -171,10 +174,9 @@ object Bpe {
   }
 
   /** Learn and collect the merge table in rank order — the bounded driver
-    * action both encode forms share (numMerges rows of (left, right)). */
-  private def learnedMergePairs(
-      s: SparkSession, d: String, numMerges: Int): Seq[(String, String)] =
-    learnMerges(s, d, numMerges)
+    * action both encode forms share (NumMerges rows of (left, right)). */
+  private def learnedMergePairs(s: SparkSession, d: String): Seq[(String, String)] =
+    learnMerges(s, d)
       .orderBy("rank")
       .collect()
       .map(r => (r.getString(1), r.getString(2)))

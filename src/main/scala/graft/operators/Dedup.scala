@@ -27,6 +27,16 @@ object Dedup {
   private def tokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
 
+  /** [[Sampling.idSample]] targets: documents for dd3, dd9, dd10, dd12/dd13
+    * and mm4; vectors for dd6 (one codegen'd dot per pair buys more). */
+  val SampleDocs = 500L
+  val SampleVectors = 2000L
+
+  /** Near-duplicate cuts: word-set Jaccard (dd3, dd4 and what builds on
+    * them) and TF-IDF cosine (dd10). */
+  val JaccardThreshold = 0.85
+  val CosineThreshold = 0.8
+
   /** Exact dedup: group on the full text, keep the lowest doc_id. */
   def exact(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
@@ -46,26 +56,12 @@ object Dedup {
 
   /** Exact pairwise word-set Jaccard on a deterministic doc_id sample
     * (oracle for the LSH variant). Intersections come from a token-equi-join
-    * — cost Σ_w df(w)², quadratic in sampled docs, so the sample modulus
-    * adapts to corpus size (target ≈500 docs: m = max(1, n/500), the same
-    * arithmetic the oracle SQL computes). Jaccard is a ratio of integer
-    * counts ⇒ bit-identical across engines.
-    *
-    * `dfCap` (prefix-filtering): tokens whose document frequency exceeds
-    * the cap are dropped from the PAIR JOIN only — set sizes stay exact —
-    * which bounds the join input to Σ_{df≤K} df² ≤ K·(total tokens),
-    * LINEAR in the corpus instead of quadratic in the hottest token. The
-    * capped intersection is a lower bound of |A∩B| and j(c)=c/(na+nb−c)
-    * is increasing in c, so the reported jaccard is a lower bound and the
-    * ≥-threshold output a SUBSET of the exact result (stopword-only
-    * overlap is what gets forgone — exactly the pairs near-dup detection
-    * doesn't want). The default ∞ keeps the oracle plan untouched; at
-    * scale beyond the sample bound, set a cap (ScaleSpec pins the capped
-    * shape and the subset/lower-bound contract). */
-  def jaccardPairs(s: SparkSession, d: String, dfCap: Long = Long.MaxValue): DataFrame = {
-    val all = t(s, d, "documents")
-    val m = math.max(1L, all.count() / 500)
-    val docs = all.filter(col("doc_id") % m === 0)
+    * — cost Σ_w df(w)², quadratic in sampled docs, so the sample adapts to
+    * corpus size ([[Sampling.idSample]] with target [[SampleDocs]], the
+    * same arithmetic the oracle SQL computes). Jaccard is a ratio of
+    * integer counts ⇒ bit-identical across engines. */
+  def jaccardPairs(s: SparkSession, d: String): DataFrame = {
+    val docs = Sampling.idSample(t(s, d, "documents"), "doc_id", SampleDocs)
     // localCheckpoint, not .cache(): Verify/Bench run ~55 queries in one
     // session, and cached relations squat in storage memory until an
     // explicit unpersist (which a lazily-returned plan has no place to
@@ -79,21 +75,15 @@ object Dedup {
     // pinned for the same reason as verifiedJaccard's sizes: joined back
     // twice (na, nb) — unpinned, the size aggregation planned twice (§2.4)
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("n")).pinLazy()
-    // pair-join input: df-capped when requested; sizes above stay exact
-    val joinToks =
-      if (dfCap == Long.MaxValue) toks
-      else toks.join(
-        toks.groupBy("w").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= dfCap).select("w"), "w")
-    val inter = joinToks.as("a")
-      .join(joinToks.as("b"), col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
+    val inter = toks.as("a")
+      .join(toks.as("b"), col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("c"))
     val sa = sizes.select(col("doc_id").as("id_a"), col("n").as("na"))
     val sb = sizes.select(col("doc_id").as("id_b"), col("n").as("nb"))
     inter.join(sa, "id_a").join(sb, "id_b")
       .withColumn("jaccard", col("c") / (col("na") + col("nb") - col("c")))
-      .filter(col("jaccard") >= 0.85)
+      .filter(col("jaccard") >= JaccardThreshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
       .orderBy("id_a", "id_b")
   }
@@ -102,8 +92,9 @@ object Dedup {
     * [[embeddingNearDup]] (dense) and [[jaccardPairs]] (set-based): weigh
     * tokens by tf·ln(N/df), pair documents through an inverted-index token
     * equi-join (one shuffle keyed by token — never all-pairs), and keep
-    * cosine ≥ 0.8. Same adaptive deterministic sample as dd3: the join is
-    * Σ_w df(w)² and this exact form is the oracle for LSH-style scale-out.
+    * cosine ≥ [[CosineThreshold]]. Same adaptive deterministic sample as
+    * dd3: the join is Σ_w df(w)² and this exact form is the oracle for
+    * LSH-style scale-out.
     *
     * Cross-engine exactness (the tx9 + q41 rules combined): every product
     * is cast to DECIMAL(28,10) BEFORE summing, so dot products and squared
@@ -111,21 +102,9 @@ object Dedup {
     * the decimal sums to double via VARCHAR (their unscaled values pass
     * 2^53, where DuckDB's direct decimal→double cast double-rounds); the
     * remaining ops (sqrt, ×, ÷, ≥) are correctly-rounded IEEE on identical
-    * inputs.
-    *
-    * `dfCap` (prefix-filtering, same contract as [[jaccardPairs]]): tokens
-    * with df > cap are dropped from the PAIR JOIN only — norms stay exact
-    * over the full vectors — bounding the join input to K·(total tokens).
-    * Dropped terms have the corpus's LOWEST idf weights (idf = ln(N/df) is
-    * decreasing in df), so what the dot product forgoes is precisely the
-    * least-informative mass; the capped cosine is a lower bound (tf·idf
-    * weights are ≥ 0 for df ≤ N) and the ≥-threshold output a subset of
-    * the exact result. Default ∞ keeps the oracle plan untouched. */
-  def tfidfCosinePairs(s: SparkSession, d: String, threshold: Double = 0.8,
-      dfCap: Long = Long.MaxValue): DataFrame = {
-    val all = t(s, d, "documents")
-    val m = math.max(1L, all.count() / 500)
-    val docs = all.filter(col("doc_id") % m === 0)
+    * inputs. */
+  def tfidfCosinePairs(s: SparkSession, d: String): DataFrame = {
+    val docs = Sampling.idSample(t(s, d, "documents"), "doc_id", SampleDocs)
     val tf = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -143,19 +122,15 @@ object Dedup {
     val nrm = wt.groupBy("doc_id")
       .agg(sqrt(sum((col("wt") * col("wt")).cast("decimal(28,10)")).cast("double")).as("nrm"))
       .pinLazy()
-    // pair-join input: df-capped when requested; norms above stay exact
-    val joinWt =
-      if (dfCap == Long.MaxValue) wt
-      else wt.join(dfq.filter(col("df") <= dfCap).select("w"), "w")
-    val dot = joinWt.as("a")
-      .join(joinWt.as("b"), col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
+    val dot = wt.as("a")
+      .join(wt.as("b"), col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(sum((col("a.wt") * col("b.wt")).cast("decimal(28,10)")).cast("double").as("dot"))
     dot
       .join(nrm.select(col("doc_id").as("id_a"), col("nrm").as("na")), "id_a")
       .join(nrm.select(col("doc_id").as("id_b"), col("nrm").as("nb")), "id_b")
       .withColumn("cos", col("dot") / (col("na") * col("nb")))
-      .filter(col("cos") >= threshold)
+      .filter(col("cos") >= CosineThreshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
       .orderBy("id_a", "id_b")
   }
@@ -289,7 +264,7 @@ object Dedup {
     val candidates = lshCandidates(docs).pinLazy()
 
     verifiedJaccard(docs, candidates)
-      .filter(col("jaccard") >= 0.85)
+      .filter(col("jaccard") >= JaccardThreshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
       .orderBy("id_a", "id_b")
   }
@@ -415,9 +390,14 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
+  /** dd7's winnowing k-gram length and window (in k-gram hashes). */
+  val WinnowK = 5
+  val WinnowW = 4
+
   /** Winnowing fingerprints (Schleimer et al., SIGMOD'03): hash every
-    * character k-gram, then keep the minimum hash of each window of `w`
-    * consecutive k-gram hashes. Guarantees any match of length ≥ w+k-1
+    * character k-gram (k = [[WinnowK]]), then keep the minimum hash of each
+    * window of w = [[WinnowW]] consecutive k-gram hashes. Guarantees any
+    * match of length ≥ w+k-1
     * shares a fingerprint, with ~2/(w+1) density — the standard
     * document-fingerprinting trade. Output: (doc_id, fp) distinct
     * fingerprint set per doc. The hash family is the engine-portable
@@ -435,21 +415,22 @@ object Dedup {
     * corpus CHARACTER for its per-doc window sort — it is kept as the
     * kernel's cross-validation oracle (identical hash family ⇒ identical
     * output, asserted in DedupSpec). */
-  def winnowFingerprints(s: SparkSession, d: String, k: Int = 5, w: Int = 4): DataFrame = {
+  def winnowFingerprints(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.GraftShim
-    val docs = t(s, d, "documents").filter(length(col("text")) >= k + w - 1)
+    val docs = t(s, d, "documents").filter(length(col("text")) >= WinnowK + WinnowW - 1)
     docs.select(
         col("doc_id"),
         explode(GraftShim.column(graft.functions.WinnowFingerprints(
-          GraftShim.expression(col("text")), k, w))).as("fp"))
+          GraftShim.expression(col("text")), WinnowK, WinnowW))).as("fp"))
       .orderBy("doc_id", "fp")
   }
 
   /** The pure-built-ins winnowing formulation (posexplode → hash → sliding
     * window-min → distinct): correct and linear but shuffle-heavy; retained
     * as the oracle for the codegen kernel above. */
-  def winnowFingerprintsComposable(s: SparkSession, d: String, k: Int = 5, w: Int = 4): DataFrame = {
+  def winnowFingerprintsComposable(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val (k, w) = (WinnowK, WinnowW)
     val docs = t(s, d, "documents").filter(length(col("text")) >= k + w - 1)
     // posexplode the k-gram hash array immediately: the generator is a hard
     // plan boundary, so the O(len) transform evaluates ONCE per document.
@@ -497,12 +478,11 @@ object Dedup {
     * Algorithm: min-label propagation — every node's label converges to
     * the smallest doc_id reachable from it. Each round is one edge-keyed
     * join + min-aggregation (all distributed; the driver sees only the
-    * converged-yet? count), and rounds needed = graph diameter. Near-dup
-    * graphs are unions of near-cliques/stars (LSH buckets + full-signature
-    * stars), so diameter is small and 2-4 rounds converge; for
-    * general-diameter graphs the same loop takes the large-star/small-star
-    * step (Kiveris et al., "Connected Components in MapReduce") — noted,
-    * not needed here. Labels are localCheckpoint'ed EVERY round: iterative
+    * converged-yet? count), and [[connectedComponents]]' hash-to-min steps
+    * need O(log d) rounds for diameter d. Near-dup graphs are unions of
+    * near-cliques/stars (LSH buckets + full-signature stars), so diameter
+    * is small and a few rounds converge. Labels are localCheckpoint'ed
+    * EVERY round: iterative
     * self-referential lineage otherwise grows exponentially and re-derives
     * the whole history each action.
     *
@@ -579,9 +559,7 @@ object Dedup {
     * runtime), so the sampling rule and label coalesce live here, not in
     * two copies that could drift. */
   private def exactClusterLabels(s: SparkSession, d: String): DataFrame = {
-    val all = t(s, d, "documents")
-    val m = math.max(1L, all.count() / 500)
-    val docs = all.filter(col("doc_id") % m === 0).select("doc_id")
+    val docs = Sampling.idSample(t(s, d, "documents"), "doc_id", SampleDocs).select("doc_id")
     val pairs = jaccardPairs(s, d).select(col("id_a"), col("id_b")).pinLazy()
     docs
       .join(connectedComponents(pairs).select(col("node").as("doc_id"), col("label")),
@@ -610,10 +588,9 @@ object Dedup {
     *    jumping / path compression). Label-region stars merge in one
     *    step instead of crawling edge by edge, so convergence is
     *    O(log d) steps on any graph — the sf0.1 near-dup graph that took
-    *    14 plain hops converges in 6 steps (2 + 4), and the 60-node
-    *    chain that used to need the star fallback converges inside
-    *    propagation (guide §1.2: fix the algorithm before the
-    *    constants). Sound because every candidate value is a component
+    *    14 plain hops converges in 6 steps (2 + 4) (guide §1.2: fix the
+    *    algorithm before the constants). Sound because every candidate
+    *    value is a component
     *    member's id that is ≤ the receiving node's old label (the
     *    self-edge hop emits every node, so the pointer self-joins are
     *    total), so monotonicity and the fixpoint are unchanged.
@@ -627,17 +604,20 @@ object Dedup {
     * transitively (every step lazily pinned — an unpinned hash-to-min
     * step references its hop three times, so an unpinned chain is an
     * exponential-copy Catalyst tree).
-    * A graph still moving after `propagationRounds` hops is handed to
-    * large-star/small-star (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond") — with the jump this fallback is near-
-    * unreachable (propagation itself is now O(log d)), but it stays as the
-    * loud-convergence backstop and is exercised directly by DedupSpec via
-    * `propagationRounds = 0`.
+    *
+    * Termination: the loop runs until a batch changes nothing, with no
+    * round cap. Every label is a node id of its component and never
+    * increases (each candidate value is ≤ the receiving node's old label),
+    * so labels can only fall a finite number of times; and a batch whose
+    * final plain hop changes nothing has reached label(u) = min over
+    * N(u) ∪ {u} for every u, which holds only when each component carries
+    * its minimum id — the fixpoint. Hash-to-min gets there in O(log d)
+    * steps (DedupSpec converges a 300-deep chain).
     *
     * Input contract: callers pass DISTINCT pairs (every registry caller
     * emits groupBy/distinct output); duplicate pairs only inflate hop join
     * mass — min-aggregation keeps results identical. */
-  def connectedComponents(pairs: DataFrame, propagationRounds: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val edges = pairs.toDF("id_a", "id_b")
     // symmetric edges + self-edges pinned ONCE (|E|-mass); self-edge
     // duplicates (a node in k pairs contributes k self rows) are harmless
@@ -655,7 +635,7 @@ object Dedup {
     var changed = 1L
     var hops = 0 // propagation hops executed after the fused init hop
     var batch = 2
-    while (changed > 0 && hops < propagationRounds) {
+    while (changed > 0) {
       var cur = labels
       // superseded intra-batch pins, released once the count below has
       // materialized the batch's final labels
@@ -710,66 +690,17 @@ object Dedup {
       hops += batch
       batch = math.min(8, batch * 2)
     }
-    if (changed == 0) {
-      // round-count visibility for the stress gate (VERDICT r08 #5): the
-      // init absorbs hop 1, then each driver round advances a doubling
-      // batch of hash-to-min steps
-      println(s"[graft.cc] converged after $hops hash-to-min steps (+1 fused in init)")
-      labels
-    }
-    else {
-      // handing off: the star phase reads only the edge relation; the
-      // propagation labels are dead. Self-edges are filtered back out and
-      // the relation re-deduped (the star steps assume a clean symmetric
-      // edge set).
-      Ckpt.release(labels)
-      largeSmallStar(symPlus.filter(col("u") =!= col("v")).distinct())
-    }
+    // round-count visibility for the stress gate (VERDICT r08 #5): the init
+    // absorbs hop 1, then each driver round advances a doubling batch of
+    // hash-to-min steps
+    println(s"[graft.cc] converged after $hops hash-to-min steps (+1 fused in init)")
+    labels
   }
 
-  /** Two-phase connected components: alternate large-star (route every
-    * larger neighbor of u to min(N(u) ∪ {u})) and small-star (route the
-    * smaller neighbors, and u itself, there) until the edge set is a fixed
-    * point — per-component stars rooted at the component minimum. Each
-    * phase is one per-node window-min plus a projection, fully distributed;
-    * rounds are O(log n) for any graph shape. */
-  private def largeSmallStar(sym: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byU = Window.partitionBy("u")
-    var cur = sym // kept SYMMETRIC at the top of each round
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      // proven to converge; the cap is a loud infinite-loop guard only
-      require(rounds < 50, s"large-star/small-star still moving after $rounds rounds")
-      val ls = cur
-        .withColumn("m", least(min(col("v")).over(byU), col("u")))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // ls is directed larger→smaller: N(u) below is u's smaller neighbors
-      val withMin = ls.withColumn("m", least(min(col("v")).over(byU), col("u")))
-      val ss = withMin.select(col("v").as("u"), col("m").as("v"))
-        .unionByName(withMin.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .pinLazy() // materializes inside the convergence check
-      // fixed point = the directed edge set stopped changing
-      val prevDirected = cur.filter(col("u") > col("v"))
-      converged = ss.exceptAll(prevDirected).isEmpty && prevDirected.exceptAll(ss).isEmpty
-      cur = ss.unionByName(ss.select(col("v").as("u"), col("u").as("v")))
-        .pinLazy() // materializes on its first next-round use
-      rounds += 1
-    }
-    // at the fixed point every non-root node carries exactly one edge to its
-    // component root; min() is belt-and-braces against ties in flight
-    val stars = cur.filter(col("u") > col("v"))
-      .groupBy(col("u").as("node")).agg(min(col("v")).as("root"))
-    sym.select(col("u").as("node")).distinct()
-      .join(stars, Seq("node"), "left")
-      .select(col("node"), coalesce(col("root"), col("node")).as("label"))
-  }
+  /** dd9 compares each document's first `EditPrefix` characters and keeps
+    * pairs at most `EditMaxDist` edits apart. */
+  val EditPrefix = 40
+  val EditMaxDist = 10
 
   /** Fuzzy matching by edit distance on normalized prefixes — the
     * character-level complement to the token-level Jaccard family (catches
@@ -791,21 +722,18 @@ object Dedup {
     * byte-lev ≡ code-point-lev — verified on the chained hostile corpus
     * where the skew∘unicode composition put 15 multi-byte near-pairs
     * through the gate (see Registry's dd9 oracle comment). */
-  def editDistancePairs(
-      s: SparkSession, d: String, prefix: Int = 40, maxDist: Int = 10): DataFrame = {
-    val all = t(s, d, "documents")
-    val m = math.max(1L, all.count() / 500)
-    val docs = all.filter(col("doc_id") % m === 0)
-      .select(col("doc_id"), substring(col("text"), 1, prefix).as("p"))
+  def editDistancePairs(s: SparkSession, d: String): DataFrame = {
+    val docs = Sampling.idSample(t(s, d, "documents"), "doc_id", SampleDocs)
+      .select(col("doc_id"), substring(col("text"), 1, EditPrefix).as("p"))
     val a = docs.select(col("doc_id").as("id_a"), col("p").as("pa"))
     val b = docs.select(col("doc_id").as("id_b"), col("p").as("pb"))
     a.join(b, col("id_a") < col("id_b"))
-      // thresholded levenshtein runs the BANDED O(p·maxDist) DP instead of
+      // thresholded levenshtein runs the BANDED O(p·EditMaxDist) DP instead of
       // the full O(p²) matrix and returns -1 past the bound — exact
       // distances for every surviving pair, ~3× cheaper on the rejected
       // majority (measured 6.1 s → 2.3 s at sf0.1)
       .select(col("id_a"), col("id_b"),
-        levenshtein(col("pa"), col("pb"), maxDist).cast("long").as("dist"))
+        levenshtein(col("pa"), col("pb"), EditMaxDist).cast("long").as("dist"))
       .filter(col("dist") >= 0)
       .orderBy("id_a", "id_b")
   }
@@ -820,10 +748,9 @@ object Dedup {
     // count derives the identical modulus.
     val all = Similarity.vectors(s, d)
     // brute force is O(n²): bound the pair count with the same adaptive
-    // deterministic sample rule as jaccardPairs (target ≈2000 vectors);
+    // deterministic sample rule as jaccardPairs (target SampleVectors);
     // the LSH-bucketed route (Similarity.lshTopK) is the unbounded-n path
-    val m = math.max(1L, all.count() / 2000)
-    val e = all.filter(col("vec_id") % m === 0)
+    val e = Sampling.idSample(all, "vec_id", SampleVectors)
     // norms are computed once per row before the O(n²) join; each pair then
     // costs a single codegen'd dot product (FloatVectorDot)
     val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"),

@@ -303,20 +303,24 @@ object Events {
       .orderBy("event_type", "w_start")
   }
 
+  /** ev16's smoothing weight α: an exact binary fraction, so the fold is
+    * bit-exact across engines. */
+  val EwmaAlpha = 0.25
+
   /** Per-user EWMA (ev16): exponentially-weighted moving average of event
     * values in time order — the classic smoothing recurrence
     * `s_i = α·v_i + (1−α)·s_{i−1}`, a ORDER-DEPENDENT fold no window
     * aggregate expresses. Each user's sequence is collected and sorted by
     * the total (ts, event_id) order, then folded with the `aggregate` HOF
     * seeded from the first value — byte-compatible with DuckDB's
-    * `list_reduce` left fold, and α = 0.25 is an exact binary fraction, so
+    * `list_reduce` left fold, and α = [[EwmaAlpha]] is an exact binary fraction, so
     * every multiply-add is the same IEEE op on both engines: bit-exact
     * before the display rounding.
     *
     * Scale shape: one user-keyed shuffle; per-user state is that user's
     * event list (bounded by per-entity activity, the same bound
     * sessionization carries). */
-  def ewma(s: SparkSession, d: String, alpha: Double = 0.25): DataFrame = {
+  def ewma(s: SparkSession, d: String): DataFrame = {
     val folded = t(s, d, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("value"))
@@ -328,7 +332,7 @@ object Events {
         aggregate(
           slice(col("seq"), lit(2), greatest(size(col("seq")) - 1, lit(0))),
           element_at(col("seq"), 1).getField("value"),
-          (acc, x) => lit(alpha) * x.getField("value") + lit(1 - alpha) * acc).as("raw"))
+          (acc, x) => lit(EwmaAlpha) * x.getField("value") + lit(1 - EwmaAlpha) * acc).as("raw"))
     // NO display rounding (extreme-tier find): the fold itself is
     // bit-exact cross-engine (same left-fold op order on the same
     // doubles), but round(x, 6) is NOT — Spark rounds the shortest

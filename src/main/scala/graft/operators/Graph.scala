@@ -42,15 +42,18 @@ object Graph {
     * DECIMAL(38,0)/HUGEINT widening before its `div 100`. */
   val FpScale: Long = 1000000000000000000L
 
+  /** Damping factor as a whole percentage: the recurrence multiplies by it
+    * and integer-divides by 100, so it stays exact on both engines. */
+  val DampingPct = 85
+
+  /** PageRank rounds; gr1's oracle unrolls the same count. */
+  val Iterations = 10
+
   /** Undirected PageRank on a pair relation (columns = two node ids).
     * Returns `(node, rank_fp, rank)`: the exact fixed-point integer and a
-    * display double (`rank_fp / 10¹⁸`). `damping` must be a whole
-    * percentage (the recurrence multiplies by `dampingPct` and
-    * integer-divides by 100). */
-  def pageRank(pairs: DataFrame, damping: Double = 0.85, iterations: Int = 10): DataFrame = {
-    val dampingPct = math.round(damping * 100)
-    require(dampingPct >= 0 && dampingPct <= 100 && math.abs(dampingPct - damping * 100) < 1e-9,
-      s"damping must be a whole percentage, got $damping")
+    * display double (`rank_fp / 10¹⁸`), after [[Iterations]] rounds at
+    * [[DampingPct]]. */
+  def pageRank(pairs: DataFrame): DataFrame = {
     val edges = pairs.toDF("a", "b")
     val sym = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b")))
       .filter(col("a") =!= col("b")).distinct()
@@ -70,14 +73,14 @@ object Graph {
       .select(col("a"), col("b"), col("deg")).pinLazy()
     // teleport (1−d)/n in fixed point: (100−pct)·10¹⁶ is exact (10¹⁸/100),
     // then one truncating division by n — mirrored verbatim in the oracle
-    val teleport = (100L - dampingPct) * (FpScale / 100L) / n
+    val teleport = (100L - DampingPct) * (FpScale / 100L) / n
 
     // LAZY: the init has exactly one consumer (iteration 1's contribution
     // join), so its blocks land inside the final action like every other
     // iteration's — an eager pin here was one more driver-synchronized job
     var ranks = deg.select("node").withColumn("s", lit(FpScale / n))
       .pinLazy()
-    for (_ <- 1 to iterations) {
+    for (_ <- 1 to Iterations) {
       // The symmetrized graph gives every node degree ≥ 1 in BOTH
       // directions, so the destination key set of `contribs` is exactly
       // the node set — the former per-iteration `nodes` LEFT join +
@@ -90,7 +93,7 @@ object Graph {
         .select(col("b").as("node"), expr("s div deg").as("c"))
         .groupBy("node").agg(sum("c").as("inflow"))
         .select(col("node"),
-          expr(s"$teleport + (CAST($dampingPct AS DECIMAL(38,0)) * inflow) div 100")
+          expr(s"$teleport + (CAST($DampingPct AS DECIMAL(38,0)) * inflow) div 100")
             .as("s"))
         // LAZY: the Catalyst plan is severed per iteration either way (the
         // checkpoint is a LogicalRDD, so analysis cost stays O(1) per

@@ -75,8 +75,11 @@ object Pipeline {
       .select("keep_id", "n_copies", "n_tokens", "quality")
       .orderBy("keep_id")
 
+  /** pp10's shard count. */
+  val CurriculumShards = 8
+
   /** Curriculum shard assignment (pp10): partition the corpus into
-    * `nShards` quality-ranked shards of near-equal TOKEN mass — the
+    * [[CurriculumShards]] quality-ranked shards of near-equal TOKEN mass — the
     * curriculum-learning layout (schedule high-quality shards first, long
     * tail later). Built at VALUE granularity like the q48 histogram: docs
     * collapse to the (rounded quality, token mass) distribution in one
@@ -86,7 +89,7 @@ object Pipeline {
     * each doc joins its value's shard id back via broadcast. Equal-quality
     * docs share a shard, so the assignment needs no global doc order — the
     * property that keeps it scale-safe AND total-order deterministic. */
-  def curriculumShards(s: SparkSession, d: String, nShards: Int = 8): DataFrame = {
+  def curriculumShards(s: SparkSession, d: String): DataFrame = {
     val q = t(s, d, "documents")
       .select(col("doc_id"), size(toks).cast("long").as("n_tokens"),
         round(quality, 4).as("quality"))
@@ -99,7 +102,7 @@ object Pipeline {
         v.crossJoin(broadcast(tot)),
         Prefix.rangeBin(lit(1.0) - col("quality"), lit(0.0), lit(1.0), 32),
         Seq(col("quality").desc), col("vt"), "cb")
-      .withColumn("shard", expr(s"CAST(cb * $nShards DIV t AS BIGINT)"))
+      .withColumn("shard", expr(s"CAST(cb * $CurriculumShards DIV t AS BIGINT)"))
       .select("quality", "shard")
     q.join(broadcast(shards), "quality")
       .select("doc_id", "quality", "n_tokens", "shard")
@@ -185,14 +188,19 @@ object Pipeline {
       .filter(col("split_a") =!= col("split_b"))
       .orderBy("id_a", "id_b")
 
-  /** Fixed-size overlapping token chunks (`chunk` tokens every `stride`) —
+  /** pp3's context window: `ChunkTokens` tokens every `ChunkStride`. */
+  val ChunkTokens = 32
+  val ChunkStride = 24
+
+  /** Fixed-size overlapping token chunks ([[ChunkTokens]] tokens every
+    * [[ChunkStride]]) —
     * the context-window slicing step before tokenization/packing. Chunk
-    * count per doc is ceil(max(n-chunk,0)/stride)+1, so every token is
+    * count per doc is ceil(max(n-ChunkTokens,0)/ChunkStride)+1, so every token is
     * covered and short docs yield exactly one chunk. A narrow generator
     * over the token array (rows × chunks/doc, no shuffle); the chunk text
     * is emitted as its md5 so the output stays compact. */
-  def chunkDocuments(s: SparkSession, d: String, chunk: Int = 32, stride: Int = 24): DataFrame =
-    chunkStream(s, d, chunk, stride).orderBy("doc_id", "chunk_id")
+  def chunkDocuments(s: SparkSession, d: String): DataFrame =
+    chunkStream(s, d).orderBy("doc_id", "chunk_id")
 
   /** [[chunkDocuments]] WITHOUT the registered query's output ordering —
     * the composable core. Consumers that re-aggregate (pp11) must build on
@@ -200,7 +208,8 @@ object Pipeline {
     * execute its global sort as a real range-exchange for nothing (the
     * optimizer only elides the sort when it can see the whole plan, which
     * a checkpoint boundary hides). */
-  private def chunkStream(s: SparkSession, d: String, chunk: Int, stride: Int): DataFrame = {
+  private def chunkStream(s: SparkSession, d: String): DataFrame = {
+    val (chunk, stride) = (ChunkTokens, ChunkStride)
     val n = size(col("a"))
     val lastChunk = greatest(
       ceil((n - chunk).cast("double") / stride).cast("int"), lit(0))
@@ -231,7 +240,7 @@ object Pipeline {
     // corpus once per branch (r16 plan audit: 2 parquet scans + 2
     // Generates). The pinned relation is (doc_id, 16-byte fp) — compact by
     // construction — so one chunking pass feeds both branches (§2.4).
-    val chunks = chunkStream(s, d, chunk = 32, stride = 24)
+    val chunks = chunkStream(s, d)
       .select("doc_id", "chunk_fp")
       .pinLazy()
     val crossDoc = chunks.groupBy("chunk_fp")
@@ -270,21 +279,22 @@ object Pipeline {
       .orderBy("doc_id")
   }
 
+  /** pp5's IQR multiplier. Tighter than the textbook outlier rule because
+    * this corpus's lengths are uniform: a wide fence excludes nothing and
+    * would leave the quantile boundary arithmetic untested by the oracle. */
+  val OutlierFence = 0.25
+
   /** IQR outlier filter: keep documents whose token count lies within
-    * [q1 − 1.5·IQR, q3 + 1.5·IQR] — the standard stats-based length filter
-    * of a cleaning pass. The quantiles come from ONE exact `percentile`
+    * [q1 − f·IQR, q3 + f·IQR], f = [[OutlierFence]] — the standard
+    * stats-based length filter of a cleaning pass. The quantiles come
+    * from ONE exact `percentile`
     * aggregate over the 8-byte stats column (not the documents), broadcast
     * back as a 1-row bound; all comparisons are on identically-computed
     * doubles, so the boundary decisions are cross-engine stable. At 100 TB
     * the exact single-group percentile buffers the stats column on one
     * reducer — swap `approx_percentile` (sketch, mergeable) or a
-    * distributed rank-select when the stats column itself is too large.
-    *
-    * `fence` is the IQR multiplier (1.5 = the textbook outlier rule; the
-    * registered query uses 0.25 because this corpus's lengths are uniform
-    * — a 1.5 fence excludes nothing and would leave the quantile boundary
-    * arithmetic untested by the oracle). */
-  def outlierFilter(s: SparkSession, d: String, fence: Double = 1.5): DataFrame = {
+    * distributed rank-select when the stats column itself is too large. */
+  def outlierFilter(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
       .select(col("doc_id"), size(toks).cast("double").as("n_tokens"))
     val bounds = docs
@@ -292,8 +302,8 @@ object Pipeline {
       .select(element_at(col("qs"), 1).as("q1"), element_at(col("qs"), 2).as("q3"))
     val iqr = col("q3") - col("q1")
     docs.crossJoin(broadcast(bounds))
-      .filter(col("n_tokens") >= col("q1") - lit(fence) * iqr &&
-        col("n_tokens") <= col("q3") + lit(fence) * iqr)
+      .filter(col("n_tokens") >= col("q1") - lit(OutlierFence) * iqr &&
+        col("n_tokens") <= col("q3") + lit(OutlierFence) * iqr)
       .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"))
       .orderBy("doc_id")
   }
@@ -319,8 +329,13 @@ object Pipeline {
       .orderBy("lang")
   }
 
+  /** bf1: shingles of `ShingleTokens` words; Bloom pre-pass false-positive
+    * rate `BloomFpp`. */
+  val ShingleTokens = 5
+  val BloomFpp = 0.01
+
   /** Benchmark decontamination: training documents that share at least one
-    * word `k`-shingle with any holdout/eval document — the standard
+    * word [[ShingleTokens]]-shingle with any holdout/eval document — the standard
     * contamination sweep run before training. Shape: both sides explode to
     * (doc, shingle-fingerprint) with per-side dedup, then ONE equi-join on
     * the 16-byte md5 of the shingle (an inverted-index probe, not a
@@ -328,21 +343,22 @@ object Pipeline {
     * fingerprint set is usually small enough to broadcast, and AQE picks
     * that up from its size). Output: contaminated train doc → number of
     * distinct shared shingles. */
-  /** (doc_id, split, sh): every k-token shingle of every document, tagged
+  /** (doc_id, split, sh): every [[ShingleTokens]]-token shingle of every
+    * document, tagged
     * with the [[hashSplit]] train/holdout decision, shingle text emitted as
     * md5. Shared derivation for [[decontaminate]] and [[bloomDecontaminate]]. */
-  private def shinglesWithSplit(s: SparkSession, d: String, k: Int): DataFrame =
+  private def shinglesWithSplit(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .select(col("doc_id"), toks.as("a"), splitOf(col("doc_id")).as("split"))
-      .filter(size(col("a")) >= k)
+      .filter(size(col("a")) >= ShingleTokens)
       .select(col("doc_id"), col("split"),
         explode(transform(
-          sequence(lit(0), size(col("a")) - k),
-          i => array_join(slice(col("a"), i + 1, lit(k)), " "))).as("sh"))
+          sequence(lit(0), size(col("a")) - ShingleTokens),
+          i => array_join(slice(col("a"), i + 1, lit(ShingleTokens)), " "))).as("sh"))
       .select(col("doc_id"), col("split"), md5(col("sh").cast("binary")).as("sh"))
 
-  def decontaminate(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    val shingles = shinglesWithSplit(s, d, k)
+  def decontaminate(s: SparkSession, d: String): DataFrame = {
+    val shingles = shinglesWithSplit(s, d)
     val train = shingles.filter(col("split") === "train")
       .select(col("doc_id").as("train_id"), col("sh"))
     val holdout = shingles.filter(col("split") === "holdout")
@@ -367,13 +383,13 @@ object Pipeline {
     * cannot be in the holdout are dropped BEFORE the shuffle. Bloom filters
     * have no false negatives, so the surviving exact join returns exactly
     * [[decontaminate]]'s rows — same oracle — while shuffling only the
-    * matches plus an `fpp` fraction of noise.
+    * matches plus a [[BloomFpp]] fraction of noise.
     *
     * The one driver-side action (`count` to size the sketch) is a cheap
     * aggregate pre-pass; a production run would size from table stats
     * instead. PipelineSpec asserts bloom ≡ exact on this corpus. */
-  def bloomDecontaminate(s: SparkSession, d: String, k: Int = 5, fpp: Double = 0.01): DataFrame = {
-    val shingles = shinglesWithSplit(s, d, k)
+  def bloomDecontaminate(s: SparkSession, d: String): DataFrame = {
+    val shingles = shinglesWithSplit(s, d)
     // The distinct holdout set feeds THREE consumers (sizing count, sketch
     // build, exact join) and is small (~10% of docs, deduped 16-byte-ish
     // keys); materialize it once instead of re-deriving the full shingle
@@ -392,7 +408,7 @@ object Pipeline {
     if (nHoldout == 0)
       return train.groupBy("train_id").agg(countDistinct("sh").as("n_shared"))
         .limit(0).orderBy("train_id")
-    val bloom = s.sparkContext.broadcast(holdout.stat.bloomFilter("sh", nHoldout, fpp))
+    val bloom = s.sparkContext.broadcast(holdout.stat.bloomFilter("sh", nHoldout, BloomFpp))
     // codegen'd probe (graft.functions.BloomMightContainString): a
     // row-lambda here would deserialize every train shingle and break
     // WholeStageCodegen on the one path whose point is that non-matches
@@ -405,20 +421,22 @@ object Pipeline {
       .orderBy("train_id")
   }
 
+  /** pp8's cut: the largest share of a document its top bigram may take. */
+  val MaxTopBigramFrac = 0.08
+
   /** Gopher-style repetition filtering (Rae et al. 2021 §A1.1): documents
     * dominated by repeated fragments are boilerplate/spam, measured here as
     *  - `dup_word_frac`: 1 − distinct/total tokens,
     *  - `dup_5gram_frac`: 1 − distinct/total word 5-grams,
     *  - `top_bigram_frac`: share of the most frequent bigram.
-    * Keeps documents whose top-bigram share is ≤ `maxTopBigramFrac`.
+    * Keeps documents whose top-bigram share is ≤ [[MaxTopBigramFrac]].
     *
     * Scale shape: the word/5-gram fractions are narrow array ops inside the
     * scan projection (no shuffle); the top-bigram share needs a per-(doc,
     * bigram) count — a doc_id-&-bigram-keyed aggregation with map-side
     * partial combine, then a doc-keyed max/sum. All ratios are integer
     * divisions ⇒ cross-engine exact; rounding is display-only. */
-  def repetitionFilter(
-      s: SparkSession, d: String, maxTopBigramFrac: Double = 0.08): DataFrame = {
+  def repetitionFilter(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
       .select(col("doc_id"), toks.as("a"))
       .filter(size(col("a")) >= 2)
@@ -446,7 +464,7 @@ object Pipeline {
       .groupBy("doc_id")
       .agg((max("c").cast("double") / sum("c")).as("top_bigram_frac"))
     base.join(topBigram, "doc_id")
-      .filter(col("top_bigram_frac") <= maxTopBigramFrac)
+      .filter(col("top_bigram_frac") <= MaxTopBigramFrac)
       .select(
         col("doc_id"), col("n_tokens"),
         round(col("dup_word_frac"), 4).as("dup_word_frac"),
@@ -488,22 +506,26 @@ object Pipeline {
       .orderBy("event_id")
   }
 
-  /** Contiguous sequence packing: per shard (doc_id mod `shards`, so the
+  /** pp4 packs bins of about `PackTarget` tokens over `PackShards` shards. */
+  val PackTarget = 256
+  val PackShards = 8
+
+  /** Contiguous sequence packing: per shard (doc_id mod [[PackShards]], so the
     * operation is embarrassingly parallel), documents are laid out in
     * doc_id order and a document belongs to bin ⌊tokens-before-it /
-    * target⌋ — fixed token-budget split points over each shard's stream.
+    * PackTarget⌋ — fixed token-budget split points over each shard's stream.
     * The per-shard running sum is a window over the shard partition, so no
     * global ordering is ever required; shard count scales with the
-    * cluster, and each bin holds ≈`target` tokens. */
-  def packSequences(s: SparkSession, d: String, target: Int = 256, shards: Int = 8): DataFrame = {
+    * cluster, and each bin holds ≈PackTarget tokens. */
+  def packSequences(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     t(s, d, "documents")
-      .select(col("doc_id"), (col("doc_id") % shards).as("shard"),
+      .select(col("doc_id"), (col("doc_id") % PackShards).as("shard"),
         size(toks).cast("long").as("n_tokens"))
       .withColumn("bin",
-        floor(coalesce(sum("n_tokens").over(w), lit(0L)) / target).cast("long"))
+        floor(coalesce(sum("n_tokens").over(w), lit(0L)) / PackTarget).cast("long"))
       .select("doc_id", "shard", "bin", "n_tokens")
       .orderBy("doc_id")
   }

@@ -29,6 +29,16 @@ object Sampling {
 
   private def keyHash: Column = md5(col("doc_id").cast("string").cast("binary"))
 
+  /** The deterministic id-modulus sample behind every bounded brute-force
+    * operator: keep the rows of `df` whose `id` is a multiple of
+    * max(1, n / target), n = `df`'s row count, so about `target` rows
+    * survive at any corpus size. One count job; each oracle derives the
+    * same modulus as `greatest(1, count(*) // target)`. */
+  private[graft] def idSample(df: DataFrame, id: String, target: Long): DataFrame = {
+    val m = math.max(1L, df.count() / target)
+    df.filter(col(id) % m === 0)
+  }
+
   /** Per-stratum acceptance thresholds on the first md5 byte, hex-string
     * compared (like [[Pipeline.mixCorpus]]'s rates): en keeps all, de 1/2,
     * es 1/4, fr 1/8, anything else ~10%. */
@@ -98,17 +108,20 @@ object Sampling {
       .orderBy("doc_id")
   }
 
-  /** Fixed-size uniform sample per stratum: the `k` documents with the
-    * smallest key-hash in each language — a deterministic stand-in for
+  /** Documents kept per language by [[fixedSizePerStratum]] (sm2). */
+  val StratumSize = 25
+
+  /** Fixed-size uniform sample per stratum: the [[StratumSize]] documents
+    * with the smallest key-hash in each language — a deterministic stand-in for
     * per-class reservoir sampling (hash order is uniform and content
     * independent, so this IS a uniform k-subset, just reproducible).
     * doc_id tie-break keeps the rank total even if hashes ever collide. */
-  def fixedSizePerStratum(s: SparkSession, d: String, k: Int = 25): DataFrame =
+  def fixedSizePerStratum(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .select(col("doc_id"), col("lang"), keyHash.as("h"))
       .withColumn("rk",
         row_number().over(Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))).cast("long"))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= StratumSize)
       .select("lang", "rk", "doc_id")
       .orderBy("lang", "rk")
 }

@@ -40,6 +40,26 @@ object Similarity {
   private[graft] val Dim = 64
   private[graft] val LshBits = 6
 
+  /** Neighbors returned per query by every top-k here. */
+  val TopK = 5
+
+  /** ss4's coarse quantizer: `IvfCells` k-means cells trained for
+    * `IvfIters` Lloyd passes; each query probes its `IvfProbes` nearest
+    * cells. */
+  val IvfCells = 8
+  val IvfIters = 3
+  val IvfProbes = 2
+
+  /** ss6's product quantizer: `PqSubspaces` subspaces of `PqCells` cells
+    * each, trained for `PqIters` Lloyd passes on a sample of about
+    * `PqTrainSample` vectors; the top `PqShortlist` ADC candidates per
+    * query are rescored exactly. */
+  val PqSubspaces = 8
+  val PqCells = 16
+  val PqIters = 2
+  val PqTrainSample = 4096L
+  val PqShortlist = 40
+
   /** The Lloyd/PQ nearest-cell assignment as ONE stable-shaped codegen
     * kernel ([[graft.functions.PqArgminCells]]) instead of per-centroid
     * literal dot expressions. Bit-identical argmin (the kernel's scaladoc
@@ -142,15 +162,15 @@ object Similarity {
   /** The exact-cosine tail every top-k here ends in: score each pair of
     * `pairs` (q_id/qv/qn × c_id/cv/cn) as round-6 cosine, rank per query on
     * (cos desc, c_id) — the id tie-break makes ranks cross-engine
-    * deterministic — and keep the top `k` as (q_id, [cell,] c_id, cos, rk),
-    * `cell` cast to long. */
-  private def cosineTopK(pairs: DataFrame, k: Int, cell: Option[Column] = None): DataFrame = {
+    * deterministic — and keep the top [[TopK]] as (q_id, [cell,] c_id, cos,
+    * rk), `cell` cast to long. */
+  private def cosineTopK(pairs: DataFrame, cell: Option[Column] = None): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
     pairs
       .withColumn("cos",
         round(dotFast(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
       .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= TopK)
       .select(Seq(col("q_id")) ++ cell.map(_.cast("long").as("cell")) ++
         Seq(col("c_id"), col("cos"), col("rk")): _*)
       .orderBy("q_id", "rk")
@@ -161,7 +181,7 @@ object Similarity {
   def bruteForceTopK(s: SparkSession, d: String): DataFrame = {
     val e = vectors(s, d)
     cosineTopK(broadcast(side(e.filter(col("vec_id") < 10), "q"))
-      .join(side(e, "c"), col("q_id") =!= col("c_id")), 5)
+      .join(side(e, "c"), col("q_id") =!= col("c_id")))
   }
 
   /** Deterministic ±1 hyperplane entry, ENGINE-PORTABLE: (p, j) is +1 iff
@@ -213,26 +233,24 @@ object Similarity {
       .filter(col("q_id") =!= col("c_id"))
       .select("q_id", "c_id").distinct()
     cosineTopK(cand.join(broadcast(side(e.filter(col("vec_id") < 10), "q")), "q_id")
-      .join(side(e, "c"), "c_id"), 5)
+      .join(side(e, "c"), "c_id"))
   }
 
   /** Genuine IVF: deterministic Lloyd k-means ([[lloyd]] with one
     * whole-vector subspace) builds the coarse quantizer, then queries probe
-    * their `nprobe` nearest cells and rescore exactly. Search is the IVF
+    * their [[IvfProbes]] nearest cells and rescore exactly. Search is the IVF
     * shape: candidates come from an equi-join on cell id, so each query
-    * scans ~nprobe/k of the corpus. The trainer's portability contract is
+    * scans ~IvfProbes/IvfCells of the corpus. The trainer's portability contract is
     * what gives ss4 a FULL DuckDB oracle (Registry.ss4OracleSql): the
     * whole 3-iteration loop, corpus assignment and probe unroll as chained
     * CTEs. Recall vs brute force stays a SimilaritySpec property
     * (approximate by design — the oracle checks the pipeline, not ANN
     * quality). */
-  def ivfKMeansTopK(
-      s: SparkSession, d: String,
-      k: Int = 8, iters: Int = 3, nprobe: Int = 2): DataFrame = {
+  def ivfKMeansTopK(s: SparkSession, d: String): DataFrame = {
     val e = vectors(s, d)
       .select(col("vec_id"), col("embedding"))
       .pinLazy() // reused by every Lloyd pass + the final search
-    val cents = lloyd(e, k, m = 1, sub = Dim, strictLen = true, iters, "ivfKMeansTopK")
+    val cents = lloyd(e, IvfCells, m = 1, sub = Dim, strictLen = true, IvfIters, "ivfKMeansTopK")
     // argmin_c |x-c|^2 = argmin_c (|c|^2 - 2 x·c): one codegen'd dot per
     // centroid, ties broken by cell id through struct ordering
     val probeCells = cents(0).zipWithIndex.toSeq.map { case (c, i) =>
@@ -245,8 +263,8 @@ object Similarity {
     val c = side(e, "c",
       element_at(cellsFast(cents, col("embedding"), Dim, strictLen = true), 1).as("cell"))
     val q = side(e.filter(col("vec_id") < 10), "q",
-      explode(slice(array_sort(array(probeCells: _*)), 1, nprobe).getField("cell")).as("cell"))
-    cosineTopK(q.join(c, Seq("cell")).filter(col("q_id") =!= col("c_id")), 5, Some(col("cell")))
+      explode(slice(array_sort(array(probeCells: _*)), 1, IvfProbes).getField("cell")).as("cell"))
+    cosineTopK(q.join(c, Seq("cell")).filter(col("q_id") =!= col("c_id")), Some(col("cell")))
   }
 
   /** Build the IVF index as a PERSISTED cell-partitioned parquet layout —
@@ -271,12 +289,12 @@ object Similarity {
     * runtime and prunes the index scan to those `cell=` directories before
     * reading them (plan-asserted in SimilaritySpec) — no manual cell-list
     * plumbing, and the same plan at any index size. */
-  def probeIvfIndex(s: SparkSession, indexDir: String, queries: DataFrame, k: Int = 5): DataFrame = {
+  def probeIvfIndex(s: SparkSession, indexDir: String, queries: DataFrame): DataFrame = {
     val idx = s.read.parquet(indexDir).select(col("vec_id").as("c_id"),
       col("embedding").as("cv"), col("n").as("cn"), col("cell"))
     val q = side(queries, "q", col("label").cast("int").as("cell"))
     cosineTopK(idx.join(broadcast(q), Seq("cell")).filter(col("q_id") =!= col("c_id")),
-      k, Some(col("cell")))
+      Some(col("cell")))
   }
 
   /** Registry query (ss5): the full persisted-index lifecycle in one
@@ -296,7 +314,8 @@ object Similarity {
   }
 
   /** Product-quantization ANN (ss6): the compressed-domain scale path.
-    * The 64-dim float vector (256 B) is quantized to `m` = 8 sub-codes of
+    * The 64-dim float vector (256 B) is quantized to [[PqSubspaces]] = 8
+    * sub-codes of
     * 4 bits (one byte-array column, 32× smaller), and candidate generation
     * scans ONLY the code table with per-query lookup tables — at 100 TB
     * the raw embedding column is touched just twice (codebook training and
@@ -320,11 +339,9 @@ object Similarity {
     * rescored EXACTLY against the raw embeddings and the top k of that is
     * returned. Recall floors stay in SimilaritySpec (approximate by
     * design — the oracle checks the pipeline, not ANN quality). */
-  def pqTopK(
-      s: SparkSession, d: String,
-      m: Int = 8, ksub: Int = 16, iters: Int = 2, shortlist: Int = 40): DataFrame =
+  def pqTopK(s: SparkSession, d: String): DataFrame =
     pqTopKOf(vectors(s, d).select(col("vec_id"), col("embedding")),
-      m, ksub, iters, shortlist)
+      PqSubspaces, PqCells, PqIters, PqShortlist)
 
   /** [[pqTopK]] over an explicit (vec_id, embedding) relation — the
     * testable core (SimilaritySpec drives it with a corpus smaller than
@@ -337,12 +354,11 @@ object Similarity {
       .pinLazy() // reused: training passes, encode, rescore
     def subvec(v: Column, j: Int): Column = slice(v, j * sub + 1, sub)
 
-    // Codebooks train on a deterministic hash-style sample (~4k vectors,
-    // all of a small corpus) — the standard PQ recipe: codebook quality
-    // needs a representative subset, not the corpus, and at 100 TB a
-    // full-corpus Lloyd pass per iteration would dominate the build.
-    val sampleMod = math.max(1L, e.count() / 4096)
-    val train = e.filter(col("vec_id") % sampleMod === 0).pinLazy()
+    // Codebooks train on a deterministic id sample (~PqTrainSample
+    // vectors, all of a small corpus) — the standard PQ recipe: codebook
+    // quality needs a representative subset, not the corpus, and at 100 TB
+    // a full-corpus Lloyd pass per iteration would dominate the build.
+    val train = Sampling.idSample(e, "vec_id", PqTrainSample).pinLazy()
     // all-subspace assignment in the stable-shaped kernel: one compiled
     // stage shared by every iteration AND the final encode (cellsFast)
     val books = lloyd(train, ksub, m, sub, strictLen = false, iters, "pqTopK")
@@ -385,14 +401,14 @@ object Similarity {
     * deterministic candidate rule so the exact stage carries its own
     * hash-checked CORRECTNESS row, isolating sketch recall (measured in
     * SimilaritySpec) from rescore math (oracle-exact). */
-  def rescoreTopK(e: DataFrame, candidates: DataFrame, k: Int = 5): DataFrame =
+  def rescoreTopK(e: DataFrame, candidates: DataFrame): DataFrame =
     // candidate side BROADCAST into the corpus join (r15 opt round): the
     // candidate list is |Q|·shortlist rows by construction — without the
     // hint the planner has no stats on the derived side and sort-merges,
     // shuffling the ENTIRE raw-vector corpus to meet a few hundred rows
     // (guide §3.1: hint when you know a side is small and estimates don't)
     cosineTopK(broadcast(candidates.join(broadcast(side(e, "q")), "q_id"))
-      .join(side(e, "c"), "c_id"), k)
+      .join(side(e, "c"), "c_id"))
 
   /** ss7: [[rescoreTopK]] on a FIXED deterministic candidate set (every
     * 17th vector, offset 3 — standing in for a sketch shortlist, but
@@ -415,6 +431,6 @@ object Similarity {
     val e = vectors(s, d)
     val q = side(e.filter(col("vec_id") < 10), "q", col("label"))
     cosineTopK(q.join(side(e, "c", col("label")), Seq("label"))
-      .filter(col("q_id") =!= col("c_id")), 5, Some(col("label")))
+      .filter(col("q_id") =!= col("c_id")), Some(col("label")))
   }
 }

@@ -119,6 +119,11 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  /** tx6: words seen fewer than `VocabMinCount` times get no id; ids are
+    * assigned over `VocabIdPartitions` ranges ([[Prefix.rankedIds]]). */
+  val VocabMinCount = 5
+  val VocabIdPartitions = 32
+
   /** Vocabulary building: corpus-frequency-ranked token ids (the id table a
     * tokenizer trains against). The count is one token-keyed aggregation;
     * ids are then assigned by global (cnt DESC, w) rank WITHOUT a global
@@ -129,18 +134,21 @@ object TextAnalysis {
     * row_number, count offsets); the (cnt DESC, w) keys are unique as the
     * primitive requires, and ties on cnt rank lexicographically so ids are
     * total and cross-engine stable. */
-  def vocabulary(s: SparkSession, d: String, minCount: Int = 5, idPartitions: Int = 32): DataFrame = {
+  def vocabulary(s: SparkSession, d: String): DataFrame = {
     val vocab = t(s, d, "documents")
       .select(explode(toks).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount)
-    Prefix.rankedIds(vocab, Seq(col("cnt").desc, col("w").asc), idPartitions, "rn")
+      .filter(col("cnt") >= VocabMinCount)
+    Prefix.rankedIds(vocab, Seq(col("cnt").desc, col("w").asc), VocabIdPartitions, "rn")
       .withColumn("token_id", col("rn").cast("long"))
       .select("token_id", "w", "cnt")
       .orderBy("token_id")
   }
 
-  /** TF-IDF keyword extraction: the top-`topK` terms per document by
+  /** Terms kept per document by [[tfidfTopTerms]] (tx8). */
+  val TopTerms = 3
+
+  /** TF-IDF keyword extraction: the top-[[TopTerms]] terms per document by
     * tf · ln(N/df) — the classic relevance weighting a corpus-analysis /
     * retrieval stage computes.
     *
@@ -155,7 +163,7 @@ object TextAnalysis {
     * Determinism: scores are rounded to 1e-6 BEFORE ranking on (score,
     * term), so rank order cannot depend on sub-ulp ln() differences between
     * engines. */
-  def tfidfTopTerms(s: SparkSession, d: String, topK: Int = 3): DataFrame = {
+  def tfidfTopTerms(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val nDocs = t(s, d, "documents").count() // metadata-only on parquet
     val tf = t(s, d, "documents")
@@ -170,7 +178,7 @@ object TextAnalysis {
     val rankW = Window.partitionBy("doc_id").orderBy(col("tfidf").desc, col("w"))
     scored
       .withColumn("rk", row_number().over(rankW).cast("long"))
-      .filter(col("rk") <= topK)
+      .filter(col("rk") <= TopTerms)
       .select("doc_id", "rk", "w", "tf", "df", "tfidf")
       .orderBy("doc_id", "rk")
   }
@@ -208,8 +216,11 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  /** tx10's add-α smoothing constant. */
+  val BigramAlpha = 0.5
+
   /** Bigram-LM cross-entropy scoring (tx10) — the CCNet/C4-style
-    * "perplexity filter": train an add-α-smoothed bigram language model on
+    * "perplexity filter": train an add-α-smoothed (α = [[BigramAlpha]]) bigram language model on
     * the corpus itself, then score every document by its average negative
     * log-likelihood under that model (perplexity = exp of this; the exp is
     * left to the consumer because ln is cross-engine exact on this data
@@ -223,7 +234,7 @@ object TextAnalysis {
     * DECIMAL(28,10) before the per-doc sum (exact, summation-order-
     * independent — the tx9 contract), so the score is bit-stable under any
     * partitioning and matches the oracle exactly after the final round. */
-  def bigramCrossEntropy(s: SparkSession, d: String, alpha: Double = 0.5): DataFrame = {
+  def bigramCrossEntropy(s: SparkSession, d: String): DataFrame = {
     val tf = t(s, d, "documents")
       .select(col("doc_id"), toks.as("a"))
       .filter(size(col("a")) >= 2)
@@ -245,8 +256,8 @@ object TextAnalysis {
     tf.join(big, Seq("u", "v")).join(ctx, Seq("u"))
       .crossJoin(broadcast(vocab))
       .withColumn("nll",
-        (col("tf") * -log((col("cuv") + lit(alpha)) /
-          (col("cu") + lit(alpha) * col("vsz")))).cast("decimal(28,10)"))
+        (col("tf") * -log((col("cuv") + lit(BigramAlpha)) /
+          (col("cu") + lit(BigramAlpha) * col("vsz")))).cast("decimal(28,10)"))
       .groupBy("doc_id")
       .agg(sum("tf").as("n_bigrams"), sum("nll").as("snll"))
       .select(col("doc_id"), col("n_bigrams"),
@@ -277,9 +288,14 @@ object TextAnalysis {
       .orderBy(col("n").desc, col("bigram"))
       .limit(20)
 
+  /** hh1: a heavy hitter makes up ≥ 1/`HeavyHitterDenom` of all bigram
+    * occurrences; `HeavyHitterEps` is its Count-Min pre-pass's error. */
+  val HeavyHitterDenom = 800L
+  val HeavyHitterEps = 0.0001
+
   /** Heavy-hitter n-grams with a Count-Min-Sketch pre-pass — the frequency
     * sibling of the Bloom pattern in `Pipeline.bloomDecontaminate`: find
-    * every bigram occurring at least `totalCount / denom` times WITHOUT
+    * every bigram occurring at least `totalCount / HeavyHitterDenom` times WITHOUT
     * shuffling the full bigram stream.
     *
     * Pass 1 folds the stream into a fixed-size CMS (`stat.countMinSketch`
@@ -296,11 +312,10 @@ object TextAnalysis {
     * reaches the shuffle: only candidates — true hitters plus the sketch's
     * bounded eps·N overcount band — are hash-partitioned. TextSpec asserts
     * sketch-prefiltered ≡ exact on this corpus. */
-  def heavyHitterBigrams(
-      s: SparkSession, d: String, denom: Long = 800, eps: Double = 0.0001): DataFrame = {
+  def heavyHitterBigrams(s: SparkSession, d: String): DataFrame = {
     val bi = bigramStream(s, d)
-    val cms = bi.stat.countMinSketch("bigram", eps, 0.99, seed = 42)
-    val threshold = math.max(1L, cms.totalCount() / denom)
+    val cms = bi.stat.countMinSketch("bigram", HeavyHitterEps, 0.99, seed = 42)
+    val threshold = math.max(1L, cms.totalCount() / HeavyHitterDenom)
     val sketch = s.sparkContext.broadcast(cms)
     // codegen'd probe (graft.functions.CmsProbeAtLeast): a row-lambda here
     // would deserialize every bigram and break WholeStageCodegen on the one

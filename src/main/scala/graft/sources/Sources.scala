@@ -143,16 +143,13 @@ object Source {
       * a warehouse table executes IN the database and ships one row per
       * group instead of the table. JdbcLiveSpec proves the aggregate
       * lands in the backend's SQL against embedded Derby. */
-    def registerCatalog(
-        spark: SparkSession, name: String,
-        pushDownAggregate: Boolean = true,
-        pushDownLimit: Boolean = true): Unit = {
+    def registerCatalog(spark: SparkSession, name: String): Unit = {
       val p = s"spark.sql.catalog.$name"
       spark.conf.set(p,
         "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
       spark.conf.set(s"$p.url", url)
-      spark.conf.set(s"$p.pushDownAggregate", pushDownAggregate.toString)
-      spark.conf.set(s"$p.pushDownLimit", pushDownLimit.toString)
+      spark.conf.set(s"$p.pushDownAggregate", "true")
+      spark.conf.set(s"$p.pushDownLimit", "true")
       driver.foreach(d => spark.conf.set(s"$p.driver", d))
     }
   }

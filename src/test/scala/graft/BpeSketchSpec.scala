@@ -146,10 +146,10 @@ class BpeSketchSpec extends AnyFunSuite {
   }
 
   test("bp1 is deterministic across runs") {
-    val a = Bpe.learnMerges(spark, sf, 6).collect().toSeq
-    val b = Bpe.learnMerges(spark, sf, 6).collect().toSeq
+    val a = Bpe.learnMerges(spark, sf).collect().toSeq
+    val b = Bpe.learnMerges(spark, sf).collect().toSeq
     assert(a == b)
-    assert(a.size == 6)
+    assert(a.size == Bpe.NumMerges)
   }
 
   test("bp2 encode matches sequentially applying the reference merges word by word") {
@@ -160,7 +160,7 @@ class BpeSketchSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq
     val freqs = docs.flatMap(_._2.split(" ").filter(_.nonEmpty))
       .groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }.toSeq
-    val merges = refBpe(freqs.sortBy(_._1), 12).map { case (_, l, r, _) => (l, r) }
+    val merges = refBpe(freqs.sortBy(_._1), Bpe.NumMerges).map { case (_, l, r, _) => (l, r) }
     val want = docs.map { case (id, text) =>
       val syms = text.split(" ").filter(_.nonEmpty).toVector.flatMap { w =>
         w.map(_.toString).toVector :+ Bpe.EndOfWord
@@ -170,14 +170,14 @@ class BpeSketchSpec extends AnyFunSuite {
       // per-word application because every learned pair stays within a word
       id -> merges.foldLeft(syms)((acc, p) => applyMerge(acc, p._1, p._2)).size.toLong
     }.toMap
-    val got = Bpe.encodeCorpus(spark, sf, 12).collect()
+    val got = Bpe.encodeCorpus(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
   }
 
   test("bp2 codegen kernel is bit-identical to the chained-regex formulation") {
-    val kernel = Bpe.encodeCorpus(spark, sf, 12).collect().map(_.toString).toSeq
-    val regex = Bpe.encodeCorpusBuiltins(spark, sf, 12).collect().map(_.toString).toSeq
+    val kernel = Bpe.encodeCorpus(spark, sf).collect().map(_.toString).toSeq
+    val regex = Bpe.encodeCorpusBuiltins(spark, sf).collect().map(_.toString).toSeq
     assert(kernel == regex)
     assert(kernel.nonEmpty)
   }

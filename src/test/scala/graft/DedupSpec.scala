@@ -189,12 +189,10 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("connected components: chain deeper than the propagation cap falls back and converges") {
+  test("connected components: a 60-deep chain converges to one label") {
     import spark.implicits._
-    // a 0-1-2-…-60 chain has diameter 60 > the 20-round propagation cap —
-    // under r14's plain hops this exercised the large-star/small-star
-    // fallback; with the r15 hash-to-min steps propagation itself covers
-    // it (doubling), so the labels must come out identical either way
+    // a 0-1-2-…-60 chain has diameter 60: plain per-hop propagation would
+    // need 60 hops, the hash-to-min steps cover it by doubling
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val labels = Dedup.connectedComponents(chain).collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
@@ -202,11 +200,11 @@ class DedupSpec extends AnyFunSuite {
     labels.foreach { case (n, l) => assert(l == 0L, s"node $n labelled $l") }
   }
 
-  test("hash-to-min propagation converges a 300-deep chain inside the 20-step cap") {
+  test("hash-to-min propagation converges a 300-deep chain") {
     import spark.implicits._
-    // r15 focused test for the O(log d) contract: 300 ≫ 20, so plain
-    // per-hop propagation could never converge inside the cap — only the
-    // push/pull doubling can. Min id placed at the FAR end (node 300 is
+    // r15 focused test for the O(log d) contract: plain per-hop
+    // propagation needs 300 hops here, the push/pull doubling a handful
+    // of batches. Min id placed at the FAR end (node 300 is
     // relabeled 0 via reversal) so information must actually traverse.
     val chain = (0L until 300L).map(i => (300L - i, 300L - i - 1)).toDF("id_a", "id_b")
     val labels = Dedup.connectedComponents(chain).collect()
@@ -218,12 +216,11 @@ class DedupSpec extends AnyFunSuite {
   test("hash-to-min propagation agrees with union-find on random multi-component graphs") {
     import spark.implicits._
     // r15 focused test: the push (h(u) → old pointer target) and pull
-    // (h(h(u))) legs are new logic on the PROPAGATION path (the default-
-    // rounds path; the fallback has its own test below) — pin them
-    // against union-find ground truth across seeds
-    for (seed <- Seq(3, 11)) {
+    // (h(h(u))) legs pinned against union-find ground truth across seeds
+    // (seed, pairs, nodes)
+    for ((seed, nPairs, nNodes) <- Seq((3, 150, 120), (11, 150, 120), (7, 120, 80))) {
       val rng = new scala.util.Random(seed)
-      val pairs = Seq.fill(150)((rng.nextInt(120).toLong, rng.nextInt(120).toLong))
+      val pairs = Seq.fill(nPairs)((rng.nextInt(nNodes).toLong, rng.nextInt(nNodes).toLong))
         .filter { case (a, b) => a != b }
       val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
         .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
@@ -242,28 +239,6 @@ class DedupSpec extends AnyFunSuite {
         assert(got(n) == r, s"seed $seed node $n: got ${got(n)}, want $r")
       }
     }
-  }
-
-  test("large-star/small-star agrees with union-find on a random multi-component graph") {
-    import spark.implicits._
-    val rng = new scala.util.Random(7)
-    val pairs = Seq.fill(120)((rng.nextInt(80).toLong, rng.nextInt(80).toLong))
-      .filter { case (a, b) => a != b }
-    // propagationRounds = 0 forces the fallback path for the whole graph
-    val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"), propagationRounds = 0)
-      .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val truth = parent.keys.map(x => x -> find(x)).toMap
-    assert(got.keySet == truth.keySet)
-    truth.foreach { case (n, r) => assert(got(n) == r, s"node $n: got ${got(n)}, want $r") }
   }
 
   test("dd9's edit distance counts CODE-POINT edits on multi-byte text (the operator contract)") {

@@ -116,8 +116,8 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     // has IDENTICAL features, so the top pairs must be dominated by cos=1
     val doubled = base.unionByName(
       base.select((col("media_id") + 1000000000L).as("media_id"), col("feature")))
-    val top = Multimodal.mediaTopPairs(doubled, k = 30).collect()
-    assert(top.length == 30)
+    val top = Multimodal.mediaTopPairs(doubled).collect()
+    assert(top.length == Multimodal.TopPairs)
     assert(top.forall(r => r.getLong(0) < r.getLong(1)))
     assert(top.forall(r => r.getDouble(2) == 1.0),
       "exact duplicates exist for every item, so every top pair must be cos=1")

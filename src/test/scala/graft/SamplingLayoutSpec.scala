@@ -15,13 +15,13 @@ class SamplingLayoutSpec extends AnyFunSuite {
     val docs = Tables(spark, sf, "documents")
     val strata = docs.groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val sample = Sampling.fixedSizePerStratum(spark, sf, k = 25)
+    val sample = Sampling.fixedSizePerStratum(spark, sf)
     val got = sample.groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got.keySet == strata.keySet)
-    got.foreach { case (lang, n) => assert(n == math.min(25L, strata(lang))) }
+    got.foreach { case (lang, n) => assert(n == math.min(Sampling.StratumSize.toLong, strata(lang))) }
     // same rows regardless of physical partitioning (hash order is content-only)
-    val again = Sampling.fixedSizePerStratum(spark, sf, k = 25)
+    val again = Sampling.fixedSizePerStratum(spark, sf)
       .repartition(7).orderBy("lang", "rk").collect().toSeq
     assert(sample.orderBy("lang", "rk").collect().toSeq == again)
   }

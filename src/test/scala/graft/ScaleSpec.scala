@@ -246,53 +246,4 @@ class ScaleSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"))
     assert(p.contains("PushedFilters") && p.contains("EqualTo(o_orderpriority,1-URGENT)"))
   }
-
-  // dd3/dd10's exact token self-joins are Σ_w df(w)² — safe at the ~500-doc
-  // sample bound, but the dfCap prefix filter is what makes the exact forms
-  // safe at ANY sample size: tokens with df > K never reach the pair join,
-  // bounding its input to K·(total tokens), linear in the corpus. The cap
-  // must (a) actually bound the join input and (b) only ever SHRINK the
-  // result (lower-bound similarity ⇒ subset under a ≥-threshold).
-  test("dd3/dd10 dfCap: join input is df-bounded and output is a subset of the exact result") {
-    import graft.operators.Dedup
-    // the fixture's synthetic vocabulary is tiny and hot (31 tokens, df
-    // 25–415 in the dd3 sample): 404 drops the 3 hottest tokens while
-    // leaving a non-empty capped result — real dropping, non-trivial subset
-    val cap = 404L
-    // (a) the capped plans carry the df ≤ cap filter in front of the join
-    for (df <- Seq(
-        Dedup.jaccardPairs(spark, sf, dfCap = cap),
-        Dedup.tfidfCosinePairs(spark, sf, dfCap = cap))) {
-      val p = df.queryExecution.optimizedPlan.toString
-      assert(p.contains(s"<= $cap"), s"df-cap filter missing from plan:\n${p.take(800)}")
-    }
-    // (a') re-derive the bound the filter enforces: no token surviving the
-    // cap has df > cap in the sampled corpus
-    val docs = Tables(spark, sf, "documents")
-    val m = math.max(1L, docs.count() / 500)
-    val maxDf = docs.filter(col("doc_id") % m === 0)
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= cap)
-      .agg(max("df")).collect()(0).getLong(0)
-    assert(maxDf <= cap)
-    // (b) subset + lower-bound: every capped pair appears in the exact
-    // result with a similarity at least as large
-    def pairs(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exactJ = pairs(Dedup.jaccardPairs(spark, sf))
-    val cappedJ = pairs(Dedup.jaccardPairs(spark, sf, dfCap = cap))
-    // the cap must have exercised real dropping: strictly fewer pairs than
-    // exact, but not the degenerate empty set
-    assert(cappedJ.nonEmpty && cappedJ.size < exactJ.size,
-      s"cap did not bite: capped ${cappedJ.size} vs exact ${exactJ.size}")
-    assert(cappedJ.keySet.subsetOf(exactJ.keySet),
-      s"capped dd3 produced pairs absent from the exact result: ${cappedJ.keySet -- exactJ.keySet}")
-    cappedJ.foreach { case (k, v) => assert(v <= exactJ(k) + 1e-4, s"$k: capped $v > exact ${exactJ(k)}") }
-    val exactC = pairs(Dedup.tfidfCosinePairs(spark, sf))
-    val cappedC = pairs(Dedup.tfidfCosinePairs(spark, sf, dfCap = cap))
-    assert(cappedC.keySet.subsetOf(exactC.keySet),
-      s"capped dd10 produced pairs absent from the exact result: ${cappedC.keySet -- exactC.keySet}")
-    cappedC.foreach { case (k, v) => assert(v <= exactC(k) + 1e-4, s"$k: capped $v > exact ${exactC(k)}") }
-  }
 }

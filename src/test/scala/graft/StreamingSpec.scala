@@ -331,7 +331,7 @@ class StreamingSpec extends AnyFunSuite {
     val sfDir = sf
     // vocabulary trained once in batch; the encode then applies it to the
     // arriving stream as a stateless narrow map
-    val merges = graft.operators.Bpe.learnMerges(spark, sfDir, 8)
+    val merges = graft.operators.Bpe.learnMerges(spark, sfDir)
       .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val stream = spark.readStream.schema(schema).parquet(s"$sfDir/documents.*")
