@@ -16,10 +16,10 @@ import org.apache.spark.sql.Dataset
   *
   * `SPARK_GRAFT_RELIABLE_CKPT=1` (or JVM property `graft.reliableCkpt`,
   * which wins, so an in-process A/B can toggle per-phase) switches every
-  * pin site to reliable `Dataset.checkpoint()` against the cluster's
-  * checkpoint dir (`SPARK_GRAFT_CKPT_DIR` / `graft.ckptDir`, or
-  * `spark.sparkContext.setCheckpointDir` if already set; falls back to a
-  * temp dir deleted at JVM exit; on a real cluster use a DFS path). Reliable
+  * pin site to reliable `Dataset.checkpoint()` against the context's
+  * checkpoint dir (Spark's `spark.checkpoint.dir`, read at context start,
+  * or `spark.sparkContext.setCheckpointDir`; falls back to a temp dir
+  * deleted at JVM exit; on a real cluster use a DFS path). Reliable
   * checkpoints survive executor loss — lost partitions re-READ the
   * checkpoint files instead of failing the query — at the price of one
   * extra computation of the pinned plan (Spark's checkpoint job runs
@@ -56,13 +56,9 @@ object Ckpt {
 
   private def ensureCheckpointDir(ds: Dataset[_]): Unit = {
     val sc = ds.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty) {
-      val dir = sys.props.get("graft.ckptDir")
-        .orElse(sys.env.get("SPARK_GRAFT_CKPT_DIR"))
-        .getOrElse(Scratch.deleteAtExit(java.nio.file.Files
-          .createTempDirectory("graft-reliable-ckpt").toFile).toString)
-      sc.setCheckpointDir(dir)
-    }
+    if (sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir(Scratch.deleteAtExit(java.nio.file.Files
+        .createTempDirectory("graft-reliable-ckpt").toFile).toString)
   }
 
   implicit class PinOps[T](private val ds: Dataset[T]) extends AnyVal {

@@ -9,11 +9,14 @@ package graft
   *     -q "SELECT l_returnflag, count(*) AS c FROM lineitem GROUP BY 1" \
   *     -o /tmp/out.csv
   * }}}
+  *
+  * The master is Spark's own `spark.master` (`spark-submit --master`, or
+  * `-Dspark.master`), `local[32]` when unset.
   */
 object Main {
 
-  private[graft] def sessionPolicy(env: Map[String, String]): SessionPolicy =
-    SessionPolicy(env.getOrElse("SPARK_MASTER", "local[32]"),
+  private[graft] def sessionPolicy(env: Map[String, String], props: Map[String, String]): SessionPolicy =
+    SessionPolicy(props.getOrElse("spark.master", "local[32]"),
       env.getOrElse("SPARK_GRAFT_CPUS", "32"), Seq("spark.app.name" -> "graft"))
 
   private def parseArgs(args: Array[String]): Map[String, String] = {
@@ -41,7 +44,7 @@ object Main {
     val output = parsed.getOrElse("output",
       throw new IllegalArgumentException("missing required -o/--output"))
 
-    val spark = sessionPolicy(sys.env).build()
+    val spark = sessionPolicy(sys.env, sys.props.toMap).build()
     try Engine.export(spark, url, query, output)
     finally spark.stop()
   }

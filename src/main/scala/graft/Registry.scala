@@ -21,12 +21,12 @@ import graft.operators._
 final case class RegisteredQuery(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object Registry {
 
   private def q(name: String, fn: (SparkSession, String) => DataFrame, oracle: String) =
-    RegisteredQuery(name, fn, Some(oracle))
+    RegisteredQuery(name, fn, oracle)
 
   /** DuckDB text for the 60-bit value of 15 hex digits of column `h`
     * starting at 1-based position `start` — the oracle-side twin of
@@ -1102,5 +1102,5 @@ object Registry {
     all.map(r => r.name -> r.fn).toMap
 
   def oracleSql: Map[String, String] =
-    all.flatMap(r => r.oracle.map(r.name -> _)).toMap
+    all.map(r => r.name -> r.oracle).toMap
 }

@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
-/** Test-corpus table access. One parquet file per table under a
-  * scale-factor directory (see TESTDATA.md). Parquet is self-describing,
+/** Table-file access: the test corpus (one parquet file per table under a
+  * scale-factor directory, see TESTDATA.md) and, through [[Tables.read]],
+  * every table the engine's file sources register. Parquet is self-describing,
   * so unlike the reference's per-backend schema mapping
   * (reference src/db/conversion.rs:1-68) no type plumbing is needed here —
   * Spark's parquet reader supplies the schema and pushes filters/pruning
@@ -54,9 +57,49 @@ object Tables {
 
   private val warnedConfs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, "parquet", s"$dir/$name.parquet")
+
+  /** Read one table file (or partitioned table directory) at `path`: the one
+    * table read, behind both [[apply]] and the engine's view registration
+    * (`Source.Files.registerViews`). It sets the read confs
+    * ([[ensureNanosReadable]]), loads the path (csv with a header row and
+    * inferred types, the csv sink's layout), rebuilds timestamps
+    * ([[normalizeTimestamps]]) and, in the chaos tier, fails first task
+    * attempts ([[injectChaos]]; an identity otherwise). */
+  def read(spark: SparkSession, format: String, path: String): DataFrame = {
     ensureNanosReadable(spark)
-    injectChaos(normalizeTimestamps(spark.read.parquet(s"$dir/$name.parquet")))
+    val reader = format match {
+      case "csv" => spark.read.option("header", "true").option("inferSchema", "true")
+      case _     => spark.read
+    }
+    val df = reader.format(format).load(path)
+    val nanos = if (format == "parquet") nanosColumns(spark, df) else Set.empty[String]
+    injectChaos(normalizeTimestamps(df, nanos))
+  }
+
+  /** The top-level columns of a parquet read that its footer types
+    * TIMESTAMP(NANOS) — the columns `nanosAsLong` reads as plain longs.
+    * Only that footer annotation tells such a column from a BIGINT, so it is
+    * read (from the first input file, driver-side, no Spark job) only when
+    * the schema has a long column at all. */
+  private[graft] def nanosColumns(spark: SparkSession, df: DataFrame): Set[String] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import scala.jdk.CollectionConverters._
+    if (!df.schema.exists(_.dataType == LongType)) Set.empty
+    else df.inputFiles.headOption.fold(Set.empty[String]) { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf()))
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.filter {
+        _.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        }
+      }.map(_.getName).toSet
+      finally reader.close()
+    }
   }
 
   /** Chaos-injection mode (`SPARK_GRAFT_CHAOS` set): every FIRST attempt
@@ -87,8 +130,10 @@ object Tables {
     * so far, and every operator expects one type: TIMESTAMP in µs.
     *
     *  - TIMESTAMP(NANOS) (read as raw longs under the legacy conf above):
-    *    the `ts` column is rebuilt into a µs timestamp; the ns → µs
-    *    truncation is exactly what DuckDB does reading the same file.
+    *    each column in `nanos` ([[nanosColumns]]) is rebuilt into a µs
+    *    timestamp; the ns → µs truncation is exactly what DuckDB does
+    *    reading the same file. Any other long column — a BIGINT `ts` in a
+    *    json file or an unannotated parquet INT64 — stays a long.
     *  - Unannotated TIMESTAMP(MICROS) (isAdjustedToUTC=false), which Spark 4
     *    infers as TIMESTAMP_NTZ: converted to TIMESTAMP by treating the wall
     *    clock as UTC. `timestampdiff` from the NTZ epoch is
@@ -98,33 +143,17 @@ object Tables {
     *    whose epoch_us equals exactly these micros, so oracle comparisons
     *    are unaffected by the annotation drift.
     *
-    * Applied on every read path (Tables, the engine's view registration, the
-    * file sources, and the streaming event reader) so timestamps have one
-    * type everywhere. */
-  def normalizeTimestamps(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.expr
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+    * Applied by [[read]] and by the streaming event reader, so timestamps
+    * have one type everywhere. */
+  def normalizeTimestamps(df: DataFrame, nanos: Set[String]): DataFrame =
     df.schema.fields.foldLeft(df) { (acc, f) =>
       f.dataType match {
-        case LongType if f.name == "ts" =>
-          acc.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
+        case LongType if nanos.contains(f.name) =>
+          acc.withColumn(f.name, expr(s"timestamp_micros(`${f.name}` DIV 1000)"))
         case TimestampNTZType =>
           acc.withColumn(f.name, expr(
             s"timestamp_micros(timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', `${f.name}`))"))
         case _ => acc
       }
     }
-  }
-
-  /** Run SQL text over the corpus in `dir` (the engine's verbatim-SQL path,
-    * ≈ reference src/main.rs:29): the tables the text names register as
-    * temp views through [[apply]] — chaos injection included — and every
-    * table registers when [[graft.sources.Referenced.tables]] cannot tell
-    * which are named. */
-  def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
-    val named = graft.sources.Referenced.tables(spark, text, names)
-    names.filter(n => named.forall(_.contains(n)))
-      .foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-    spark.sql(text)
-  }
 }

@@ -44,12 +44,16 @@ object Dedup {
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy("keep_id")
 
-  /** Fingerprint dedup: md5 of whitespace-normalized lowercase text. The
-    * fingerprint, not the document, is the shuffle key — at 100 TB that is
-    * 16 bytes/row instead of the full text. */
+  /** A document's fingerprint: md5 of its whitespace-normalized lowercase
+    * text (NULL for NULL text). */
+  def textFingerprint(text: Column): Column = md5(lower(regexp_replace(text, "\\s+", " ")))
+
+  /** Fingerprint dedup on [[textFingerprint]]. The fingerprint, not the
+    * document, is the shuffle key — at 100 TB that is 16 bytes/row instead
+    * of the full text. */
   def fingerprint(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
-      .select(col("doc_id"), md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("fp"))
+      .select(col("doc_id"), textFingerprint(col("text")).as("fp"))
       .groupBy("fp")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy("keep_id")

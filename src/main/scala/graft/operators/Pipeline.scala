@@ -65,7 +65,7 @@ object Pipeline {
         col("doc_id"), col("text"),
         size(toks).cast("long").as("n_tokens"),
         col("quality"), col("pred_lang"))
-      .withColumn("fp", md5(lower(regexp_replace(col("text"), "\\s+", " "))))
+      .withColumn("fp", Dedup.textFingerprint(col("text")))
       .groupBy("fp")
       .agg(
         min("doc_id").as("keep_id"),

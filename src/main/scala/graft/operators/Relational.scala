@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.Source
 
 /** The relational operator surface.
   *
@@ -144,7 +145,7 @@ object Relational {
 
   /** GROUPING SETS via the SQL front-end (the engine's verbatim-SQL path). */
   def q10GroupingSets(s: SparkSession, d: String): DataFrame = {
-    Tables.sql(s, d,
+    Source.Files("parquet", d).load(s,
       """SELECT l_returnflag, l_linestatus, count(*) AS n
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
@@ -468,7 +469,7 @@ object Relational {
     * outer aggregate join (no per-row execution; same query text runs on
     * the oracle). Raw max/count outputs, so no float arithmetic at all. */
   def q30CorrelatedSubquery(s: SparkSession, d: String): DataFrame = {
-    Tables.sql(s, d,
+    Source.Files("parquet", d).load(s,
       """SELECT c_custkey,
         |       (SELECT max(o_totalprice) FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_order,
         |       (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders
@@ -487,7 +488,7 @@ object Relational {
     * one IEEE division computed identically by both engines; a plain
     * double `avg()` would also be partition-order-dependent. */
   def q46AvgQtySubquery(s: SparkSession, d: String): DataFrame = {
-    Tables.sql(s, d,
+    Source.Files("parquet", d).load(s,
       """SELECT l_returnflag, count(*) AS n_small,
         |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS small_revenue
         |FROM lineitem l
@@ -831,7 +832,7 @@ object Relational {
     * the lateral into a ranked window join — per-group top-k without a
     * driver loop; the same text runs on the oracle. */
   def q45LateralTopN(s: SparkSession, d: String): DataFrame = {
-    Tables.sql(s, d,
+    Source.Files("parquet", d).load(s,
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
         |FROM customer c,
         |LATERAL (SELECT o_orderkey, o_totalprice FROM orders o

@@ -53,7 +53,6 @@ object Source {
       * checked whole — no tables, or a file and a directory table sharing a
       * name, fail whatever the query names. */
     def registerViews(spark: SparkSession, query: String): Unit = {
-      graft.Tables.ensureNanosReadable(spark)
       val ext = "." + fileExt.getOrElse(format)
       val entries = Option(new File(dir).listFiles()).getOrElse(Array.empty[File])
       val files = entries.filter(f => f.isFile && f.getName.toLowerCase(java.util.Locale.ROOT).endsWith(ext))
@@ -79,16 +78,9 @@ object Source {
       require(dups.isEmpty,
         s"ambiguous table name(s) ${dups.mkString(", ")} under $dir: " +
           "a file table and a directory table share a view name")
-      def reader = format match {
-        // header-on matches the reference's CSV sink default
-        // (reference src/lib.rs:114-123), making round-trips symmetric.
-        case "csv" => spark.read.option("header", "true").option("inferSchema", "true")
-        case _     => spark.read
-      }
       val named = Referenced.tables(spark, query, tables.map(_._1))
       tables.filter { case (n, _) => named.forall(_.contains(n)) }.foreach { case (n, f) =>
-        graft.Tables.normalizeTimestamps(reader.format(format).load(f.getAbsolutePath))
-          .createOrReplaceTempView(n)
+        graft.Tables.read(spark, format, f.getAbsolutePath).createOrReplaceTempView(n)
       }
     }
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   StreamingQuery, Trigger}
 
 import graft.{Scratch, Tables}
+import graft.operators.Dedup
 
 /** Structured Streaming twins of the batch event operators
   * (graft.operators.Events). The aggregation expressions are byte-for-byte
@@ -25,13 +26,13 @@ object StreamingOps {
     * in production this is a directory receiving new files / Kafka). */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
     Tables.ensureNanosReadable(spark)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val batch = spark.read.parquet(s"$dir/events.parquet")
     // glob, not a bare file path: FileStreamSource requires basePath to be a
     // directory and derives it from the glob's parent
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events.*")
+    val raw = spark.readStream.schema(batch.schema).parquet(s"$dir/events.*")
     // same nanos-long / TIMESTAMP_NTZ drift handling as every batch read
     // (withColumn conversions work identically on a streaming DataFrame)
-    Tables.normalizeTimestamps(raw)
+    Tables.normalizeTimestamps(raw, Tables.nanosColumns(spark, batch))
   }
 
   /** Watermarked tumbling-window counts (streaming twin of
@@ -195,8 +196,7 @@ object StreamingOps {
     if (batchId <= committedBatchId(fpDir)) return // replayed batch
     import org.apache.spark.sql.expressions.Window
     val s = batch.sparkSession
-    val withFp = batch.withColumn("fp",
-      md5(lower(regexp_replace(col("text"), "\\s+", " ")))) // ≡ Dedup.fingerprint
+    val withFp = batch.withColumn("fp", Dedup.textFingerprint(col("text")))
     val w = Window.partitionBy("fp").orderBy("doc_id")
     val inBatch = withFp
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
@@ -253,7 +253,7 @@ object StreamingOps {
     // eager) before the staging tree is deleted
     val result = s.read.parquet(outDir)
       .select(
-        md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("fp"),
+        Dedup.textFingerprint(col("text")).as("fp"),
         col("doc_id").as("keep_id"))
       .pin()
     result.orderBy("keep_id")
@@ -883,7 +883,6 @@ object StreamingOps {
   def lshBucketUpdates(docs: DataFrame)(
       implicit spark: SparkSession): Dataset[LshBucketSnapshot] = {
     import spark.implicits._
-    import graft.operators.Dedup
     // shared batch signing path (kernel + NULL-text filter): without the
     // filter NULL-text docs would all share a constant signature and pair
     // with each other, a stream-only artifact
@@ -922,7 +921,6 @@ object StreamingOps {
   def sigGroupUpdates(docs: DataFrame)(
       implicit spark: SparkSession): Dataset[SigGroupAssign] = {
     import spark.implicits._
-    import graft.operators.Dedup
     val sigs = Dedup.minhashSignatures(docs) // ≡ batch (see lshBucketUpdates)
     sigs.select(
       Dedup.sigKeyColumn.as("sigkey"),

@@ -48,21 +48,15 @@ object ExecLossStTier {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = ExecLossHarness.clusterSession(Map(ProviderKey -> RocksDb))
 
-    import graft.streaming.StreamingOps
-    // All eight registered streaming harnesses, solo shape. st2-st5/st7/st8
-    // exercise built-in stateful operators (their per-partition state is
-    // what RocksDB holds); st1/st6 are the foreachBatch ingest shapes whose
-    // exactly-once story is the parquet fp-store, killed here for the same
-    // executor-loss contract.
-    val rows: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      ("st1_stream_ingest_dedup", StreamingOps.dedupIngestKeepList _),
-      ("st2_stream_sessionization", StreamingOps.sessionizationFromStream _),
-      ("st3_stream_closed_sessions", StreamingOps.closedSessionsFromStream _),
-      ("st4_stream_interval_join", StreamingOps.intervalPairsFromStream _),
-      ("st5_stream_forward_fill", StreamingOps.forwardFillFromStream _),
-      ("st6_stream_lsh_pairs", StreamingOps.lshPairsFromStream _),
-      ("st7_stream_dedup_watermark", StreamingOps.dedupWithinWatermarkFromStream _),
-      ("st8_stream_closed_windows", StreamingOps.closedTumblingFromStream _))
+    // All eight registered streaming harnesses, solo shape, under their
+    // Registry names. st2-st5/st7/st8 exercise built-in stateful operators
+    // (their per-partition state is what RocksDB holds); st1/st6 are the
+    // foreachBatch ingest shapes whose exactly-once story is the parquet
+    // fp-store, killed here for the same executor-loss contract.
+    val rows: Seq[(String, (SparkSession, String) => DataFrame)] =
+      graft.Registry.all.map(_.name).sorted.flatMap { name =>
+        graft.streaming.StFamily.members.get(name.takeWhile(_ != '_')).map(name -> _)
+      }
 
     require(waitForExecutors(2), s"expected 2 executor JVMs, saw ${executorPids()}")
     val h = new ExecLossHarness(spark, sfDir, artifact)

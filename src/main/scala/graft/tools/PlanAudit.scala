@@ -40,11 +40,12 @@ import org.apache.spark.sql.execution.window.WindowExec
   */
 object PlanAudit {
 
-  /** Queries whose fn runs eager jobs and returns a materialized tail —
-    * mirrors the eagerConstruction sets in ShuffleBudgetSpec /
-    * ScanPruningSpec plus the whole streaming family (kept in sync by
-    * PlanAuditSpec's cross-check is not needed: a drift here only
-    * mislabels `materialized`, never miscounts). */
+  /** Queries whose fn runs eager jobs and returns a materialized tail:
+    * the eight rows below plus every st row ([[isMaterialized]]). It is
+    * wider than the plan-shape specs' `eagerConstruction` set, which skips
+    * only the rows whose visible plan those sweeps cannot judge — bp3 and
+    * st2–st8 are in this set but still swept there. Nothing keeps the two
+    * in step: a drift here only mislabels `materialized`, never miscounts. */
   private val materialized: Set[String] = Set(
     "ss4_ivf_kmeans", "ss6_pq_topk", "ss5_ivf_persisted",
     "bp1_bpe_merges", "bp2_bpe_encode", "bp3_bpe_merges_distributed",

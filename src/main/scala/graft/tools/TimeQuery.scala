@@ -9,20 +9,19 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * iterated stage with stable source compiles once (r16: PqArgminCells in
   * ss4/ss6). Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.TimeQuery
   * name… prints `TIMEQ <name> <wall> s compiles=<n>` per query.
+  *
+  * Shuffle partitions default to the thread count (the bench's sf0.1
+  * contract). The `SPARK_GRAFT_CONF_*` passthrough decouples them for
+  * scale probes — `env 'SPARK_GRAFT_CONF_spark.sql.shuffle.partitions=N'`:
+  * at 1000x data, partitions=cpus leaves ~19M rows per shuffle partition
+  * and the sorts/aggs go spill-bound, while a cluster sizes partitions
+  * with data (or lets AQE coalesce DOWN from a high initial count).
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_PARTS decouples shuffle partitions from the thread count
-    // for scale probes: the bench pins partitions=cpus (the sf0.1 contract),
-    // but at 1000x data that leaves ~19M rows per shuffle partition and the
-    // sorts/aggs go spill-bound — a cluster sizes partitions with data (or
-    // lets AQE coalesce DOWN from a high initial count), and this knob
-    // measures exactly that effect on one query at a time.
-    val parts = sys.env.get("SPARK_GRAFT_PARTS")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(cpus.toInt)
-    val spark = graft.SessionPolicy(s"local[$cpus]", parts.toString).build()
+    val spark = graft.SessionPolicy(s"local[$cpus]", cpus, passthrough = true).build()
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       graft.Registry.queries(name)(spark, sfDir)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sinks.Sinks
-import graft.sources.{ReferenceTypeMap, Source}
+import graft.sources.Source
 
 class EngineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -125,8 +125,7 @@ class EngineSpec extends AnyFunSuite {
     // On a heterogeneous fleet, executor/driver JVMs inherit host locales.
     // Under tr-TR, locale-sensitive case mapping breaks any dispatch token
     // containing i/I: "integer".toUpperCase == "İNTEGER" (dotted capital)
-    // and "FILE".toLowerCase == "fıle" (dotless i) — so the type map would
-    // return None (⇒ reference-parity unimplemented!) and scheme/extension
+    // and "FILE".toLowerCase == "fıle" (dotless i) — so scheme/extension
     // dispatch would misroute. All dispatch sites case-fold with
     // Locale.ROOT; this pins it under a live Turkish default locale.
     // NOTE: Locale.setDefault mutates PROCESS-GLOBAL state. Safe only
@@ -138,9 +137,6 @@ class EngineSpec extends AnyFunSuite {
     java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
     try {
       assert("i".toUpperCase != "I", "precondition: tr locale is active")
-      assert(ReferenceTypeMap.sqlite("integer").contains(LongType))
-      assert(ReferenceTypeMap.mysql("int24").contains(IntegerType))
-      assert(ReferenceTypeMap.postgres("time").contains(IntegerType))
       assert(Sinks.fromPath("OUT.JSONL") == Sinks.Json)
       assert(Sinks.fromPath("X.CSV") == Sinks.Csv)
       // SQLITE contains an I: under tr the scheme would lowercase to
@@ -171,22 +167,6 @@ class EngineSpec extends AnyFunSuite {
       assert("%.2f s".formatLocal(java.util.Locale.ROOT, 1.5) == "1.50 s",
         "diag seconds must keep the ASCII dot under any default locale")
     } finally java.util.Locale.setDefault(saved)
-  }
-
-  // --- type map (reference src/db/conversion.rs, SURVEY §1.3) ---
-
-  test("reference type map matches conversion.rs") {
-    assert(ReferenceTypeMap.postgres("INT2").contains(ShortType))
-    assert(ReferenceTypeMap.postgres("NUMERIC").contains(DoubleType)) // lossy parity
-    assert(ReferenceTypeMap.postgres("TIMESTAMP").contains(TimestampNTZType))
-    assert(ReferenceTypeMap.postgres("TEXT").isEmpty) // unimplemented! in reference
-    assert(ReferenceTypeMap.mysql("LONG").contains(IntegerType))
-    assert(ReferenceTypeMap.mysql("BLOB").contains(StringType)) // BLOB-as-text parity
-    assert(ReferenceTypeMap.sqlite("INTEGER").contains(LongType))
-    assert(ReferenceTypeMap.sqlite("REAL").contains(DoubleType))
-    assert(ReferenceTypeMap.sqlite("bogus").isEmpty)
-    val s = StructType(Seq(StructField("a", IntegerType, nullable = false)))
-    assert(ReferenceTypeMap.allNullable(s).forall(_.nullable))
   }
 
   // --- end-to-end export through each sink ---
@@ -331,6 +311,48 @@ class EngineSpec extends AnyFunSuite {
         Engine.query(spark, s"parquet://$dir", "SELECT count(*) AS n FROM events").collect()
       }
       assert(e.getMessage.contains("ambiguous table name"), e.getMessage)
+    }
+  }
+
+  // --- BIGINT vs TIMESTAMP(NANOS) columns: only the parquet footer tells them apart ---
+
+  test("a BIGINT ts column exports unchanged from json and parquet tables") {
+    def exported(url: String): List[String] = withOut("csv") { out =>
+      Engine.export(spark, url, "SELECT id, ts FROM t", out)
+      scala.io.Source.fromFile(out).getLines().toList
+    }
+    val expected = List("id,ts", "1,1700000000000")
+    Scratch.withTree("graft-json-ts") { dir =>
+      Files.writeString(java.nio.file.Paths.get(s"$dir/t.json"), """{"id":1,"ts":1700000000000}""" + "\n")
+      assert(exported(s"json://$dir") == expected)
+    }
+    Scratch.withTree("graft-parquet-ts") { dir =>
+      Sinks.writeSingleFile(spark.sql("SELECT 1L AS id, 1700000000000L AS ts"), s"$dir/t.parquet")
+      assert(exported(s"parquet://$dir") == expected)
+    }
+  }
+
+  test("a parquet TIMESTAMP(NANOS) column reads as a µs timestamp; a BIGINT beside it stays a long") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    Scratch.withTree("graft-nanos-ts") { dir =>
+      val schema = Types.buildMessage()
+        .required(INT64).named("id")
+        .required(INT64).as(LogicalTypeAnnotation.timestampType(false,
+          LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+        .named("t")
+      val conf = spark.sparkContext.hadoopConfiguration
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/t.parquet"), conf)).withType(schema).build()
+      try writer.write(new SimpleGroupFactory(schema).newGroup()
+        .append("id", 1L).append("ts", 1700000000123456789L))
+      finally writer.close()
+      val row = Engine.query(spark, s"parquet://$dir", "SELECT id, unix_micros(ts) AS us FROM t").first()
+      assert(row.getLong(0) == 1L && row.getLong(1) == 1700000000123456L)
+      assert(Tables(spark, dir.getPath, "t").schema.map(_.dataType) == Seq(LongType, TimestampType))
     }
   }
 

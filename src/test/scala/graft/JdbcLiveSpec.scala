@@ -65,6 +65,11 @@ class JdbcLiveSpec extends AnyFunSuite {
     assert(rows.length == 10)
     assert(rows.head.getInt(0) == 1 && rows.head.isNullAt(1) && rows.head.getInt(2) == 10)
     assert(rows(1).getString(1) == "acct_2")
+    // column types map through Spark's JDBC dialect: NUMERIC reads as an
+    // exact DECIMAL (the reference's table maps it to a lossy Float64)
+    val numeric = Source.fromUrl(s"jdbc:derby:$dbPath")
+      .load(spark, "SELECT CAST(amount AS NUMERIC(10,2)) AS n FROM payment")
+    assert(numeric.schema.map(_.dataType) == Seq(org.apache.spark.sql.types.DecimalType(10, 2)))
   }
 
   test("partitioned jdbc read: stride options from the URL produce N real partitions") {

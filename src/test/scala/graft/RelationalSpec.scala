@@ -3,12 +3,17 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.Source
+
 /** Relational operators: every registered query runs on sf0.001, plus
   * DataFrame-API-vs-Spark-SQL cross-checks for representative operators
   * (two independent plan constructions must agree exactly). */
 class RelationalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
+
+  /** SQL text over the corpus through the engine's verbatim-SQL path. */
+  private def sqlText(text: String): DataFrame = Source.Files("parquet", sf).load(spark, text)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -23,7 +28,7 @@ class RelationalSpec extends AnyFunSuite {
 
   private def crossCheck(name: String, sql: String): Unit = {
     val api = rows(Registry.queries(name)(spark, sf))
-    val viaSql = rows(Tables.sql(spark, sf, sql))
+    val viaSql = rows(sqlText(sql))
     assert(api == viaSql, s"$name: DataFrame API != Spark SQL")
   }
 
@@ -105,7 +110,7 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("q24 portable HLL within error bounds of exact; built-in HLL++ agrees") {
-    val exact = Tables.sql(spark, sf,
+    val exact = sqlText(
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS p,
         |count(DISTINCT l_orderkey) AS o FROM lineitem GROUP BY 1""".stripMargin)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -121,7 +126,7 @@ class RelationalSpec extends AnyFunSuite {
         s"${r.getString(0)}: portable HLL nd_order ${r.getLong(2)} vs exact $o")
     }
     // the native HLL++ sketch stays exercised: same bound vs exact
-    Tables.sql(spark, sf,
+    sqlText(
       """SELECT l_returnflag, approx_count_distinct(l_partkey) AS p,
         |approx_count_distinct(l_orderkey) AS o FROM lineitem GROUP BY 1""".stripMargin)
       .collect().foreach { r =>
@@ -138,7 +143,7 @@ class RelationalSpec extends AnyFunSuite {
     // and 0.022. A value bound would conflate sampling error with the
     // price distribution's local slope.
     def rankOf(flag: String, v: Double): Double =
-      Tables.sql(spark, sf,
+      sqlText(
         s"""SELECT CAST(count(CASE WHEN l_extendedprice <= $v THEN 1 END) AS DOUBLE)
            |/ count(*) FROM lineitem WHERE l_returnflag = '$flag'""".stripMargin)
         .collect()(0).getDouble(0)
@@ -154,7 +159,7 @@ class RelationalSpec extends AnyFunSuite {
     // on ~2000-row groups is near-exact, so a tight value bound holds
     val exact = Registry.queries("q31_percentiles")(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    Tables.sql(spark, sf,
+    sqlText(
       """SELECT l_returnflag,
         |approx_percentile(l_extendedprice, 0.5, 1000) AS ap50,
         |approx_percentile(l_extendedprice, 0.95, 1000) AS ap95
@@ -176,7 +181,7 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("corr stats from decimal sums agree with Spark's native corr to float tolerance") {
-    val native = Tables.sql(spark, sf,
+    val native = sqlText(
       """SELECT l_returnflag, corr(l_quantity, l_extendedprice) AS c,
         |stddev_samp(l_quantity) AS sd FROM lineitem GROUP BY l_returnflag""".stripMargin)
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap

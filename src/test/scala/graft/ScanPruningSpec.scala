@@ -40,13 +40,6 @@ class ScanPruningSpec extends AnyFunSuite {
       case f: FileSourceScanExec => Seq(f)
     }.flatten ++ p.subqueries.flatMap(scans)
 
-  private val eagerConstruction = Set(
-    "ss4_ivf_kmeans", "ss6_pq_topk", "ss5_ivf_persisted",
-    "bp1_bpe_merges", "bp2_bpe_encode", "dd8_dup_clusters", "gr1_neardup_pagerank",
-    // st1's construction stages files and runs the whole ingest stream;
-    // its returned plan is a plain scan+project+sort over the survivors
-    "st1_stream_dedup_ingest")
-
   /** Queries allowed to read documents.text — each one consumes the bytes
     * (tokenizes, fingerprints, chunks, scores, or uses them as the
     * multimodal payload substrate). Everything else that touches documents
@@ -84,7 +77,7 @@ class ScanPruningSpec extends AnyFunSuite {
     * the text-pruning ratchet and the determinism ratchet below (planning
     * 126 queries costs ~a minute; doing it twice would be pure waste). */
   private lazy val visiblePlans: Seq[(String, SparkPlan)] = Registry.all
-    .filterNot(r => eagerConstruction.contains(r.name))
+    .filterNot(r => SparkTestSession.eagerConstruction.contains(r.name))
     .map(r => r.name -> r.fn(spark, sf).queryExecution.executedPlan)
 
   test("only allowlisted queries read documents.text at the scan") {

@@ -27,12 +27,14 @@ class SessionPolicySpec extends AnyFunSuite {
     assert(tier.confs(clusterEnv) == shared + ("spark.sql.shuffle.partitions" -> "8"))
   }
 
-  test("Main: SPARK_MASTER (default local[32]), app name graft; tier env ignored") {
+  test("Main: spark.master (default local[32]), app name graft; tier env ignored") {
     val mainConfs = shared + ("spark.app.name" -> "graft")
-    assert(Main.sessionPolicy(Map.empty).master == "local[32]")
-    assert(Main.sessionPolicy(Map.empty).confs(Map.empty) ==
+    assert(Main.sessionPolicy(Map.empty, Map.empty).master == "local[32]")
+    assert(Main.sessionPolicy(Map.empty, Map.empty).confs(Map.empty) ==
       mainConfs + ("spark.sql.shuffle.partitions" -> "32"))
-    val tier = Main.sessionPolicy(clusterEnv + ("SPARK_MASTER" -> "local[2]"))
+    // the master spark-submit --master sets; the env name no longer counts
+    assert(Main.sessionPolicy(Map("SPARK_MASTER" -> "local[3]"), Map.empty).master == "local[32]")
+    val tier = Main.sessionPolicy(clusterEnv, Map("spark.master" -> "local[2]"))
     assert(tier.master == "local[2]")
     assert(tier.confs(clusterEnv) == mainConfs + ("spark.sql.shuffle.partitions" -> "8"))
   }

@@ -98,16 +98,9 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }.flatten ++
       p.subqueries.flatMap(unpartitionedWindows)
 
-  private val eagerConstruction = Set(
-    "ss4_ivf_kmeans", "ss6_pq_topk", "ss5_ivf_persisted",
-    "bp1_bpe_merges", "bp2_bpe_encode", "dd8_dup_clusters", "gr1_neardup_pagerank",
-    // st1's construction stages files and runs the whole ingest stream;
-    // its returned plan is a plain scan+project+sort over the survivors
-    "st1_stream_dedup_ingest")
-
   test("no registered query plans a single-partition window") {
     val offenders = Registry.all
-      .filterNot(r => eagerConstruction.contains(r.name))
+      .filterNot(r => SparkTestSession.eagerConstruction.contains(r.name))
       .flatMap { r =>
         val plan = r.fn(spark, sf).queryExecution.executedPlan
         if (unpartitionedWindows(plan).nonEmpty) Seq(r.name) else Nil

@@ -14,4 +14,14 @@ object SparkTestSession {
 
   /** Hermetic small corpus (read-only). */
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Registry rows whose fn runs eager jobs and returns a plan over the
+    * materialized result; the plan-shape sweeps (ScanPruningSpec,
+    * ShuffleBudgetSpec) skip them. */
+  val eagerConstruction: Set[String] = Set(
+    "ss4_ivf_kmeans", "ss6_pq_topk", "ss5_ivf_persisted",
+    "bp1_bpe_merges", "bp2_bpe_encode", "dd8_dup_clusters", "gr1_neardup_pagerank",
+    // st1's construction stages files and runs the whole ingest stream;
+    // its returned plan is a plain scan+project+sort over the survivors
+    "st1_stream_dedup_ingest")
 }
