@@ -25,14 +25,13 @@ object StreamingOps {
   /** File-stream over the events table (glob on the single parquet file;
     * in production this is a directory receiving new files / Kafka). */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    Tables.ensureNanosReadable(spark)
-    val batch = spark.read.parquet(s"$dir/events.parquet")
+    val (schema, nanos) = Tables.parquetSchema(spark, s"$dir/events.parquet")
     // glob, not a bare file path: FileStreamSource requires basePath to be a
     // directory and derives it from the glob's parent
-    val raw = spark.readStream.schema(batch.schema).parquet(s"$dir/events.*")
+    val raw = spark.readStream.schema(schema).parquet(s"$dir/events.*")
     // same nanos-long / TIMESTAMP_NTZ drift handling as every batch read
     // (withColumn conversions work identically on a streaming DataFrame)
-    Tables.normalizeTimestamps(raw, Tables.nanosColumns(spark, batch))
+    Tables.normalizeTimestamps(raw, nanos)
   }
 
   /** Watermarked tumbling-window counts (streaming twin of
@@ -827,7 +826,7 @@ object StreamingOps {
     * them in (mtime, path) order, which [[restampInOrder]] makes range
     * order. */
   private def stagedStream(s: SparkSession, inDir: String): DataFrame =
-    s.readStream.schema(s.read.parquet(stagedPath(inDir, 0)).schema)
+    s.readStream.schema(Tables.parquetSchema(s, stagedPath(inDir, 0))._1)
       .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet/*.parquet")
 
   /** Re-stamp staged files' mtimes in path order with strictly increasing

@@ -396,18 +396,38 @@ class EngineSpec extends AnyFunSuite {
     finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
-  test("view registration reads only the tables a query names: one job per table") {
-    // parquet schema inference is one job per registered table; planning
-    // the query itself runs none
-    assert(jobsDuring(Engine.query(spark, s"parquet://$sf", "SELECT r_name FROM region")) == 1)
+  test("view registration reads only the tables a query names, with no Spark job") {
+    // each registered table is typed from its parquet footer on the driver
+    // (Tables.parquetSchema), and planning the query itself runs no job
+    assert(jobsDuring(Engine.query(spark, s"parquet://$sf", "SELECT r_name FROM region")) == 0)
     assert(jobsDuring(Engine.query(spark, s"parquet://$sf",
       """SELECT n_name, count(*) AS n FROM customer c
         |JOIN nation n ON c.c_nationkey = n.n_nationkey
         |JOIN region r ON n.n_regionkey = r.r_regionkey
-        |GROUP BY n_name""".stripMargin)) == 3)
+        |GROUP BY n_name""".stripMargin)) == 0)
     // a name the source lacks registers every table, as before
     assert(jobsDuring(intercept[AnalysisException](
-      Engine.query(spark, s"parquet://$sf", "SELECT * FROM no_such_table"))) == Tables.names.size)
+      Engine.query(spark, s"parquet://$sf", "SELECT * FROM no_such_table"))) == 0)
+  }
+
+  test("Tables over a 32-file table directory and building the event stream run no Spark job") {
+    Scratch.withTree("graft-stress-layout") { dir =>
+      // MakeStress' layout: one name.parquet/ directory of 32 part files
+      Tables(spark, sf, "lineitem").repartition(32).write.parquet(s"$dir/lineitem.parquet")
+      assert(jobsDuring(Tables(spark, dir.getPath, "lineitem")) == 0)
+    }
+    assert(jobsDuring(graft.streaming.StreamingOps.eventStream(spark, sf)) == 0)
+  }
+
+  test("an export leaves the caller's parquet read confs as they were") {
+    val session = spark.newSession()
+    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.inferTimestampNTZ.enabled")
+    val before = keys.map(session.conf.get)
+    withOut("parquet") { out =>
+      Engine.export(session, s"parquet://$sf", "SELECT event_id, ts FROM events", out)
+      assert(keys.map(session.conf.get) == before)
+      assert(session.read.parquet(out).schema("ts").dataType == TimestampType)
+    }
   }
 
   test("a corrupt table file fails only the queries that name it") {

@@ -138,11 +138,12 @@ class ScanPruningSpec extends AnyFunSuite {
   // ---- events.ts predicate pushdown, per parquet encoding generation ----
   //
   // The testdata's timestamp annotation has drifted across driver
-  // regenerations (TIMESTAMP(NANOS); unannotated MICROS read as NTZ;
-  // UTC-adjusted MICROS). Tables.ensureNanosReadable +
-  // normalizeTimestamps absorb all three for CORRECTNESS; these cases pin
-  // what each generation can PUSH into the scan, so a regeneration cannot
-  // silently turn every event query into a full scan.
+  // regenerations (TIMESTAMP(NANOS); unannotated MICROS, which Spark's
+  // default inference reads as NTZ; UTC-adjusted MICROS). Tables'
+  // footer schema (Tables.parquetSchema) + normalizeTimestamps absorb all
+  // three for CORRECTNESS; these cases pin what each generation can PUSH
+  // into the scan, so a regeneration cannot silently turn every event
+  // query into a full scan.
 
   private def pushedFor(dir: String): String = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -182,8 +183,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("current testdata generation: ts pushes where its encoding allows") {
     import org.apache.spark.sql.functions.col
-    Tables.ensureNanosReadable(spark)
-    val rawTs = spark.read.parquet(s"$sf/events.parquet").schema("ts").dataType
+    val rawTs = Tables.parquetSchema(spark, s"$sf/events.parquet")._1("ts").dataType
     if (rawTs == org.apache.spark.sql.types.LongType) {
       // NANOS generation: ts is rebuilt from a long, so a timestamp
       // comparison structurally cannot reach the scan — pin that the scan
