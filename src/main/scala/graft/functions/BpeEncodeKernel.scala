@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DataTypes}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** BPE encode kernel: apply a learned merge table to a whitespace-tokenized
@@ -15,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * 10× corpus the 12-pass chain is ~50 s of pure regex CPU, the top cost
   * of the whole bench. Encoding is a per-document sequential algorithm
   * with zero cross-row dependencies, so the right plan is the same narrow
-  * map with the per-row cost collapsed: this expression splits the text
+  * map with the per-row cost collapsed: this kernel splits the text
   * once and applies the merges in rank order over small symbol arrays (no
   * regex, no per-merge string rebuild of the full document).
   *
@@ -89,35 +85,4 @@ object BpeEncodeKernel {
       j += 1
     }
   }
-}
-
-/** Catalyst expression wrapping [[BpeEncodeKernel]]: the encoded symbol
-  * stream of a document, computed inside whole-stage codegen. The merge
-  * table is a per-query constant carried as a referenced object (it is
-  * learned before the encode plan is built), not a child expression. */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  private lazy val mergeArray: Array[Array[String]] =
-    merges.map(p => Array(p._1, p._2)).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DataTypes.StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = DataTypes.StringType
-
-  override def nullSafeEval(t: Any): Any =
-    BpeEncodeKernel.encode(t.asInstanceOf[UTF8String], mergeArray)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMerges", mergeArray, "java.lang.String[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeEncodeKernel.encode($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
-    copy(child = newChild)
-
-  override def prettyName: String = "bpe_encode"
 }

@@ -1,13 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DataTypes, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Non-overlapping left-to-right count of a constant `pattern` in a string
-  * column, as a codegen'd Catalyst expression.
+  * column, as a row kernel ([[Kernels.countOccurrences]]).
   *
   * Semantics are EXACTLY the replace trick the oracle keeps using —
   * `(length(s) − length(replace(s, p, ''))) / length(p)` — because
@@ -16,44 +12,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * restarting after each match). The trick, though, materializes a full
   * copy of the text per probed pattern; tx3/tx7 probe 6–12 patterns per
   * document, paying 6–12 text copies per row for counts that need zero
-  * allocation. This expression counts in place over the UTF8String.
+  * allocation. This kernel counts in place over the UTF8String.
   *
   * The hash-compare against the unchanged replace-form oracle proves the
   * equivalence on every document; CountOccurrencesPropSpec pins it on
-  * adversarial strings (overlapping candidates, repeats, unicode). */
-case class CountOccurrences(child: Expression, pattern: String)
-    extends UnaryExpression {
-
-  require(pattern.nonEmpty, "pattern must be non-empty")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DataTypes.StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = LongType
-
-  private lazy val patternUtf8: UTF8String = UTF8String.fromString(pattern)
-
-  override def nullSafeEval(s: Any): Any =
-    CountOccurrences.count(s.asInstanceOf[UTF8String], patternUtf8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pat", patternUtf8)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.CountOccurrences.count($c, (org.apache.spark.unsafe.types.UTF8String)$ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CountOccurrences =
-    copy(child = newChild)
-
-  override def prettyName: String = "count_occurrences"
-}
-
+  * adversarial strings (overlapping candidates, repeats, unicode).
+  */
 object CountOccurrences {
-  /** Called from generated code — keep the signature Java-friendly.
-    *
-    * Byte-wise in-place scan: UTF-8 is self-synchronizing (lead and
+  /** Byte-wise in-place scan: UTF-8 is self-synchronizing (lead and
     * continuation bytes occupy disjoint ranges), so a valid encoded
     * pattern can only byte-match at character boundaries — byte equality
     * IS character equality. This avoids both `UTF8String.indexOf` (whose

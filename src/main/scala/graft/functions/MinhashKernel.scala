@@ -2,11 +2,8 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature kernel with Kirsch–Mitzenmacher hash derivation:
@@ -27,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hex string there, the 60-bit halves come from the dd5-proven per-digit
   * hex parse, and the Mersenne-mod arithmetic is exact in HUGEINT.
   *
-  * Like [[WinnowKernel]] this runs as a codegen'd scalar kernel — one
+  * Like [[WinnowKernel]] this runs as a scalar kernel — one
   * static call per row inside whole-stage codegen, no per-(token, i)
   * interpreted HOF work, no boxing. The built-ins formulation
   * (`Dedup.signatureColumnsComposable`) is retained as the kernel's
@@ -87,30 +84,4 @@ object MinhashKernel {
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
-}
-
-/** Catalyst expression wrapping [[MinhashKernel]]: `array<bigint>` of the
-  * document's `numHashes` Kirsch–Mitzenmacher minhashes, computed inside
-  * whole-stage codegen. */
-case class MinhashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DataTypes.StringType && numHashes > 0) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument and positive numHashes, got " +
-        s"${child.dataType.catalogString}, numHashes=$numHashes")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    MinhashKernel.sign(t.asInstanceOf[UTF8String], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinhashKernel.sign($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashSignature =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_signature"
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{expr, lit, shiftrightunsigned}
-import org.apache.spark.sql.types.{DataType, DataTypes, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine-portable md5→integer idiom shared by the portable sketches
@@ -15,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * strpos parse ([[graft.Registry]].hexSlice) over its own `md5` hex
   * string, so the bit positions taken here must never drift per call site.
   *
-  * Since r08 the Spark side computes the value with a codegen'd kernel
+  * Since r08 the Spark side computes the value with a row kernel
   * ([[Md5Bits64]]) straight from the DIGEST BYTES: hex digit i of the md5
   * string is nibble i of the digest, so digits 1–16 ARE the first 8 bytes
   * big-endian — no 32-char hex string materialization, no base-16 conv
@@ -35,7 +31,7 @@ object PortableHash {
   /** The 16th (last-of-16) hex digit of md5(`input`) — simhash's 4-bit
     * tail beyond the 60-bit slice. ≡ `conv(substr(md5(input), 16, 1), 16,
     * 10)`. Shares ONE digest with [[md5Hex60]] on the same input:
-    * both build the identical [[Md5Bits64]] node, which whole-stage
+    * both build the identical [[Md5Bits64]] call, which whole-stage
     * codegen's subexpression elimination evaluates once. */
   def md5HexDigit16(input: String): Column =
     bits64(input).bitwiseAND(lit(15L))
@@ -43,44 +39,20 @@ object PortableHash {
   /** Hex digits 1–16 as one signed long (digest bytes 0–7, big-endian —
     * negative when digit 1 ≥ 8; consumers shift/mask, which is
     * sign-agnostic where it must be). */
-  private def bits64(input: String): Column =
-    org.apache.spark.sql.GraftShim.column(
-      Md5Bits64(org.apache.spark.sql.GraftShim.expression(expr(input))))
+  private def bits64(input: String): Column = Kernels.md5Bits64(expr(input))
 }
 
-/** Codegen'd kernel: the first 8 bytes of md5(string) as a big-endian
-  * long — the integer value of the digest's hex digits 1–16. One static
-  * call per row inside whole-stage codegen; deterministic, so identical
-  * nodes are shared by subexpression elimination (dd5 derives both its
-  * h60 and d15 from one digest). */
-case class Md5Bits64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DataTypes.StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(s: Any): Any =
-    Md5Bits64.bits64(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Bits64.bits64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Bits64 =
-    copy(child = newChild)
-
-  override def prettyName: String = "md5_bits64"
-}
-
+/** The first 8 bytes of md5(string) as a big-endian long — the integer
+  * value of the digest's hex digits 1–16 ([[Kernels.md5Bits64]]). One
+  * static call per row inside whole-stage codegen; deterministic, so
+  * identical calls are shared by subexpression elimination (dd5 derives
+  * both its h60 and d15 from one digest). */
 object Md5Bits64 {
   private val md = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** Called from generated code — Java-friendly signature. */
   def bits64(s: UTF8String): Long = {
     val d = md.get()
     d.reset()

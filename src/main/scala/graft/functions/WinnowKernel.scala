@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprint kernel (Schleimer et al., SIGMOD'03): hash every
@@ -18,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the per-doc window sort — ~40 M rows for a 50 k-doc corpus, the top cost
   * of the whole bench. Winnowing is a per-document sequential algorithm with
   * zero cross-row dependencies, so the 100 TB-correct plan is a narrow map:
-  * this expression computes the fingerprint set inside whole-stage codegen
+  * this kernel computes the fingerprint set inside whole-stage codegen
   * (one static call per row), and the only shuffle left in the query is the
   * output ordering. Measured ~5× on the sf0.1 corpus, more at scale.
   *
@@ -145,30 +142,4 @@ object WinnowKernel {
     }
     UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(mins, out))
   }
-}
-
-/** Catalyst expression wrapping [[WinnowKernel]]: `array<bigint>` of the
-  * document's distinct winnowing fingerprints, computed inside whole-stage
-  * codegen. */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DataTypes.StringType && k > 0 && w > 0) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument and positive k/w, got " +
-        s"${child.dataType.catalogString}, k=$k, w=$w")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    WinnowKernel.winnow(t.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WinnowKernel.winnow($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
-    copy(child = newChild)
-
-  override def prettyName: String = "winnow_fingerprints"
 }

@@ -131,12 +131,9 @@ object Bpe {
     * with no watermark or state — tokenize-at-ingest, the deployment shape
     * where the vocabulary is trained once and applied to every arriving
     * batch (StreamingSpec proves stream ≡ batch). */
-  def encodeWith(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.GraftShim
+  def encodeWith(docs: DataFrame, merges: Seq[(String, String)]): DataFrame =
     docs
-      .select(col("doc_id"),
-        GraftShim.column(graft.functions.BpeEncode(
-          GraftShim.expression(col("text")), merges)).as("sym"))
+      .select(col("doc_id"), graft.functions.Kernels.bpeEncode(col("text"), merges).as("sym"))
       .select(
         col("doc_id"),
         // zero-token contract (extreme tier): an empty symbol stream has 0
@@ -144,7 +141,6 @@ object Bpe {
         when(length(col("sym")) === 0, lit(0L))
           .otherwise(size(split(col("sym"), " ")).cast("long")).as("n_subwords"),
         md5(col("sym").cast("binary")).as("encoded_fp"))
-  }
 
   /** [[encodeCorpus]] in pure built-ins: the anchored-regex greedy
     * replacement chained once per merge. Correct and shuffle-free but
@@ -389,7 +385,7 @@ object Bpe {
         // form recompiled this stage every round (12 janino compilations
         // per run, measured via TimeQuery's compiles column), while string `contains`
         // needles ride the reference array and compile once (r16, the
-        // PqArgminCells lesson applied to the round loop).
+        // PQ kernel's codebook lesson applied to the round loop).
         val affected = cur.filter(col("sym").contains(lr) &&
           concat(lit(" "), col("sym"), lit(" ")).contains(" " + lr + " "))
         // ONE explode emits retractions (−freq over the old pairs) and

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Ckpt, Tables}
-import graft.functions.VectorFunctions
+import graft.functions.{Kernels, VectorFunctions}
 
 /** Deduplication operators for a training-data pipeline, on `documents`.
   *
@@ -161,15 +161,11 @@ object Dedup {
     * NULL-text docs are omitted, matching the historical explode+groupBy
     * form (explode of a NULL token array produced no rows) — the streaming
     * twins share this method so stream ≡ batch holds for NULL inputs too. */
-  def minhashSignatures(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftShim
+  def minhashSignatures(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        GraftShim.column(graft.functions.MinhashSignature(
-          GraftShim.expression(col("text")), NumHashes)).as("sigarr"))
+      .select(col("doc_id"), Kernels.minhashSignature(col("text"), NumHashes).as("sigarr"))
       .select(col("doc_id") +: (0 until NumHashes).map(i =>
         element_at(col("sigarr"), i + 1).as(s"h$i")): _*)
-  }
 
   /** The kernel's built-ins cross-validation twin: the identical
     * Kirsch–Mitzenmacher family folded with `transform`/`aggregate` HOFs
@@ -412,20 +408,18 @@ object Dedup {
     *
     * Winnowing is per-document sequential work with no cross-row
     * dependency, so the scale-correct plan is a narrow map: the
-    * [[graft.functions.WinnowFingerprints]] codegen kernel computes each
-    * doc's fingerprint set in one whole-stage-codegen call, and the only
+    * [[graft.functions.WinnowKernel]] computes each doc's fingerprint set
+    * in one static call inside whole-stage codegen, and the only
     * shuffle in the query is the output ordering. The composable
     * formulation ([[winnowFingerprintsComposable]]) shuffles one row per
     * corpus CHARACTER for its per-doc window sort — it is kept as the
     * kernel's cross-validation oracle (identical hash family ⇒ identical
     * output, asserted in DedupSpec). */
   def winnowFingerprints(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.GraftShim
     val docs = t(s, d, "documents").filter(length(col("text")) >= WinnowK + WinnowW - 1)
     docs.select(
         col("doc_id"),
-        explode(GraftShim.column(graft.functions.WinnowFingerprints(
-          GraftShim.expression(col("text")), WinnowK, WinnowW))).as("fp"))
+        explode(Kernels.winnowFingerprints(col("text"), WinnowK, WinnowW)).as("fp"))
       .orderBy("doc_id", "fp")
   }
 

@@ -409,13 +409,11 @@ object Pipeline {
       return train.groupBy("train_id").agg(countDistinct("sh").as("n_shared"))
         .limit(0).orderBy("train_id")
     val bloom = s.sparkContext.broadcast(holdout.stat.bloomFilter("sh", nHoldout, BloomFpp))
-    // codegen'd probe (graft.functions.BloomMightContainString): a
-    // row-lambda here would deserialize every train shingle and break
-    // WholeStageCodegen on the one path whose point is that non-matches
-    // never reach the shuffle (the hh1/CmsProbe pattern)
-    val surviving = train.filter(
-      org.apache.spark.sql.GraftShim.column(graft.functions.BloomMightContainString(
-        org.apache.spark.sql.GraftShim.expression(col("sh")), bloom)))
+    // the probe is a row kernel (Kernels.bloomMightContainString), fused
+    // into the generated stage: a row-lambda here would deserialize every
+    // train shingle and break WholeStageCodegen on the one path whose
+    // point is that non-matches never reach the shuffle (hh1's CMS pattern)
+    val surviving = train.filter(graft.functions.Kernels.bloomMightContainString(col("sh"), bloom))
     surviving.join(holdout, "sh")
       .groupBy("train_id").agg(countDistinct("sh").as("n_shared"))
       .orderBy("train_id")

@@ -1,11 +1,12 @@
 package graft.operators
 
 import graft.Ckpt.PinOps
-import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Ckpt, Scratch, Tables}
+import graft.functions.Kernels.pqArgminCells
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -60,21 +61,6 @@ object Similarity {
   val PqTrainSample = 4096L
   val PqShortlist = 40
 
-  /** The Lloyd/PQ nearest-cell assignment as ONE stable-shaped codegen
-    * kernel ([[graft.functions.PqArgminCells]]) instead of per-centroid
-    * literal dot expressions. Bit-identical argmin (the kernel's scaladoc
-    * carries the equivalence argument; SimilaritySpec asserts it
-    * element-wise against the literal composition), but the codebook rides
-    * a runtime reference object, so the generated source — and its janino
-    * compilation — is shared across training iterations and the corpus
-    * encode rather than recompiled per iteration (r16 optimization round). */
-  private def cellsFast(
-      books: Array[Array[Array[Double]]], v: Column,
-      sub: Int, strictLen: Boolean): Column =
-    GraftShim.column(graft.functions.PqArgminCells(
-      GraftShim.expression(v),
-      books.map(_.map(_.toVector).toVector).toVector, sub, strictLen))
-
   private def centLit(c: Array[Double]): Column = array(c.map(x => lit(x.toFloat)): _*)
 
   /** The one Lloyd trainer behind both quantizers: IVF's coarse quantizer
@@ -96,8 +82,11 @@ object Similarity {
     *    under-seeds sparse or shifted ids), sliced per subspace; k clamps
     *    to the vectors present — a tiny corpus or sparse hash sample
     *    shrinks the codebook (coarser quantizer) instead of throwing;
-    *  - assignment: the [[cellsFast]] kernel, argmin ties to the lower
-    *    cell id;
+    *  - assignment: the [[graft.functions.PqKernel]] argmin, ties to the
+    *    lower cell id. One stable-shaped kernel instead of per-centroid
+    *    literal dot expressions: the codebook is an object literal, so the
+    *    generated source (and its janino compilation) is shared across
+    *    iterations and the corpus encode (r16 optimization round);
     *  - means: each coordinate quantized to round(x·10⁹) and summed EXACTLY
     *    as decimal(38,0) per (subspace, cell, dim) — order-independent,
     *    unlike float avg(), which could straddle the 1e-6 rounding boundary
@@ -125,7 +114,7 @@ object Similarity {
       // literal form; the same re-evaluation trap as
       // TextAnalysis.bigramStream's re-split)
       val assigned = train
-        .select(col("embedding"), cellsFast(books, col("embedding"), sub, strictLen).as("cells"))
+        .select(col("embedding"), pqArgminCells(col("embedding"), books, sub, strictLen).as("cells"))
         .pinLazy() // severs the plan; materializes in the collect below
       val means = assigned
         .select(col("cells"), posexplode(col("embedding")))
@@ -261,7 +250,7 @@ object Similarity {
     // same kernel as training: identical generated source → the corpus
     // assignment reuses the training pass's compiled stage
     val c = side(e, "c",
-      element_at(cellsFast(cents, col("embedding"), Dim, strictLen = true), 1).as("cell"))
+      element_at(pqArgminCells(col("embedding"), cents, Dim, strictLen = true), 1).as("cell"))
     val q = side(e.filter(col("vec_id") < 10), "q",
       explode(slice(array_sort(array(probeCells: _*)), 1, IvfProbes).getField("cell")).as("cell"))
     cosineTopK(q.join(c, Seq("cell")).filter(col("q_id") =!= col("c_id")), Some(col("cell")))
@@ -360,7 +349,7 @@ object Similarity {
     // a full-corpus Lloyd pass per iteration would dominate the build.
     val train = Sampling.idSample(e, "vec_id", PqTrainSample).pinLazy()
     // all-subspace assignment in the stable-shaped kernel: one compiled
-    // stage shared by every iteration AND the final encode (cellsFast)
+    // stage shared by every iteration AND the final encode
     val books = lloyd(train, ksub, m, sub, strictLen = false, iters, "pqTopK")
     Ckpt.release(train) // only training reads the sample
 
@@ -369,7 +358,7 @@ object Similarity {
     // materialized so the candidate join starts from stored codes, not a
     // re-encode under the join
     val codes = e.select(col("vec_id").as("c_id"),
-      cellsFast(books, col("embedding"), sub, strictLen = false).as("codes"))
+      pqArgminCells(col("embedding"), books, sub, strictLen = false).as("codes"))
       .pinLazy() // severed plan; blocks land on the first scan
     // centroid squared-norm tables (query-independent literals)
     val normLut: Seq[Column] =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Ckpt.PinOps
 import graft.Tables
+import graft.functions.Kernels
 
 /** Text-analysis operators over `documents` — token statistics, quality
   * scoring, marker-word language ID, n-gram profiling. Everything is
@@ -104,10 +105,8 @@ object TextAnalysis {
     * here too: 12 probed trigrams meant 12 full text copies per document
     * for counts that need zero allocation. */
   def charNgramLanguageId(s: SparkSession, d: String): DataFrame = {
-    def hits(tris: Seq[String]): Column = tris.map { tri =>
-      org.apache.spark.sql.GraftShim.column(graft.functions.CountOccurrences(
-        org.apache.spark.sql.GraftShim.expression(col("text")), tri))
-    }.reduce(_ + _).cast("long")
+    def hits(tris: Seq[String]): Column =
+      tris.map(Kernels.countOccurrences(col("text"), _)).reduce(_ + _).cast("long")
     val scores = TrigramProfiles.map { case (lang, tris) => lang -> hits(tris) }
     val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
     val pred = scores.foldRight(lit("unknown"): Column) { case ((lang, h), els) =>
@@ -317,12 +316,12 @@ object TextAnalysis {
     val cms = bi.stat.countMinSketch("bigram", HeavyHitterEps, 0.99, seed = 42)
     val threshold = math.max(1L, cms.totalCount() / HeavyHitterDenom)
     val sketch = s.sparkContext.broadcast(cms)
-    // codegen'd probe (graft.functions.CmsProbeAtLeast): a row-lambda here
-    // would deserialize every bigram and break WholeStageCodegen on the one
-    // path whose point is that the tail never reaches the shuffle
+    // the probe is a row kernel (Kernels.cmsProbeAtLeast), fused into the
+    // generated stage: a row-lambda here would deserialize every bigram and
+    // break WholeStageCodegen on the one path whose point is that the tail
+    // never reaches the shuffle
     bi
-      .filter(org.apache.spark.sql.GraftShim.column(graft.functions.CmsProbeAtLeast(
-        org.apache.spark.sql.GraftShim.expression(col("bigram")), sketch, threshold)))
+      .filter(Kernels.cmsProbeAtLeast(col("bigram"), sketch, threshold))
       .groupBy("bigram")
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= threshold)

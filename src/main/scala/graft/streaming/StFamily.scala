@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.Executors
 
-import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.Try
@@ -73,7 +73,8 @@ object StFamily {
 
   private def solo: Boolean = sys.env.contains("SPARK_GRAFT_ST_SOLO")
 
-  private val cache = TrieMap.empty[(String, String), Try[DataFrame]]
+  // guarded by this object's lock
+  private val cache = mutable.Map.empty[(String, String), Try[DataFrame]]
 
   // 8 long-lived await-ers, one per member; actual parallelism comes from
   // Spark's scheduler underneath. Daemon threads so the pool never blocks
@@ -85,45 +86,29 @@ object StFamily {
       t
     }))
 
+  /** Take the cached result of `code`, launching the family first when it
+    * is missing. One lock covers the take and the launch, so a concurrent
+    * fetch of the same row waits for the launch under way rather than
+    * racing it for the single-shot entry, and a concurrent first fetch from
+    * two threads runs one family launch, not two. */
   private def fetch(s: SparkSession, d: String, code: String): DataFrame = {
     if (solo) return members(code)(s, d)
-    takeOrRun(s, d, code, attempts = 0).get
+    synchronized {
+      if (!cache.contains((d, code))) runFamily(s, d)
+      cache.remove((d, code)).get
+    }.get
   }
 
-  /** Remove-then-run loop: runFamily always (re)produces every missing
-    * member, but a CONCURRENT fetch of the same (dir, code) can steal the
-    * entry between this thread's runFamily and its remove — the launcher
-    * is explicitly built for concurrent use, so that interleaving must
-    * retry (re-running the family for the stolen row), not error. The
-    * attempt bound only guards a pathological livelock (more concurrent
-    * stealers of one row than attempts, every single race lost); each
-    * retry that loses did still produce seven OTHER cached rows, so
-    * forward progress for the family as a whole is preserved. */
-  @annotation.tailrec
-  private def takeOrRun(s: SparkSession, d: String, code: String,
-                        attempts: Int): Try[DataFrame] =
-    cache.remove((d, code)) match {
-      case Some(r) => r
-      case None =>
-        require(attempts < 8,
-          s"family run did not produce $code after $attempts attempts " +
-            "(lost every concurrent-steal race)")
-        runFamily(s, d)
-        takeOrRun(s, d, code, attempts + 1)
-    }
-
   /** Launch every member whose result is not already cached, concurrently,
-    * and cache the results. Launching only the MISSING members matters
-    * beyond economy: consumers that fetch a subset of rows (the plan-shape
-    * spec sweeps exclude st1) leave the others' entries behind, and a
-    * later fetch must re-produce the consumed rows rather than see a
-    * leftover and conclude the family already ran (the r10 bug: an
-    * any-entry-for-this-dir guard returned without producing the requested
-    * row). The synchronized block makes a concurrent first-fetch from two
-    * threads run one family launch, not two. */
-  private def runFamily(s: SparkSession, d: String): Unit = synchronized {
+    * and cache the results (caller holds the lock). Launching only the
+    * MISSING members matters beyond economy: consumers that fetch a subset
+    * of rows (the plan-shape spec sweeps exclude st1) leave the others'
+    * entries behind, and a later fetch must re-produce the consumed rows
+    * rather than see a leftover and conclude the family already ran (the
+    * r10 bug: an any-entry-for-this-dir guard returned without producing
+    * the requested row). */
+  private def runFamily(s: SparkSession, d: String): Unit = {
     val missing = members.toSeq.filter { case (code, _) => !cache.contains((d, code)) }
-    if (missing.isEmpty) return // another thread already ran it
     implicit val ec: ExecutionContext = pool
     val t0 = System.nanoTime()
     val launched = missing.map { case (code, fn) =>

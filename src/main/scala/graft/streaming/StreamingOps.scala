@@ -200,18 +200,18 @@ object StreamingOps {
     val inBatch = withFp
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
     val hasStore = new java.io.File(fpDir).exists()
+    // typed with the one column commitSwap writes: no schema-inference job
+    lazy val store = s.read.schema("fp string").parquet(fpDir)
     val survivors =
       // null-safe fp equality: md5(NULL text) is NULL, and a plain anti-join
       // would re-admit a NULL-fp doc in EVERY later batch (NULL never
       // equals), silently diverging from the batch keep-list
-      (if (hasStore) {
-        val store = s.read.parquet(fpDir)
-        inBatch.join(store, inBatch("fp") <=> store("fp"), "left_anti")
-      } else inBatch)
+      (if (hasStore) inBatch.join(store, inBatch("fp") <=> store("fp"), "left_anti")
+      else inBatch)
         .pin() // materialize BEFORE the store swaps underneath
     survivors.drop("fp").write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     val nextFps =
-      if (hasStore) s.read.parquet(fpDir).unionByName(survivors.select("fp")).distinct()
+      if (hasStore) store.unionByName(survivors.select("fp")).distinct()
       else survivors.select("fp").distinct()
     commitSwap(fpDir, nextFps, batchId)
   }
@@ -247,10 +247,11 @@ object StreamingOps {
       docs.filter(range).coalesce(1).write.parquet(stagedPath(inDir, i))
     })
     restampInOrder(inDir)
-    incrementalDedupIngest(stagedStream(s, inDir), fpDir, outDir)
+    val stream = stagedStream(s, inDir)
+    incrementalDedupIngest(stream, fpDir, outDir)
     // materialize the keep-list off the staging tree (localCheckpoint is
     // eager) before the staging tree is deleted
-    val result = s.read.parquet(outDir)
+    val result = sinkOutput(s, outDir, stream)
       .select(
         Dedup.textFingerprint(col("text")).as("fp"),
         col("doc_id").as("keep_id"))
@@ -443,17 +444,24 @@ object StreamingOps {
     }
   }
 
+  /** The parquet output at `out` that a stream wrote from `df`'s rows,
+    * read back with `df`'s schema: schema inference would run a footer
+    * job per read. */
+  private[graft] def sinkOutput(s: SparkSession, out: String, df: DataFrame): DataFrame =
+    s.read.schema(df.schema).parquet(out)
+
   /** Run each named frame to an Append-mode parquet FILE sink at
     * `base`/name (checkpoint `base`/name-ckpt), all in one
-    * [[runAvailableNow]], and read each sink's output back. */
-  private def runToFiles(s: SparkSession, partitions: Int, base: java.io.File)(
+    * [[runAvailableNow]], and read each sink's output back
+    * ([[sinkOutput]]). */
+  private[graft] def runToFiles(s: SparkSession, partitions: Int, base: java.io.File)(
       sinks: (String, DataFrame)*): Seq[DataFrame] = {
     val outs = sinks.map { case (name, df) => new java.io.File(base, name).getPath -> df }
     runAvailableNow(s, Some(partitions))(outs.map { case (out, df) =>
       df.writeStream.outputMode(OutputMode.Append).format("parquet")
         .option("path", out).option("checkpointLocation", s"$out-ckpt")
     })
-    outs.map { case (out, _) => s.read.parquet(out) }
+    outs.map { case (out, df) => sinkOutput(s, out, df) }
   }
 
   /** Staging cuts that provably split a DUPLICATE-KEY group across

@@ -6,8 +6,8 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * (after one warm-up query) — the single-query iteration loop for perf
   * work. Each line also counts the NEW janino compilations the run
   * triggered: the CodeGenerator cache is keyed on generated SOURCE, so an
-  * iterated stage with stable source compiles once (r16: PqArgminCells in
-  * ss4/ss6). Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.TimeQuery
+  * iterated stage with stable source compiles once (r16: the PQ kernel's
+  * codebook rides an object literal in ss4/ss6). Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.TimeQuery
   * name… prints `TIMEQ <name> <wall> s compiles=<n>` per query.
   *
   * Shuffle partitions default to the thread count (the bench's sf0.1

@@ -2,16 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Interpreted ≡ codegen for every custom kernel, as CI.
+/** Interpreted ≡ codegen for every row kernel, as CI.
   *
-  * Each custom Catalyst expression here ships two execution paths: the
-  * generated code (`doGenCode`) that the hot path runs, and the
-  * interpreted `nullSafeEval` that Spark silently falls back to when a
-  * stage exceeds codegen limits (method size, nested plans) or codegen is
-  * disabled operationally. Both delegate to the same static kernel
-  * method, so divergence can only creep in through the marshalling
-  * around that call (nullability, boxing, reference objects) — exactly
-  * the seam a unit test of the kernel function cannot see.
+  * Each row kernel is one static method with two callers: the generated
+  * code of the stage it is fused into (one static call, emitted by
+  * Spark's `StaticInvoke`) and `StaticInvoke`'s interpreted `eval`, which
+  * calls the same method by reflection when codegen is off or a stage
+  * exceeds codegen's limits (graft.functions.Kernels). The body cannot
+  * diverge; what can is the marshalling around the call — null
+  * propagation, boxing, literal arguments, the `ArrayData` a kernel
+  * returns — exactly the seam a unit test of the kernel method cannot
+  * see. `FloatVectorDot`, the one hand-written expression, still keeps a
+  * body per mode, and ss1 covers it.
   *
   * Mechanism: run every kernel-bearing registry query once normally and
   * once with whole-stage codegen off AND the expression codegen factory
@@ -22,15 +24,16 @@ class CodegenFallbackSpec extends AnyFunSuite {
   private lazy val base = SparkTestSession.spark
   private val sf = SparkTestSession.sf
 
-  // every query whose plan carries a custom expression, one per kernel:
-  // Md5Bits64 (dd5/q24/q32), MinhashSignature (dd4), WinnowFingerprints
-  // (dd7), BpeEncode (bp2), CmsProbeAtLeast (hh1), BloomMightContainString
-  // (bf1), CountOccurrences (tx7), FloatVectorDot (ss1)
+  // every query whose plan carries a kernel, each kernel at least once:
+  // md5 bits (dd5/q24/q32), minhash (dd4), winnow (dd7), BPE encode (bp2),
+  // CMS probe (hh1), Bloom probe (bf1), substring count (tx7), PQ argmin
+  // (ss4 with one subspace, ss6 with eight), FloatVectorDot (ss1)
   private val queries = Seq(
     "dd4_minhash_lsh", "dd5_simhash_pairs", "dd7_winnow_fingerprints",
     "bp2_bpe_encode", "hh1_heavy_hitters", "bf1_bloom_decontaminate",
     "tx7_charngram_langid", "ss1_topk_bruteforce",
-    "q24_approx_count_distinct", "q32_approx_percentiles")
+    "q24_approx_count_distinct", "q32_approx_percentiles",
+    "ss4_ivf_kmeans", "ss6_pq_topk")
 
   queries.foreach { name =>
     test(s"$name is bit-identical with codegen disabled (interpreted kernels)") {

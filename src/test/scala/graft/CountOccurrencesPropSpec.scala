@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property: the codegen'd CountOccurrences kernel equals the replace
+/** Property: the CountOccurrences kernel equals the replace
   * trick `(len(s) − len(replace(s, p, ''))) / len(p)` — the formulation
   * the tx7 oracle keeps — on adversarial strings: overlapping candidates
   * (the non-overlapping left-to-right match set must agree), repeats,
@@ -31,9 +31,7 @@ class CountOccurrencesPropSpec extends AnyFunSuite {
       Seq("", "aaaa", "ababab", "ión ión", "the the the")
     val df = strings.toDF("s")
     patterns.foreach { p =>
-      val kernel = org.apache.spark.sql.GraftShim.column(
-        graft.functions.CountOccurrences(
-          org.apache.spark.sql.GraftShim.expression(col("s")), p))
+      val kernel = graft.functions.Kernels.countOccurrences(col("s"), p)
       val lenDiff = (length(col("s")) - length(expr(s"replace(s, '$p', '')"))) / p.length
       val disagree = df.select(kernel.as("k"), lenDiff.cast("long").as("r"))
         .filter(col("k") =!= col("r"))

@@ -58,7 +58,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("dd7: winnowing kernel plan has no hash-partition shuffle (narrow map + output sort only)") {
     val p = plan("dd7_winnow_fingerprints")
-    assert(p.contains("winnow_fingerprints"), p.take(500))
+    assert(p.contains("WinnowKernel.winnow"), p.take(500))
     // the per-character shuffle of the old formulation is gone: the only
     // exchange left is the range partitioning for the output orderBy
     assert(!p.contains("Exchange hashpartitioning"), p.take(800))

@@ -49,7 +49,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(vals(1).isNullAt(1) && vals(2).isNullAt(1) && vals(3).isNullAt(1))
   }
 
-  // the literal composition PqArgminCells replaced (r16): per subspace j,
+  // the literal composition the PQ kernel replaced (r16): per subspace j,
   // argmin over struct(normLit − 2.0·dotFast(subvec, centLit), cellIdx)
   private def literalCells(
       books: Array[Array[Array[Double]]], v: org.apache.spark.sql.Column,
@@ -69,9 +69,7 @@ class SimilaritySpec extends AnyFunSuite {
   private def kernelCells(
       books: Array[Array[Array[Double]]], v: org.apache.spark.sql.Column,
       sub: Int, strictLen: Boolean): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftShim.column(graft.functions.PqArgminCells(
-      org.apache.spark.sql.GraftShim.expression(v),
-      books.map(_.map(_.toVector).toVector).toVector, sub, strictLen))
+    graft.functions.Kernels.pqArgminCells(v, books, sub, strictLen)
 
   test("PqArgminCells kernel ≡ literal argmin composition on the embeddings corpus (PQ shape)") {
     // deterministic pseudo-codebook with ties and negatives in range

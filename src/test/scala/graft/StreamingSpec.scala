@@ -262,6 +262,32 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("a file sink's output reads back with its stream's schema and no Spark job") {
+    import org.apache.spark.ListenerBusDrain
+    Scratch.withTree("graft-sink-read-") { dir =>
+      val events = Tables(spark, sf, "events")
+      events.coalesce(1).write.parquet(s"$dir/in/a.parquet")
+      // flat, nested and array columns, timestamps included
+      val stream = spark.readStream.schema(events.schema).parquet(s"$dir/in/*.parquet")
+        .select(col("*"), struct(col("event_type"), col("ts")).as("nested"),
+          array(col("value")).as("arr"))
+      val Seq(out) = StreamingOps.runToFiles(spark, 2, dir)("out" -> stream)
+      assert(out.schema == spark.read.parquet(s"$dir/out").schema)
+      assert(out.count() == events.count())
+      // job ids the status tracker records for one job group; the
+      // inferred read shows the probe sees a footer job when there is one
+      val sc = spark.sparkContext
+      def jobIds(body: => Unit): Seq[Int] = {
+        val group = java.util.UUID.randomUUID().toString
+        sc.setJobGroup(group, "sinkOutput")
+        try { body; ListenerBusDrain(sc); sc.statusTracker.getJobIdsForGroup(group).toSeq }
+        finally sc.clearJobGroup()
+      }
+      assert(jobIds(StreamingOps.sinkOutput(spark, s"$dir/out", stream)).isEmpty)
+      assert(jobIds(spark.read.parquet(s"$dir/out")).nonEmpty)
+    }
+  }
+
   test("a streaming member that throws deletes its staging tree") {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def st2Trees = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
