@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{window => timeWindow, _}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
 
-import graft.{Scratch, Tables}
+import graft.{LocalFs, Scratch, Tables}
 import graft.operators.Dedup
 
 /** Structured Streaming twins of the batch event operators
@@ -402,8 +402,11 @@ object StreamingOps {
 
   /** The one start path of every graft stream: start each writer under
     * the AvailableNow trigger, run it through `processAllAvailable`, and stop
-    * them all, on success and on failure. Two session confs are scoped to
-    * the run and restored after it (a query reads both when it starts):
+    * them all, on success and on failure. These session confs are scoped
+    * to the run and restored after it (a query reads them when it starts,
+    * and its cloned session's `newHadoopConf()` carries them to every file
+    * the stream writes: offset and commit logs, state-store deltas and
+    * snapshots, `_spark_metadata`, `foreachBatch` writes):
     *  - `spark.sql.shuffle.partitions` = `partitions`, when given: a
     *    stateful query's state partition count is pinned at its first
     *    start, so this right-sizes it to the harness's traffic without
@@ -422,7 +425,19 @@ object StreamingOps {
     *    Spark's own temp checkpoint for memory and `foreachBatch` sinks,
     *    the file sinks' `_spark_metadata` inside the staging trees), where
     *    `FileSystem.rename` is an atomic POSIX rename. A stream that
-    *    checkpoints to an object store must not start here.
+    *    checkpoints to an object store must not start here. (The
+    *    FileContext-based manager builds its own `RawLocalFileSystem`, so
+    *    the next entry would not reach it.)
+    *  - `fs.file.impl` = [[graft.LocalFs]], which sets permissions through
+    *    `java.nio` instead of forking `chmod` for every file and directory
+    *    the stream creates (RUNBOOK, "Streaming checkpoint writes"), and
+    *    `fs.file.impl.disable.cache` = `true`. The second is required:
+    *    Hadoop caches FileSystem instances by scheme, authority and user,
+    *    not by conf, so with the cache on the scope would either get an
+    *    earlier default instance back or leave graft's instance cached for
+    *    every later caller. Executor JVMs load the class for state-store
+    *    writes, so a deployment puts graft's classes on the executor class
+    *    path.
     * Writers are built inside the scope; the returned queries are stopped
     * and keep their progress history. */
   private[graft] def runAvailableNow(s: SparkSession, partitions: Option[Int] = None)(
@@ -430,6 +445,8 @@ object StreamingOps {
     val scoped = Seq(
       "spark.sql.streaming.checkpointFileManagerClass" ->
         Some(classOf[FileSystemBasedCheckpointFileManager].getName),
+      "fs.file.impl" -> Some(classOf[LocalFs].getName),
+      "fs.file.impl.disable.cache" -> Some("true"),
       "spark.sql.shuffle.partitions" -> partitions.map(_.toString))
       .collect { case (k, Some(v)) => (k, v, s.conf.getOption(k)) }
     scoped.foreach { case (k, v, _) => s.conf.set(k, v) }
@@ -802,10 +819,13 @@ object StreamingOps {
   // fresh-JVM pairs each way: 47.4/44.1 s on /tmp vs 44.6/50.3 s on
   // tmpfs) — no effect outside host noise. That
   // A/B could not see the storage-side cost that did dominate the floor:
-  // it is process creation, not I/O — the default checkpoint manager ran
-  // `chmod`/`readlink`/`stat` child processes for every checkpoint file
-  // (see runAvailableNow). The default tmpdir stays (and production
-  // checkpoints belong on durable shared storage anyway).
+  // process creation, not I/O — the default checkpoint manager ran
+  // `chmod`/`readlink`/`stat` child processes for every checkpoint file,
+  // and Hadoop's local FileSystem a `chmod` for every file it created.
+  // runAvailableNow scopes both away (FileSystem-based manager over
+  // graft.LocalFs); the staging writes below still fork `chmod` through
+  // the session's default FileSystem. The default tmpdir stays (and
+  // production checkpoints belong on durable shared storage anyway).
   /** Run independent staging writes concurrently (each is typically a
     * single-task coalesce(1) job — serially they were N sequential
     * single-thread writes, a visible slice of the harness floor at the

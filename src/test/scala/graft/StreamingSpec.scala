@@ -229,23 +229,31 @@ class StreamingSpec extends AnyFunSuite {
 
   test("runAvailableNow scopes the FileSystem checkpoint manager and the partition count") {
     import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.{FileSystem, Path}
     import org.apache.spark.sql.{Dataset, Row}
     val key = "spark.sql.streaming.checkpointFileManagerClass"
     val parts = "spark.sql.shuffle.partitions"
-    def confs = (spark.conf.getOption(key), spark.conf.get(parts))
+    val fsKeys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    def confs = (spark.conf.getOption(key), spark.conf.get(parts), fsKeys.map(spark.conf.getOption))
+    val probe = new java.net.URI(s"file://graft-scope-${java.util.UUID.randomUUID()}/")
     val before = confs
     Scratch.withTree("graft-run-scope-") { dir =>
       def writer(body: Dataset[Row] => Unit) =
         spark.readStream.schema("id BIGINT").parquet(s"$dir/in").writeStream
           .foreachBatch { (batch: Dataset[Row], _: Long) => body(batch) }
       spark.range(3).write.parquet(s"$dir/in")
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]
       StreamingOps.runAvailableNow(spark, Some(3))(Seq(writer { batch =>
-        seen.add((batch.sparkSession.conf.get(key), batch.sparkSession.conf.get(parts))); ()
+        val conf = batch.sparkSession.sessionState.newHadoopConf()
+        val fs = new Path(dir.toURI).getFileSystem(conf)
+        FileSystem.get(probe, conf) // a cache key no earlier caller has used
+        seen.add((batch.sparkSession.conf.get(key), batch.sparkSession.conf.get(parts),
+          fs.getClass.getName)); ()
       }))
       val fsManager = classOf[org.apache.spark.sql.execution.streaming.checkpointing
         .FileSystemBasedCheckpointFileManager].getName
-      assert(seen.asScala.toSet == Set((fsManager, "3")), s"in-batch confs: $seen")
+      assert(seen.asScala.toSet == Set((fsManager, "3", classOf[LocalFs].getName)),
+        s"in-batch confs: $seen")
       assert(confs == before, "confs not restored after the run")
       // a body that throws before any query starts, and a query whose batch
       // throws: both restore the confs, and the failed query is stopped
@@ -259,6 +267,12 @@ class StreamingSpec extends AnyFunSuite {
       }
       assert(confs == before, "confs not restored after a failed query")
       assert(!spark.streams.active.exists(_.name == "graft_failing"), "failed query left running")
+      // Hadoop's FileSystem cache ignores the conf: the scoped instance
+      // must not have been cached for the session's other callers
+      for (uri <- Seq(new java.net.URI("file:///"), probe)) {
+        val cached = FileSystem.get(uri, spark.sessionState.newHadoopConf())
+        assert(!cached.isInstanceOf[LocalFs], s"graft.LocalFs leaked into Hadoop's cache for $uri")
+      }
     }
   }
 
