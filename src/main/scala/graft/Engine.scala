@@ -17,14 +17,22 @@ import graft.sources.Source
 object Engine {
 
   /** Make the engine's SQL surface self-contained on any session: register
-    * the `float_vector_dot` function and inject the HOF→kernel optimizer
-    * rule, exactly what `spark.sql.extensions=graft.plans.GraftExtensions`
-    * does at session build time. Idempotent, so safe per query. */
+    * the `float_vector_dot` function, inject the HOF→kernel optimizer rule
+    * and prepend the [[graft.plans.StableLiterals]] planner strategy,
+    * exactly what `spark.sql.extensions=graft.plans.GraftExtensions` does
+    * at session build time. Idempotent, so safe per query. All three stay
+    * installed on the caller's session, so whatever moves one of them
+    * (say, resolving queries on a clone of the session) moves all three;
+    * no conf selects them. A `FilterExec` the strategy plans carries
+    * graft's `ParamLiteral`, so an interpreted filter needs graft's
+    * classes on the executors, as the kernels already do. */
   private def ensureExtensions(spark: SparkSession): Unit = {
     graft.functions.VectorFunctions.registerSql(spark)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteVectorDot))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteVectorDot
+    val x = spark.experimental
+    if (!x.extraOptimizations.contains(graft.plans.RewriteVectorDot))
+      x.extraOptimizations = x.extraOptimizations :+ graft.plans.RewriteVectorDot
+    if (!x.extraStrategies.contains(graft.plans.StableLiterals))
+      x.extraStrategies = graft.plans.StableLiterals +: x.extraStrategies
   }
 
   /** Run `sql` against the source identified by `sourceUrl` and return the

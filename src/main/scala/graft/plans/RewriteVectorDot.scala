@@ -61,10 +61,11 @@ object RewriteVectorDot extends Rule[LogicalPlan] {
 }
 
 /** `spark.sql.extensions` entry point registering the graft optimizer
-  * rules and SQL functions. */
+  * rule, planner strategy and SQL function. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RewriteVectorDot)
+    e.injectPlannerStrategy(_ => StableLiterals)
     e.injectFunction((
       org.apache.spark.sql.catalyst.FunctionIdentifier("float_vector_dot"),
       new ExpressionInfo(classOf[FloatVectorDot].getName, "float_vector_dot"),

@@ -1,13 +1,13 @@
 package graft.tools
 
-import org.apache.spark.metrics.source.CodegenMetrics
-
 /** Times individual registered queries with the bench's noop-write action
   * (after one warm-up query) — the single-query iteration loop for perf
   * work. Each line also counts the NEW janino compilations the run
-  * triggered: the CodeGenerator cache is keyed on generated SOURCE, so an
-  * iterated stage with stable source compiles once (r16: the PQ kernel's
-  * codebook rides an object literal in ss4/ss6). Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.TimeQuery
+  * triggered, read by [[Compiles]] once the context is quiet, so a compile
+  * lands on the row whose jobs made it. The CodeGenerator cache is keyed
+  * on generated SOURCE, so an iterated stage with stable source compiles
+  * once (r16: the PQ kernel's codebook rides an object literal in
+  * ss4/ss6). Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.TimeQuery
   * name… prints `TIMEQ <name> <wall> s compiles=<n>` per query.
   *
   * Shuffle partitions default to the thread count (the bench's sf0.1
@@ -39,9 +39,7 @@ object TimeQuery {
         System.err.println(s"[timeq] warm-up failed (timings may be cold): $e")
     }
     args.foreach { n =>
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val wall = run(n)
-      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      val (wall, compiles) = Compiles.of(spark.sparkContext)(run(n))
       println("TIMEQ %s %.2f s compiles=%d".formatLocal(java.util.Locale.ROOT, n, wall, compiles))
     }
     spark.stop()

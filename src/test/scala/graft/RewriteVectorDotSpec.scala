@@ -70,6 +70,10 @@ class RewriteVectorDotSpec extends AnyFunSuite {
       val df = e.crossJoin(q)
         .select(VectorFunctions.dot(col("embedding"), col("qv")).as("dp"))
       assert(df.queryExecution.optimizedPlan.toString.contains("float_vector_dot"))
+      // injected planner strategy plans a filter's constants as reference reads
+      val filtered = Tables(s2, sf, "lineitem").where(col("l_partkey") > 5)
+      assert(filtered.queryExecution.sparkPlan.exists(
+        _.expressions.exists(_.exists(_.isInstanceOf[graft.plans.ParamLiteral]))))
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)
