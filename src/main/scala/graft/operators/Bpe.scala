@@ -1,9 +1,8 @@
 package graft.operators
 
-import graft.Ckpt.PinOps
 import java.util.regex.{Matcher, Pattern}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Ckpt, Tables}
@@ -328,107 +327,88 @@ object Bpe {
     * (30k+ merges) needs the driver path's inverted index. */
   private[graft] def learnMergesDistributed(words: DataFrame, numMerges: Int): DataFrame = {
     val s = words.sparkSession
-    // initial encoding: space-separated characters plus the EOW symbol
-    var cur = words
-      .select(
-        col("freq"),
-        concat(
-          array_join(filter(split(col("w"), ""), c => length(c) > 0), " "),
-          lit(" " + EndOfWord)).as("sym"))
-      .pinLazy()
-    // the ONE full corpus-wide pair count; delta-maintained afterwards
-    var pairCounts = pairCountsOf(cur).pinLazy()
-
-    val merges = Seq.newBuilder[(Long, String, String, String, Long)]
-    var rank = 1L
-    var exhausted = false
-    // Superseded-pin release (bounded executor storage over long merge
-    // runs — the CC loop's housekeeping rule). Lazy pins materialize with
-    // a LAG: round k's collect materializes pairCounts(k−1) and — through
-    // its delta — cur(k−2); cur(k−1) only lands at round k+1's collect.
-    // A localCheckpoint's lineage is truncated, so a pin may only be
-    // released once every pin DERIVED from it holds blocks: keep the last
-    // 2 pair tables and the last 3 encodings, release older.
-    var oldPairs = List.empty[DataFrame]
-    var oldCurs = List.empty[DataFrame]
-    while (rank <= numMerges && !exhausted) {
-      val best = pairCounts
+    // one round's encoding, its carried pair table and the argmax over it,
+    // collected once: `done` tests it and the next round merges it
+    final class Round(val cur: DataFrame, val pairCounts: DataFrame) {
+      lazy val best: Option[Row] = pairCounts
         .orderBy(col("cnt").desc, col("left"), col("right"))
         .limit(1)
-        .collect()
-      oldPairs ::= pairCounts
-      oldCurs ::= cur
-      oldPairs.drop(2).foreach(Ckpt.release)
-      oldCurs.drop(3).foreach(Ckpt.release)
-      oldPairs = oldPairs.take(2)
-      oldCurs = oldCurs.take(3)
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((rank, l, r, l + r, c))
-        // left-to-right non-overlapping whole-symbol replacement ≡ greedy BPE
-        val lr = l + " " + r
-        val pat = mergePattern(l, r)
-        val repl = Matcher.quoteReplacement(l + r)
-        // delta = post-merge pairs − pre-merge pairs of the words that
-        // contain the winning pair; everything else is untouched, so the
-        // round's shuffle carries affected words only, never the corpus.
-        // contains() is an exact prefilter for the anchored match (any
-        // boundary match contains the raw "l r" substring), so the padded
-        // test runs only on candidate rows. The boundary test itself is a
-        // PADDED CONTAINS, not the anchored rlike: mergePattern
-        // matches sym exactly when " "+sym+" " contains " "+lr+" " (the
-        // lookarounds assert space-or-edge on both sides, which padding
-        // turns into literal spaces) — same rows, but a codegen'd memcmp
-        // instead of a regex, and CRUCIALLY source-stable: Spark inlines a
-        // foldable rlike PATTERN into the generated source, so the old
-        // form recompiled this stage every round (12 janino compilations
-        // per run, measured via TimeQuery's compiles column), while string `contains`
-        // needles ride the reference array and compile once (r16, the
-        // PQ kernel's codebook lesson applied to the round loop).
-        val affected = cur.filter(col("sym").contains(lr) &&
-          concat(lit(" "), col("sym"), lit(" ")).contains(" " + lr + " "))
-        // ONE explode emits retractions (−freq over the old pairs) and
-        // additions (+freq over the new pairs) together, and its
-        // aggregation is FOLDED into the carried-table groupBy below —
-        // the former two pairCountsOf branches + their own aggregation
-        // cost 3 extra chained exchanges per round at any SF (r15 opt
-        // round; the per-round floor is stage latency, guide §1.2)
-        def pairStructs(a: Column, f: Column): Column =
-          when(size(a) >= 2, transform(
-            sequence(lit(0), size(a) - 2),
-            i => struct(
-              element_at(a, i + 1).as("left"),
-              element_at(a, i + 2).as("right"),
-              f.as("cnt"))))
-            .otherwise(array().cast("array<struct<left:string,right:string,cnt:bigint>>"))
-        val delta = affected
-          .select(col("freq"), split(col("sym"), " ").as("oa"),
-            split(regexp_replace(col("sym"), pat, repl), " ").as("na"))
-          .select(explode(concat(
-            pairStructs(col("oa"), -col("freq")),
-            pairStructs(col("na"), col("freq")))).as("p"))
-          .select(col("p.left").as("left"), col("p.right").as("right"), col("p.cnt").as("cnt"))
-        // LAZY checkpoints: still truncate lineage (round k's plans read
-        // round k−1's stored blocks, never a replay of merges 1..k−1), but
-        // materialize inside the next round's first action instead of as
-        // their own jobs — and the final round's states, which nothing
-        // reads, never materialize at all (~2 jobs/round saved at fixture
-        // scale where job launch dominates)
-        pairCounts = pairCounts.unionByName(delta)
-          .groupBy("left", "right").agg(sum("cnt").as("cnt"))
-          .filter(col("cnt") > 0)
-          .pinLazy()
-        // conditional re-encode: rows without the raw substring cannot
-        // match the anchored regex — skip the regex scan on them
-        cur = cur
-          .select(col("freq"),
-            when(col("sym").contains(lr), regexp_replace(col("sym"), pat, repl))
-              .otherwise(col("sym")).as("sym"))
-          .pinLazy()
-        rank += 1
-      }
+        .collect().headOption
     }
+    val merges = Seq.newBuilder[(Long, String, String, String, Long)]
+    Ckpt.rounds { pins =>
+      // initial encoding: space-separated characters plus the EOW symbol
+      val cur = pins(words
+        .select(
+          col("freq"),
+          concat(
+            array_join(filter(split(col("w"), ""), c => length(c) > 0), " "),
+            lit(" " + EndOfWord)).as("sym")))
+      // the ONE full corpus-wide pair count; delta-maintained afterwards
+      new Round(cur, pins(pairCountsOf(cur)))
+    }(r => Seq(r.cur, r.pairCounts)) { (pins, round, rank) =>
+      val Row(l: String, r: String, c: Long) = round.best.get
+      val cur = round.cur
+      merges += ((rank.toLong, l, r, l + r, c))
+      // left-to-right non-overlapping whole-symbol replacement ≡ greedy BPE
+      val lr = l + " " + r
+      val pat = mergePattern(l, r)
+      val repl = Matcher.quoteReplacement(l + r)
+      // delta = post-merge pairs − pre-merge pairs of the words that
+      // contain the winning pair; everything else is untouched, so the
+      // round's shuffle carries affected words only, never the corpus.
+      // contains() is an exact prefilter for the anchored match (any
+      // boundary match contains the raw "l r" substring), so the padded
+      // test runs only on candidate rows. The boundary test itself is a
+      // PADDED CONTAINS, not the anchored rlike: mergePattern
+      // matches sym exactly when " "+sym+" " contains " "+lr+" " (the
+      // lookarounds assert space-or-edge on both sides, which padding
+      // turns into literal spaces) — same rows, but a codegen'd memcmp
+      // instead of a regex, and CRUCIALLY source-stable: Spark inlines a
+      // foldable rlike PATTERN into the generated source, so the old
+      // form recompiled this stage every round (12 janino compilations
+      // per run, measured via TimeQuery's compiles column), while string `contains`
+      // needles ride the reference array and compile once (r16, the
+      // PQ kernel's codebook lesson applied to the round loop).
+      val affected = cur.filter(col("sym").contains(lr) &&
+        concat(lit(" "), col("sym"), lit(" ")).contains(" " + lr + " "))
+      // ONE explode emits retractions (−freq over the old pairs) and
+      // additions (+freq over the new pairs) together, and its
+      // aggregation is FOLDED into the carried-table groupBy below —
+      // the former two pairCountsOf branches + their own aggregation
+      // cost 3 extra chained exchanges per round at any SF (r15 opt
+      // round; the per-round floor is stage latency, guide §1.2)
+      def pairStructs(a: Column, f: Column): Column =
+        when(size(a) >= 2, transform(
+          sequence(lit(0), size(a) - 2),
+          i => struct(
+            element_at(a, i + 1).as("left"),
+            element_at(a, i + 2).as("right"),
+            f.as("cnt"))))
+          .otherwise(array().cast("array<struct<left:string,right:string,cnt:bigint>>"))
+      val delta = affected
+        .select(col("freq"), split(col("sym"), " ").as("oa"),
+          split(regexp_replace(col("sym"), pat, repl), " ").as("na"))
+        .select(explode(concat(
+          pairStructs(col("oa"), -col("freq")),
+          pairStructs(col("na"), col("freq")))).as("p"))
+        .select(col("p.left").as("left"), col("p.right").as("right"), col("p.cnt").as("cnt"))
+      // LAZY pins still truncate lineage: round k's plans read round k−1's
+      // stored blocks, never a replay of merges 1..k−1. Under AQE (Spark's
+      // default) the pair table's pin runs its shuffle-map stage as it is
+      // built; with AQE off that stage lands in the next round's argmax
+      // collect. The narrow re-encode lands when the next round's pair
+      // table reads it.
+      val pairCounts = pins(round.pairCounts.unionByName(delta)
+        .groupBy("left", "right").agg(sum("cnt").as("cnt"))
+        .filter(col("cnt") > 0))
+      // conditional re-encode: rows without the raw substring cannot
+      // match the anchored regex — skip the regex scan on them
+      new Round(pins(cur
+        .select(col("freq"),
+          when(col("sym").contains(lr), regexp_replace(col("sym"), pat, repl))
+            .otherwise(col("sym")).as("sym"))), pairCounts)
+    }((round, rank) => rank >= numMerges || round.best.isEmpty)
     import s.implicits._
     merges.result().toDF("rank", "left", "right", "merged", "cnt")
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Ckpt
 import graft.Ckpt.PinOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,9 +17,11 @@ import org.apache.spark.sql.functions._
   * degrees are co-partitioned on the node key, so AQE keeps the join local.
   * Lineage is truncated with a LAZY localCheckpoint per iteration
   * (10 unrolled joins would otherwise stack into one exponential Catalyst
-  * plan — same lesson as the CC loop; lazy because the plan is severed
-  * either way, while the blocks materialize transitively inside the final
-  * action instead of as 10 separate jobs).
+  * plan — same lesson as the CC loop). The iterations run no action: with
+  * AQE off the rounds' shuffle stages run inside the final action, but
+  * under AQE (Spark's default) each round's pin runs that round's
+  * shuffle-map stages as it is built (`Ckpt.pinLazy`). `Ckpt.rounds` drives the
+  * iterations and releases the ranks no later round reads.
   *
   * Determinism: ranks accumulate in SCALED-INTEGER FIXED POINT — rank·10¹⁸
   * carried as an integer, every division an explicit truncating integral
@@ -75,32 +78,26 @@ object Graph {
     // then one truncating division by n — mirrored verbatim in the oracle
     val teleport = (100L - DampingPct) * (FpScale / 100L) / n
 
-    // LAZY: the init has exactly one consumer (iteration 1's contribution
-    // join), so its blocks land inside the final action like every other
-    // iteration's — an eager pin here was one more driver-synchronized job
-    var ranks = deg.select("node").withColumn("s", lit(FpScale / n))
-      .pinLazy()
-    for (_ <- 1 to Iterations) {
+    // round 0: every node starts at 1/n
+    val ranks = Ckpt.rounds(pins =>
+      pins(deg.select("node").withColumn("s", lit(FpScale / n))))(Seq(_)) { (pins, ranks, _) =>
       // The symmetrized graph gives every node degree ≥ 1 in BOTH
       // directions, so the destination key set of `contribs` is exactly
       // the node set — the former per-iteration `nodes` LEFT join +
       // COALESCE was belt-and-braces that cost one extra join + exchange
       // per iteration; the teleport-plus-damped map applies directly to
       // the aggregation output (r15 opt round, results bit-identical —
-      // gr1's fixed-point oracle re-checks every rank).
-      ranks = weightedEdges
+      // gr1's fixed-point oracle re-checks every rank). The pin severs
+      // the Catalyst plan per iteration, so analysis cost stays O(1) per
+      // round.
+      pins(weightedEdges
         .join(ranks.withColumnRenamed("node", "a"), "a")
         .select(col("b").as("node"), expr("s div deg").as("c"))
         .groupBy("node").agg(sum("c").as("inflow"))
         .select(col("node"),
           expr(s"$teleport + (CAST($DampingPct AS DECIMAL(38,0)) * inflow) div 100")
-            .as("s"))
-        // LAZY: the Catalyst plan is severed per iteration either way (the
-        // checkpoint is a LogicalRDD, so analysis cost stays O(1) per
-        // round); blocks materialize transitively inside the final action
-        // — the 10 per-iteration checkpoint jobs collapse into one
-        .pinLazy()
-    }
+            .as("s")))
+    }((_, round) => round >= Iterations)
     ranks.select(col("node"), col("s").as("rank_fp"),
       (col("s").cast("double") / FpScale.toDouble).as("rank"))
   }

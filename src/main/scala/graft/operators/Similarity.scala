@@ -105,17 +105,17 @@ object Similarity {
     // quantizer on nothing would otherwise die deep inside the cell
     // expression with an unhelpful analysis error
     require(seeds.nonEmpty, s"$caller needs a non-empty embeddings corpus")
-    var books = Array.tabulate(m, seeds.length)((j, i) => seeds(i).slice(j * sub, (j + 1) * sub))
-    for (_ <- 0 until iters) {
+    Ckpt.rounds(_ => Array.tabulate(m, seeds.length)((j, i) => seeds(i).slice(j * sub, (j + 1) * sub)))(
+      _ => Nil) { (pins, books, _) =>
       // assignments MATERIALIZE before the dimension explode: left inline,
       // CollapseProject folds the all-subspace kernel into the post-explode
       // projection and re-evaluates it per exploded dimension (64× per
       // vector — measured 31 s vs 1.4 s per pass at sf0.1 on the old
       // literal form; the same re-evaluation trap as
-      // TextAnalysis.bigramStream's re-split)
-      val assigned = train
-        .select(col("embedding"), pqArgminCells(col("embedding"), books, sub, strictLen).as("cells"))
-        .pinLazy() // severs the plan; materializes in the collect below
+      // TextAnalysis.bigramStream's re-split). Nothing live reads the pin
+      // once the collect below has run, so the next sweep releases it.
+      val assigned = pins(train
+        .select(col("embedding"), pqArgminCells(col("embedding"), books, sub, strictLen).as("cells")))
       val means = assigned
         .select(col("cells"), posexplode(col("embedding")))
         .toDF("cells", "pos", "x")
@@ -128,7 +128,6 @@ object Similarity {
             .cast("decimal(38,0)")).as("s"),
           count(lit(1)).as("cnt"))
         .collect() // m·k·sub rows — metadata scale
-      Ckpt.release(assigned) // nothing reads this iteration's pin again
       val next = books.map(_.map(_.clone()))
       means.foreach { r =>
         val mv = r.getAs[java.math.BigDecimal]("s").doubleValue /
@@ -137,9 +136,8 @@ object Similarity {
         next(r.getAs[Long]("j").toInt)(r.getAs[Int]("cell"))(r.getAs[Int]("pos") % sub) =
           math.floor(mv * 1e6 + 0.5) / 1e6
       }
-      books = next
-    }
-    books
+      next
+    }((_, round) => round >= iters)
   }
 
   /** `e`'s (vec_id, embedding) as one side of a cosine join: (q_id, qv, qn)

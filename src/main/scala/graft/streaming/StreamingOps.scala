@@ -359,12 +359,11 @@ object StreamingOps {
         .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
           count(lit(1)))
         .collect()(0).toSeq.map(_.asInstanceOf[Long])
-      val span = hi - lo + 1
       val us = unix_micros(col("ts"))
       val cuts = (pairSplitUs, dupKeySplit) match {
         case (Some(iv), _) => pairSplitCuts(events, lo, hi, nFiles, iv)
         case (None, Some(keys)) => keySplitCuts(events, lo, hi, nFiles, keys)
-        case _ => (1 until nFiles).map(i => lo + i * (span / nFiles))
+        case _ => equiCuts(lo, hi, nFiles)
       }
       val bounds = (lo +: cuts) :+ (hi + 1)
       // range writes run CONCURRENTLY (each is a single-task coalesce(1)
@@ -491,19 +490,28 @@ object StreamingOps {
     * at all. */
   def keySplitCuts(events: DataFrame, lo: Long, hi: Long,
       nFiles: Int, keys: Seq[Column]): Seq[Long] = {
-    val span = hi - lo + 1
-    val equiCuts = (1 until nFiles).map(i => lo + i * (span / nFiles))
     val named = keys.zipWithIndex.map { case (k, i) => k.as(s"k$i") }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.indices.map(i => col(s"k$i")): _*)
-    val cand = events.select(unix_micros(col("ts")).as("us") +: named: _*)
+    snapCuts(events.select(unix_micros(col("ts")).as("us") +: named: _*)
       .withColumn("first_us", min(col("us")).over(w))
-      .filter(col("us") > col("first_us"))
-    val snaps = equiCuts.map(t => min_by(col("us"), abs(col("us") - t)))
+      .filter(col("us") > col("first_us")), lo, hi, nFiles)
+  }
+
+  /** The `nFiles − 1` equi-width cuts of the microsecond range `[lo, hi]`. */
+  private def equiCuts(lo: Long, hi: Long, nFiles: Int): Seq[Long] =
+    (1 until nFiles).map(i => lo + i * ((hi - lo + 1) / nFiles))
+
+  /** The [[equiCuts]], each snapped to the nearest `us` of `cand` (one
+    * `min_by` per cut, one collect), with equi-width cuts filling in for
+    * targets that snap outside `(lo, hi]` or onto an already picked cut. */
+  private def snapCuts(cand: DataFrame, lo: Long, hi: Long, nFiles: Int): Seq[Long] = {
+    val equi = equiCuts(lo, hi, nFiles)
+    val snaps = equi.map(t => min_by(col("us"), abs(col("us") - t)))
     val row = cand.agg(snaps.head, snaps.tail: _*).collect()(0)
     val picked = row.toSeq.collect { case l: java.lang.Long => l.longValue }
       .filter(c => c > lo && c <= hi).distinct
-    (picked ++ equiCuts.filterNot(picked.contains)).take(nFiles - 1).sorted
+    (picked ++ equi.filterNot(picked.contains)).take(nFiles - 1).sorted
   }
 
   /** Staging cuts that provably split joinable pairs across micro-batches.
@@ -522,19 +530,12 @@ object StreamingOps {
     * tiers), so the harness still runs there. */
   def pairSplitCuts(events: DataFrame, lo: Long, hi: Long,
       nFiles: Int, iv: Long): Seq[Long] = {
-    val span = hi - lo + 1
-    val equiCuts = (1 until nFiles).map(i => lo + i * (span / nFiles))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("us"))
-    val cand = events.select(col("user_id"), unix_micros(col("ts")).as("us"))
+    snapCuts(events.select(col("user_id"), unix_micros(col("ts")).as("us"))
       .withColumn("prev", lag("us", 1).over(w))
       .filter(col("prev").isNotNull && col("us") > col("prev") &&
-        col("us") <= col("prev") + iv)
-    val snaps = equiCuts.map(t => min_by(col("us"), abs(col("us") - t)))
-    val row = cand.agg(snaps.head, snaps.tail: _*).collect()(0)
-    val picked = row.toSeq.collect { case l: java.lang.Long => l.longValue }
-      .filter(c => c > lo && c <= hi).distinct
-    (picked ++ equiCuts.filterNot(picked.contains)).take(nFiles - 1).sorted
+        col("us") <= col("prev") + iv), lo, hi, nFiles)
   }
 
   /** Registry query (st4): the stream-stream interval join PRODUCED BY

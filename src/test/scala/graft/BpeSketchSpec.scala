@@ -92,6 +92,15 @@ class BpeSketchSpec extends AnyFunSuite {
     for (got <- learnedBoth(words, 8)) assert(got == refBpe(words, 8))
   }
 
+  test("distributed bp1 holds no more pins after 12 merges than after 3") {
+    import spark.implicits._
+    val words = Seq("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L).toDF("w", "freq")
+    // at most the last two encodings and the last two pair tables
+    def held(n: Int): Int = SparkTestSession.heldPins(Bpe.learnMergesDistributed(words, n))(
+      merges => assert(merges.count() == n))
+    assert(held(3) <= 4 && held(12) <= 4)
+  }
+
   test("bp1 merge application is greedy left-to-right on runs (aaa under (a,a) -> [aa, a])") {
     val words = Seq("aaa" -> 7L, "aa" -> 2L)
     for (g <- learnedBoth(words, 3)) assert(g == refBpe(words, 3))

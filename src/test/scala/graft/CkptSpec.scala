@@ -1,5 +1,10 @@
 package graft
 
+import scala.collection.mutable.ListBuffer
+
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Ckpt.PinOps
@@ -16,7 +21,9 @@ import graft.Ckpt.PinOps
   *  2. both forms sever the logical plan (downstream sees a scan of the
   *     materialized RDD, no lineage into the construction);
   *  3. the flag changes no results — a pin-severed operator returns
-  *     value-identical rows with the flag on and off.
+  *     value-identical rows with the flag on and off;
+  *  4. `Ckpt.rounds` releases exactly the pins of its own loop that
+  *     nothing live can read.
   * The loss behavior itself (recovered_exact vs failfast_rerun_exact)
   * cannot execute on local[4] — that half of the contract is recorded by
   * `tools/ExecLossTier.scala` on local-cluster (CORRECTNESS_execloss).
@@ -157,5 +164,63 @@ class CkptSpec extends AnyFunSuite {
       .map(c => " " + c.getMessage).getOrElse("")
     assert(msg.toLowerCase.contains("checkpoint") || msg.contains("not found"),
       s"loss must surface as the checkpoint-block error, got: $msg")
+  }
+
+  private def persisted(ds: Dataset[_]): Boolean =
+    ds.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
+      .forall(spark.sparkContext.getPersistentRDDs.contains)
+
+  /** A five-round `v + 1` chain from `base` through [[Ckpt.rounds]], every
+    * state pinned through the handle; `materialize` counts each state in
+    * `done`, and `during` runs inside round 1. Returns the last state and
+    * every pin the loop made. */
+  private def chain(base: DataFrame, materialize: Boolean)(
+      during: => Unit = ()): (DataFrame, Seq[DataFrame]) = {
+    val made = ListBuffer.empty[DataFrame]
+    def pin(pins: Ckpt.Pins, df: DataFrame): DataFrame = { val p = pins(df); made += p; p }
+    val last = Ckpt.rounds(pin(_, base))(Seq(_)) { (pins, s, round) =>
+      if (round == 1) during
+      pin(pins, s.select((col("v") + 1).as("v")))
+    } { (s, round) =>
+      if (materialize) s.count()
+      round >= 5
+    }
+    (last, made.toSeq)
+  }
+
+  private def values(ds: DataFrame): Seq[Long] =
+    ds.collect().map(_.getLong(0)).sorted.toSeq
+
+  test("rounds never releases a pin that an unmaterialized live state still reads") {
+    // no action runs inside the loop, so the last state reads every pin
+    val (last, made) = chain(spark.range(100).toDF("v"), materialize = false)()
+    assert(made.size == 6 && made.forall(persisted))
+    assert(values(last) == (5L until 105L))
+  }
+
+  test("rounds releases the pins a materialized state supersedes") {
+    val (last, made) = chain(spark.range(100).toDF("v"), materialize = true)()
+    assert(made.size == 6 && persisted(made.last))
+    assert(made.init.forall(!persisted(_)), "superseded pins still held")
+    assert(values(last) == (5L until 105L))
+  }
+
+  test("rounds leaves a pin the caller made before the loop untouched") {
+    val base = spark.range(100).toDF("v").pinLazy()
+    val (last, made) = chain(base, materialize = true)()
+    assert(made.init.forall(!persisted(_)))
+    assert(persisted(base) && values(base) == (0L until 100L))
+    assert(values(last) == (5L until 105L))
+  }
+
+  test("rounds leaves a pin another thread makes on the same context untouched") {
+    var other: DataFrame = null
+    val t = new Thread(() => other = spark.range(10).toDF("v").pinLazy())
+    val (last, made) = chain(spark.range(100).toDF("v"), materialize = true) {
+      t.start(); t.join()
+    }
+    assert(made.init.forall(!persisted(_)))
+    assert(persisted(other) && values(other) == (0L until 10L))
+    assert(values(last) == (5L until 105L))
   }
 }

@@ -200,6 +200,16 @@ class DedupSpec extends AnyFunSuite {
     labels.foreach { case (n, l) => assert(l == 0L, s"node $n labelled $l") }
   }
 
+  test("connected components holds no more pins on a 60-chain than on a 10-chain") {
+    import spark.implicits._
+    // a call leaves persisted at most the pinned symmetric edges and the
+    // final labels, however many rounds the chain takes
+    def held(n: Long): Int = SparkTestSession.heldPins(
+      Dedup.connectedComponents((0L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")))(
+      labels => assert(labels.count() == n + 1))
+    assert(held(10) <= 2 && held(60) <= 2)
+  }
+
   test("hash-to-min propagation converges a 300-deep chain") {
     import spark.implicits._
     // r15 focused test for the O(log d) contract: plain per-hop

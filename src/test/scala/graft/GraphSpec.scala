@@ -33,6 +33,16 @@ class GraphSpec extends AnyFunSuite {
     assert(r(0L) == 421402191235800780L && r(1L) == 144649452191049804L)
   }
 
+  test("pageRank holds two rank pins, not one per iteration") {
+    import spark.implicits._
+    val chain = (0L until 50L).map(i => (i, i + 1)).toDF("a", "b")
+    // the three static pins (edges, degrees, weighted edges) and the last
+    // two ranks: under AQE (the session default) building a round's pin
+    // stores the ranks it reads, so older ranks are released
+    val held = SparkTestSession.heldPins(Graph.pageRank(chain))(ranks => assert(ranks.count() == 51))
+    assert(held <= 5, s"$held pins held after ${Graph.Iterations} iterations")
+  }
+
   test("path graph: middle node outranks the tied endpoints") {
     val r = ranksOf(Seq((1L, 2L), (2L, 3L)))
     assert(r(2L) > r(1L) && r(1L) == r(3L))

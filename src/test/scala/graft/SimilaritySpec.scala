@@ -229,16 +229,10 @@ class SimilaritySpec extends AnyFunSuite {
     // result no longer needs can be missing) — a per-iteration pin that
     // waits for the ContextCleaner makes iters = 3 leave two more than
     // iters = 1
-    val sc = spark.sparkContext
     val corpus = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
-    def leftPersisted(iters: Int): Int = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = Similarity.pqTopKOf(corpus, m = 8, ksub = 16, iters = iters, shortlist = 40)
-      assert(out.collect().length == 50)
-      val left = (sc.getPersistentRDDs.keySet -- before).size
-      assert(out.count() == 50) // keeps `out` (and the pins it reads) reachable until here
-      left
-    }
+    def leftPersisted(iters: Int): Int = SparkTestSession.heldPins(
+      Similarity.pqTopKOf(corpus, m = 8, ksub = 16, iters = iters, shortlist = 40))(
+      out => assert(out.collect().length == 50))
     assert(leftPersisted(1) == leftPersisted(3))
   }
 

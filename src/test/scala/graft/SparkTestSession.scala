@@ -12,6 +12,21 @@ object SparkTestSession {
     // ContextCleaner instead of accumulating one snapshot per pin
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")).build()
 
+  /** How many RDDs `run` leaves persisted while its result is still held:
+    * pins the call neither released nor hands to its result. A loop that
+    * holds its superseded pins leaves more of them the more rounds it runs.
+    * `use` materializes the result, and runs again after the count so the
+    * result (and every pin it reads) stays reachable until then. */
+  def heldPins[T](run: => T)(use: T => Unit): Int = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = run
+    use(out)
+    val held = (sc.getPersistentRDDs.keySet -- before).size
+    use(out)
+    held
+  }
+
   /** Hermetic small corpus (read-only). */
   val sf: String = "/root/testdata/sf0.001"
 
