@@ -3,7 +3,10 @@ package graft.sinks
 import java.io.File
 import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, GraftShim}
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.Scratch
 
@@ -16,22 +19,23 @@ import graft.Scratch
   * (src/lib.rs:124-137, `with_explicit_nulls(true)` at :127). An Arrow IPC
   * variant exists but panics unimplemented (src/lib.rs:73,138).
   *
-  * Spark-side each format is a `DataFrameWriter` configuration; the parity
-  * options that differ from Spark defaults are CSV `header=true` and JSON
-  * `ignoreNullFields=false` (Spark drops null fields from NDJSON output by
-  * default; the reference keeps them).
+  * Spark-side each format is a Spark source name plus writer options, one
+  * table that both sinks read; the parity options that differ from Spark
+  * defaults are CSV `header=true` and JSON `ignoreNullFields=false` (Spark
+  * drops null fields from NDJSON output by default; the reference keeps
+  * them).
   */
 object Sinks {
 
-  sealed abstract class Format(val name: String)
-  case object Parquet extends Format("parquet")
-  case object Csv extends Format("csv")
-  case object Json extends Format("json")
+  sealed abstract class Format(val name: String, val options: Map[String, String])
+  case object Parquet extends Format("parquet", Map.empty)
+  case object Csv extends Format("csv", Map("header" -> "true"))
+  case object Json extends Format("json", Map("ignoreNullFields" -> "false"))
   /** Bonus over the reference (roadmap-only there, README.md:29). */
-  case object Orc extends Format("orc")
+  case object Orc extends Format("orc", Map.empty)
   /** Raw-corpus bonus: one text line per row (requires a single string
     * column, Spark's `text` writer contract). */
-  case object Text extends Format("text")
+  case object Text extends Format("text", Map.empty)
 
   /** Extension → format: lowercase whole path, last '.'-segment
     * (reference src/lib.rs:80-81). */
@@ -50,16 +54,8 @@ object Sinks {
         s"Unsupported output format '${other.getOrElse("")}' for path: $path")
     }
 
-  private def writer(df: DataFrame, format: Format) = {
-    val w = df.write.mode("overwrite")
-    format match {
-      case Parquet => w.format("parquet")
-      case Orc     => w.format("orc")
-      case Csv     => w.format("csv").option("header", "true")
-      case Json    => w.format("json").option("ignoreNullFields", "false")
-      case Text    => w.format("text")
-    }
-  }
+  private def writer(df: DataFrame, format: Format) =
+    df.write.mode("overwrite").format(format.name).options(format.options)
 
   /** Scale path: write a directory of part-files, fully parallel — every
     * executor streams its partitions to the committer. This is what a 100 TB
@@ -72,25 +68,50 @@ object Sinks {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
   }
 
-  /** Reference-parity sink: exactly one output file at `path`.
+  /** Reference-parity sink: exactly one output file at `path`, written
+    * with no write job.
     *
-    * Spark always writes a directory of part-files, so this coalesces to a
-    * single partition (serializing the final write — documented tradeoff,
-    * SURVEY.md §7.4.1), writes to a temp dir, and promotes the lone
-    * part-file to the requested name. The temp dir is removed whether or
-    * not the write succeeds; a failed write leaves no output file and
-    * surfaces its own exception.
+    * The query runs as `Dataset.collect` runs it: at its own parallelism,
+    * AQE intact, with Spark's driver-side top-k merge, and rows come back
+    * in partition order (an `ORDER BY` result stays ordered). The driver
+    * then opens one `OutputWriter` from the format's own V1 `FileFormat`,
+    * writes every row into `<path>.tmp-spark-write/part-00000` and moves
+    * that file to `path`. Spark's pre-write schema checks and the format's
+    * `prepareWrite` run before the query, so a schema the format cannot
+    * hold fails with the error `writeDir` raises, and runs no job.
+    *
+    * Limit: the whole result passes through the driver, so it is bounded by
+    * Spark's `spark.driver.maxResultSize` (default 1g of serialized rows),
+    * as `collect` is; a larger result fails with Spark's error. `writeDir`
+    * is the path for results of that size. The writer opens only after the
+    * query returns; whatever fails, no output file is left, the temp
+    * directory is removed and the original exception surfaces.
     */
   def writeSingleFile(df: DataFrame, path: String): Unit = {
     val format = fromPath(path)
-    val tmp = path + ".tmp-spark-write"
+    val spark = df.sparkSession
+    val fileFormat = GraftShim.writeFormat(spark, format.name, df.schema)
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(format.options))
+    val factory = fileFormat.prepareWrite(spark, job, format.options, df.schema)
+    val tmp = new File(path + ".tmp-spark-write")
     try {
-      writer(df.coalesce(1), format).save(tmp)
-      val part = Option(new File(tmp).listFiles()).getOrElse(Array.empty[File])
-        .find(f => f.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part-file produced under $tmp"))
+      val qe = df.queryExecution
+      val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+      // the ids FileFormatWriter gives a write task's attempt context
+      val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
+      val conf = job.getConfiguration
+      conf.set("mapreduce.job.id", attempt.getJobID.toString)
+      conf.set("mapreduce.task.id", attempt.getTaskID.toString)
+      conf.set("mapreduce.task.attempt.id", attempt.toString)
+      conf.setBoolean("mapreduce.task.ismap", true)
+      conf.setInt("mapreduce.task.partition", 0)
+      Scratch.delete(tmp) // a crashed export's leftover
+      tmp.mkdirs()
+      val part = new File(tmp, "part-00000")
+      val out = factory.newInstance(part.getPath, df.schema, new TaskAttemptContextImpl(conf, attempt))
+      try rows.foreach(out.write) finally out.close()
       JFiles.move(part.toPath, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
-    } finally Scratch.delete(new File(tmp))
+    } finally Scratch.delete(tmp)
   }
 
   /** Small-file compaction — the table-maintenance pass every long-lived

@@ -466,4 +466,45 @@ class EngineSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("an export writes every row when the session caps records per file") {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.files.maxRecordsPerFile", "3")
+    withOut("csv") { out =>
+      Engine.export(session, s"parquet://$sf", "SELECT n_nationkey FROM nation ORDER BY n_nationkey", out)
+      val lines = scala.io.Source.fromFile(out).getLines().toList
+      assert(lines == "n_nationkey" :: (0 until 25).map(_.toString).toList)
+    }
+  }
+
+  test("an export runs as many jobs as collecting the same query") {
+    Seq("SELECT l_orderkey, l_extendedprice FROM lineitem ORDER BY l_extendedprice DESC LIMIT 10",
+      """SELECT n_name, count(*) AS n FROM customer c
+        |JOIN nation n ON c.c_nationkey = n.n_nationkey
+        |JOIN region r ON n.n_regionkey = r.r_regionkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin).foreach { sql =>
+      withOut("parquet") { out =>
+        val collected = jobsDuring { Engine.query(spark, s"parquet://$sf", sql).collect(); () }
+        val exported = jobsDuring(Engine.export(spark, s"parquet://$sf", sql, out))
+        assert(exported == collected && collected > 0, s"$exported vs $collected: $sql")
+      }
+    }
+  }
+
+  test("a schema the format cannot hold fails as writeDir fails, before the query runs, and leaves nothing") {
+    Seq("csv" -> Seq("named_struct('a', id) AS s"), "txt" -> Seq("'a' AS x", "string(id) AS y"),
+      "parquet" -> Seq("make_interval(0, 0, 0, int(id)) AS i")).foreach {
+      case (ext, cols) =>
+        withOut(ext) { out =>
+          val df = spark.range(3).selectExpr(cols: _*)
+          val viaDir = intercept[AnalysisException](Sinks.writeDir(df, out + ".dir", Sinks.fromPath(out)))
+          var viaFile: AnalysisException = null
+          assert(jobsDuring { viaFile = intercept[AnalysisException](Sinks.writeSingleFile(df, out)) } == 0)
+          assert(viaFile.getCondition == viaDir.getCondition, viaFile.getMessage)
+          assert(viaFile.getMessage == viaDir.getMessage)
+          assert(!new java.io.File(out).exists())
+          assert(!new java.io.File(out + ".tmp-spark-write").exists())
+        }
+    }
+  }
 }

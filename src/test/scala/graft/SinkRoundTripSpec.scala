@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Row
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, desc}
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -36,12 +40,12 @@ class SinkRoundTripSpec extends AnyFunSuite {
     name <- Gen.option(Gen.choose(1, 100).map(i => s"$prefix $i"))
   } yield Row(cid, amount, name.orNull)
 
-  private def sample(seed: Long): List[Row] =
-    Gen.listOfN(20, paymentGen)
+  private def sample(seed: Long, n: Int = 20): List[Row] =
+    Gen.listOfN(n, paymentGen)
       .pureApply(Gen.Parameters.default, Seed(seed))
 
-  private def df(rows: List[Row]) =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  private def df(rows: List[Row], session: SparkSession = spark) =
+    session.createDataFrame(session.sparkContext.parallelize(rows, 2), schema)
 
   private def roundTrip(rows: List[Row], ext: String): Seq[String] =
     Scratch.withTree("graft-prop") { tree =>
@@ -110,5 +114,55 @@ class SinkRoundTripSpec extends AnyFunSuite {
       val after = spark.read.parquet(dir).orderBy("doc_id").collect().toSeq
       assert(after == before)
     }
+  }
+
+  // --- writeSingleFile against Spark's own writer, file for file ---
+
+  /** The payment rows with a decimal and a timestamp column, both null
+    * wherever the name is. */
+  private def payments(rows: DataFrame): DataFrame = rows.selectExpr(
+    "customer_id", "amount",
+    "IF(account_name IS NULL, NULL, CAST(amount AS DECIMAL(12, 2)) / 100) AS amount_dec",
+    "IF(account_name IS NULL, NULL, timestamp_seconds(1700000000 + customer_id * 3607)) AS paid_at",
+    "account_name")
+
+  /** `df`'s file from `writeSingleFile` and the lone part-file Spark's own
+    * `coalesce(1).write` writes with the same format and options. */
+  private def bothWriters(df: DataFrame, ext: String): (Array[Byte], Array[Byte]) =
+    Scratch.withTree("graft-single") { tree =>
+      val out = new File(tree, s"out.$ext")
+      Sinks.writeSingleFile(df, out.getPath)
+      val format = Sinks.fromPath(out.getPath)
+      val dir = new File(tree, "spark")
+      df.coalesce(1).write.format(format.name).options(format.options).save(dir.getPath)
+      val parts = dir.listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1, parts.toSeq)
+      (Files.readAllBytes(out.toPath), Files.readAllBytes(parts.head.toPath))
+    }
+
+  /** Every sink writes the bytes Spark's writer writes; text gets the one
+    * string column its format holds. */
+  private def assertSameFiles(df: DataFrame, what: String): Unit =
+    Seq("parquet", "csv", "json", "orc", "txt").foreach { ext =>
+      val (ours, sparks) = bothWriters(if (ext == "txt") df.select("account_name") else df, ext)
+      assert(ours.sameElements(sparks), s"$what .$ext: ${ours.length} vs ${sparks.length} bytes")
+    }
+
+  test("writeSingleFile writes Spark's own bytes: payment rows with nulls, decimals and timestamps") {
+    Seq(42L, 7L).foreach(seed => assertSameFiles(payments(df(sample(seed))), s"seed=$seed"))
+  }
+
+  test("writeSingleFile writes Spark's own bytes for a zero-row result") {
+    assertSameFiles(payments(df(sample(42))).filter("customer_id < 0"), "zero rows")
+  }
+
+  test("writeSingleFile writes Spark's own bytes for an ordered result of many partitions") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "13")
+    val sorted = payments(df(sample(20260812L, 200), s))
+      .orderBy(desc("amount"), col("customer_id"), col("account_name").asc_nulls_first)
+    assert(sorted.queryExecution.executedPlan.execute().getNumPartitions > 1)
+    assertSameFiles(sorted, "ordered")
   }
 }
