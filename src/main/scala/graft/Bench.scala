@@ -274,25 +274,14 @@ object Bench {
     // "errors" object, excluded from the total.
     var errors = Map.empty[String, String]
     // Optional isolation harness: SPARK_GRAFT_ONLY=tx6,tx7 retimes a subset
-    // under the exact same warmup/noop-write methodology as the full run —
-    // used for variance-vs-regression audits (BASELINE.md), never by the
-    // driver (unset ⇒ full registry).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Isolating a subset of st rows without SPARK_GRAFT_ST_SOLO times the
-    // full concurrent family launch on the first row reached, not the row
-    // itself — warn loudly so an isolation audit can't misread the number.
-    val stCodes = graft.streaming.StFamily.members.keySet
-    only.foreach { sel =>
-      val st = sel.intersect(stCodes)
-      if (st.nonEmpty && st != stCodes && !sys.env.contains("SPARK_GRAFT_ST_SOLO"))
-        println(s"[bench] WARNING: SPARK_GRAFT_ONLY selects ${st.mkString(",")} " +
-          "without SPARK_GRAFT_ST_SOLO=1 — the first st reading is the FULL " +
-          "family launch, not the row's own cost")
-    }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name.takeWhile(_ != '_'))) }
+    // (Registry.selects) under the exact same warmup/noop-write methodology
+    // as the full run — used for variance-vs-regression audits
+    // (BASELINE.md), never by the driver (unset ⇒ full registry). The
+    // first st row selected times the whole family launch (StFamily).
+    val only = Registry.selects(sys.env.get("SPARK_GRAFT_ONLY")) _
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) => only(name) }
     def code(n: String): String = n.takeWhile(_ != '_')
+    val stCodes = graft.streaming.StFamily.members.keySet
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok =
@@ -351,13 +340,7 @@ object Bench {
     // cost is pure waste and a genuinely slow fetch can never be
     // corrected — exempt them. st1 stays re-timeable: its reading IS a
     // family launch, so a second launch is the like-for-like re-measure.
-    // Under SPARK_GRAFT_ST_SOLO every st row is a genuine standalone run
-    // (StFamily.solo bypasses the launcher), so the exemption — and the
-    // family attribution marker below — must not apply (r11 advisor).
-    val stSolo = sys.env.contains("SPARK_GRAFT_ST_SOLO")
-    val stFetchRows =
-      if (stSolo) Set.empty[String]
-      else graft.streaming.StFamily.members.keySet - "st1"
+    val stFetchRows = stCodes - "st1"
     val results = firstPass.map { case (name, sec) =>
       // the 1.0 s missing-ref default stays UNSCALED by refScale (it is a
       // floor for queries with no history, not an sf0.1 reading to
@@ -397,7 +380,7 @@ object Bench {
     // family — st1 carries the family wall-clock, st2-st8 are cache
     // fetches — flagged in the artifact itself so a cross-round per-query
     // diff does not read the structure as a 7x st2-st8 speedup.
-    val stFam = !stSolo && results.exists(r => stCodes.contains(code(r._1)))
+    val stFam = results.exists(r => stCodes.contains(code(r._1)))
     println(renderLine(
       total = total, calib = calibSec,
       queries = results.map { case (k, v) => code(k) -> v },

@@ -19,8 +19,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * The documented boundary (RUNBOOK "localCheckpoint caveat") is executor
   * LOSS: blocks on the dead executor are gone and the query fails fast.
   *
-  * `SPARK_GRAFT_RELIABLE_CKPT=1` (or JVM property `graft.reliableCkpt`,
-  * which wins, so an in-process A/B can toggle per-phase) switches every
+  * JVM property `graft.reliableCkpt=true` (read at every pin, so an
+  * in-process A/B can toggle it per phase) switches every
   * pin site to reliable `Dataset.checkpoint()` against the context's
   * checkpoint dir (Spark's `spark.checkpoint.dir`, read at context start,
   * or `spark.sparkContext.setCheckpointDir`; falls back to a temp dir
@@ -44,7 +44,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * context-start conf — it cannot be set here). The exec-loss tiers'
   * `ExecLossHarness.clusterSession` and the test session set it, and
   * CkptSpec pins the sweep mechanism (5 dropped rounds → ≤1 surviving
-  * snapshot). Deployments enabling SPARK_GRAFT_RELIABLE_CKPT should set
+  * snapshot). Deployments enabling `graft.reliableCkpt` should set
   * the same conf (or sweep the checkpoint dir between jobs); otherwise a
   * long iterative job accumulates one pinned snapshot per round on the
   * DFS.
@@ -56,9 +56,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Ckpt {
 
   private[graft] def reliable: Boolean =
-    sys.props.get("graft.reliableCkpt")
-      .orElse(sys.env.get("SPARK_GRAFT_RELIABLE_CKPT"))
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
+    sys.props.get("graft.reliableCkpt").exists(v => v == "1" || v.equalsIgnoreCase("true"))
 
   private def ensureCheckpointDir(ds: Dataset[_]): Unit = {
     val sc = ds.sparkSession.sparkContext

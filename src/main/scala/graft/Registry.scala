@@ -728,7 +728,7 @@ object Registry {
     // so the per-query micro-batch machinery floors overlap instead of
     // adding, the way a production cluster runs independent streaming
     // queries. Row SEMANTICS are unchanged (each member is the same
-    // standalone function, runnable solo via SPARK_GRAFT_ST_SOLO=1);
+    // standalone function, callable directly);
     // Bench attribution shifts: st1 carries the family's concurrent
     // wall-clock, st2–st8 read as cache fetches.
     // st1 EXECUTES the Structured Streaming ingest path (foreachBatch +
@@ -1100,6 +1100,15 @@ object Registry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(r => r.name -> r.fn).toMap
+
+  /** Whether `only`, the value of `SPARK_GRAFT_ONLY`, selects the row
+    * `name`: a comma-separated list of name prefixes, each trimmed, so `st`
+    * selects st1–st8 and `q48, tx6` selects both rows. Unset or blank
+    * selects every row. Verify and Bench select their rows with it. */
+  def selects(only: Option[String])(name: String): Boolean = {
+    val prefixes = only.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    prefixes.isEmpty || prefixes.exists(name.startsWith)
+  }
 
   def oracleSql: Map[String, String] =
     all.map(r => r.name -> r.oracle).toMap

@@ -34,6 +34,24 @@ object Scratch {
     atExit.asScala.toSet
   }
 
+  /** Replace the tree `target` with the tree `staged`: park `target`
+    * aside, rename `staged` in, and only then delete the parked tree. If
+    * the rename fails, the parked tree is renamed back and this throws, so
+    * a failure leaves `target` as it was; a crash between the renames
+    * leaves either tree whole under one of the two names. A missing
+    * `target` is simply replaced. */
+  def swapIn(staged: File, target: File): Unit = {
+    val parked = new File(target.getPath + ".tmp-old")
+    delete(parked) // a crashed swap's leftover
+    if (target.exists() && !target.renameTo(parked))
+      throw new IllegalStateException(s"could not park $target")
+    if (!staged.renameTo(target)) {
+      parked.renameTo(target)
+      throw new IllegalStateException(s"could not swap $staged in for $target")
+    }
+    delete(parked)
+  }
+
   /** Run `body` on a fresh tree in `java.io.tmpdir` and delete the tree
     * when `body` returns or throws; the exit hook only catches a JVM that
     * exits mid-run. A caller may run many times per JVM (Bench re-times a

@@ -107,11 +107,9 @@ object Verify {
       })
     new java.io.File(outDir).mkdirs()
     // local-iteration aid: SPARK_GRAFT_ONLY=q48,tx6 restricts the dump to
-    // matching query names (comma-separated prefixes); unset = full run,
-    // which is what the driver does
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def wanted(name: String): Boolean =
-      only.forall(_.exists(p => name.startsWith(p)))
+    // matching query names (Registry.selects); unset = full run, which is
+    // what the driver does
+    val wanted = Registry.selects(sys.env.get("SPARK_GRAFT_ONLY")) _
     // Supplementary per-query timing (r13 verdict item 8): the seconds each
     // dump took, written as <outDir>_VERIFYTIME.json BESIDE outDir (see
     // the sibling-path note at the write site below — a file inside

@@ -135,20 +135,8 @@ object Sinks {
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     val tmp = dir + ".tmp-compact"
     df.repartition(nOut).write.mode("overwrite").format("parquet").save(tmp)
-    val staging = new File(tmp)
-    val target = new File(dir)
-    // Recoverable swap: the original data is never deleted before the new
-    // layout is in place — park it aside, move staging in, then drop it.
-    // A crash leaves either the original dir or the parked copy on disk.
-    val parked = new File(dir + ".tmp-old")
-    Scratch.delete(parked) // stale leftover from a previous crash
-    if (!target.renameTo(parked))
-      throw new IllegalStateException(s"compaction could not park $dir")
-    if (!staging.renameTo(target)) {
-      parked.renameTo(target) // roll back
-      throw new IllegalStateException(s"compaction swap failed for $dir")
-    }
-    Scratch.delete(parked)
+    // the original data is deleted only once the new layout is in place
+    Scratch.swapIn(new File(tmp), new File(dir))
     nOut
   }
 }

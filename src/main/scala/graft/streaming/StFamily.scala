@@ -35,9 +35,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * members concurrently, each on its own `spark.newSession()` child (so
   * per-query `spark.sql.shuffle.partitions` scoping — a start-time state
   * property — cannot cross-talk) and its own staging/checkpoint trees,
-  * then caches each member's fully-materialized result (every member
-  * `localCheckpoint`s before returning). Subsequent rows collect their
-  * cached result. Entries are SINGLE-SHOT (removed on fetch): a repeat
+  * then caches each member's fully-materialized result ([[Member.run]]
+  * pins it before returning). Subsequent rows collect their cached
+  * result. Entries are SINGLE-SHOT (removed on fetch): a repeat
   * invocation of any row — Bench's outlier re-time, a second Verify pass —
   * re-runs the whole family live rather than reading a stale cache, so no
   * timing or correctness path ever observes a result it did not pay for.
@@ -49,9 +49,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * results once, same as before, just not serialized. RefSeconds reflects
   * this attribution.
   *
-  * `SPARK_GRAFT_ST_SOLO=1` bypasses the launcher entirely (each row runs
-  * standalone on the parent session) — used by TimeQuery to isolate one
-  * row's own mechanism, and by A/B audits of the launcher itself.
+  * A single row runs standalone as a direct call of its member function
+  * (StreamingSpec, ExecLossTier, ExecLossStTier); every registry consumer
+  * — Bench, Verify, TimeQuery — goes through the launcher.
   *
   * Failure isolation: a member that throws caches its Failure; the rows
   * that didn't fail stay green, and the failing row's exception surfaces
@@ -75,8 +75,6 @@ object StFamily {
     (s: SparkSession, d: String) => fetch(s, d, code)
   }
 
-  private def solo: Boolean = sys.env.contains("SPARK_GRAFT_ST_SOLO")
-
   // guarded by this object's lock
   private val cache = mutable.Map.empty[(String, String), Try[DataFrame]]
 
@@ -96,7 +94,6 @@ object StFamily {
     * racing it for the single-shot entry, and a concurrent first fetch from
     * two threads runs one family launch, not two. */
   private def fetch(s: SparkSession, d: String, code: String): DataFrame = {
-    if (solo) return members(code)(s, d)
     synchronized {
       if (!cache.contains((d, code))) runFamily(s, d)
       cache.remove((d, code)).get

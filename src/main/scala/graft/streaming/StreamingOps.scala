@@ -153,19 +153,10 @@ object StreamingOps {
     * crash between renames leaves either the old or the new complete
     * directory, never a mix. */
   private def commitSwap(stateDir: String, next: DataFrame, batchId: Long): Unit = {
-    val target = new java.io.File(stateDir)
     val tmp = stateDir + ".tmp-merge"
     next.write.mode("overwrite").parquet(tmp)
     new java.io.File(tmp, s"_committed_$batchId").createNewFile()
-    val parked = new java.io.File(stateDir + ".tmp-old")
-    Scratch.delete(parked)
-    if (target.exists() && !target.renameTo(parked))
-      throw new IllegalStateException(s"state merge could not park $stateDir")
-    if (!new java.io.File(tmp).renameTo(target)) {
-      parked.renameTo(target) // roll back
-      throw new IllegalStateException(s"state merge swap failed for $stateDir")
-    }
-    Scratch.delete(parked)
+    Scratch.swapIn(new java.io.File(tmp), new java.io.File(stateDir))
   }
 
   /** Incremental ingest dedup via foreachBatch — the PERSISTENT-state
@@ -221,43 +212,23 @@ object StreamingOps {
     * runs Structured Streaming end-to-end, so the driver's oracle hash
     * checks the streaming path itself, not just its ScalaTest twin.
     *
-    * Choreography: stage the corpus as three parquet files in doc_id-range
-    * order (ranges, not a global-window ntile — the registry bans
-    * unpartitioned windows), stream them through
-    * [[incrementalDedupIngest]] one file per micro-batch (FileStreamSource
-    * orders by mtime then path, and the files are written in range order),
+    * Choreography: stage the corpus as three equi-width doc_id ranges
+    * ([[Member.stage]]; ranges, not a global-window ntile — the registry
+    * bans unpartitioned windows), stream them through
+    * [[incrementalDedupIngest]] one file per micro-batch in range order,
     * then read the surviving batches back and recompute each survivor's
     * fingerprint from its text. Batches arriving in id order make
     * first-arrival-wins ≡ min-doc_id-wins, so the result equals the batch
     * dd2 keep-list — which is exactly what the oracle asserts. */
-  def dedupIngestKeepList(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st1-") { base =>
-    val inDir = new java.io.File(base, "in").getPath
-    val fpDir = new java.io.File(base, "fp").getPath
-    val outDir = new java.io.File(base, "out").getPath
+  def dedupIngestKeepList(s: SparkSession, d: String): DataFrame = Member.run(s, "st1") { m =>
     val docs = graft.Tables(s, d, "documents")
     val Seq(lo, hi) = docs.agg(min("doc_id"), max("doc_id"))
       .collect()(0).toSeq.map(_.asInstanceOf[Long])
-    val cut1 = lo + (hi - lo + 1) / 3
-    val cut2 = lo + 2 * ((hi - lo + 1) / 3)
-    stageConcurrently(Seq(
-      col("doc_id") < cut1,
-      col("doc_id") >= cut1 && col("doc_id") < cut2,
-      col("doc_id") >= cut2
-    ).zipWithIndex.map { case (range, i) => () =>
-      docs.filter(range).coalesce(1).write.parquet(stagedPath(inDir, i))
-    })
-    restampInOrder(inDir)
-    val stream = stagedStream(s, inDir)
-    incrementalDedupIngest(stream, fpDir, outDir)
-    // materialize the keep-list off the staging tree (localCheckpoint is
-    // eager) before the staging tree is deleted
-    val result = sinkOutput(s, outDir, stream)
-      .select(
-        Dedup.textFingerprint(col("text")).as("fp"),
-        col("doc_id").as("keep_id"))
-      .pin()
-    result.orderBy("keep_id")
-  }
+    val stream = m.stage(docs, Member.ranges(col("doc_id"), lo, hi, equiCuts(lo, hi, 3)))
+    incrementalDedupIngest(stream, m.path("fp"), m.path("out"))
+    sinkOutput(s, m.path("out"), stream)
+      .select(Dedup.textFingerprint(col("text")).as("fp"), col("doc_id").as("keep_id"))
+  }.orderBy("keep_id")
 
   /** Registry query (st2): the watermarked `session_window` sessionization
     * PRODUCED BY Structured Streaming — the second oracle row whose
@@ -280,21 +251,15 @@ object StreamingOps {
     * strict `> gap` new-session rule; window end = last event + gap.
     * Timestamps are emitted as epoch micros (BIGINT) — integer-exact on
     * both engines. */
-  def sessionizationFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st2-") { base =>
-    val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3)
-    val stream = stagedStream(s, inDir)
-    // unique sink name: Bench's outlier re-time can run the query twice in
-    // one JVM, and a memory-sink queryName cannot be re-registered live
-    val name = "st2_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  def sessionizationFromStream(s: SparkSession, d: String): DataFrame = Member.run(s, "st2") { m =>
+    val (stream, _) = stageEvents(m, d, nFiles = 3, Seq("user_id", "ts"))
     // Session-window state is O(open sessions) per user — commit overhead
     // dominates at every measured scale, so a small fixed partition count
     // wins (stress A/B: 8 parts 4.85/5.35 s vs 32 parts 6.44/9.88 s for
     // st2/st3). Contrast st4, whose join state buffers full event volume
     // and sizes by statePartitionsFor.
-    runToMemory(injectStChaos(sessionWindows(stream)), name,
-      OutputMode.Complete, partitions = Some(8))
-    drainMemorySink(s, name)
-  }
+    sessionRows(m.toMemory(injectStChaos(sessionWindows(stream)), OutputMode.Complete, 8))
+  }.orderBy("user_id", "s_start_us")
 
   /** Registry query (st3): the APPEND-mode, watermark-closed half of the
     * sessionization contract — st2 proves session-MERGE state (Complete
@@ -319,28 +284,24 @@ object StreamingOps {
     * Sessions still open at end-of-stream stay in state and are dropped
     * with it — the production stream would emit them when their watermark
     * arrives; the oracle row certifies the closed set. */
-  def closedSessionsFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st3-") { base =>
-    val (inDir, _) = stageSessionInput(s, d, base, nFiles = 4)
-    val stream = stagedStream(s, inDir)
-    val name = "st3_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  def closedSessionsFromStream(s: SparkSession, d: String): DataFrame = Member.run(s, "st3") { m =>
+    val (stream, _) = stageEvents(m, d, nFiles = 4, Seq("user_id", "ts"))
     // fixed 8 parts: session state is commit-dominated (see st2's note)
-    runToMemory(injectStChaos(sessionWindows(stream)), name,
-      OutputMode.Append, partitions = Some(8))
-    drainMemorySink(s, name)
-  }
+    sessionRows(m.toMemory(injectStChaos(sessionWindows(stream)), OutputMode.Append, 8))
+  }.orderBy("user_id", "s_start_us")
 
-  /** Stage a projection of the events table as `nFiles` ts-range parquet
-    * files under `base`/in — only the columns the streaming consumer reads
-    * (the json props column would dominate the staging write and the
-    * stream decode). Range cuts, not a global-window ntile (the registry
-    * bans unpartitioned windows); files written in range order so
-    * FileStreamSource (mtime-then-path order) streams them time-ordered. */
-  private def stageSessionInput(
-      s: SparkSession, d: String, base: java.io.File, nFiles: Int,
-      cols: Seq[String] = Seq("user_id", "ts"),
-      pairSplitUs: Option[Long] = None,
-      dupKeySplit: Option[Seq[Column]] = None): (String, Long) = {
-    val inDir = new java.io.File(base, "in").getPath
+  /** Stage the events table's `cols` as `nFiles` ts ranges under `m`'s
+    * tree ([[Member.stage]]) and return them as one time-ordered stream,
+    * with the table's row count. Only the columns the streaming consumer
+    * reads are staged (the json props column would dominate the staging
+    * write and the stream decode). The ranges split at `cuts(events, lo,
+    * hi, nFiles)` over the microsecond span `[lo, hi]` — equi-width unless
+    * a row needs cuts that provably split its state across batches; range
+    * cuts, not a global-window ntile (the registry bans unpartitioned
+    * windows). */
+  private def stageEvents(m: Member, d: String, nFiles: Int, cols: Seq[String],
+      cuts: (DataFrame, Long, Long, Int) => Seq[Long] = (_, lo, hi, n) => equiCuts(lo, hi, n))
+      : (DataFrame, Long) = {
     // materialize the slim projection once: the range writes below are
     // nFiles jobs over it, and without it each one re-scans the source
     // parquet (48 full scans at the probe-scaled batch count). PIN, not
@@ -352,33 +313,12 @@ object StreamingOps {
     // ("Block rdd_N_0 does not exist", surfaced by the full-suite family
     // launch on a slow r13 host). pin()'s localCheckpoint blocks belong to
     // this member's private RDD — plan-equality sharing is impossible.
-    import graft.Ckpt.PinOps
-    val events = graft.Tables(s, d, "events").select(cols.map(col): _*).pin()
+    val events = graft.Tables(m.spark, d, "events").select(cols.map(col): _*).pin()
     try {
-      val Seq(lo, hi, n) = events
-        .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
-          count(lit(1)))
-        .collect()(0).toSeq.map(_.asInstanceOf[Long])
       val us = unix_micros(col("ts"))
-      val cuts = (pairSplitUs, dupKeySplit) match {
-        case (Some(iv), _) => pairSplitCuts(events, lo, hi, nFiles, iv)
-        case (None, Some(keys)) => keySplitCuts(events, lo, hi, nFiles, keys)
-        case _ => equiCuts(lo, hi, nFiles)
-      }
-      val bounds = (lo +: cuts) :+ (hi + 1)
-      // range writes run CONCURRENTLY (each is a single-task coalesce(1)
-      // job over the cached projection — run serially they were nFiles
-      // sequential single-thread writes, a visible slice of the harness
-      // floor at the stress tiers). Time order is preserved WITHOUT
-      // relying on write completion order: FileStreamSource orders by
-      // (mtime, path) and the post-write touch below re-stamps each
-      // file's mtime in range order.
-      stageConcurrently(bounds.init.zip(bounds.tail).zipWithIndex.map {
-        case ((cutLo, cutHi), i) => () =>
-          events.filter(us >= cutLo && us < cutHi).coalesce(1).write.parquet(stagedPath(inDir, i))
-      })
-      restampInOrder(inDir)
-      (inDir, n)
+      val Seq(lo, hi, n) = events.agg(min(us), max(us), count(lit(1)))
+        .collect()(0).toSeq.map(_.asInstanceOf[Long])
+      (m.stage(events, Member.ranges(us, lo, hi, cuts(events, lo, hi, nFiles))), n)
     } finally {
       // free the PRIVATE pinned blocks now rather than at RDD GC — staging
       // is complete and nothing re-reads the projection. Safe by
@@ -561,7 +501,7 @@ object StreamingOps {
     * sequences) tunes the same way. An inner stream-stream join emits on
     * match (no watermark-closing wait), so no result rows are parked in
     * state at end-of-stream. */
-  def intervalPairsFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st4-") { base =>
+  def intervalPairsFromStream(s: SparkSession, d: String): DataFrame = Member.run(s, "st4") { m =>
     // MICRO-BATCH COUNT scales with same-user probe density, floor 3. The
     // join's probe cost per batch is Σ_u (rows_u in this batch) × (rows_u
     // buffered) — with a handful of giant batches over a months-long span,
@@ -591,10 +531,8 @@ object StreamingOps {
       Option(sumSq).map(_.longValue / 200000000L).getOrElse(0L))).toInt
     // pair-splitting cuts (pairSplitCuts) make every cut boundary provably
     // split a joinable pair — cross-batch buffering is certified at any B
-    val (inDir, nRows) = stageSessionInput(s, d, base, nFiles = nFiles,
-      cols = Seq("user_id", "event_id", "ts"),
-      pairSplitUs = Some(1800000000L))
-    val stream = stagedStream(s, inDir)
+    val (stream, nRows) = stageEvents(m, d, nFiles, Seq("user_id", "event_id", "ts"),
+      pairSplitCuts(_, _, _, _, 1800000000L))
     // State-partition right-sizing: a stateful query's store count is
     // pinned at first start from spark.sql.shuffle.partitions, and the
     // join commits 4 stores per partition PER SIDE per micro-batch — at
@@ -627,10 +565,9 @@ object StreamingOps {
     // ready.
     // delay = interval: the earliest-legal-eviction point, complete for
     // the ts-range staged source at ANY delay (see the scaladoc proof)
-    val Seq(pairs) = runToFiles(s, statePartitionsFor(s, nRows), base)(
-      "pairs" -> injectStChaos(intervalPairs(stream, "30 minutes", delay = "30 minutes")))
-    pairs.pin().orderBy("user_id", "id_a", "id_b")
-  }
+    m.toFiles(statePartitionsFor(s, nRows))(
+      "pairs" -> injectStChaos(intervalPairs(stream, "30 minutes", delay = "30 minutes"))).head
+  }.orderBy("user_id", "id_a", "id_b")
 
   /** Registry query (st5): ev17's forward-fill PRODUCED BY the
     * arbitrary-keyed-state API — the one streaming state surface
@@ -651,14 +588,11 @@ object StreamingOps {
     * Append-mode parquet FILE sink like st4 (a memory sink would park the
     * densified relation driver-side); state is O(users) — commit-dominated
     * like st2/st3, so the same fixed 8 state partitions. */
-  def forwardFillFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st5-") { base =>
-    val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3,
-      cols = Seq("user_id", "event_id", "ts", "event_type", "value"))
-    val stream = stagedStream(s, inDir)
-    val Seq(fill) = runToFiles(s, 8, base)(
-      "fill" -> injectStChaos(locfUpdates(stream)(s).toDF()))
-    fill.pin().orderBy("user_id", "ts_us", "event_id")
-  }
+  def forwardFillFromStream(s: SparkSession, d: String): DataFrame = Member.run(s, "st5") { m =>
+    val (stream, _) = stageEvents(m, d, nFiles = 3,
+      Seq("user_id", "event_id", "ts", "event_type", "value"))
+    m.toFiles(8)("fill" -> injectStChaos(locfUpdates(stream)(s).toDF())).head
+  }.orderBy("user_id", "ts_us", "event_id")
 
   /** Registry query (st7): the built-in DEDUP STATE STORE executed —
     * [[streamingDedup]] (`dropDuplicatesWithinWatermark`) run through the
@@ -683,23 +617,19 @@ object StreamingOps {
     * cross-batch suppression. State is O(distinct in-watermark keys) —
     * commit-dominated at fixture scale, fixed 8 partitions like st2/st3;
     * dedup emits each survivor on arrival, so the sink is an Append-mode
-    * parquet FILE sink (the production log shape). */
-  def dedupWithinWatermarkFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st7-") { base =>
-    val hourKey = Seq(col("user_id"), col("event_type"),
-      date_trunc("hour", col("ts")))
-    val (inDir, _) = stageSessionInput(s, d, base, nFiles = 3,
-      cols = Seq("user_id", "event_type", "ts"), dupKeySplit = Some(hourKey))
-    val stream = stagedStream(s, inDir)
+    * parquet FILE sink (the production log shape). Rows order with
+    * explicit NULLS FIRST: event_type is nullable on the null-events tier
+    * and Spark/DuckDB default null orderings differ. */
+  def dedupWithinWatermarkFromStream(s: SparkSession, d: String): DataFrame = Member.run(s, "st7") { m =>
+    val hourKey = Seq(col("user_id"), col("event_type"), date_trunc("hour", col("ts")))
+    val (stream, _) = stageEvents(m, d, nFiles = 3, Seq("user_id", "event_type", "ts"),
+      keySplitCuts(_, _, _, _, hourKey))
     val keyed = stream.withColumn("w_start", date_trunc("hour", col("ts")))
-    val Seq(dedup) = runToFiles(s, 8, base)(
+    m.toFiles(8)(
       "dedup" -> injectStChaos(streamingDedup(keyed, "ts", "2 hours",
           "user_id", "event_type", "w_start")
-        .select("user_id", "event_type", "w_start")))
-    // explicit NULLS FIRST: event_type is nullable on the null-events tier
-    // and Spark/DuckDB default null orderings differ
-    dedup.pin().orderBy(col("user_id"), col("event_type").asc_nulls_first,
-      col("w_start"))
-  }
+        .select("user_id", "event_type", "w_start"))).head
+  }.orderBy(col("user_id"), col("event_type").asc_nulls_first, col("w_start"))
 
   /** Registry query (st8): the WINDOWED-AGGREGATION state store's
     * Append-mode eviction executed — [[tumblingCounts]] through the staged
@@ -711,14 +641,10 @@ object StreamingOps {
     * watermark-closed windows, the bounded-state emission a production
     * metrics stream runs on. State is O(open windows) — commit-dominated,
     * fixed 8 partitions. */
-  def closedTumblingFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st8-") { base =>
-    val (inDir, _) = stageSessionInput(s, d, base, nFiles = 4,
-      cols = Seq("event_type", "ts", "value"))
-    val stream = stagedStream(s, inDir)
-    val Seq(windows) = runToFiles(s, 8, base)(
-      "windows" -> injectStChaos(tumblingCounts(stream)))
-    windows.pin().orderBy(col("w_start"), col("event_type").asc_nulls_first)
-  }
+  def closedTumblingFromStream(s: SparkSession, d: String): DataFrame = Member.run(s, "st8") { m =>
+    val (stream, _) = stageEvents(m, d, nFiles = 4, Seq("event_type", "ts", "value"))
+    m.toFiles(8)("windows" -> injectStChaos(tumblingCounts(stream))).head
+  }.orderBy(col("w_start"), col("event_type").asc_nulls_first)
 
   /** Registry query (st6): dd4's near-dup pair relation with CANDIDATE
     * GENERATION run AT-INGEST — the two arbitrary-state accumulators
@@ -753,14 +679,9 @@ object StreamingOps {
     * shared-oracle pattern). State is bounded like the batch candidate
     * cost: ≤ BucketCap+1 ids per live bucket, a tombstone per dead one,
     * (count, canon) per sig group. */
-  def lshPairsFromStream(s: SparkSession, d: String): DataFrame = Scratch.withTree("graft-st6-") { base =>
-    val inDir = new java.io.File(base, "in").getPath
+  def lshPairsFromStream(s: SparkSession, d: String): DataFrame = Member.run(s, "st6") { m =>
     val docs = graft.Tables(s, d, "documents").select("doc_id", "text")
-    stageConcurrently((0 until 3).map { i => () =>
-      docs.filter(col("doc_id") % 3 === i).coalesce(1).write.parquet(stagedPath(inDir, i))
-    })
-    restampInOrder(inDir)
-    val stream = stagedStream(s, inDir)
+    val stream = m.stage(docs, (0 until 3).map(i => col("doc_id") % 3 === i))
     implicit val sp: SparkSession = s
     // state is O(distinct band keys / sig groups) — commit-dominated at
     // fixture scale like the session rows (st2/st3): same fixed 8 parts.
@@ -769,7 +690,7 @@ object StreamingOps {
     // CONCURRENTLY — exactly how a production ingest deployment fans one
     // source into parallel stateful consumers; the per-batch commit floors
     // overlap instead of adding (sf0.1 warm ~6.9 → ~5.1 s, stress 13.4 → 10.4).
-    val Seq(bucketLog, sigLog) = runToFiles(s, 8, base)(
+    val Seq(bucketLog, sigLog) = m.toFiles(8)(
       "buckets" -> lshBucketUpdates(stream).toDF(),
       "sigs" -> sigGroupUpdates(stream).toDF())
     val membership = bucketLog.groupBy("band", "sig")
@@ -792,102 +713,17 @@ object StreamingOps {
     // small relation (bucket-cap-bounded + linear star); materialize so the
     // verification join starts from stored pairs, exactly like batch dd4
     val cand = bucketPairs.unionByName(starPairs).distinct().pin()
-    val result = graft.operators.Dedup.verifiedJaccard(docs, cand)
+    graft.operators.Dedup.verifiedJaccard(docs, cand)
       .filter(col("jaccard") >= 0.85)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-      .pin()
-    result.orderBy("id_a", "id_b")
-  }
+  }.orderBy("id_a", "id_b")
 
-  /** Materialize a session memory sink's table as epoch-µs columns, then
-    * drop the sink's registered temp view (Complete mode parks the full
-    * table driver-side). localCheckpoint is eager, so nothing downstream
-    * re-reads it. */
-  private def drainMemorySink(s: SparkSession, name: String): DataFrame = {
-    val result = s.table(name)
-      .select(col("user_id"),
-        unix_micros(col("s_start")).as("s_start_us"),
-        unix_micros(col("s_end")).as("s_end_us"),
-        col("n_events"))
-      .pin()
-    s.catalog.dropTempView(name)
-    result.orderBy("user_id", "s_start_us")
-  }
-
-  // Scratch placement note (measured): routing the members' staging trees
-  // (Scratch.withTree) to the RAM-backed /dev/shm instead of
-  // java.io.tmpdir was A/B'd over the full streaming family at sf0.1 (two
-  // fresh-JVM pairs each way: 47.4/44.1 s on /tmp vs 44.6/50.3 s on
-  // tmpfs) — no effect outside host noise. That
-  // A/B could not see the storage-side cost that did dominate the floor:
-  // process creation, not I/O — the default checkpoint manager ran
-  // `chmod`/`readlink`/`stat` child processes for every checkpoint file,
-  // and Hadoop's local FileSystem a `chmod` for every file it created.
-  // runAvailableNow scopes both away (FileSystem-based manager over
-  // graft.LocalFs); the staging writes below still fork `chmod` through
-  // the session's default FileSystem. The default tmpdir stays (and
-  // production checkpoints belong on durable shared storage anyway).
-  /** Run independent staging writes concurrently (each is typically a
-    * single-task coalesce(1) job — serially they were N sequential
-    * single-thread writes, a visible slice of the harness floor at the
-    * stress tiers). Bounded shared pool; daemon threads. */
-  private def stageConcurrently(writes: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = stagingPool
-    writes.map(w => scala.concurrent.Future(w()))
-      .foreach(Await.result(_, Duration.Inf))
-  }
-
-  private lazy val stagingPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
-        val t = new Thread(r, "graft-staging"); t.setDaemon(true); t
-      }))
-
-  /** Staged file `i` under `inDir`: zero-padded names keep path order =
-    * range order for any file count. */
-  private def stagedPath(inDir: String, i: Int): String =
-    s"$inDir/" + "c%02d.parquet".formatLocal(java.util.Locale.ROOT, i)
-
-  /** The staged files under `inDir` as one stream, one file per
-    * micro-batch, under the first file's schema. FileStreamSource takes
-    * them in (mtime, path) order, which [[restampInOrder]] makes range
-    * order. */
-  private def stagedStream(s: SparkSession, inDir: String): DataFrame =
-    s.readStream.schema(Tables.parquetSchema(s, stagedPath(inDir, 0))._1)
-      .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet/*.parquet")
-
-  /** Re-stamp staged files' mtimes in path order with strictly increasing
-    * values, AFTER all concurrent writes complete: FileStreamSource orders
-    * by (mtime, path), and concurrent writes finish in arbitrary order —
-    * the re-stamp restores mtime order = zero-padded path order = range
-    * order, so the one-file-per-trigger choreography is exactly what it
-    * was under serial staging. Stamps land on the leaf part files (what
-    * the source lists) and the directory itself.
-    *
-    * Batch order is LOAD-BEARING for correctness (st1's first-seen dedup,
-    * st2/st3 watermark advance, st4's delay=interval completeness proof all
-    * assume ts-range-ordered batches), so a filesystem where the restamp
-    * silently fails must fail HERE, not as a watermark-dropped wrong
-    * answer downstream: every setLastModified return is checked and read
-    * back. Stamps are 2 s apart and 2 s-aligned so even a coarse-mtime
-    * filesystem (FAT-class 2 s granularity) stores them exactly. */
-  private def restampInOrder(inDir: String): Unit = {
-    val dirs = Option(new java.io.File(inDir).listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val base = (System.currentTimeMillis() / 2000L) * 2000L
-    def stampOrFail(f: java.io.File, stamp: Long): Unit =
-      require(f.setLastModified(stamp) && f.lastModified() == stamp,
-        s"cannot restamp $f to $stamp (have ${f.lastModified()}) — " +
-          "staged batch order is not guaranteed on this filesystem")
-    dirs.zipWithIndex.foreach { case (d, i) =>
-      val stamp = base + i * 2000L
-      stampOrFail(d, stamp)
-      Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(stampOrFail(_, stamp))
-    }
-  }
+  /** A session sink's table as epoch-µs columns. */
+  private def sessionRows(sessions: DataFrame): DataFrame =
+    sessions.select(col("user_id"),
+      unix_micros(col("s_start")).as("s_start_us"),
+      unix_micros(col("s_end")).as("s_end_us"),
+      col("n_events"))
 
   // ---- streaming at-ingest LSH near-dup (twin of Dedup.lshCandidates) ----
 

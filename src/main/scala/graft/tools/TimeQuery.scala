@@ -8,7 +8,9 @@ package graft.tools
   * on generated SOURCE, so an iterated stage with stable source compiles
   * once (r16: the PQ kernel's codebook rides an object literal in
   * ss4/ss6). Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.TimeQuery
-  * name… prints `TIMEQ <name> <wall> s compiles=<n>` per query.
+  * name… prints `TIMEQ <name> <wall> s compiles=<n>` per query. An st
+  * row goes through the streaming family launcher as in Bench: the first
+  * st row named times the launch of all eight members.
   *
   * Shuffle partitions default to the thread count (the bench's sf0.1
   * contract). The `SPARK_GRAFT_CONF_*` passthrough decouples them for
